@@ -15,6 +15,7 @@ Unsupported constructs raise UnsupportedDialect with the construct named
 
 from __future__ import annotations
 
+import functools
 import re
 
 
@@ -565,6 +566,14 @@ FUNCTION_ALIASES = {
     "create_sort_key": "__duck_unsupported_introspect",
     "bit_position": "__duck_unsupported_introspect",
 }
+
+# in table order: renames chain (list_aggregate_sum -> aggregate ->
+# __duck_bare_aggregate)
+_FUNCTION_ALIAS_SUBS = [
+    (re.compile(rf"\b{duck}\s*\(", re.IGNORECASE), f"{spark}(")
+    for duck, spark in FUNCTION_ALIASES.items()
+    if duck != spark
+]
 
 _STRFTIME_MAP = [
     ("%Y", "yyyy"),
@@ -1501,10 +1510,9 @@ def _rewrite_functions(code: str) -> str:
     )
     # JSON is VARCHAR-typed in this engine (SURVEY §1.3)
     code = re.sub(r"::\s*JSON\b", "::STRING", code, flags=re.IGNORECASE)
-    for duck, spark in FUNCTION_ALIASES.items():
-        if duck == spark:
-            continue
-        code = re.sub(rf"\b{duck}\s*\(", f"{spark}(", code, flags=re.IGNORECASE)
+    # precompiled: ~300 inline patterns per chunk overflow re's 512-entry cache
+    for rx, repl in _FUNCTION_ALIAS_SUBS:
+        code = rx.sub(repl, code)
     # aggregate FILTER shorthand: DuckDB allows FILTER (cond); Spark needs
     # FILTER (WHERE cond). Only after a closing paren (an aggregate call) —
     # the filter() HOF never follows one.
@@ -4930,6 +4938,7 @@ def translate(sql: str) -> str:
     sql = _rewrite_balanced_call(sql, "__duck_bit", _emit_bit)
     sql = _rewrite_balanced_call(sql, "__duck_try_bit", _emit_try_bit)
     sql = _rewrite_balanced_call(sql, "bitstring", _emit_bitstring)
+    # one compiled pattern per marker (_call_re): ~200 inline ones overflow re's 512-entry cache
     for marker, emit in _ROUND5_EMITTERS.items():
         sql = _rewrite_balanced_call(sql, marker, emit)
     if "__duck_current_query" in sql:
@@ -7079,6 +7088,12 @@ def _emit_slice(args: list[str]) -> str:
     return f"slice({lst}, {b}, ({e}) - ({b}) + 1)"
 
 
+# bounded: every caller passes a literal marker
+@functools.cache
+def _call_re(marker: str) -> re.Pattern:
+    return re.compile(rf"\b{marker}\s*\(")
+
+
 def _rewrite_balanced_call(sql: str, marker: str, emit) -> str:
     """Replace every `marker(...)` call with emit(top_level_args).
 
@@ -7089,9 +7104,12 @@ def _rewrite_balanced_call(sql: str, marker: str, emit) -> str:
     attached INSIDE the expression — leaving it after the whole expansion
     is a Spark parse/analysis error (the r08 SPARK-ERR class: product/
     skewness/sem/mad/entropy OVER w)."""
+    if marker not in sql:  # the pattern is case-sensitive: exact
+        return sql
+    rx = _call_re(marker)
     out, i = [], 0
     while True:
-        m = re.search(rf"\b{marker}\s*\(", sql[i:])
+        m = rx.search(sql[i:])
         if not m:
             out.append(sql[i:])
             break

@@ -12,6 +12,7 @@ Read path (reference: local DuckDB Query, http/service.go:246-289):
 
 from __future__ import annotations
 
+import functools
 import re
 from dataclasses import dataclass
 
@@ -228,6 +229,16 @@ def parse_create_table(sql: str, enums: dict | None = None):
     return if_not_exists, name, columns, partition_cols, table_checks, unique_sets
 
 
+@functools.lru_cache(maxsize=64)
+def _schema_ref_re(names: tuple[str, ...]) -> re.Pattern:
+    """`sch . tbl` for any of the given schema names (sorted, so one
+    catalog state maps to one pattern)."""
+    return re.compile(
+        r"\b(" + "|".join(re.escape(n) for n in names) + r")\s*\.\s*(\w+)",
+        re.IGNORECASE,
+    )
+
+
 class Engine:
     """One SparkSession + one Catalog = the service's execution core."""
 
@@ -253,18 +264,12 @@ class Engine:
         the documented edge (alias your tables something else)."""
         from .dialect import _literal_mask
 
-        names = set(self.catalog.schemas) | {"main"}
-        if not any(
-            re.search(rf"\b{re.escape(n)}\s*\.", sql, re.IGNORECASE) for n in names
-        ):
+        rx = _schema_ref_re(tuple(sorted(set(self.catalog.schemas) | {"main"})))
+        if not rx.search(sql):
             return sql
         mask = _literal_mask(sql)
         out = []
         pos = 0
-        rx = re.compile(
-            r"\b(" + "|".join(re.escape(n) for n in sorted(names)) + r")\s*\.\s*(\w+)",
-            re.IGNORECASE,
-        )
         for m in rx.finditer(sql):
             if mask[m.start()]:
                 continue

@@ -3692,9 +3692,16 @@ def _fold_string_to_tree(form: str, value: str, tree, lazy: bool = False) -> str
         sp = _entry_split(entry, "=")
         if sp is None:
             return _composite_cast_fail(form, value, kind, tgt_text, lazy)
-        kc, kq = _unquote_token(sp[0])
+        kc = _unquote_token(sp[0])[0]
+        if kc == "NULL":
+            # a NULL key fails the whole value, before the duplicate-key
+            # guard. Only the upper-case spelling is a NULL key, quoted or
+            # not (measured: '{NULL=1}', '{''NULL''=1}' and '{NULL=1,
+            # NULL=2}' raise the Conversion Error, '{null=1}' has the key
+            # 'null'), so other key text skips cell_expr's NULL test
+            return _composite_cast_fail(form, value, kind, tgt_text, lazy)
         vc, vq = _unquote_token(sp[1])
-        kexpr = cell_expr(kc, kq, ktree)
+        kexpr = cell_expr(kc, True, ktree)
         vexpr = cell_expr(vc, vq, vtree)
         if kexpr is None or vexpr is None:
             return _composite_cast_fail(form, value, kind, tgt_text, lazy)

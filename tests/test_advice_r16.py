@@ -10,6 +10,8 @@ against live DuckDB:
   DuckDB's catalog error names '!||', not '!'.
 - ADVICE r15 #2: spaced '3! / 2', '3! % 2', '3! ^ 2' EVALUATE in DuckDB
   (factorial binds first; '/' returns DOUBLE per HUGEINT/INTEGER rules).
+- ADVICE r16: a NULL key in a map fold raises the Conversion Error (TRY_CAST
+  gives NULL), not the duplicate-key or NULL_MAP_KEY error.
 """
 
 from __future__ import annotations
@@ -90,4 +92,24 @@ def test_map_fold_duplicate_keys(eng, con, sql):
     ],
 )
 def test_factorial_operator_lanes(eng, con, sql):
+    _differential(eng, con, sql)
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        # ADVICE r16: a NULL key fails the whole value with DuckDB's
+        # Conversion Error, ahead of the duplicate-key check
+        "SELECT CAST('{NULL=1, NULL=2}' AS MAP(VARCHAR, INTEGER)) AS v",
+        "SELECT CAST('{NULL=1}' AS MAP(VARCHAR, INTEGER)) AS v",
+        "SELECT CAST('{a=1, NULL=2}' AS MAP(VARCHAR, INTEGER)) AS v",
+        "SELECT TRY_CAST('{NULL=1}' AS MAP(VARCHAR, INTEGER)) AS v",
+        # quoted NULL is NULL too; lower-case null is the string 'null'
+        "SELECT CAST('{''NULL''=1}' AS MAP(VARCHAR, INTEGER)) AS v",
+        "SELECT map_keys(CAST('{null=1}' AS MAP(VARCHAR, INTEGER))) AS v",
+        # a NULL value is fine
+        "SELECT map_values(CAST('{a=NULL}' AS MAP(VARCHAR, INTEGER))) AS v",
+    ],
+)
+def test_map_fold_null_keys(eng, con, sql):
     _differential(eng, con, sql)
