@@ -578,12 +578,32 @@ class Catalog:
                 return True
         return False
 
+    @staticmethod
+    def _data_bytes(path: str) -> int:
+        """Total size of a non-partitioned table's parquet data files."""
+        with os.scandir(path) as it:
+            return sum(
+                e.stat().st_size
+                for e in it
+                if e.name.endswith(".parquet") and e.name[0] not in "._"
+            )
+
     def read(self, name: str) -> DataFrame:
         meta = self.tables[name]
         from pyspark.sql import functions as F
 
         if not meta.partition_cols:
-            return self.spark.read.schema(meta.spark_schema()).parquet(meta.path)
+            df = self.spark.read.schema(meta.spark_schema()).parquet(meta.path)
+            # A table within one scan split already plans at most one scan
+            # task (several small files get one task each only through the
+            # per-file open cost), so reading it as one partition costs no
+            # parallelism. It also tells the planner the rows are
+            # SinglePartition, so a sort, aggregate or window over them
+            # needs no exchange. Larger tables keep the split-parallel scan.
+            conf = self.spark._jsparkSession.sessionState().conf()  # noqa: SLF001
+            if self._data_bytes(meta.path) <= conf.filesMaxPartitionBytes():
+                df = df.coalesce(1)
+            return df
         schema = meta.spark_schema()
         if not self._has_data_files(meta.path):
             return self.spark.createDataFrame([], schema)

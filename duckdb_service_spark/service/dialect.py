@@ -2082,16 +2082,53 @@ _DISTINCT_ON_RE = re.compile(
 )
 
 
+_ORDER_ITEM_RE = re.compile(
+    r"^(.*?)(\s+(?:ASC|DESC))?(\s+NULLS\s+(?:FIRST|LAST))?$", re.IGNORECASE | re.DOTALL
+)
+
+
 def _rewrite_distinct_on(sql: str) -> str:
+    """SELECT DISTINCT ON (keys) <list> FROM <rest> [ORDER BY <order>]
+    [LIMIT/OFFSET] → keep the first row per key of a row_number() window
+    ordered by <order>. The window only picks the rows: the statement's
+    ORDER BY then sorts them, and LIMIT/OFFSET cut after that sort. Each
+    ORDER BY expression is evaluated inside, as a hidden ``__do<i>``
+    column, so qualified and unselected columns still resolve."""
     m = _DISTINCT_ON_RE.match(sql.strip())
     if not m:
         return sql
     keys, select_list, rest, order = m.groups()
-    order_clause = order if order else keys
+    last = order or rest  # LIMIT/OFFSET trail whichever clause ends the text
+    cut = min(
+        (i for i in (_find_top_kw(last, "LIMIT"), _find_top_kw(last, "OFFSET")) if i >= 0),
+        default=len(last),
+    )
+    trailer = last[cut:].strip()
+    if order:
+        order = order[:cut].rstrip()
+    else:
+        rest = rest[:cut].rstrip()
+    hidden, outer = [], []
+    for item in _split_top_level_commas(order or ""):
+        expr, direction, nulls = _ORDER_ITEM_RE.match(item.strip()).groups()
+        if expr.isdigit():  # ordinal: a select-list position
+            outer.append(item.strip())
+            continue
+        hidden.append(f"({expr}) AS __do{len(hidden)}")
+        outer.append(f"__do{len(hidden) - 1}{direction or ''}{nulls or ''}")
+    items = _split_top_level_commas(select_list)
+    if any(it.strip() == "*" for it in items):
+        drop = ", ".join(["__rn"] + [f"__do{i}" for i in range(len(hidden))])
+        select_list = ", ".join(
+            f"* EXCEPT ({drop})" if it.strip() == "*" else it.strip() for it in items
+        )
+    extra = "".join(f"{h}, " for h in hidden)
+    order_by = f" ORDER BY {', '.join(outer)}" if outer else ""
     return (
         f"SELECT {select_list} FROM ("
-        f"SELECT *, row_number() OVER (PARTITION BY {keys} ORDER BY {order_clause}) AS __rn "
-        f"FROM {rest}) WHERE __rn = 1"
+        f"SELECT *, {extra}row_number() OVER (PARTITION BY {keys} "
+        f"ORDER BY {order or keys}) AS __rn FROM {rest}) WHERE __rn = 1"
+        f"{order_by}{' ' + trailer if trailer else ''}"
     )
 
 

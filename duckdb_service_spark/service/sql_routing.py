@@ -3700,19 +3700,39 @@ def _fold_string_to_tree(form: str, value: str, tree, lazy: bool = False) -> str
             # NULL=2}' raise the Conversion Error, '{null=1}' has the key
             # 'null'), so other key text skips cell_expr's NULL test
             return _composite_cast_fail(form, value, kind, tgt_text, lazy)
-        vc, vq = _unquote_token(sp[1])
+        vc = _unquote_token(sp[1])[0]
         kexpr = cell_expr(kc, True, ktree)
-        vexpr = cell_expr(vc, vq, vtree)
+        # a value is NULL by the same rule as a key (measured: '{a=NULL}'
+        # and '{a=''NULL''}' hold NULL, '{a=null}' holds the string 'null')
+        vexpr = (
+            f"CAST(NULL AS {_duck_tree_text(vtree)})" if vc == "NULL"
+            else cell_expr(vc, True, vtree)
+        )
         if kexpr is None or vexpr is None:
             return _composite_cast_fail(form, value, kind, tgt_text, lazy)
         kexprs.append(kexpr)
         cells.append(f"{kexpr}: {vexpr}")
     lit = "MAP {" + ", ".join(cells) + "}"
+    key_is_text = ktree[0] == "scalar" and ktree[2] == "string"
+    out = _map_fold_unique(kexprs, key_is_text, lit, tgt_text)
+    if form == "TRY_CAST" and ktree[0] == "scalar" and not key_is_text:
+        # a key that does not convert is NULL under TRY_CAST, and a NULL
+        # key makes the whole value NULL, ahead of the duplicate-key check
+        # (measured: TRY_CAST('{null=1}' AS MAP(INTEGER, INTEGER)) and
+        # TRY_CAST('{1=a, 01=b, x=c}' AS MAP(INTEGER, VARCHAR)) are NULL)
+        nulls = " OR ".join(f"({k}) IS NULL" for k in kexprs)
+        return f"(CASE WHEN {nulls} THEN CAST(NULL AS {tgt_text}) ELSE {out} END)"
+    return out
+
+
+def _map_fold_unique(kexprs: "list[str]", key_is_text: bool, lit: str,
+                     tgt_text: str) -> str:
+    """The folded map literal, guarded by DuckDB's unique-keys check when
+    its keys are not statically distinct."""
     # Statically safe (no guard needed): a single entry, or textually
     # distinct VARCHAR-family keys (distinct text == distinct value; for
     # numeric/temporal keys distinct TEXT can still cast to equal VALUES,
     # e.g. '1' vs '01' as INTEGER keys — those need the runtime check)
-    key_is_text = ktree[0] == "scalar" and ktree[2] == "string"
     if len(kexprs) <= 1 or (key_is_text and len(set(kexprs)) == len(kexprs)):
         return lit
     # Duplicate keys must raise DuckDB's unique-keys error (VERDICT r15

@@ -35,13 +35,24 @@ def tune(spark: SparkSession) -> SparkSession:
     the per-query driver floor, VERDICT r15 task 2). The flag lives in the
     session's own conf, so a fresh driver-provided session still gets the
     full treatment and nothing is cached across sessions or processes.
+
+    The two confs answers depend on most, the UTC session time zone and
+    ANSI off, are set again on every call, outside the memo: a caller that
+    changed either one between builds gets it repaired.
     """
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # Match DuckDB's ANSI-ish cast/overflow behaviour is NOT desired here:
+    # the oracle comparison needs permissive casts (try_cast semantics are
+    # exercised explicitly), so keep ANSI off.
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+    except Exception:
+        pass  # may be non-modifiable if set at startup; fine either way
     if getattr(spark, "_ddbs_tuned", False):  # same python object: free
         return spark
     if spark.conf.get("spark.duckdb_service_spark.tuned", None) == "1":
         spark._ddbs_tuned = True  # noqa: SLF001 — our own marker
         return spark
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     # DuckDB's TIMESTAMP is timezone-naive: SQL TIMESTAMP literals/casts
     # must resolve to TIMESTAMP_NTZ so the LTZ type is reserved for
     # DuckDB's TIMESTAMP WITH TIME ZONE (serializer + typeof agree on
@@ -75,13 +86,6 @@ def tune(spark: SparkSession) -> SparkSession:
         "spark.sql.files.maxPartitionBytes",
         os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "2m"),
     )
-    # Match DuckDB's ANSI-ish cast/overflow behaviour is NOT desired here:
-    # the oracle comparison needs permissive casts (try_cast semantics are
-    # exercised explicitly), so keep ANSI off.
-    try:
-        spark.conf.set("spark.sql.ansi.enabled", "false")
-    except Exception:
-        pass  # may be non-modifiable if set at startup; fine either way
     spark.conf.set("spark.duckdb_service_spark.tuned", "1")
     spark._ddbs_tuned = True  # noqa: SLF001
     return spark

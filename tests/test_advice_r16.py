@@ -12,6 +12,11 @@ against live DuckDB:
   (factorial binds first; '/' returns DOUBLE per HUGEINT/INTEGER rules).
 - ADVICE r16: a NULL key in a map fold raises the Conversion Error (TRY_CAST
   gives NULL), not the duplicate-key or NULL_MAP_KEY error.
+- NULL cells in map folds: a map value is NULL by the key rule (upper-case
+  NULL, quoted or not), and under TRY_CAST a key that does not convert
+  makes the whole value NULL.
+- ADVICE r16: tune() re-asserts the UTC time zone and ANSI off on every
+  call, outside its memo.
 """
 
 from __future__ import annotations
@@ -113,3 +118,35 @@ def test_factorial_operator_lanes(eng, con, sql):
 )
 def test_map_fold_null_keys(eng, con, sql):
     _differential(eng, con, sql)
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        # a key that does not convert makes a TRY_CAST NULL, not a
+        # NULL_MAP_KEY error
+        "SELECT TRY_CAST('{null=1}' AS MAP(INTEGER, INTEGER)) AS v",
+        # a value is NULL only as upper-case NULL, quoted or not
+        "SELECT map_values(CAST('{a=null}' AS MAP(VARCHAR, VARCHAR))) AS v",
+        "SELECT map_values(CAST('{a=''NULL''}' AS MAP(VARCHAR, VARCHAR))) AS v",
+    ],
+)
+def test_map_fold_null_cells(eng, con, sql):
+    _differential(eng, con, sql)
+
+
+def test_tune_reasserts_time_zone_and_ansi(spark):
+    """tune() is memoized per session, but the UTC time zone and ANSI off
+    are set again on every call (ADVICE r16)."""
+    from duckdb_service_spark.session import tune
+
+    tune(spark)
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        tune(spark)
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+        assert spark.conf.get("spark.sql.ansi.enabled") == "false"
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        spark.conf.set("spark.sql.ansi.enabled", "false")
