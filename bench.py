@@ -170,29 +170,6 @@ def main() -> None:
         ),
         "loadavg": round(load_start[0], 2),
     }
-    # r10 adjudication (SCALING.md r10): with the honest per-query cache
-    # clearing (without it, Spark's plan-keyed CacheManager silently
-    # REUSED pass 1's materialized persists in passes 2-3, so pre-r10
-    # numbers under-reported the persisting queries), the corpus-pipeline
-    # trio measures its true recompute wall every pass: 1-4s absolute vs
-    # DuckDB's embedded 0.5-1.5s. The gap is multi-job scheduling floor
-    # (~8 AQE jobs/query) + in-timer persist materialization, not plan
-    # topology — shuffle-minimal shapes pinned in test_plan_quality.py,
-    # 10x growth laws in tools/scale_minhash.py / scale_curation.py /
-    # scale_line_dedup.py.
-    over = [
-        n
-        for n in ("text_line_dedup", "dedup_minhash_lsh", "pipeline_corpus_curation")
-        if ratios.get(n, 0) > 2
-    ]
-    if over:
-        summary["note_2x"] = (
-            f"{','.join(over)}: measured scheduling floor, amortized at "
-            "scale — the LSH candidate step costs the same ~0.8s at "
-            "sf0.01 and sf0.1, and at sf1 (10x data) the trio reads "
-            "0.48x/0.51x/0.81x, all three at-or-faster than DuckDB "
-            "(BENCH_SF1.json; SCALING.md r11)"
-        )
     detail = dict(
         summary,
         oracle_queries=oracle_timings,

@@ -18,34 +18,21 @@ from __future__ import annotations
 import functools
 import re
 
+from .sqltext import (
+    MASKED_RE,
+    STRING_RE,
+    close_of,
+    find_top,
+    iter_top,
+    literal_mask,
+    open_of,
+    split_literals,
+    split_top,
+)
+
 
 class UnsupportedDialect(Exception):
     pass
-
-
-# ---- literal-safe text surgery -------------------------------------------
-
-_STRING_RE = re.compile(r"'(?:[^']|'')*'")
-# string literals PLUS backtick-quoted identifiers: neither is code, and
-# rewrite passes must never touch the inside of an identifier (r10: the
-# alias() pass emits duck-named `alias(arg)` columns that the function
-# marker pass would otherwise re-rewrite)
-_MASKED_RE = re.compile(r"'(?:[^']|'')*'|`[^`]*`")
-
-
-def _split_literals(sql: str) -> list[tuple[bool, str]]:
-    """[(is_literal, chunk)] — rewrites apply only to non-literal chunks.
-    Backtick-quoted identifiers count as literal chunks too (their
-    insides are names, not code)."""
-    out, last = [], 0
-    for m in _MASKED_RE.finditer(sql):
-        if m.start() > last:
-            out.append((False, sql[last : m.start()]))
-        out.append((True, m.group(0)))
-        last = m.end()
-    if last < len(sql):
-        out.append((False, sql[last:]))
-    return out
 
 
 _SERIES_TVF_RE = re.compile(
@@ -81,21 +68,11 @@ def rewrite_series_tvf(sql: str) -> str:
             break
         fn = m.group(3).lower()
         open_at = m.end()
-        depth, j, in_str = 1, open_at, False
-        while j < len(sql) and depth:
-            ch = sql[j]
-            if in_str:
-                if ch == "'":
-                    in_str = False
-            elif ch == "'":
-                in_str = True
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            j += 1
+        j = close_of(sql, open_at - 1)
+        if j == -1:
+            raise UnsupportedDialect(f"{fn}: unbalanced parentheses")
         inner = rewrite_series_tvf(sql[open_at : j - 1])
-        args = [a.strip() for a in _split_top_args(inner)]
+        args = split_top(inner)
         if all(re.match(r"^-?\d+$", a) for a in args):
             # DuckDB's integer series are BIGINT columns; Spark's
             # sequence over int literals yields INT (measured r12)
@@ -126,34 +103,8 @@ def rewrite_series_tvf(sql: str) -> str:
     return "".join(out)
 
 
-def _split_top_args(body: str) -> list[str]:
-    parts, depth, cur, in_str = [], 0, [], False
-    for ch in body:
-        if in_str:
-            if ch == "'":
-                in_str = False
-            cur.append(ch)
-        elif ch == "'":
-            in_str = True
-            cur.append(ch)
-        elif ch == "(":
-            depth += 1
-            cur.append(ch)
-        elif ch == ")":
-            depth -= 1
-            cur.append(ch)
-        elif ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        parts.append("".join(cur))
-    return parts
-
-
 def _rewrite_code(sql: str, fn) -> str:
-    return "".join(chunk if is_lit else fn(chunk) for is_lit, chunk in _split_literals(sql))
+    return "".join(chunk if is_lit else fn(chunk) for is_lit, chunk in split_literals(sql))
 
 
 def _escape_literal_backslashes(sql: str) -> str:
@@ -161,7 +112,7 @@ def _escape_literal_backslashes(sql: str) -> str:
     verbatim strings → Spark escaped-string parser), and strip the E
     prefix from E'...' escape literals (both engines then interpret the
     escapes). No-op for literals without backslashes."""
-    parts = _split_literals(sql)
+    parts = split_literals(sql)
     out = []
     for i, (is_lit, chunk) in enumerate(parts):
         if not is_lit:
@@ -628,7 +579,7 @@ def _rewrite_printf_decimals(sql: str) -> str:
             chunk
             if is_lit
             else re.sub(r"(?<![\w.])(\d+\.\d+)(?![\w.])", r"CAST(\1 AS DOUBLE)", chunk)
-            for is_lit, chunk in _split_literals(m.group(2))
+            for is_lit, chunk in split_literals(m.group(2))
         )
         return f"{m.group(1)}({args})"
 
@@ -681,7 +632,7 @@ def _rewrite_similar_glob(sql: str) -> str:
     keyword must sit in code — ``SELECT 'he GLOB ''x''' AS s`` is a plain
     string and survives unrewritten (masks are computed against the string
     each pass; re.sub match offsets refer to that same input)."""
-    mask = _literal_mask(sql)
+    mask = literal_mask(sql)
 
     def sim(m: re.Match) -> str:
         if mask[m.start()]:
@@ -697,7 +648,7 @@ def _rewrite_similar_glob(sql: str) -> str:
         sql,
         flags=re.IGNORECASE,
     )
-    mask = _literal_mask(sql)
+    mask = literal_mask(sql)
 
     def glob(m: re.Match) -> str:
         if mask[m.start()]:
@@ -725,7 +676,7 @@ def _rewrite_unnest_structs(sql: str) -> str:
     if not _UNNEST_STRUCT_RE.search(sql):
         return sql
     while True:
-        mask = _literal_mask(sql)
+        mask = literal_mask(sql)
         m = next(
             (c for c in _UNNEST_STRUCT_RE.finditer(sql)
              if not mask[c.start()]),
@@ -733,7 +684,7 @@ def _rewrite_unnest_structs(sql: str) -> str:
         )
         if m is None:
             return sql
-        close = _scan_balanced(sql, sql.index("(", m.start()), "(", ")")
+        close = close_of(sql, sql.index("(", m.start()))
         if close == -1:
             return sql
         inner = sql[m.end(): close - 1].strip()
@@ -761,28 +712,10 @@ def _rewrite_from_unnest(sql: str) -> str:
         """True when the last top-level clause keyword before ``at`` is
         FROM — a comma before UNNEST in the SELECT list must NOT rewrite
         (that's the generator form, handled by the alias pass)."""
-        depth, in_str, i, last = 0, False, 0, ""
-        kw = re.compile(
-            r"^(select|from|where|group|having|order|limit|qualify|window)\b",
-            re.IGNORECASE,
-        )
-        while i < at:
-            ch = text[i]
-            if in_str:
-                if ch == "'":
-                    in_str = False
-            elif ch == "'":
-                in_str = True
-            elif ch in "([{":
-                depth += 1
-            elif ch in ")]}":
-                depth -= 1
-            elif depth == 0 and (i == 0 or not (text[i - 1].isalnum() or text[i - 1] == "_")):
-                km = kw.match(text[i:])
-                if km:
-                    last = km.group(1).lower()
-            i += 1
-        return last == "from"
+        last = None
+        for last in iter_top(text, _SELECT_CLAUSE_KW_RE, 0, at):
+            pass
+        return last is not None and last.group(1).lower() == "from"
 
     search_from = 0
     while True:
@@ -793,7 +726,7 @@ def _rewrite_from_unnest(sql: str) -> str:
             search_from = m.end()
             continue
         open_at = out.index("(", m.end() - 1)
-        end = _scan_balanced(out, open_at, "(", ")")
+        end = close_of(out, open_at)
         if end == -1:
             raise UnsupportedDialect("unbalanced UNNEST(...) in FROM clause")
         inner = out[open_at + 1 : end - 1]
@@ -827,36 +760,24 @@ def _rewrite_from_unnest(sql: str) -> str:
         search_from = 0  # text changed; re-scan (UNNEST consumed, no loop)
 
 
+_SELECT_CLAUSE_KW_RE = re.compile(
+    r"\b(select|from|where|group|having|order|limit|qualify|window)\b",
+    re.IGNORECASE,
+)
+# a clause keyword after the FROM list, or the ``)`` closing its subquery
+_FROM_LIST_END_RE = re.compile(
+    r"\b(?:where|group|having|order|limit|offset|qualify|window|union|"
+    r"intersect|except)\b|[)\]}]",
+    re.IGNORECASE,
+)
+
+
 def _from_clause_end(text: str, start: int) -> int:
     """Index just past the last FROM-clause relation, scanning from
     ``start``: the first top-level clause keyword after the relation list,
     the enclosing ``)`` (subquery), or end of string. Literal-aware."""
-    kw = re.compile(
-        r"^(where|group|having|order|limit|offset|qualify|window|union|"
-        r"intersect|except)\b",
-        re.IGNORECASE,
-    )
-    depth, in_str, i = 0, False, start
-    while i < len(text):
-        ch = text[i]
-        if in_str:
-            if ch == "'":
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch in "([{":
-            depth += 1
-        elif ch in ")]}":
-            if depth == 0:
-                return i
-            depth -= 1
-        elif depth == 0 and (
-            i == 0 or not (text[i - 1].isalnum() or text[i - 1] == "_")
-        ):
-            if kw.match(text[i:]):
-                return i
-        i += 1
-    return len(text)
+    m = find_top(text, _FROM_LIST_END_RE, start)
+    return len(text) if m is None else m.start()
 
 
 def _rewrite_list_literals(code: str) -> str:
@@ -864,9 +785,9 @@ def _rewrite_list_literals(code: str) -> str:
 
     A ``[`` opens a constructor only in VALUE position (start, after ``(``,
     ``,``, an operator, or a keyword); after an identifier/``)``/``]`` it is
-    a subscript and stays untouched. Runs STATEMENT-level with an in-string
-    flag (not per code chunk): a constructor's brackets may straddle string
-    literals — ``['a', 'b']`` — and per-chunk rewriting would lose the
+    a subscript and stays untouched. Runs STATEMENT-level over the
+    literal and code chunks together: a constructor's brackets may straddle
+    string literals — ``['a', 'b']`` — and per-chunk rewriting would lose the
     bracket stack at each literal and emit ``array('a', 'b']``."""
     _KEYWORDS = {
         "select", "when", "then", "else", "end", "and", "or", "not", "in",
@@ -878,130 +799,65 @@ def _rewrite_list_literals(code: str) -> str:
     prev = ""
     cur: list[str] = []  # identifier being read
     last_word = ""  # last COMPLETED identifier (survives whitespace)
-    in_str = False
-    i = 0
-    while i < len(code):
-        ch = code[i]
-        if in_str:
-            out.append(ch)
-            if ch == "'":
-                if i + 1 < len(code) and code[i + 1] == "'":
-                    out.append("'")
-                    i += 2
-                    continue
-                in_str = False
-                # after a string literal a '[' is a subscript ('abc'[2])
-                prev = "]"
-            i += 1
+    for is_lit, chunk in split_literals(code):
+        if is_lit:
+            out.append(chunk)
+            # after a literal a '[' is a subscript ('abc'[2]); the literal
+            # also ends any pending identifier — without this, SELECT
+            # 'abc'[2] flushes 'select' AT the bracket and the keyword
+            # check turns the subscript into a constructor
+            prev, cur, last_word = "]", [], ""
             continue
-        if ch == "'":
-            in_str = True
-            out.append(ch)
-            prev = ""
-            # a string literal ends any pending identifier — without this,
-            # SELECT 'abc'[2] flushes 'select' AT the bracket and the
-            # keyword check turns the subscript into a constructor
-            cur = []
-            last_word = ""
-            i += 1
-            continue
-        if ch.isalnum() or ch == "_":
-            cur.append(ch)
-        elif ch.isspace():
-            # whitespace COMPLETES an identifier (without this, "SELECT
-            # array[" reads the pending word as "selectarray" and the
-            # ARRAY-keyword form is never recognized)
-            if cur:
-                last_word = "".join(cur)
-                cur = []
-        else:
-            if cur:
-                last_word = "".join(cur)
-                cur = []
-            elif ch not in "[":
-                last_word = ""
-        if ch == "[":
-            w = (last_word or "").lower()
-            last_word = ""
-            if w == "array":
-                # DuckDB's ARRAY[1,2] keyword form: keep the word, swap
-                # brackets for parens → the array(...) function call
-                stack.append(True)
-                out.append("(")
-            elif (
-                # keyword directly before the bracket (THEN [1]) opens a
-                # constructor — but only when the keyword itself is the
-                # preceding token: after ')'/']'/'"' the bracket is a
-                # subscript even when the last WORD was END/ELSE
-                # ((CASE ... END)[1] — r14)
-                w in _KEYWORDS and (prev.isalnum() or prev == "_")
-            ) or not (prev.isalnum() or prev in ("_", ")", "]", '"')):
-                stack.append(True)
-                out.append("array(")
+        for ch in chunk:
+            if ch.isalnum() or ch == "_":
+                cur.append(ch)
+            elif ch.isspace():
+                # whitespace COMPLETES an identifier (without this, "SELECT
+                # array[" reads the pending word as "selectarray" and the
+                # ARRAY-keyword form is never recognized)
+                if cur:
+                    last_word = "".join(cur)
+                    cur = []
             else:
-                stack.append(False)
-                out.append("[")
-        elif ch == "]" and stack:
-            out.append(")" if stack.pop() else "]")
-        else:
-            out.append(ch)
-        if not ch.isspace():
-            prev = ch
-        i += 1
+                if cur:
+                    last_word = "".join(cur)
+                    cur = []
+                elif ch not in "[":
+                    last_word = ""
+            if ch == "[":
+                w = (last_word or "").lower()
+                last_word = ""
+                if w == "array":
+                    # DuckDB's ARRAY[1,2] keyword form: keep the word, swap
+                    # brackets for parens → the array(...) function call
+                    stack.append(True)
+                    out.append("(")
+                elif (
+                    # keyword directly before the bracket (THEN [1]) opens a
+                    # constructor — but only when the keyword itself is the
+                    # preceding token: after ')'/']'/'"' the bracket is a
+                    # subscript even when the last WORD was END/ELSE
+                    # ((CASE ... END)[1] — r14)
+                    w in _KEYWORDS and (prev.isalnum() or prev == "_")
+                ) or not (prev.isalnum() or prev in ("_", ")", "]", '"')):
+                    stack.append(True)
+                    out.append("array(")
+                else:
+                    stack.append(False)
+                    out.append("[")
+            elif ch == "]" and stack:
+                out.append(")" if stack.pop() else "]")
+            else:
+                out.append(ch)
+            if not ch.isspace():
+                prev = ch
     return "".join(out)
 
 
-def _scan_balanced(sql: str, start: int, open_ch: str, close_ch: str) -> int:
-    """Index just past the close matching the open at ``start`` (which must
-    point AT the opening char); string-literal aware. -1 if unbalanced."""
-    depth, i, in_str = 0, start, False
-    while i < len(sql):
-        ch = sql[i]
-        if in_str:
-            if ch == "'":
-                if i + 1 < len(sql) and sql[i + 1] == "'":
-                    i += 2
-                    continue
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch == open_ch:
-            depth += 1
-        elif ch == close_ch:
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    return -1
-
-
-def _find_top_kw(body: str, kw: str) -> int:
-    """Offset of the first top-level (depth 0 over ()/[]/{}, outside string
-    literals) occurrence of word ``kw`` in ``body``; -1 if none."""
-    depth, in_str, i = 0, False, 0
-    pat = re.compile(rf"^{kw}\b", re.IGNORECASE)
-    while i < len(body):
-        ch = body[i]
-        if in_str:
-            if ch == "'":
-                if i + 1 < len(body) and body[i + 1] == "'":
-                    i += 2
-                    continue
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch in "([{":
-            depth += 1
-        elif ch in ")]}":
-            depth -= 1
-        elif (
-            depth == 0
-            and (i == 0 or not (body[i - 1].isalnum() or body[i - 1] == "_"))
-            and pat.match(body[i:])
-        ):
-            return i
-        i += 1
-    return -1
+_FOR_RE = re.compile(r"\bFOR\b", re.IGNORECASE)
+_IN_RE = re.compile(r"\bIN\b", re.IGNORECASE)
+_IF_RE = re.compile(r"\bIF\b", re.IGNORECASE)
+_COLON_RE = re.compile(":")
 
 
 def _rewrite_list_comprehensions(sql: str) -> str:
@@ -1019,30 +875,30 @@ def _rewrite_list_comprehensions(sql: str) -> str:
         if open_at == -1:
             return sql
         # skip brackets inside string literals
-        mask = _literal_mask(sql)
+        mask = literal_mask(sql)
         if mask[open_at]:
             i = open_at + 1
             continue
-        end = _scan_balanced(sql, open_at, "[", "]")
+        end = close_of(sql, open_at)
         if end == -1:
             return sql
         body = sql[open_at + 1 : end - 1]
-        for_at = _find_top_kw(body, "FOR")
-        if for_at == -1:
+        for_m = find_top(body, _FOR_RE)
+        if for_m is None:
             i = open_at + 1
             continue
-        expr = body[:for_at].strip()
-        rest = body[for_at + 3 :]
-        in_at = _find_top_kw(rest, "IN")
-        if in_at == -1:
+        expr = body[: for_m.start()].strip()
+        rest = body[for_m.end() :]
+        in_m = find_top(rest, _IN_RE)
+        if in_m is None:
             raise UnsupportedDialect(f"list comprehension without IN: [{body}]")
-        var = rest[:in_at].strip()
-        tail = rest[in_at + 2 :]
-        if_at = _find_top_kw(tail, "IF")
-        if if_at == -1:
+        var = rest[: in_m.start()].strip()
+        tail = rest[in_m.end() :]
+        if_m = find_top(tail, _IF_RE)
+        if if_m is None:
             lst, cond = tail.strip(), None
         else:
-            lst, cond = tail[:if_at].strip(), tail[if_at + 2 :].strip()
+            lst, cond = tail[: if_m.start()].strip(), tail[if_m.end() :].strip()
         expr = _rewrite_list_comprehensions(expr)
         lst = _rewrite_list_comprehensions(lst)
         src = f"filter({lst}, {var} -> {_rewrite_list_comprehensions(cond)})" if cond else lst
@@ -1059,18 +915,16 @@ def _rewrite_struct_literals(sql: str) -> str:
 
     Braces appear nowhere else in the supported SQL surface; keys must be
     single-quoted strings (DuckDB's own struct-literal grammar)."""
-    from .dml import split_top_level
-
     i = 0
     while True:
         open_at = sql.find("{", i)
         if open_at == -1:
             return sql
-        mask = _literal_mask(sql)
+        mask = literal_mask(sql)
         if mask[open_at]:
             i = open_at + 1
             continue
-        end = _scan_balanced(sql, open_at, "{", "}")
+        end = close_of(sql, open_at)
         if end == -1:
             raise UnsupportedDialect("unbalanced '{' in statement")
         body = _rewrite_struct_literals(sql[open_at + 1 : end - 1])
@@ -1078,11 +932,11 @@ def _rewrite_struct_literals(sql: str) -> str:
         head = sql[:open_at]
         hm = re.search(r"\bMAP\s*$", head, re.IGNORECASE)
         keys, vals = [], []
-        for item in split_top_level(body):
-            k_at = _find_top_kw_colon(item)
-            if k_at == -1:
+        for item in split_top(body):
+            colon = find_top(item, _COLON_RE)
+            if colon is None:
                 raise UnsupportedDialect(f"struct literal item without ':': {item!r}")
-            key, val = item[:k_at].strip(), item[k_at + 1 :].strip()
+            key, val = item[: colon.start()].strip(), item[colon.end() :].strip()
             if not re.match(r"^'(?:[^']|'')*'$", key) and not hm:
                 # struct-literal grammar: DuckDB itself requires quoted
                 # string keys; MAP keys may be any expression
@@ -1146,28 +1000,6 @@ def _unify_literal_cells(cells: list[str]) -> "list[str] | None":
     ]
 
 
-def _find_top_kw_colon(item: str) -> int:
-    depth, in_str, i = 0, False, 0
-    while i < len(item):
-        ch = item[i]
-        if in_str:
-            if ch == "'":
-                if i + 1 < len(item) and item[i + 1] == "'":
-                    i += 2
-                    continue
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch in "([{":
-            depth += 1
-        elif ch in ")]}":
-            depth -= 1
-        elif ch == ":" and depth == 0:
-            return i
-        i += 1
-    return -1
-
-
 # DuckDB subscripts are 1-BASED (arr[1] = first element, NULL past the end,
 # inclusive-end slices); Spark's [] is 0-based — passing them through would
 # be a silent off-by-one. element_at/slice carry DuckDB's semantics exactly
@@ -1197,10 +1029,10 @@ def _subscript_content(base: str, content: str) -> str:
     1-based; index 0 → NULL; negative → from the back; out-of-range →
     NULL. Slices are inclusive-end, clamped, negative-aware, and empty
     when end < start ([2:1] → [], [0:2] → first two, [-1:-1] → last)."""
-    colon = _find_top_kw_colon(content)
-    if colon != -1:
-        b = content[:colon].strip() or "1"
-        e = content[colon + 1 :].strip()
+    colon = find_top(content, _COLON_RE)
+    if colon is not None:
+        b = content[: colon.start()].strip() or "1"
+        e = content[colon.end() :].strip()
         b_lit = _INT_LIT_RE.match(b)
         if not e:
             if b_lit and int(b) > 0:
@@ -1243,10 +1075,10 @@ def _subscript_content_str(base: str, content: str) -> str:
     single index 0 and out-of-range → '', negative from the back) onto
     substring/length. Spark's substring is codepoint-based and clamps the
     overshoot, so only the index-0 case needs the explicit guard."""
-    colon = _find_top_kw_colon(content)
-    if colon != -1:
-        b = content[:colon].strip() or "1"
-        e = content[colon + 1 :].strip()
+    colon = find_top(content, _COLON_RE)
+    if colon is not None:
+        b = content[: colon.start()].strip() or "1"
+        e = content[colon.end() :].strip()
         b_lit = _INT_LIT_RE.match(b)
         if not e:
             if b_lit and int(b) > 0:
@@ -1299,7 +1131,7 @@ def _rewrite_call_subscripts(sql: str) -> str:
     loops so chains (``f(x)[1][2]``) resolve outermost-last."""
     # string-literal bases first: '...'[i]
     while True:
-        mask = _literal_mask(sql)
+        mask = literal_mask(sql)
         hit = None
         for a, b in _spans(sql):
             m2 = re.match(r"\s*\[", sql[b:])
@@ -1309,14 +1141,14 @@ def _rewrite_call_subscripts(sql: str) -> str:
         if hit is None:
             break
         a, b, open_br = hit
-        end_br = _scan_balanced(sql, open_br, "[", "]")
+        end_br = close_of(sql, open_br)
         if end_br == -1:
             raise UnsupportedDialect("unbalanced subscript bracket")
         content = sql[open_br + 1 : end_br - 1].strip()
         repl = _subscript_content_str(sql[a:b], content)
         sql = sql[:a] + repl + sql[end_br:]
     while True:
-        mask = _literal_mask(sql)
+        mask = literal_mask(sql)
         m = None
         for cand in re.finditer(r"\)\s*\[", sql):
             if not mask[cand.start()]:
@@ -1335,16 +1167,7 @@ def _rewrite_call_subscripts(sql: str) -> str:
                 )
             return sql
         close = m.start()
-        depth, i = 0, close
-        while i >= 0:
-            if not mask[i]:
-                if sql[i] == ")":
-                    depth += 1
-                elif sql[i] == "(":
-                    depth -= 1
-                    if depth == 0:
-                        break
-            i -= 1
+        i = open_of(sql, close)
         if i < 0:
             raise UnsupportedDialect("unbalanced parens before subscript")
         j = i - 1
@@ -1352,7 +1175,7 @@ def _rewrite_call_subscripts(sql: str) -> str:
             j -= 1
         base_start = j + 1
         open_br = sql.index("[", m.start())
-        end_br = _scan_balanced(sql, open_br, "[", "]")
+        end_br = close_of(sql, open_br)
         if end_br == -1:
             raise UnsupportedDialect("unbalanced subscript bracket")
         base = sql[base_start : close + 1]
@@ -1407,15 +1230,7 @@ def _div_lhs_start(code: str, j: int) -> "int | None":
         return None
     while True:
         if code[k] == ")":
-            depth = 0
-            while k >= 0:
-                if code[k] == ")":
-                    depth += 1
-                elif code[k] == "(":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                k -= 1
+            k = open_of(code, k)
             if k < 0:
                 return None
             start = k
@@ -1581,17 +1396,19 @@ def _rewrite_floordiv_float(code: str) -> str:
 
 
 _CAST_OPEN_RE = re.compile(r"\b(?:TRY_)?CAST\s*\(", re.IGNORECASE)
+_CAST_AS_RE = re.compile(r"\s*\bAS\b", re.IGNORECASE)
+
+
+def _cast_as_at(body: str) -> "int | None":
+    """Offset of the top-level ``AS`` (with the blanks before it) that
+    splits a CAST body into its source expression and its type."""
+    m = find_top(body, _CAST_AS_RE)
+    return None if m is None else m.start()
+
+
 _CAST_AS_STRING_RE = re.compile(r"\bAS\s+(?:VARCHAR|TEXT)\b(?!\s*\()", re.IGNORECASE)
 _CAST_AS_BINARY_RE = re.compile(r"\bAS\s+(?:BLOB|BYTEA|VARBINARY)\b", re.IGNORECASE)
 _CAST_AS_JSON_RE = re.compile(r"\bAS\s+JSON\b", re.IGNORECASE)
-
-
-def _literal_mask(sql: str) -> list[bool]:
-    mask = [False] * len(sql)
-    for m in _MASKED_RE.finditer(sql):
-        for i in range(m.start(), m.end()):
-            mask[i] = True
-    return mask
 
 
 def _rewrite_cast_string_types(sql: str) -> str:
@@ -1600,20 +1417,13 @@ def _rewrite_cast_string_types(sql: str) -> str:
     (the fixture ``documents`` table has a ``text`` column)."""
     if not _CAST_OPEN_RE.search(sql):
         return sql
-    mask = _literal_mask(sql)
+    mask = literal_mask(sql)
     spans: list[tuple[int, int]] = []  # (open_paren_idx+1, close_paren_idx)
     for m in _CAST_OPEN_RE.finditer(sql):
         if mask[m.start()]:
             continue
-        depth, i = 1, m.end()
-        while i < len(sql) and depth:
-            if not mask[i]:
-                if sql[i] == "(":
-                    depth += 1
-                elif sql[i] == ")":
-                    depth -= 1
-            i += 1
-        if depth == 0:
+        i = close_of(sql, m.end() - 1)
+        if i != -1:
             spans.append((m.end(), i - 1))
     out, pos = [], 0
     for a, b in spans:
@@ -1708,7 +1518,7 @@ def _rewrite_ts_precision_casts(sql: str) -> str:
         return sql
     # type literal: TIMESTAMP_NS '2020-01-01 ...' → cast of the string
     while True:
-        mask = _literal_mask(sql)
+        mask = literal_mask(sql)
         m = next(
             (c for c in _TS_PREC_LITERAL_RE.finditer(sql) if not mask[c.start()]),
             None,
@@ -1722,7 +1532,7 @@ def _rewrite_ts_precision_casts(sql: str) -> str:
         sql = sql[: m.start()] + repl + sql[lit:]
     # postfix: expr::TIMESTAMP_S — same base scan as the int-cast pass
     while True:
-        mask = _literal_mask(sql)
+        mask = literal_mask(sql)
         m = next(
             (c for c in _TS_PREC_SUFFIX_RE.finditer(sql) if not mask[c.start()]),
             None,
@@ -1745,16 +1555,7 @@ def _rewrite_ts_precision_casts(sql: str) -> str:
             if tk:
                 k = tk.start()
         elif j > 0 and sql[j - 1] == ")":
-            depth, k = 0, j
-            while k > 0:
-                k -= 1
-                if not mask[k]:
-                    if sql[k] == ")":
-                        depth += 1
-                    elif sql[k] == "(":
-                        depth -= 1
-                        if depth == 0:
-                            break
+            k = max(open_of(sql, j - 1), 0)
             fm = re.search(r"[\w.]+$", sql[:k])
             if fm and fm.group().upper() not in _DIV_LHS_KEYWORDS:
                 k = fm.start()
@@ -1770,20 +1571,13 @@ def _rewrite_ts_precision_casts(sql: str) -> str:
         sql = sql[:k] + repl + sql[m.end() :]
     # CAST(expr AS TIMESTAMP_S) — balanced, literal-aware
     while True:
-        mask = _literal_mask(sql)
+        mask = literal_mask(sql)
         changed = False
         for m in _CAST_OPEN_RE.finditer(sql):
             if mask[m.start()]:
                 continue
-            depth, i = 1, m.end()
-            while i < len(sql) and depth:
-                if not mask[i]:
-                    if sql[i] == "(":
-                        depth += 1
-                    elif sql[i] == ")":
-                        depth -= 1
-                i += 1
-            if depth:
+            i = close_of(sql, m.end() - 1)
+            if i == -1:
                 continue
             inner = sql[m.end() : i - 1]
             tm = re.search(
@@ -1813,7 +1607,7 @@ def _rewrite_postfix_int_casts(sql: str) -> str:
     `CAST(2.5 AS INTEGER)` rounded → 3). Base scan mirrors ::BIT: string
     literal, balanced paren group (plus its call name), or identifier."""
     while True:
-        mask = _literal_mask(sql)
+        mask = literal_mask(sql)
         m = next(
             (c for c in _INT_SUFFIX_RE.finditer(sql) if not mask[c.start()]), None
         )
@@ -1828,16 +1622,7 @@ def _rewrite_postfix_int_casts(sql: str) -> str:
                 raise UnsupportedDialect("postfix cast on an unparsable literal")
             k = lit
         elif j > 0 and sql[j - 1] == ")":
-            depth, k = 0, j
-            while k > 0:
-                k -= 1
-                if not mask[k]:
-                    if sql[k] == ")":
-                        depth += 1
-                    elif sql[k] == "(":
-                        depth -= 1
-                        if depth == 0:
-                            break
+            k = max(open_of(sql, j - 1), 0)
             fm = re.search(r"[\w.]+$", sql[:k])
             if fm and fm.group().upper() not in _DIV_LHS_KEYWORDS:
                 k = fm.start()  # include the call name: foo(x)::INT
@@ -1873,20 +1658,13 @@ def _rewrite_int_casts(sql: str) -> str:
     if not _CAST_OPEN_RE.search(sql):
         return sql
     while True:
-        mask = _literal_mask(sql)
+        mask = literal_mask(sql)
         changed = False
         for m in _CAST_OPEN_RE.finditer(sql):
             if mask[m.start()]:
                 continue
-            depth, i = 1, m.end()
-            while i < len(sql) and depth:
-                if not mask[i]:
-                    if sql[i] == "(":
-                        depth += 1
-                    elif sql[i] == ")":
-                        depth -= 1
-                i += 1
-            if depth:
+            i = close_of(sql, m.end() - 1)
+            if i == -1:
                 continue
             inner = sql[m.end() : i - 1]
             tm = re.search(r"\s+AS\s+(\w+)\s*$", inner, re.IGNORECASE)
@@ -1933,20 +1711,13 @@ def _rewrite_bit_casts(sql: str) -> str:
     if not re.search(r"\bBIT\b", sql, re.IGNORECASE):
         return sql
     # CAST(... AS BIT) — balanced, literal-aware
-    mask = _literal_mask(sql)
+    mask = literal_mask(sql)
     out, pos = [], 0
     for m in _CAST_OPEN_RE.finditer(sql):
         if mask[m.start()] or m.start() < pos:
             continue
-        depth, i = 1, m.end()
-        while i < len(sql) and depth:
-            if not mask[i]:
-                if sql[i] == "(":
-                    depth += 1
-                elif sql[i] == ")":
-                    depth -= 1
-            i += 1
-        if depth:
+        i = close_of(sql, m.end() - 1)
+        if i == -1:
             continue
         inner = sql[m.end() : i - 1]
         tm = re.search(r"\s+AS\s+BIT\s*$", inner, re.IGNORECASE)
@@ -1961,7 +1732,7 @@ def _rewrite_bit_casts(sql: str) -> str:
 
     # expr::BIT — base is a literal, identifier, or parenthesized group
     while True:
-        mask = _literal_mask(sql)
+        mask = literal_mask(sql)
         m = next((c for c in _BIT_SUFFIX_RE.finditer(sql) if not mask[c.start()]), None)
         if m is None:
             break
@@ -1975,16 +1746,7 @@ def _rewrite_bit_casts(sql: str) -> str:
                 raise UnsupportedDialect("::BIT on an unparsable literal base")
             k = lit
         elif j > 0 and sql[j - 1] == ")":
-            depth, k = 0, j
-            while k > 0:
-                k -= 1
-                if not mask[k]:
-                    if sql[k] == ")":
-                        depth += 1
-                    elif sql[k] == "(":
-                        depth -= 1
-                        if depth == 0:
-                            break
+            k = max(open_of(sql, j - 1), 0)
         else:
             k = j
             while k > 0 and (sql[k - 1].isalnum() or sql[k - 1] in "_."):
@@ -1997,7 +1759,7 @@ def _rewrite_bit_casts(sql: str) -> str:
 
 
 def _spans(sql: str) -> list[tuple[int, int]]:
-    return [(m.start(), m.end()) for m in _STRING_RE.finditer(sql)]
+    return [(m.start(), m.end()) for m in STRING_RE.finditer(sql)]
 
 
 # ---- USING SAMPLE ---------------------------------------------------------
@@ -2037,6 +1799,10 @@ def _rewrite_using_sample(code: str) -> str:
 _QUALIFY_RE = re.compile(r"\bQUALIFY\b", re.IGNORECASE)
 
 
+_ORDER_OR_LIMIT_RE = re.compile(r"\b(?:ORDER\s+BY|LIMIT)\b", re.IGNORECASE)
+_FROM_KW_RE = re.compile(r"\bFROM\b", re.IGNORECASE)
+
+
 def _rewrite_qualify(sql: str) -> str:
     """SELECT <list> FROM ... QUALIFY <pred> [ORDER BY ...] [LIMIT ...]
     → SELECT <original cols> FROM (SELECT *, pred AS __q FROM ...) WHERE __q
@@ -2048,30 +1814,15 @@ def _rewrite_qualify(sql: str) -> str:
     head, tail = sql[: m.start()], sql[m.end() :]
     # find ORDER BY / LIMIT at paren depth 0 only (ORDER BY inside an OVER()
     # window belongs to the predicate)
-    depth, cut = 0, None
-    for i, ch in enumerate(tail):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and re.match(r"(ORDER\s+BY|LIMIT)\b", tail[i:], re.IGNORECASE):
-            cut = i
-            break
-    pred = tail[:cut] if cut is not None else tail
-    trailer = tail[cut:] if cut is not None else ""
+    cm = find_top(tail, _ORDER_OR_LIMIT_RE)
+    cut = len(tail) if cm is None else cm.start()
+    pred, trailer = tail[:cut], tail[cut:]
     # inject the predicate as an extra select-list item: find the top-level
     # FROM in head and splice ", (pred) AS __q" before it
-    depth, from_at = 0, None
-    for i, ch in enumerate(head):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and re.match(r"FROM\b", head[i:], re.IGNORECASE):
-            from_at = i
-            break
-    if from_at is None:
+    fm = find_top(head, _FROM_KW_RE)
+    if fm is None:
         raise UnsupportedDialect("QUALIFY without a parsable FROM clause")
+    from_at = fm.start()
     inner = f"{head[:from_at].rstrip()}, ({pred.strip()}) AS __q {head[from_at:]}"
     return f"SELECT * EXCEPT (__q) FROM ({inner.rstrip()}) WHERE __q {trailer}"
 
@@ -2087,47 +1838,59 @@ _ORDER_ITEM_RE = re.compile(
 )
 
 
+_LIMIT_OFFSET_RE = re.compile(r"\b(?:LIMIT|OFFSET)\b", re.IGNORECASE)
+_AS_ALIAS_RE = re.compile(r"^(.*\S)\s+AS\s+(\w+)$", re.IGNORECASE | re.DOTALL)
+
+
 def _rewrite_distinct_on(sql: str) -> str:
     """SELECT DISTINCT ON (keys) <list> FROM <rest> [ORDER BY <order>]
     [LIMIT/OFFSET] → keep the first row per key of a row_number() window
-    ordered by <order>. The window only picks the rows: the statement's
-    ORDER BY then sorts them, and LIMIT/OFFSET cut after that sort. Each
-    ORDER BY expression is evaluated inside, as a hidden ``__do<i>``
-    column, so qualified and unselected columns still resolve."""
+    ordered by <order>. The inner query evaluates the select list, so
+    qualified names resolve in their own scope. The window only picks the
+    rows: the statement's ORDER BY then sorts them, and LIMIT/OFFSET cut
+    after that sort. Each ORDER BY item is evaluated inside, as a hidden
+    ``__do<i>`` column; an item naming a select-list alias or position
+    stands for that select-list expression, as in DuckDB."""
     m = _DISTINCT_ON_RE.match(sql.strip())
     if not m:
         return sql
     keys, select_list, rest, order = m.groups()
     last = order or rest  # LIMIT/OFFSET trail whichever clause ends the text
-    cut = min(
-        (i for i in (_find_top_kw(last, "LIMIT"), _find_top_kw(last, "OFFSET")) if i >= 0),
-        default=len(last),
-    )
+    cm = find_top(last, _LIMIT_OFFSET_RE)
+    cut = len(last) if cm is None else cm.start()
     trailer = last[cut:].strip()
     if order:
         order = order[:cut].rstrip()
     else:
         rest = rest[:cut].rstrip()
-    hidden, outer = [], []
-    for item in _split_top_level_commas(order or ""):
-        expr, direction, nulls = _ORDER_ITEM_RE.match(item.strip()).groups()
-        if expr.isdigit():  # ordinal: a select-list position
-            outer.append(item.strip())
-            continue
-        hidden.append(f"({expr}) AS __do{len(hidden)}")
-        outer.append(f"__do{len(hidden) - 1}{direction or ''}{nulls or ''}")
-    items = _split_top_level_commas(select_list)
-    if any(it.strip() == "*" for it in items):
-        drop = ", ".join(["__rn"] + [f"__do{i}" for i in range(len(hidden))])
-        select_list = ", ".join(
-            f"* EXCEPT ({drop})" if it.strip() == "*" else it.strip() for it in items
-        )
+    items = split_top(select_list)
+    by_alias = {
+        am.group(2).lower(): am.group(1)
+        for am in map(_AS_ALIAS_RE.match, items) if am
+    }
+
+    def _select_expr(expr: str) -> str:
+        if not (expr.isdigit() and 0 < int(expr) <= len(items)):
+            return by_alias.get(expr.lower(), expr)
+        if any(it.endswith("*") for it in items):
+            raise UnsupportedDialect("DISTINCT ON: ORDER BY position over a * select list")
+        am = _AS_ALIAS_RE.match(items[int(expr) - 1])
+        return am.group(1) if am else items[int(expr) - 1]
+
+    hidden, window, outer = [], [], []
+    for i, item in enumerate(split_top(order or "")):
+        expr, direction, nulls = _ORDER_ITEM_RE.match(item).groups()
+        expr = _select_expr(expr)
+        hidden.append(f"({expr}) AS __do{i}")
+        window.append(f"{expr}{direction or ''}{nulls or ''}")
+        outer.append(f"__do{i}{direction or ''}{nulls or ''}")
+    drop = ", ".join(["__rn"] + [f"__do{i}" for i in range(len(hidden))])
     extra = "".join(f"{h}, " for h in hidden)
     order_by = f" ORDER BY {', '.join(outer)}" if outer else ""
     return (
-        f"SELECT {select_list} FROM ("
-        f"SELECT *, {extra}row_number() OVER (PARTITION BY {keys} "
-        f"ORDER BY {order or keys}) AS __rn FROM {rest}) WHERE __rn = 1"
+        f"SELECT * EXCEPT ({drop}) FROM ("
+        f"SELECT {select_list}, {extra}row_number() OVER (PARTITION BY {keys} "
+        f"ORDER BY {', '.join(window) or keys}) AS __rn FROM {rest}) WHERE __rn = 1"
         f"{order_by}{' ' + trailer if trailer else ''}"
     )
 
@@ -2187,9 +1950,7 @@ def _split_window_spec(spec: str):
         sp = sp[: fm.start()]
     om = re.search(r"\bORDER\s+BY\s+", sp, re.IGNORECASE)
     if om:
-        from .dml import split_top_level
-
-        for item in split_top_level(sp[om.end() :]):
+        for item in split_top(sp[om.end() :]):
             bare = re.sub(
                 r"\s+(ASC|DESC)?\s*(NULLS\s+(FIRST|LAST))?\s*$",
                 "",
@@ -2200,9 +1961,7 @@ def _split_window_spec(spec: str):
         sp = sp[: om.start()]
     pm = re.search(r"\bPARTITION\s+BY\s+", sp, re.IGNORECASE)
     if pm:
-        from .dml import split_top_level
-
-        part = [i.strip() for i in split_top_level(sp[pm.end() :])]
+        part = split_top(sp[pm.end() :])
     return part, order, frame
 
 
@@ -2235,7 +1994,7 @@ def _rewrite_ignore_nulls(sql: str) -> str:
         if m is None:
             return sql
         open_at = sql.index("(", m.end() - 1)
-        end = _scan_balanced(sql, open_at, "(", ")")
+        end = close_of(sql, open_at)
         if end == -1:
             return sql
         args = sql[open_at + 1 : end - 1]
@@ -2267,9 +2026,7 @@ def _emit_ordered_first_last(fn: str, args: str, keys: str, filt: str = "") -> s
     itself, so no row is skipped. ASC flag = (k IS NULL): false < true
     puts NULL keys at the max end; DESC inverts to (k IS NOT NULL) so the
     min end (= last position of a descending sort) holds the NULL keys."""
-    from .dml import split_top_level
-
-    parts = [k.strip() for k in split_top_level(keys)]
+    parts = split_top(keys)
     dirs = set()
     bare = []
     for k in parts:
@@ -2304,7 +2061,7 @@ def _emit_ordered_list(args: str, keys: str) -> str:
     never NULL, so NULL values survive like DuckDB's; the comparator chain
     reproduces per-key direction with DuckDB's NULLS LAST default."""
     key_specs = []
-    for part in _split_top_level_commas(keys):
+    for part in split_top(keys):
         km = re.match(
             r"^(.*?)(?:\s+(ASC|DESC))?(?:\s+NULLS\s+(FIRST|LAST))?$",
             part.strip(),
@@ -2335,23 +2092,7 @@ def _emit_ordered_list(args: str, keys: str) -> str:
     )
 
 
-def _split_top_level_commas(text: str) -> list[str]:
-    out, depth, start, in_str = [], 0, 0, False
-    for i, ch in enumerate(text):
-        if in_str:
-            if ch == "'":
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            out.append(text[start:i])
-            start = i + 1
-    out.append(text[start:])
-    return [p for p in out if p.strip()]
+_ARG_ORDER_BY_RE = re.compile(r"\s+ORDER\s+BY\s+", re.IGNORECASE)
 
 
 def _rewrite_agg_inline_order(sql: str) -> str:
@@ -2360,29 +2101,19 @@ def _rewrite_agg_inline_order(sql: str) -> str:
     ``listagg(x, ',') WITHIN GROUP (ORDER BY k)``. Balanced, literal-aware;
     only the top-level ORDER BY of the call is moved."""
     while True:
-        mask = _literal_mask(sql)
+        mask = literal_mask(sql)
         changed = False
         for m in _AGG_ORDER_OPEN_RE.finditer(sql):
             if mask[m.start()]:
                 continue
-            depth, i = 1, m.end()
-            order_at = None
-            while i < len(sql) and depth:
-                if not mask[i]:
-                    ch = sql[i]
-                    if ch == "(":
-                        depth += 1
-                    elif ch == ")":
-                        depth -= 1
-                    elif depth == 1 and order_at is None:
-                        om = re.match(r"\s+ORDER\s+BY\s+", sql[i:], re.IGNORECASE)
-                        if om:
-                            order_at = (i, i + om.end())
-                i += 1
-            if depth or order_at is None:
+            i = close_of(sql, m.end() - 1)
+            if i == -1:
                 continue
-            args = sql[m.end() : order_at[0]]
-            keys = sql[order_at[1] : i - 1]
+            om = find_top(sql, _ARG_ORDER_BY_RE, m.end(), i - 1)
+            if om is None:
+                continue
+            args = sql[m.end() : om.start()]
+            keys = sql[om.end() : i - 1]
             fn = m.group(1).lower()
             # a trailing FILTER (WHERE ...) belongs to the aggregate: for
             # the min_by/max_by emission it must sit INSIDE the parens,
@@ -2392,7 +2123,7 @@ def _rewrite_agg_inline_order(sql: str) -> str:
             filt = ""
             fm2 = re.match(r"\s*FILTER\s*\(", sql[i:], re.IGNORECASE)
             if fm2 and fn in ("first", "last"):
-                fclose = _scan_balanced(sql, i + fm2.end() - 1, "(", ")")
+                fclose = close_of(sql, i + fm2.end() - 1)
                 if fclose != -1:
                     filt = " " + sql[i + fm2.start() : fclose].strip()
                     end = fclose
@@ -2463,7 +2194,7 @@ def _rewrite_window_distinct(sql: str) -> str:
         # literal spans (recomputed per pass — offsets shift on rewrite);
         # a match starting inside a string literal must not be rewritten
         lit_spans, pos = [], 0
-        for is_lit, chunk in _split_literals(sql):
+        for is_lit, chunk in split_literals(sql):
             if is_lit:
                 lit_spans.append((pos, pos + len(chunk)))
             pos += len(chunk)
@@ -2471,14 +2202,14 @@ def _rewrite_window_distinct(sql: str) -> str:
             if any(a <= m.start() < b for a, b in lit_spans):
                 continue
             open_at = sql.index("(", m.end(1))
-            close = _scan_balanced(sql, open_at, "(", ")")
+            close = close_of(sql, open_at)
             if close == -1:
                 break
             om = re.match(r"\s*OVER\s*\(", sql[close:], re.IGNORECASE)
             if not om:
                 continue  # plain DISTINCT aggregate — Spark handles it
             spec_open = close + om.end() - 1
-            spec_close = _scan_balanced(sql, spec_open, "(", ")")
+            spec_close = close_of(sql, spec_open)
             if spec_close == -1:
                 break
             fname = m.group(1).lower()
@@ -2560,29 +2291,20 @@ def _rewrite_window_filter(sql: str) -> str:
     excludes those rows). Plain aggregate FILTER (no OVER) stays for
     Spark."""
     while True:
-        mask = _literal_mask(sql)
+        mask = literal_mask(sql)
         done = True
         for m in _WIN_FILTER_RE.finditer(sql):
             if mask[m.start()]:
                 continue
             close = m.start()  # the aggregate call's ')'
-            depth, k = 0, close
-            while k >= 0:
-                if not mask[k]:
-                    if sql[k] == ")":
-                        depth += 1
-                    elif sql[k] == "(":
-                        depth -= 1
-                        if depth == 0:
-                            break
-                k -= 1
+            k = open_of(sql, close)
             if k < 0:
                 continue
             fm = re.search(r"(\w+)\s*$", sql[:k])
             if not fm:
                 continue
             fopen = sql.index("(", m.end() - 1)
-            fclose = _scan_balanced(sql, fopen, "(", ")")
+            fclose = close_of(sql, fopen)
             if fclose == -1:
                 continue
             om = re.match(r"\s*OVER\b", sql[fclose:], re.IGNORECASE)
@@ -2627,7 +2349,7 @@ def _rhs_operand_end(sql: str, j: int, mask) -> "int | None":
                 return b
         return None
     if sql[k] == "(":
-        e = _scan_balanced(sql, k, "(", ")")
+        e = close_of(sql, k)
         return e if e != -1 else None
     if sql[k].isalnum() or sql[k] in "_.":
         e = k
@@ -2637,7 +2359,7 @@ def _rhs_operand_end(sql: str, j: int, mask) -> "int | None":
         m = re.match(r"\s*\(", sql[e:])
         if m:
             o = sql.index("(", e)
-            e2 = _scan_balanced(sql, o, "(", ")")
+            e2 = close_of(sql, o)
             return e2 if e2 != -1 else None
         return e
     return None
@@ -2680,7 +2402,7 @@ def _rewrite_json_arrows(sql: str) -> str:
     overwhelmingly common real usage). Runs BEFORE the passes that EMIT
     Spark lambdas, so generated arrows are never touched."""
     while True:
-        mask = _literal_mask(sql)
+        mask = literal_mask(sql)
         hit = None
         for m in _JSON_ARROW_RE.finditer(sql):
             if mask[m.start()]:
@@ -2783,7 +2505,7 @@ def _rewrite_binary_ops(sql: str) -> str:
     NOT ILIKE (Spark has ILIKE natively), ``^@`` is starts_with."""
     # token substitutions first
     while True:
-        mask = _literal_mask(sql)
+        mask = literal_mask(sql)
         m = next((c for c in _BINOP_TEXT_RE.finditer(sql) if not mask[c.start()]), None)
         if m is None:
             break
@@ -2810,7 +2532,7 @@ def _rewrite_binary_ops(sql: str) -> str:
     # binary ~ (regex FULL match): only when a left operand exists (else it
     # is Spark's unary bitwise NOT and stays)
     while True:
-        mask = _literal_mask(sql)
+        mask = literal_mask(sql)
         hit = None
         for c in re.finditer(r"~", sql):
             if mask[c.start()]:
@@ -2824,7 +2546,7 @@ def _rewrite_binary_ops(sql: str) -> str:
         sql = sql[: hit.start()] + " RLIKE " + rhs + sql[hi:]
     # power operators
     while True:
-        mask = _literal_mask(sql)
+        mask = literal_mask(sql)
         m = next(
             (c for c in _BINOP_POWER_RE.finditer(sql) if not mask[c.start()]), None
         )
@@ -2864,12 +2586,12 @@ def _inline_named_windows_for_exclude(sql: str) -> str:
     through untouched — Spark supports the WINDOW clause natively. Chained
     definitions (``w2 AS (w1 ORDER BY ...)``) resolve one name deep per
     iteration."""
-    code_only = "".join(ch for is_lit, ch in _split_literals(sql) if not is_lit)
+    code_only = "".join(ch for is_lit, ch in split_literals(sql) if not is_lit)
     if not re.search(
         r"\bEXCLUDE\s+(CURRENT\s+ROW|GROUP|TIES|NO\s+OTHERS)", code_only, re.IGNORECASE
     ) or not re.search(r"\bWINDOW\s+\w+\s+AS\s*\(", code_only, re.IGNORECASE):
         return sql
-    mask = _literal_mask(sql)
+    mask = literal_mask(sql)
     m = next(
         (
             c
@@ -2888,7 +2610,7 @@ def _inline_named_windows_for_exclude(sql: str) -> str:
         if not nm:
             break
         open_at = pos + nm.end() - 1
-        close = _scan_balanced(sql, open_at, "(", ")")
+        close = close_of(sql, open_at)
         if close == -1:
             raise UnsupportedDialect("unbalanced named WINDOW clause")
         specs[nm.group(1)] = sql[open_at + 1 : close - 1].strip()
@@ -2980,8 +2702,6 @@ def _spark_type_text(t: str) -> "str | None":
     MAP(VARCHAR, DATE)) must convert all the way down — a half-converted
     type is a Spark parse error). None = unsupported shape (caller
     leaves the span verbatim for a loud reject)."""
-    from .dml import split_top_level
-
     t = t.strip()
     m = re.match(r"^(.*?)((?:\s*\[\s*\])+)$", t, re.DOTALL)
     if m:
@@ -2994,7 +2714,7 @@ def _spark_type_text(t: str) -> "str | None":
     um = re.match(r"^(MAP|STRUCT)\s*\((.*)\)$", t, re.IGNORECASE | re.DOTALL)
     if um:
         kind = um.group(1).upper()
-        parts = [p.strip() for p in split_top_level(um.group(2))]
+        parts = split_top(um.group(2))
         if kind == "MAP":
             if len(parts) != 2:
                 return None
@@ -3029,7 +2749,7 @@ def _rewrite_complex_type_casts(sql: str) -> str:
     Spark rejects them loudly rather than silently mistyping."""
     i = 0
     while True:
-        mask = _literal_mask(sql)
+        mask = literal_mask(sql)
         m = None
         for cand in _COMPLEX_TYPE_HEAD_RE.finditer(sql, i):
             if not mask[cand.start()]:
@@ -3038,7 +2758,7 @@ def _rewrite_complex_type_casts(sql: str) -> str:
         if m is None:
             return sql
         open_at = m.end() - 1
-        close = _scan_balanced(sql, open_at, "(", ")")
+        close = close_of(sql, open_at)
         if close == -1:
             return sql
         kind = m.group(2).upper()
@@ -3067,7 +2787,7 @@ def _rewrite_frame_exclude(sql: str) -> str:
     while True:
         m = None
         for cand in re.finditer(r"\bOVER\s*\(", sql, re.IGNORECASE):
-            end = _scan_balanced(sql, sql.index("(", cand.end() - 1), "(", ")")
+            end = close_of(sql, sql.index("(", cand.end() - 1))
             if end == -1:
                 break
             spec = sql[sql.index("(", cand.end() - 1) + 1 : end - 1]
@@ -3077,7 +2797,7 @@ def _rewrite_frame_exclude(sql: str) -> str:
                 break
         if m is None:
             code_only = "".join(
-                ch for is_lit, ch in _split_literals(sql) if not is_lit
+                ch for is_lit, ch in split_literals(sql) if not is_lit
             )
             if re.search(
                 r"\bEXCLUDE\s+(CURRENT\s+ROW|GROUP|TIES|NO\s+OTHERS)\s*\)",
@@ -3101,15 +2821,7 @@ def _rewrite_frame_exclude(sql: str) -> str:
             raise UnsupportedDialect(
                 "window frame EXCLUDE: cannot locate the aggregate call"
             )
-        depth, k = 0, j
-        while k >= 0:
-            if sql[k] == ")":
-                depth += 1
-            elif sql[k] == "(":
-                depth -= 1
-                if depth == 0:
-                    break
-            k -= 1
+        k = open_of(sql, j)
         args = sql[k + 1 : j]
         fm = re.search(r"(\w+)\s*$", sql[:k])
         fname = fm.group(1).lower() if fm else ""
@@ -3427,7 +3139,7 @@ def _rewrite_list_concat_nulls(sql: str) -> str:
     remains a documented textual-unknowability divergence, as does the
     textual re-evaluation of operands inside the CASE (nondeterministic
     operands are evaluated more than once)."""
-    mask = _literal_mask(sql)
+    mask = literal_mask(sql)
     i = 0
     while True:
         j = sql.find("||", i)
@@ -3454,7 +3166,7 @@ def _rewrite_list_concat_nulls(sql: str) -> str:
             # NULL directly
             repl = "CAST(NULL AS STRING)"
             sql = sql[:lo] + repl + sql[hi:]
-            mask = _literal_mask(sql)
+            mask = literal_mask(sql)
             i = lo + len(repl)
             continue
         repl = (
@@ -3462,7 +3174,7 @@ def _rewrite_list_concat_nulls(sql: str) -> str:
             f"WHEN ({b}) IS NULL THEN {a} ELSE concat({a}, {b}) END)"
         )
         sql = sql[:lo] + repl + sql[hi:]
-        mask = _literal_mask(sql)
+        mask = literal_mask(sql)
         i = lo + len(repl)
 
 
@@ -3508,16 +3220,16 @@ def _rewrite_position_in(sql: str) -> str:
     if not _POSITION_IN_RE.search(sql):
         return sql
     while True:
-        mask = _literal_mask(sql)
+        mask = literal_mask(sql)
         hit = None
         for m in _POSITION_IN_RE.finditer(sql):
             if mask[m.start()]:
                 continue
-            close = _scan_balanced(sql, m.end() - 1, "(", ")")
+            close = close_of(sql, m.end() - 1)
             if close == -1:
                 continue
             body = sql[m.end(): close - 1]
-            bmask = _literal_mask(body)
+            bmask = literal_mask(body)
             im = None
             for cand in re.finditer(r"\bIN\b", body, re.IGNORECASE):
                 if bmask[cand.start()]:
@@ -3561,14 +3273,14 @@ def _rewrite_union_values(sql: str) -> str:
     if not _UNION_VALUE_RE.search(sql):
         return sql
     while True:
-        mask = _literal_mask(sql)
+        mask = literal_mask(sql)
         m = next(
             (c for c in _UNION_VALUE_RE.finditer(sql) if not mask[c.start()]),
             None,
         )
         if m is None:
             return sql
-        close = _scan_balanced(sql, m.end() - 1, "(", ")")
+        close = close_of(sql, m.end() - 1)
         if close == -1:
             return sql
         bm = re.match(
@@ -3583,10 +3295,10 @@ def _rewrite_union_values(sql: str) -> str:
         fields: "list[tuple[str, str]] | None" = None
         um = re.match(r"\s*::\s*UNION\s*\(", sql[close:], re.IGNORECASE)
         if um:
-            uclose = _scan_balanced(sql, close + um.end() - 1, "(", ")")
+            uclose = close_of(sql, close + um.end() - 1)
             if uclose != -1:
                 fields = []
-                for fd in _split_args(sql[close + um.end(): uclose - 1]):
+                for fd in split_top(sql[close + um.end(): uclose - 1]):
                     fm = re.match(r"^\s*(\w+)\s+(.+?)\s*$", fd, re.DOTALL)
                     if not fm:
                         fields = None
@@ -3745,7 +3457,7 @@ def _rewrite_postfix_factorial(sql: str) -> str:
     followed by an expression end. != stays the inequality operator."""
     if "!" not in sql:
         return sql
-    mask = _literal_mask(sql)
+    mask = literal_mask(sql)
     edits: list[tuple[int, int, str]] = []
     for m in _POSTFIX_FACT_RE.finditer(sql):
         if mask[m.start()]:
@@ -3765,7 +3477,7 @@ def _rewrite_postfix_factorial(sql: str) -> str:
 def _rewrite_bool_context_strings(sql: str) -> str:
     if "'" not in sql:
         return sql
-    mask = _literal_mask(sql)
+    mask = literal_mask(sql)
     edits: list[tuple[int, int, str]] = []
     for m in _BOOL_CTX_STR_RE.finditer(sql):
         if mask[m.start()]:
@@ -3838,7 +3550,7 @@ _TYPED_LIT_PREFIX_RE = re.compile(
 def _reject_string_literal_overloads(sql: str) -> str:
     if not re.search(r"['']", sql):
         return sql
-    mask = _literal_mask(sql)
+    mask = literal_mask(sql)
     for m in _STR_PLUSMINUS_RE.finditer(sql):
         op = m.group(2) or m.group(4)
         op_at = sql.index(op, m.end(1) if m.group(1) else m.end(3))
@@ -3902,6 +3614,11 @@ _RANKING_OVER_RE = re.compile(
 )
 
 
+_SPEC_ORDER_OR_FRAME_RE = re.compile(
+    r"\b(?:(ORDER\s+BY)|ROWS|RANGE|GROUPS)\b", re.IGNORECASE
+)
+
+
 def _rewrite_unordered_ranking_windows(sql: str) -> str:
     """DuckDB allows ranking/offset window functions over an UNORDERED
     window — row_number() OVER () numbers rows in scan order, rank()
@@ -3912,12 +3629,12 @@ def _rewrite_unordered_ranking_windows(sql: str) -> str:
     pass through."""
     if not re.search(r"\bOVER\s*\(", sql, re.IGNORECASE):
         return sql
-    mask = _literal_mask(sql)
+    mask = literal_mask(sql)
     edits: list[tuple[int, str]] = []
     for m in _RANKING_OVER_RE.finditer(sql):
         if mask[m.start()]:
             continue
-        close = _scan_balanced(sql, m.end() - 1, "(", ")")
+        close = close_of(sql, m.end() - 1)
         if close == -1:
             continue
         om = re.match(
@@ -3926,37 +3643,14 @@ def _rewrite_unordered_ranking_windows(sql: str) -> str:
         if not om:
             continue
         spec_open = close + om.end() - 1
-        spec_close = _scan_balanced(sql, spec_open, "(", ")")
+        spec_close = close_of(sql, spec_open)
         if spec_close == -1:
             continue
         spec = sql[spec_open + 1: spec_close - 1]
-        smask = _literal_mask(spec)
-        depth = 0
-        has_order = False
-        frame_at = len(spec)
-        i = 0
-        while i < len(spec):
-            if not smask[i]:
-                ch = spec[i]
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                elif depth == 0:
-                    if re.match(r"ORDER\s+BY\b", spec[i:], re.IGNORECASE) and (
-                        i == 0 or not (spec[i - 1].isalnum() or spec[i - 1] == "_")
-                    ):
-                        has_order = True
-                        break
-                    fm = re.match(r"(?:ROWS|RANGE|GROUPS)\b", spec[i:],
-                                  re.IGNORECASE)
-                    if fm and (
-                        i == 0 or not (spec[i - 1].isalnum() or spec[i - 1] == "_")
-                    ) and frame_at == len(spec):
-                        frame_at = i
-            i += 1
-        if has_order:
+        hits = list(iter_top(spec, _SPEC_ORDER_OR_FRAME_RE))
+        if any(h.group(1) for h in hits):
             continue
+        frame_at = hits[0].start() if hits else len(spec)
         edits.append((spec_open + 1 + frame_at, " ORDER BY 1 "))
     for at, ins in sorted(edits, reverse=True):
         sql = sql[:at] + ins + sql[at:]
@@ -4122,7 +3816,7 @@ def _rewrite_datetime_literals(sql: str) -> str:
         r"\b(TIMESTAMPTZ|TIMESTAMP|DATETIME|DATE|TIME)\b", sql, re.IGNORECASE
     ):
         return sql
-    mask = _literal_mask(sql)
+    mask = literal_mask(sql)
     edits: list[tuple[int, int, str]] = []
     for m in _DT_KW_LIT_RE.finditer(sql):
         if mask[m.start()]:
@@ -4181,7 +3875,7 @@ def _rewrite_at_time_zone(sql: str) -> str:
         return sql
     pos = 0  # scan cursor; unrewritable matches advance it
     while True:
-        mask = _literal_mask(sql)
+        mask = literal_mask(sql)
         m = None
         for cand in _AT_TIME_ZONE_RE.finditer(sql, pos):
             if not mask[cand.start()]:
@@ -4199,17 +3893,8 @@ def _rewrite_at_time_zone(sql: str) -> str:
         start = None
         while True:
             if sql[j] == ")":
-                depth = 1
-                k = j - 1
-                while k >= 0 and depth:
-                    if not mask[k]:
-                        if sql[k] == ")":
-                            depth += 1
-                        elif sql[k] == "(":
-                            depth -= 1
-                    if depth:
-                        k -= 1
-                if depth:
+                k = open_of(sql, j)
+                if k == -1:
                     break
                 k -= 1
                 while k >= 0 and (sql[k].isalnum() or sql[k] in "_."):
@@ -4380,14 +4065,14 @@ def _rewrite_interval_strings(sql: str) -> str:
     parser raises where DuckDB's conversion does)."""
     if not re.search(r"\bINTERVAL\b|::\s*INTERVAL\b", sql, re.IGNORECASE):
         return sql
-    mask = _literal_mask(sql)
+    mask = literal_mask(sql)
     # time_bucket's emitter consumes INTERVAL '...' shapes itself (its
     # month-space widths need the raw string); leave its spans alone
     skip: list[tuple[int, int]] = []
     for fm in re.finditer(r"\btime_bucket\s*\(", sql, re.IGNORECASE):
         if mask[fm.start()]:
             continue
-        close = _scan_balanced(sql, fm.end() - 1, "(", ")")
+        close = close_of(sql, fm.end() - 1)
         if close != -1:
             skip.append((fm.start(), close))
     kw_matches = [
@@ -4468,33 +4153,20 @@ def _rewrite_tz_varchar_casts(sql: str) -> str:
     if not _CAST_OPEN_RE.search(sql):
         return sql
     while True:
-        mask = _literal_mask(sql)
+        mask = literal_mask(sql)
         hit = None
         for m in _CAST_OPEN_RE.finditer(sql):
             if mask[m.start()]:
                 continue
-            close = _scan_balanced(sql, m.end() - 1, "(", ")")
+            close = close_of(sql, m.end() - 1)
             if close == -1:
                 continue
             body = sql[m.end(): close - 1]
-            bmask = _literal_mask(body)
-            # last top-level AS
-            as_at = None
-            depth = 0
-            for am in re.finditer(r"\bAS\b", body, re.IGNORECASE):
-                if bmask[am.start()]:
-                    continue
-                d = 0
-                for ch, masked in zip(body[: am.start()],
-                                      bmask[: am.start()]):
-                    if not masked:
-                        d += 1 if ch == "(" else (-1 if ch == ")" else 0)
-                if d == 0:
-                    as_at = am
+            as_at = _cast_as_at(body)
             if as_at is None:
                 continue
-            src = body[: as_at.start()].strip()
-            tgt = body[as_at.end():].strip()
+            src = body[:as_at].strip()
+            tgt = body[as_at:].lstrip()[2:].strip()
             if _TZ_VARCHAR_TGT_RE.match(tgt) and _tz_input_aware(src):
                 hit = (m.start(), close, src)
                 break
@@ -4629,13 +4301,13 @@ def _rewrite_extract_datepart(sql: str) -> str:
     if not re.search(r"\b(EXTRACT|date_part|datepart)\b", sql, re.IGNORECASE):
         return sql
     # EXTRACT(field FROM expr), right-to-left
-    mask = _literal_mask(sql)
+    mask = literal_mask(sql)
     for m in sorted(
         _EXTRACT_OPEN_RE.finditer(sql), key=lambda x: -x.start()
     ):
         if mask[m.start()]:
             continue
-        close = _scan_balanced(sql, m.end() - 1, "(", ")")
+        close = close_of(sql, m.end() - 1)
         if close == -1:
             continue
         inner = sql[m.end() : close - 1]
@@ -4647,31 +4319,20 @@ def _rewrite_extract_datepart(sql: str) -> str:
         folded = _fold_interval_extract(fm.group(2), expr)
         repl = folded if folded is not None else f"{fn}({expr})"
         sql = sql[: m.start()] + repl + sql[close:]
-        mask = _literal_mask(sql)
+        mask = literal_mask(sql)
     # date_part('field', expr) / date_part(['f1','f2'], expr)
     for m in sorted(
         _DATE_PART_OPEN_RE.finditer(sql), key=lambda x: -x.start()
     ):
         if mask[m.start()]:
             continue
-        close = _scan_balanced(sql, m.end() - 1, "(", ")")
+        close = close_of(sql, m.end() - 1)
         if close == -1:
             continue
-        body = sql[m.end() : close - 1]
-        bs = body.lstrip()
-        if bs.startswith("["):
-            # list-of-fields form: _split_args doesn't track square
-            # brackets, so split at the bracket close by hand
-            br = _scan_balanced(bs, bs.index("["), "[", "]")
-            if br == -1 or not bs[br:].lstrip().startswith(","):
-                continue
-            field_arg = bs[:br].strip()
-            expr = bs[br:].lstrip()[1:].strip()
-        else:
-            args = _split_args(body)
-            if len(args) != 2:
-                continue
-            field_arg, expr = args[0].strip(), args[1].strip()
+        args = split_top(sql[m.end() : close - 1])
+        if len(args) != 2:
+            continue
+        field_arg, expr = args
         qm = _DP_QUOTED_FIELD_RE.match(field_arg)
         if qm:
             folded = _fold_interval_extract(qm.group(1), expr)
@@ -4680,7 +4341,7 @@ def _rewrite_extract_datepart(sql: str) -> str:
                 else f"{_dp_fn(qm.group(1))}({expr})"
             )
         elif field_arg.startswith("[") and field_arg.endswith("]"):
-            names = [a.strip() for a in _split_args(field_arg[1:-1])]
+            names = split_top(field_arg[1:-1])
             if not all(_DP_QUOTED_FIELD_RE.match(n) for n in names):
                 continue
             items = ", ".join(
@@ -4690,7 +4351,7 @@ def _rewrite_extract_datepart(sql: str) -> str:
         else:
             continue
         sql = sql[: m.start()] + repl + sql[close:]
-        mask = _literal_mask(sql)
+        mask = literal_mask(sql)
     return sql
 
 
@@ -4704,7 +4365,7 @@ def _rewrite_date_literal_interval(sql: str) -> str:
     the date side to TIMESTAMP."""
     if not re.search(r"\bINTERVAL\b", sql, re.IGNORECASE):
         return sql
-    mask = _literal_mask(sql)
+    mask = literal_mask(sql)
     out = sql
     for m in sorted(
         _DATE_LIT_INTERVAL_RE.finditer(sql), key=lambda x: -x.start()
@@ -4718,7 +4379,7 @@ def _rewrite_date_literal_interval(sql: str) -> str:
             + out[m.end(2):]
         )
     sql = out
-    mask = _literal_mask(sql)
+    mask = literal_mask(sql)
     out = sql
     for m in sorted(
         _INTERVAL_DATE_LIT_RE.finditer(sql), key=lambda x: -x.start()
@@ -4742,7 +4403,7 @@ def _rewrite_date_date_sub(sql: str) -> str:
     the overwhelmingly common day-arithmetic shape (a timestamp minus a
     date literal returns INTERVAL in DuckDB and stays a documented
     divergence)."""
-    mask = _literal_mask(sql)
+    mask = literal_mask(sql)
     i = 0
     while True:
         j = sql.find("-", i)
@@ -4807,7 +4468,7 @@ def _rewrite_date_date_sub(sql: str) -> str:
         rhs = sql[j + 1 : hi].strip()
         repl = f"CAST(datediff(CAST({lhs} AS DATE), {rhs}) AS BIGINT)"
         sql = sql[:lo] + repl + sql[hi:]
-        mask = _literal_mask(sql)
+        mask = literal_mask(sql)
         i = lo + len(repl)
 
 
@@ -4864,6 +4525,58 @@ def _rewrite_collate(sql: str) -> str:
     return _rewrite_code(sql, lambda chunk: _COLLATE_RE.sub(repl, chunk))
 
 
+_ORDER_BY_RE = re.compile(r"\bORDER\s+BY\b", re.IGNORECASE)
+_ORDER_BY_OR_OPEN_RE = re.compile(r"\bORDER\s+BY\b|[(\[{]", re.IGNORECASE)
+_ORDER_LIST_END_RE = re.compile(
+    r"\b(?:LIMIT|OFFSET|FETCH|ROWS|RANGE|GROUPS|UNION|INTERSECT|EXCEPT)\b|;",
+    re.IGNORECASE,
+)
+_ORDER_NULLS_SET_RE = re.compile(r"\b(?:DESC|NULLS\s+(?:FIRST|LAST))\s*$", re.IGNORECASE)
+# a group that holds a query or a window spec: its ORDER BY sorts rows
+_QUERY_GROUP_RE = re.compile(r"\s*(?:(?:SELECT|WITH|FROM|VALUES)\b|\()", re.IGNORECASE)
+_WINDOW_GROUP_RE = re.compile(r"\b(?:OVER|AS)\s*$", re.IGNORECASE)
+_COMMA_RE = re.compile(",")
+
+
+def _rewrite_order_nulls_last(sql: str) -> str:
+    """DuckDB sorts NULLs last in both directions; Spark puts them first
+    for an ascending key. Append ``NULLS LAST`` to each ORDER BY item that
+    has neither DESC nor its own NULLS placement, in statement, set
+    operation, subquery and window ORDER BY lists. The ORDER BY inside an
+    aggregate call belongs to that call's own rewrite."""
+    if not _ORDER_BY_RE.search(sql):
+        return sql
+    inserts: list[int] = []
+
+    def scan(start: int, end: int, sorts_rows: bool) -> None:
+        for m in iter_top(sql, _ORDER_BY_OR_OPEN_RE, start, end):
+            if m.group() in "([{":
+                close = close_of(sql, m.start())
+                if close == -1:
+                    return
+                if not _ORDER_BY_RE.search(sql, m.end(), close - 1):
+                    continue
+                scan(m.end(), close - 1, bool(
+                    _QUERY_GROUP_RE.match(sql, m.end())
+                    or _WINDOW_GROUP_RE.search(sql, max(0, m.start() - 12), m.start())
+                ))
+            elif sorts_rows:
+                stop = find_top(sql, _ORDER_LIST_END_RE, m.end(), end)
+                list_end = end if stop is None else stop.start()
+                at = m.end()
+                for c in [*iter_top(sql, _COMMA_RE, at, list_end), None]:
+                    item_end = list_end if c is None else c.start()
+                    item = sql[at:item_end].rstrip()
+                    if item.strip() and not _ORDER_NULLS_SET_RE.search(item):
+                        inserts.append(at + len(item))
+                    at = item_end + 1
+
+    scan(0, len(sql), True)
+    for at in sorted(inserts, reverse=True):
+        sql = f"{sql[:at]} NULLS LAST{sql[at:]}"
+    return sql
+
+
 def translate(sql: str) -> str:
     """DuckDB dialect → Spark SQL. Raises UnsupportedDialect for constructs
     that need the DataFrame-level operators (operators/asof.py,
@@ -4883,7 +4596,7 @@ def translate(sql: str) -> str:
     # directly (INSERT ... SELECT ... FROM range(n) — regression caught by
     # test_concurrent_writes).
     sql = rewrite_series_tvf(sql)
-    code_only = "".join(chunk for is_lit, chunk in _split_literals(sql) if not is_lit)
+    code_only = "".join(chunk for is_lit, chunk in split_literals(sql) if not is_lit)
     for rx, name in _UNSUPPORTED:
         if rx.search(code_only):
             raise UnsupportedDialect(
@@ -4903,6 +4616,7 @@ def translate(sql: str) -> str:
         r"\bAS\s+(?:NOT\s+)?MATERIALIZED\s*\(", "AS (", sql, flags=re.IGNORECASE
     )
     sql = _rewrite_collate(sql)
+    sql = _rewrite_order_nulls_last(sql)
     # alias() needs select-item context (the AS name wins) — must run
     # before the function-marker pass turns unhandled calls into raises
     sql = _rewrite_alias_fn(sql)
@@ -5999,12 +5713,12 @@ def _union_shim_fields(expr: str) -> "list[tuple[str, str]] | None":
     shape (bare constructors), so typeof() can print DuckDB's
     ``UNION(num INTEGER)`` instead of leaking the struct shim."""
     s = expr.strip()
-    while s.startswith("(") and _scan_balanced(s, 0, "(", ")") == len(s):
+    while s.startswith("(") and close_of(s, 0) == len(s):
         s = s[1:-1].strip()
     m = re.match(r"^named_struct\s*\(", s, re.IGNORECASE)
-    if not m or _scan_balanced(s, m.end() - 1, "(", ")") != len(s):
+    if not m or close_of(s, m.end() - 1) != len(s):
         return None
-    parts = _split_args(s[m.end(): -1])
+    parts = split_top(s[m.end(): -1])
     if len(parts) < 4 or len(parts) % 2 or parts[0].strip() != "'tag'":
         return None
     out: list[tuple[str, str]] = []
@@ -6236,7 +5950,7 @@ def _tz_input_aware(expr: str) -> bool:
     ride NTZ, SURVEY §1.3)."""
     s = expr.strip()
     while s.startswith("("):
-        close = _scan_balanced(s, 0, "(", ")")
+        close = close_of(s, 0)
         if close == len(s):
             s = s[1:-1].strip()
         else:
@@ -6266,10 +5980,10 @@ def _tz_input_aware(expr: str) -> bool:
         return True
     if fn == "from_utc_timestamp":
         return False
-    close = _scan_balanced(s, m.end() - 1, "(", ")")
+    close = close_of(s, m.end() - 1)
     if close == -1:
         return False
-    args = _split_args(s[m.end(): close - 1])
+    args = split_top(s[m.end(): close - 1])
     if len(args) != 2:
         return False
     return not _tz_input_aware(args[1])
@@ -6601,7 +6315,7 @@ def _rewrite_alias_fn(sql: str) -> str:
     if not _ALIAS_CALL_RE.search(sql):
         return sql
     while True:
-        mask = _literal_mask(sql)
+        mask = literal_mask(sql)
         m = None
         for cand in _ALIAS_CALL_RE.finditer(sql):
             # skip string literals AND the backticked `alias(...)` column
@@ -6613,7 +6327,7 @@ def _rewrite_alias_fn(sql: str) -> str:
                 break
         if m is None:
             return sql
-        close = _scan_balanced(sql, m.end() - 1, "(", ")")
+        close = close_of(sql, m.end() - 1)
         if close == -1:
             return sql
         arg = sql[m.end() : close - 1]
@@ -7152,26 +6866,16 @@ def _rewrite_balanced_call(sql: str, marker: str, emit) -> str:
             break
         start = i + m.start()
         open_at = i + m.end()
-        depth, j, in_str = 1, open_at, False
-        while j < len(sql) and depth:
-            ch = sql[j]
-            if in_str:
-                if ch == "'":
-                    in_str = False
-            elif ch == "'":
-                in_str = True
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            j += 1
+        j = close_of(sql, open_at - 1)
+        if j == -1:
+            raise UnsupportedDialect("unbalanced parentheses in a call")
         inner = _rewrite_balanced_call(sql[open_at : j - 1], marker, emit)
-        args = _split_args(inner)
+        args = split_top(inner)
         suffix = ""
         if getattr(emit, "_window_aware", False):
             fm = re.match(r"\s*FILTER\s*\(", sql[j:], re.IGNORECASE)
             if fm:
-                fclose = _scan_balanced(sql, j + fm.end() - 1, "(", ")")
+                fclose = close_of(sql, j + fm.end() - 1)
                 if fclose != -1:
                     suffix += " " + sql[j + fm.start() : fclose].strip()
                     j = fclose
@@ -7182,7 +6886,7 @@ def _rewrite_balanced_call(sql: str, marker: str, emit) -> str:
             if om:
                 k = j + om.end()
                 if k < len(sql) and sql[k] == "(":
-                    oclose = _scan_balanced(sql, k, "(", ")")
+                    oclose = close_of(sql, k)
                     if oclose != -1:
                         suffix += " OVER " + sql[k:oclose]
                         j = oclose
@@ -7204,47 +6908,6 @@ def _rewrite_balanced_call(sql: str, marker: str, emit) -> str:
             ) from None
         i = j
     return "".join(out)
-
-
-_TYPE_ANGLE_RE = re.compile(
-    # leading boundary so identifiers ENDING in a type keyword (bitmap,
-    # my_array) before a '<' comparison never open phantom angle depth
-    r"(?:\A|[^0-9A-Za-z_])(?:MAP|STRUCT|ARRAY)\s*$",
-    re.IGNORECASE,
-)
-
-
-def _split_args(body: str) -> list[str]:
-    """Top-level comma split. Parens and SQUARE brackets nest (list
-    literals / subscripts: ``COALESCE([1,2][1], 'x')`` must split into
-    two args, not three — r13); so do the ANGLE brackets of Spark
-    composite types (``MAP<STRING, BIGINT>`` — the complex-cast rewrite
-    emits them before emitters parse their args), recognized only when
-    ``<`` directly follows MAP/STRUCT/ARRAY so a less-than operator
-    never opens a phantom depth."""
-    parts, depth, angle, cur, in_str = [], 0, 0, [], False
-    for ch in body:
-        if in_str:
-            if ch == "'":
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch in "([{":
-            depth += 1
-        elif ch in ")]}":
-            depth -= 1
-        elif ch == "<" and (angle or _TYPE_ANGLE_RE.search("".join(cur))):
-            angle += 1
-        elif ch == ">" and angle:
-            angle -= 1
-        if ch == "," and depth == 0 and angle == 0 and not in_str:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        parts.append("".join(cur).strip())
-    return parts
 
 
 # DuckDB len() is polymorphic (strings AND lists); Spark splits it into
@@ -7270,19 +6933,9 @@ def _rewrite_len(sql: str) -> str:
             break
         start = i + m.start()
         open_at = i + m.end()
-        depth, j, in_str = 1, open_at, False
-        while j < len(sql) and depth:
-            ch = sql[j]
-            if in_str:
-                if ch == "'":
-                    in_str = False
-            elif ch == "'":
-                in_str = True
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            j += 1
+        j = close_of(sql, open_at - 1)
+        if j == -1:
+            raise UnsupportedDialect("unbalanced parentheses in a call")
         arg = _rewrite_len(sql[open_at : j - 1])  # handle nested len()
         fn = "size" if _ARRAY_ARG_RE.match(arg) else "length"
         out.append(sql[i:start])

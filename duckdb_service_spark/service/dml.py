@@ -20,7 +20,8 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dialect import translate
+from .dialect import _FROM_KW_RE, translate
+from .sqltext import close_of, find_top, iter_top, split_top
 
 if TYPE_CHECKING:
     from .executor import Engine
@@ -30,37 +31,19 @@ class ConstraintViolation(Exception):
     pass
 
 
+_RETURNING_RE = re.compile(r"\bRETURNING\b", re.IGNORECASE)
+
+
 def split_returning(sql: str) -> tuple[str, str | None]:
     """Split a trailing top-level ``RETURNING <select-list>`` off a DML
     statement (DuckDB supports RETURNING on INSERT/UPDATE/DELETE; reference
     reach: passthrough db/db.go:52). Paren-depth and string-literal aware so
     ``VALUES ('RETURNING')`` or a subquery containing the word stays intact.
     Returns (body, returning_list | None)."""
-    depth, in_str = 0, False
-    i = 0
-    while i < len(sql):
-        ch = sql[i]
-        if in_str:
-            if ch == "'":
-                if i + 1 < len(sql) and sql[i + 1] == "'":
-                    i += 2
-                    continue
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and sql[i : i + 9].upper() == "RETURNING"
-            and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_"))
-            and (i + 9 == len(sql) or not (sql[i + 9].isalnum() or sql[i + 9] == "_"))
-        ):
-            return sql[:i].rstrip(), sql[i + 9 :].strip() or "*"
-        i += 1
-    return sql, None
+    m = find_top(sql, _RETURNING_RE)
+    if m is None:
+        return sql, None
+    return sql[: m.start()].rstrip(), sql[m.end() :].strip() or "*"
 
 
 def _apply_returning(affected: DataFrame, returning: str) -> DataFrame:
@@ -68,40 +51,8 @@ def _apply_returning(affected: DataFrame, returning: str) -> DataFrame:
     (which carries exactly the table's columns). Eagerly checkpointed by the
     caller BEFORE the table write, so serializing the result after the
     overwrite/append cannot re-read mutated files."""
-    items = [translate(item) for item in split_top_level(returning)]
+    items = [translate(item) for item in split_top(returning)]
     return affected.selectExpr(*items)
-
-
-def split_top_level(body: str) -> list[str]:
-    """Split a comma-separated SQL fragment list (CREATE TABLE columns,
-    UPDATE SET assignments) on top-level commas — paren-depth and
-    string-literal aware so `greatest(b, c)` and `'a,b'` stay intact."""
-    parts, depth, cur, in_str = [], 0, [], False
-    i = 0
-    while i < len(body):
-        ch = body[i]
-        if in_str:
-            if ch == "'":
-                if i + 1 < len(body) and body[i + 1] == "'":
-                    cur.append("''")
-                    i += 2
-                    continue
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0 and not in_str:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    if cur:
-        parts.append("".join(cur))
-    return [p.strip() for p in parts if p.strip()]
 
 
 def _unique_col_sets(meta) -> list[list[str]]:
@@ -294,6 +245,9 @@ def _default_expr(meta, name: str):
     return F.lit(None)
 
 
+_OPEN_PAREN_RE = re.compile(r"\(")
+
+
 def _replace_default_tokens(values_clause: str, src_cols: list[str], meta) -> str:
     """Rewrite bare DEFAULT items inside VALUES rows to the column's
     declared default (or NULL) by position — Spark has no DEFAULT keyword
@@ -303,26 +257,16 @@ def _replace_default_tokens(values_clause: str, src_cols: list[str], meta) -> st
     body = values_clause.strip()
     head = re.match(r"^VALUES\s*", body, re.IGNORECASE)
     rows_text = body[head.end():]
-    # split top-level parenthesized rows
-    rows, depth, start, in_str = [], 0, None, False
-    for i, ch in enumerate(rows_text):
-        if in_str:
-            if ch == "'":
-                in_str = False
-            continue
-        if ch == "'":
-            in_str = True
-        elif ch == "(":
-            if depth == 0:
-                start = i
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                rows.append(rows_text[start + 1 : i])
+    # the top-level parenthesized rows
+    rows = []
+    for m in iter_top(rows_text, _OPEN_PAREN_RE):
+        close = close_of(rows_text, m.start())
+        if close == -1:
+            break
+        rows.append(rows_text[m.end() : close - 1])
     out_rows = []
     for row in rows:
-        items = split_top_level(row)
+        items = split_top(row)
         new_items = []
         for j, item in enumerate(items):
             if item.strip().upper() == "DEFAULT":
@@ -460,27 +404,11 @@ def _select_with_sequences(engine: "Engine", select_sql: str) -> DataFrame:
         raise ValueError("per-row nextval is only supported in plain SELECT form")
     body = select_sql.strip()[head.end() :]
     # select list ends at the top-level FROM (or the end for FROM-less)
-    depth, from_at, in_str = 0, None, False
-    i = 0
-    while i < len(body):
-        ch = body[i]
-        if in_str:
-            if ch == "'":
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and re.match(r"FROM\b", body[i:], re.IGNORECASE):
-            from_at = i
-            break
-        i += 1
-    select_list = body[:from_at] if from_at is not None else body
-    rest = body[from_at:] if from_at is not None else ""
+    fm = find_top(body, _FROM_KW_RE)
+    from_at = len(body) if fm is None else fm.start()
+    select_list, rest = body[:from_at], body[from_at:]
 
-    items = split_top_level(select_list)
+    items = split_top(select_list)
     seq_items: dict[int, tuple[str, str]] = {}  # position -> (seq, colname)
     inner_items = []
     for idx, item in enumerate(items):
@@ -584,7 +512,7 @@ def update_rows(engine: "Engine", sql: str, returning: str | None = None):
     n = df.filter(pred).count()
     ret_df: DataFrame | None = None
     assignments = {}
-    for part in split_top_level(set_clause):
+    for part in split_top(set_clause):
         if "=" not in part:
             raise ValueError(f"cannot parse UPDATE assignment (missing '='): {part!r}")
         col, expr = part.split("=", 1)
@@ -773,7 +701,7 @@ def upsert_values(engine: "Engine", sql: str) -> int | None:
         upd_pred = upd_pred & F.coalesce(F.expr(_xlate(m.group("where"))), F.lit(False))
 
     assignments: dict[str, "F.Column"] = {}
-    for part in split_top_level(m.group("set")):
+    for part in split_top(m.group("set")):
         if "=" not in part:
             raise ValueError(f"cannot parse DO UPDATE assignment: {part!r}")
         col, expr = part.split("=", 1)
@@ -868,19 +796,9 @@ def _materialize_subquery_source(engine: "Engine", sql: str) -> str:
         return sql
     s = sql.strip()
     open_at = m.end()
-    depth, j, in_str = 1, open_at, False
-    while j < len(s) and depth:
-        ch = s[j]
-        if in_str:
-            if ch == "'":
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        j += 1
+    j = close_of(s, open_at - 1)
+    if j == -1:
+        raise ValueError("unbalanced parentheses in the DML source subquery")
     inner = s[open_at : j - 1]
     view = "__dml_subq_src"
     engine.query_df(inner).createOrReplaceTempView(view)
@@ -925,7 +843,7 @@ def update_from(engine: "Engine", sql: str) -> int | None:
             "the result would depend on which one wins — deduplicate the source"
         )
     assignments = {}
-    for part in split_top_level(m.group("set")):
+    for part in split_top(m.group("set")):
         if "=" not in part:
             raise ValueError(f"cannot parse UPDATE assignment: {part!r}")
         col, expr = part.split("=", 1)
@@ -1028,12 +946,15 @@ _MERGE_CLAUSE_RE = re.compile(
 )
 
 
+_ON_RE = re.compile(r"\bON\b", re.IGNORECASE)
+_WHEN_RE = re.compile(r"\bWHEN\b", re.IGNORECASE)
+_THEN_RE = re.compile(r"\bTHEN\b", re.IGNORECASE)
+
+
 def _parse_merge(sql: str):
     """Parse MERGE INTO into (target, t_alias, source_text, u_alias, on_cond,
     clauses). clauses = list of (kind, cond_text, action_text) where kind is
     'matched' | 'not_by_target' | 'not_by_source'."""
-    from .dialect import _find_top_kw
-
     m = re.match(
         r"^MERGE\s+INTO\s+(?P<t>\w+)(?:\s+(?:AS\s+)?(?P<ta>\w+))?\s+USING\s+",
         sql,
@@ -1043,26 +964,26 @@ def _parse_merge(sql: str):
         raise ValueError(f"cannot parse MERGE INTO statement: {sql[:80]}")
     table, ta = m.group("t"), m.group("ta") or m.group("t")
     rest = sql[m.end() :]
-    on_at = _find_top_kw(rest, "ON")
-    if on_at == -1:
+    on_m = find_top(rest, _ON_RE)
+    if on_m is None:
         raise ValueError("MERGE INTO requires an ON condition")
-    src_text = rest[:on_at].strip()
-    rest = rest[on_at + 2 :]
-    when_at = _find_top_kw(rest, "WHEN")
-    if when_at == -1:
+    src_text = rest[: on_m.start()].strip()
+    rest = rest[on_m.end() :]
+    when_m = find_top(rest, _WHEN_RE)
+    if when_m is None:
         raise ValueError("MERGE INTO requires at least one WHEN clause")
-    on_cond = rest[:when_at].strip()
+    on_cond = rest[: when_m.start()].strip()
     clauses = []
-    body = rest[when_at:]
+    body = rest[when_m.start() :]
     while body:
         assert body[:4].upper() == "WHEN"
         body = body[4:]
-        nxt = _find_top_kw(body, "WHEN")
-        clause, body = (body[:nxt], body[nxt:]) if nxt != -1 else (body, "")
-        then_at = _find_top_kw(clause, "THEN")
-        if then_at == -1:
+        nxt = find_top(body, _WHEN_RE)
+        clause, body = (body[: nxt.start()], body[nxt.start() :]) if nxt else (body, "")
+        then_m = find_top(clause, _THEN_RE)
+        if then_m is None:
             raise ValueError(f"MERGE WHEN clause without THEN: {clause[:60]}")
-        head, action = clause[:then_at].strip(), clause[then_at + 4 :].strip()
+        head, action = clause[: then_m.start()].strip(), clause[then_m.end() :].strip()
         hm = _MERGE_CLAUSE_RE.match(head)
         if not hm:
             raise ValueError(f"cannot parse MERGE WHEN clause: {head[:60]}")
@@ -1184,7 +1105,7 @@ def merge_into(engine: "Engine", sql: str, returning: str | None = None):
                     if not sm:
                         raise ValueError(f"cannot parse MERGE UPDATE action: {action[:60]}")
                     assignments = {}
-                    for part in split_top_level(sm.group(1)):
+                    for part in split_top(sm.group(1)):
                         col, expr = part.split("=", 1)
                         assignments[col.strip()] = _cond_expr(expr.strip())
                 else:
@@ -1277,7 +1198,7 @@ def merge_into(engine: "Engine", sql: str, returning: str | None = None):
             rows = ins0.filter(pred)
             if im.group("vals"):
                 vals = [
-                    _ins_expr(v.strip()) for v in split_top_level(im.group("vals"))
+                    _ins_expr(v.strip()) for v in split_top(im.group("vals"))
                 ]
                 cols = (
                     [c.strip() for c in im.group("cols").split(",")]

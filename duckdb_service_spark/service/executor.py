@@ -21,7 +21,8 @@ from pyspark.sql import functions as F
 
 from .catalog import Catalog
 from .dialect import translate
-from .dml import delete_rows, insert_select, insert_values, split_top_level, update_rows
+from .dml import delete_rows, insert_select, insert_values, update_rows
+from .sqltext import close_of, find_top, literal_mask, split_top, strip_outer_parens
 
 
 @dataclass
@@ -54,53 +55,6 @@ _COLUMN_RE = re.compile(
 )
 
 
-_split_columns = split_top_level  # top-level comma split, shared with DML
-
-
-def _split_statements(sql: str) -> list[str]:
-    """Split a statement script on top-level semicolons (quote-aware)."""
-    parts, cur, in_str = [], [], False
-    i = 0
-    while i < len(sql):
-        ch = sql[i]
-        if in_str:
-            if ch == "'":
-                if i + 1 < len(sql) and sql[i + 1] == "'":
-                    cur.append("''")
-                    i += 2
-                    continue
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        if ch == ";" and not in_str:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    if cur:
-        parts.append("".join(cur))
-    return parts
-
-
-def _strip_outer_parens(text: str) -> str:
-    """Remove one balanced wrapping paren pair (repeatedly), never touching
-    parens that belong to the query itself — ``SELECT count(*) FROM (SELECT 1)``
-    must come back unchanged even though it ends in ')'."""
-    text = text.strip()
-    while text.startswith("(") and text.endswith(")"):
-        depth = 0
-        for i, ch in enumerate(text):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0 and i != len(text) - 1:
-                    return text  # first '(' closes early — not a wrapper
-        text = text[1:-1].strip()
-    return text
-
-
 _DEFAULT_CLAUSE_RE = re.compile(
     # DEFAULT <literal | parenthesized expr | call | bare token>, lazily up
     # to the next constraint keyword or end of the column definition
@@ -119,13 +73,9 @@ def _extract_check(rest: str) -> str | None:
     m = re.search(r"\bCHECK\s*\(", rest, re.IGNORECASE)
     if not m:
         return None
-    depth, i = 1, m.end()
-    while i < len(rest) and depth:
-        if rest[i] == "(":
-            depth += 1
-        elif rest[i] == ")":
-            depth -= 1
-        i += 1
+    i = close_of(rest, m.end() - 1)
+    if i == -1:
+        raise ValueError(f"unbalanced CHECK constraint: {rest!r}")
     return rest[m.end() : i - 1].strip()
 
 
@@ -142,7 +92,7 @@ def parse_create_table(sql: str, enums: dict | None = None):
     table_checks: list[str] = []
     unique_sets: list[list[str]] = []
     fk_clauses: list[tuple[str, str, str | None]] = []
-    for part in _split_columns(body):
+    for part in split_top(body):
         pk_m = re.match(r"^PRIMARY\s+KEY\s*\(([^)]*)\)$", part, re.IGNORECASE)
         if pk_m:
             table_pk = [c.strip() for c in pk_m.group(1).split(",")]
@@ -169,13 +119,9 @@ def parse_create_table(sql: str, enums: dict | None = None):
             re.IGNORECASE,
         )
         if gm:
-            depth, i = 1, gm.end()
-            while i < len(part) and depth:
-                if part[i] == "(":
-                    depth += 1
-                elif part[i] == ")":
-                    depth -= 1
-                i += 1
+            i = close_of(part, gm.end() - 1)
+            if i == -1:
+                raise ValueError(f"unbalanced generated column: {part!r}")
             columns.append(
                 {
                     "name": gm.group(1),
@@ -262,12 +208,10 @@ class Engine:
         schema prefix `main.` strips to the bare name. Literal-masked so
         string contents survive; table ALIASES shadowing a schema name are
         the documented edge (alias your tables something else)."""
-        from .dialect import _literal_mask
-
         rx = _schema_ref_re(tuple(sorted(set(self.catalog.schemas) | {"main"})))
         if not rx.search(sql):
             return sql
-        mask = _literal_mask(sql)
+        mask = literal_mask(sql)
         out = []
         pos = 0
         for m in rx.finditer(sql):
@@ -327,14 +271,12 @@ class Engine:
         m = re.match(r"^EXECUTE\s+(\w+)\s*(?:\((.*)\))?\s*$", stripped, re.IGNORECASE | re.DOTALL)
         if m is None:
             return None
-        from .macros import _split_top_commas, bind_prepared
+        from .macros import bind_prepared
 
         name = m.group(1).lower()
         if name not in self._prepared:
             raise ValueError(f"prepared statement {m.group(1)} does not exist")
-        raw = (m.group(2) or "").strip()
-        args = _split_top_commas(raw) if raw else []
-        return bind_prepared(self._prepared[name], args)
+        return bind_prepared(self._prepared[name], split_top(m.group(2) or ""))
 
     # ---- sequences -------------------------------------------------------
 
@@ -360,33 +302,13 @@ class Engine:
         DataFrame API has unionByName — split at the top-level operator
         (paren-depth 0), run each side, combine. Returns None if the
         statement has no top-level UNION BY NAME."""
-        depth = 0
-        in_str = False
-        i = 0
-        while i < len(sql):
-            ch = sql[i]
-            if in_str:
-                if ch == "'":
-                    # '' is an escaped quote inside the literal
-                    if i + 1 < len(sql) and sql[i + 1] == "'":
-                        i += 1
-                    else:
-                        in_str = False
-            elif ch == "'":
-                in_str = True
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0:
-                m = self._UNION_BY_NAME_RE.match(sql[i:])
-                if m:
-                    left = self.query_df(sql[:i])
-                    right = self.query_df(sql[i + m.end() :])
-                    out = left.unionByName(right, allowMissingColumns=True)
-                    return out if m.group(1) else out.distinct()
-            i += 1
-        return None
+        m = find_top(sql, self._UNION_BY_NAME_RE)
+        if m is None:
+            return None
+        left = self.query_df(sql[: m.start()])
+        right = self.query_df(sql[m.end() :])
+        out = left.unionByName(right, allowMissingColumns=True)
+        return out if m.group(1) else out.distinct()
 
     def _resolve_view(self, name: str) -> DataFrame:
         from .dml import _resolve_relation
@@ -519,7 +441,7 @@ class Engine:
             return df
         from pyspark.sql import types as T
 
-        from .sql_routing import _split_args, _top_select_items
+        from .sql_routing import _top_select_items
 
         items = _top_select_items(stripped)
         if not items:
@@ -533,9 +455,7 @@ class Engine:
             # lambda (list_transform(l, x -> upper(x)) /
             # (a, b) -> ... param lists) — ADVICE r13: the bare search
             # mis-tagged lambda results and '->' inside literals as JSON
-            from .dialect import _literal_mask
-
-            bmask = _literal_mask(body)
+            bmask = literal_mask(body)
             is_arrow = False
             if not re.search(r"->>", body):
                 for am in re.finditer(r"->(?!>)", body):
@@ -566,7 +486,7 @@ class Engine:
                 if um:
                     names = [
                         fm.group(1)
-                        for f in _split_args(um.group(1))
+                        for f in split_top(um.group(1))
                         if (fm := re.match(r"^\s*(\w+)\s+", f))
                     ]
                 else:
@@ -870,7 +790,7 @@ class Engine:
         # DuckDB's Exec accepts semicolon-separated statement scripts
         # (reference passthrough reach, db/db.go:52) — run sequentially,
         # sum rows_affected
-        stmts = [s for s in _split_statements(sql) if s.strip()]
+        stmts = split_top(sql, ";")
         if len(stmts) > 1:
             total = 0
             for s in stmts:
@@ -1336,7 +1256,7 @@ class Engine:
     @staticmethod
     def _copy_options(opts: str | None, path: str) -> dict:
         out = {"format": None, "header": True, "delimiter": ",", "partition_by": []}
-        for part in split_top_level(opts or ""):
+        for part in split_top(opts or ""):
             om = re.match(r"^(\w+)\s*(.*)$", part.strip())
             if not om:
                 raise ValueError(f"cannot parse COPY option: {part!r}")
@@ -1518,7 +1438,7 @@ class Engine:
             # DESCRIBE <query>: analysis only, nothing executes
             from .serializer import duckdb_type_name
 
-            df = self.query_df(_strip_outer_parens(m.group(1)))
+            df = self.query_df(strip_outer_parens(m.group(1)))
             rows = [
                 (f.name, duckdb_type_name(f.dataType), "YES" if f.nullable else "NO", "")
                 for f in df.schema.fields

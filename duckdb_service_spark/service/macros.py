@@ -19,7 +19,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from .dialect import UnsupportedDialect, _split_literals
+from .dialect import UnsupportedDialect
+from .sqltext import close_of, literal_mask, split_literals, split_top
 
 _MAX_EXPANSION_ROUNDS = 16
 
@@ -61,66 +62,6 @@ class MacroDef:
         )
 
 
-def _matching_paren(text: str, open_idx: int) -> int:
-    """Index of the ')' matching text[open_idx] == '(', literal-aware.
-    Returns -1 if unbalanced."""
-    depth = 0
-    in_str = False
-    i = open_idx
-    while i < len(text):
-        ch = text[i]
-        if in_str:
-            if ch == "'":
-                if i + 1 < len(text) and text[i + 1] == "'":
-                    i += 1
-                else:
-                    in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    return -1
-
-
-def _split_top_commas(text: str) -> list[str]:
-    """Split at paren-depth-0 commas outside string literals."""
-    parts: list[str] = []
-    depth = 0
-    in_str = False
-    cur = []
-    for i, ch in enumerate(text):
-        if in_str:
-            cur.append(ch)
-            if ch == "'":
-                if i + 1 < len(text) and text[i + 1] == "'":
-                    pass  # next iteration appends the escaped quote
-                else:
-                    in_str = False
-            continue
-        if ch == "'":
-            in_str = True
-            cur.append(ch)
-        elif ch == "(":
-            depth += 1
-            cur.append(ch)
-        elif ch == ")":
-            depth -= 1
-            cur.append(ch)
-        elif ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur or parts:
-        parts.append("".join(cur))
-    return [p.strip() for p in parts]
-
-
 def parse_create_macro(sql: str) -> MacroDef | None:
     """Parse CREATE [OR REPLACE] [TEMP] MACRO name(params) AS [TABLE] body.
     Returns None if the statement is not CREATE MACRO."""
@@ -129,11 +70,11 @@ def parse_create_macro(sql: str) -> MacroDef | None:
         return None
     name = m.group(2).lower()
     open_idx = sql.find("(", m.start(2))
-    close_idx = _matching_paren(sql, open_idx)
+    close_idx = close_of(sql, open_idx)
     if close_idx < 0:
         raise UnsupportedDialect("CREATE MACRO: unbalanced parameter list")
-    raw_params = sql[open_idx + 1 : close_idx].strip()
-    rest = sql[close_idx + 1 :].strip()
+    raw_params = sql[open_idx + 1 : close_idx - 1]
+    rest = sql[close_idx:].strip()
     mas = re.match(r"^AS\s+(TABLE\s+)?(.+)$", rest, re.IGNORECASE | re.DOTALL)
     if mas is None:
         raise UnsupportedDialect("CREATE MACRO: expected AS <expression>")
@@ -142,16 +83,15 @@ def parse_create_macro(sql: str) -> MacroDef | None:
 
     params: list[str] = []
     defaults: dict[str, str] = {}
-    if raw_params:
-        for p in _split_top_commas(raw_params):
-            dm = re.match(r"^(\w+)\s*:=\s*(.+)$", p, re.DOTALL)
-            if dm:
-                params.append(dm.group(1).lower())
-                defaults[dm.group(1).lower()] = dm.group(2).strip()
-            elif re.fullmatch(r"\w+", p):
-                params.append(p.lower())
-            else:
-                raise UnsupportedDialect(f"CREATE MACRO: bad parameter {p!r}")
+    for p in split_top(raw_params):
+        dm = re.match(r"^(\w+)\s*:=\s*(.+)$", p, re.DOTALL)
+        if dm:
+            params.append(dm.group(1).lower())
+            defaults[dm.group(1).lower()] = dm.group(2).strip()
+        elif re.fullmatch(r"\w+", p):
+            params.append(p.lower())
+        else:
+            raise UnsupportedDialect(f"CREATE MACRO: bad parameter {p!r}")
     return MacroDef(name=name, params=params, defaults=defaults, body=body, is_table=is_table)
 
 
@@ -176,7 +116,7 @@ def _substitute_params(body: str, binding: dict[str, str]) -> str:
         return pat.sub(lambda m: "(" + binding[m.group(1).lower()] + ")", chunk)
 
     return "".join(
-        chunk if is_lit else repl_chunk(chunk) for is_lit, chunk in _split_literals(body)
+        chunk if is_lit else repl_chunk(chunk) for is_lit, chunk in split_literals(body)
     )
 
 
@@ -245,7 +185,7 @@ def bind_prepared(template: str, args: list[str]) -> str:
         return "(" + args[i - 1] + ")"
 
     out = []
-    for is_lit, chunk in _split_literals(template):
+    for is_lit, chunk in split_literals(template):
         if is_lit:
             out.append(chunk)
             continue
@@ -262,42 +202,23 @@ def bind_prepared(template: str, args: list[str]) -> str:
 
 
 def _expand_once(sql: str, macros: dict[str, MacroDef]) -> str:
-    # Work on the raw string but validate each candidate site is in code
-    # (not inside a string literal) by tracking quote state up to the site.
-    out = []
-    i = 0
-    in_str = False
-    n = len(sql)
-    while i < n:
-        ch = sql[i]
-        if in_str:
-            out.append(ch)
-            if ch == "'":
-                if i + 1 < n and sql[i + 1] == "'":
-                    out.append(sql[i + 1])
-                    i += 2
-                    continue
-                in_str = False
-            i += 1
+    """Inline each outermost macro call site in code (not inside a string
+    literal); calls nested in the arguments expand on the next round."""
+    mask = literal_mask(sql)
+    out, last = [], 0
+    for m in _IDENT_CALL_RE.finditer(sql):
+        at = m.start()
+        if at < last or mask[at] or m.group(1).lower() not in macros:
             continue
-        if ch == "'":
-            in_str = True
-            out.append(ch)
-            i += 1
+        if at and re.match(r"[\w.]", sql[at - 1]):
             continue
-        m = _IDENT_CALL_RE.match(sql, i)
-        if m and m.group(1).lower() in macros and (i == 0 or not re.match(r"[\w.]", sql[i - 1])):
-            mac = macros[m.group(1).lower()]
-            open_idx = sql.index("(", m.end(1))
-            close_idx = _matching_paren(sql, open_idx)
-            if close_idx < 0:
-                raise UnsupportedDialect(f"macro {mac.name}: unbalanced call")
-            raw_args = sql[open_idx + 1 : close_idx].strip()
-            args = _split_top_commas(raw_args) if raw_args else []
-            binding = _bind_args(mac, args)
-            out.append("(" + _substitute_params(mac.body, binding) + ")")
-            i = close_idx + 1
-            continue
-        out.append(ch)
-        i += 1
+        mac = macros[m.group(1).lower()]
+        close_idx = close_of(sql, m.end() - 1)
+        if close_idx < 0:
+            raise UnsupportedDialect(f"macro {mac.name}: unbalanced call")
+        binding = _bind_args(mac, split_top(sql[m.end() : close_idx - 1]))
+        out.append(sql[last:at])
+        out.append("(" + _substitute_params(mac.body, binding) + ")")
+        last = close_idx
+    out.append(sql[last:])
     return "".join(out)

@@ -20,36 +20,28 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .dialect import UnsupportedDialect, _split_args, _split_literals
+from .dialect import _FROM_KW_RE, UnsupportedDialect, _cast_as_at
+from .sqltext import (
+    MASKED_RE,
+    close_of,
+    find_top,
+    iter_top,
+    literal_mask,
+    open_of,
+    split_literals,
+    split_top,
+    strip_outer_parens,
+)
 
 Resolver = Callable[[str], DataFrame]
 Translate = Callable[[str], str]
 
 
 def _code_only(sql: str) -> str:
-    return "".join(chunk for is_lit, chunk in _split_literals(sql) if not is_lit)
+    return "".join(chunk for is_lit, chunk in split_literals(sql) if not is_lit)
 
 
-def _split_top_and(cond: str) -> list[str]:
-    """Split a boolean expression on top-level ANDs."""
-    parts, depth, cur, i = [], 0, [], 0
-    up = cond.upper()
-    while i < len(cond):
-        ch = cond[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if depth == 0 and up[i : i + 5] in (" AND ",) and cond[i] == " ":
-            parts.append("".join(cur))
-            cur = []
-            i += 5
-            continue
-        cur.append(ch)
-        i += 1
-    if cur:
-        parts.append("".join(cur))
-    return [p.strip() for p in parts if p.strip()]
+_AND_RE = re.compile(r"\s+AND\s+", re.IGNORECASE)
 
 
 # --------------------------------------------------------------------------
@@ -97,7 +89,7 @@ def route_asof_join(
 
     on_keys: list[str] = []
     ineq = None
-    for part in _split_top_and(m.group("cond")):
+    for part in split_top(m.group("cond"), _AND_RE):
         eq = _EQ_RE.match(part)
         if eq:
             a_al, a_col, b_al, b_col = eq.groups()
@@ -185,29 +177,6 @@ _REC_RE = re.compile(
 _UNION_ALL_RE = re.compile(r"\bUNION\s+ALL\b", re.IGNORECASE)
 
 
-def _top_level_union_alls(body: str) -> list[tuple[int, int]]:
-    """(start, end) spans of UNION ALL tokens at paren depth 0 outside
-    string literals — a seed that is itself a parenthesized UNION ALL, or
-    the token inside a literal, must not split the CTE body."""
-    spans = []
-    for m in _UNION_ALL_RE.finditer(body):
-        depth, in_str = 0, False
-        for i in range(m.start()):
-            ch = body[i]
-            if in_str:
-                if ch == "'":
-                    in_str = False
-            elif ch == "'":
-                in_str = True
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-        if depth == 0 and not in_str:
-            spans.append((m.start(), m.end()))
-    return spans
-
-
 def route_with_recursive(
     spark: SparkSession, sql: str, translate: Translate
 ) -> DataFrame | None:
@@ -230,33 +199,21 @@ def route_with_recursive(
     name = m.group("name")
     cols = [c.strip() for c in (m.group("cols") or "").split(",") if c.strip()]
 
-    # find the matching close-paren of the CTE body
-    depth, i = 1, m.end()
-    in_str = False
-    while i < len(stripped) and depth:
-        ch = stripped[i]
-        if in_str:
-            if ch == "'":
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        i += 1
-    if depth:
+    i = close_of(stripped, m.end() - 1)
+    if i == -1:
         raise UnsupportedDialect("WITH RECURSIVE: unbalanced CTE body")
     body, outer = stripped[m.end() : i - 1], stripped[i:].strip()
 
-    splits = _top_level_union_alls(body)
+    # a seed that is itself a parenthesized UNION ALL, or the words inside
+    # a literal, must not split the CTE body
+    splits = list(iter_top(body, _UNION_ALL_RE))
     if len(splits) != 1:
         raise UnsupportedDialect(
             "WITH RECURSIVE: only 'seed UNION ALL step' linear recursion with "
             "exactly one top-level UNION ALL is routable (parenthesize a "
             "multi-branch seed)"
         )
-    seed_sql, step_sql = body[: splits[0][0]], body[splits[0][1] :]
+    seed_sql, step_sql = body[: splits[0].start()], body[splits[0].end() :]
 
     seed = spark.sql(translate(seed_sql))
     if cols:
@@ -289,29 +246,13 @@ def route_star_replace(
     m = _REPLACE_RE.match(stripped)
     if m is None:
         return None
-    from .dml import split_top_level
-
-    # balanced-paren scan for the REPLACE(...) argument list
-    depth, i, start = 1, m.end(), m.end()
-    in_str = False
-    while i < len(stripped) and depth:
-        ch = stripped[i]
-        if in_str:
-            if ch == "'":
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        i += 1
-    if depth:
+    i = close_of(stripped, m.end() - 1)
+    if i == -1:
         raise UnsupportedDialect("SELECT * REPLACE: unbalanced parentheses")
-    repl_body, rest = stripped[start : i - 1], stripped[i:].strip()
+    repl_body, rest = stripped[m.end() : i - 1], stripped[i:].strip()
 
     repl: dict[str, str] = {}
-    for item in split_top_level(repl_body):
+    for item in split_top(repl_body):
         im = re.match(r"^(.*)\s+AS\s+(\w+)$", item.strip(), re.IGNORECASE | re.DOTALL)
         if not im:
             raise UnsupportedDialect(f"SELECT * REPLACE: item needs 'expr AS col': {item!r}")
@@ -375,9 +316,7 @@ _JSON_OPTIONS = {
 def _parse_read_args(inner: str) -> tuple[list[str], dict[str, str]]:
     """First positional arg is a path literal or ['p1','p2'] list; the rest
     are DuckDB-style key=value options."""
-    from .dml import split_top_level
-
-    items = split_top_level(inner)
+    items = split_top(inner)
     if not items or not items[0].strip():
         raise UnsupportedDialect("read_*: missing path argument")
     first = items[0].strip()
@@ -628,34 +567,15 @@ def rewrite_read_files(spark: SparkSession, sql: str) -> str:
         return sql
     out, pos, n = [], 0, 0
     while True:
-        lit_spans = [
-            (m.start(), m.end()) for m in re.finditer(r"'(?:[^']|'')*'", sql)
-        ]
-
-        def _in_lit(i: int) -> bool:
-            return any(a <= i < b for a, b in lit_spans)
-
-        m = None
-        for cand in _READ_FN_RE.finditer(sql, pos):
-            if not _in_lit(cand.start()):
-                m = cand
-                break
+        mask = literal_mask(sql)
+        m = next(
+            (c for c in _READ_FN_RE.finditer(sql, pos) if not mask[c.start()]),
+            None,
+        )
         if m is None:
             break
-        depth, i, in_str = 1, m.end(), False
-        while i < len(sql) and depth:
-            ch = sql[i]
-            if in_str:
-                if ch == "'":
-                    in_str = False
-            elif ch == "'":
-                in_str = True
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            i += 1
-        if depth:
+        i = close_of(sql, m.end() - 1)
+        if i == -1:
             raise UnsupportedDialect(f"{m.group(1)}: unbalanced parentheses")
         paths, opts = _parse_read_args(sql[m.end() : i - 1])
         df = _reader_for(spark, m.group(1), paths, opts)
@@ -673,34 +593,12 @@ def rewrite_read_files(spark: SparkSession, sql: str) -> str:
 # --------------------------------------------------------------------------
 
 _CLAUSE_KW_RE = re.compile(
-    r"^(WHERE|GROUP|HAVING|ORDER|LIMIT|OFFSET|QUALIFY|WINDOW|UNION|INTERSECT|EXCEPT)\b",
+    r"\b(WHERE|GROUP|HAVING|ORDER|LIMIT|OFFSET|QUALIFY|WINDOW|UNION|INTERSECT|EXCEPT)\b",
     re.IGNORECASE,
 )
 
 
-def _top_level_kw(sql: str, pattern: "re.Pattern[str]") -> int | None:
-    """Offset of the first top-level (paren-depth-0, outside literals) match
-    of ``pattern``, or None."""
-    depth, in_str, i = 0, False, 0
-    while i < len(sql):
-        ch = sql[i]
-        if in_str:
-            if ch == "'":
-                if i + 1 < len(sql) and sql[i + 1] == "'":
-                    i += 2
-                    continue
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")):
-            if pattern.match(sql[i:]):
-                return i
-        i += 1
-    return None
+_SELECT_RE = re.compile(r"\bSELECT\b", re.IGNORECASE)
 
 
 def rewrite_from_first(sql: str) -> str:
@@ -715,15 +613,15 @@ def rewrite_from_first(sql: str) -> str:
     s = sql.strip().rstrip(";")
     if not re.match(r"^FROM\b", s, re.IGNORECASE):
         return sql
-    sel_at = _top_level_kw(s, re.compile(r"^SELECT\b", re.IGNORECASE))
-    if sel_at is None:
+    sm = find_top(s, _SELECT_RE)
+    if sm is None:
         return f"SELECT * {s}"
-    from_part = s[:sel_at].strip()          # "FROM <rel>"
-    rest = s[sel_at + 6 :].strip()          # "<list> [clauses]"
-    clause_at = _top_level_kw(rest, _CLAUSE_KW_RE)
-    if clause_at is None:
+    from_part = s[: sm.start()].strip()     # "FROM <rel>"
+    rest = s[sm.end() :].strip()            # "<list> [clauses]"
+    cm = find_top(rest, _CLAUSE_KW_RE)
+    if cm is None:
         return f"SELECT {rest} {from_part}"
-    return f"SELECT {rest[:clause_at].strip()} {from_part} {rest[clause_at:]}"
+    return f"SELECT {rest[: cm.start()].strip()} {from_part} {rest[cm.start():]}"
 
 
 # --------------------------------------------------------------------------
@@ -785,8 +683,6 @@ def rewrite_columns_expr(
 ) -> str:
     """Expand COLUMNS(...) select-list items against the FROM relation's
     actual schema; returns the rewritten SQL (unchanged when absent)."""
-    from .dml import split_top_level
-
     stripped = sql.strip().rstrip(";")
     if not _COLUMNS_RE.search(_code_only(stripped)):
         return sql
@@ -794,17 +690,17 @@ def rewrite_columns_expr(
     if not hm:
         return sql
     body = stripped[hm.end() :]
-    from_at = _top_level_kw(body, re.compile(r"^FROM\b", re.IGNORECASE))
-    if from_at is None:
+    fm = find_top(body, _FROM_KW_RE)
+    if fm is None:
         raise UnsupportedDialect("COLUMNS() requires a FROM clause to resolve against")
-    select_list, rest = body[:from_at], body[from_at:]
+    select_list, rest = body[: fm.start()], body[fm.start() :]
     # schema of the FROM relation alone (clauses after it don't change it)
-    clause_at = _top_level_kw(rest[4:], _CLAUSE_KW_RE)
-    from_clause = rest if clause_at is None else rest[: 4 + clause_at]
+    cm = find_top(body, _CLAUSE_KW_RE, fm.end())
+    from_clause = body[fm.start() : cm.start() if cm else None]
     cols = spark.sql(translate(f"SELECT * {from_clause} LIMIT 0")).columns
 
     out_items: list[str] = []
-    for item in split_top_level(select_list):
+    for item in split_top(select_list):
         item = item.strip()
         # split an optional trailing alias off the item first (the COLUMNS
         # span may sit inside an enclosing expression like min(...))
@@ -814,33 +710,15 @@ def rewrite_columns_expr(
         if am:
             alias_tpl = am.group(1) if am.group(1) is not None else am.group(2)
             expr = item[: am.start()]
-        lit_spans = [(s.start(), s.end()) for s in re.finditer(r"'(?:[^']|'')*'", expr)]
+        mask = literal_mask(expr)
         m = next(
-            (
-                cand
-                for cand in _COLUMNS_RE.finditer(expr)
-                if not any(a <= cand.start() < b for a, b in lit_spans)
-            ),
-            None,
+            (c for c in _COLUMNS_RE.finditer(expr) if not mask[c.start()]), None
         )
         if m is None:
             out_items.append(item)
             continue
-        depth, i = 1, m.end()
-        in_str = False
-        while i < len(expr) and depth:
-            ch = expr[i]
-            if in_str:
-                if ch == "'":
-                    in_str = False
-            elif ch == "'":
-                in_str = True
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            i += 1
-        if depth:
+        i = close_of(expr, m.end() - 1)
+        if i == -1:
             raise UnsupportedDialect("COLUMNS: unbalanced parentheses")
         arg = expr[m.end() : i - 1]
         for c in _columns_matching(arg, cols, spark, translate):
@@ -898,12 +776,11 @@ def _from_schema(spark, stripped: str, translate: Translate):
     running ``SELECT * FROM ... LIMIT 0`` (the route_star_replace /
     COLUMNS() trick); None when there is no FROM or it doesn't resolve
     standalone (e.g. a TVF a later routing pass handles)."""
-    from_at = _top_level_kw(stripped, re.compile(r"^FROM\b", re.IGNORECASE))
-    if from_at is None:
+    fm = find_top(stripped, _FROM_KW_RE)
+    if fm is None:
         return None
-    rest = stripped[from_at:]
-    clause_at = _top_level_kw(rest[4:], _CLAUSE_KW_RE)
-    from_clause = rest if clause_at is None else rest[: 4 + clause_at]
+    cm = find_top(stripped, _CLAUSE_KW_RE, fm.end())
+    from_clause = stripped[fm.start() : cm.start() if cm else None]
     try:
         return spark.sql(translate(f"SELECT * {from_clause} LIMIT 0")).dtypes
     except Exception:
@@ -930,15 +807,8 @@ def _iter_subscripts(stripped: str, mask: list[bool]):
         if mask[m.start()]:
             continue
         open_at = m.end() - 1
-        depth, j = 1, open_at + 1
-        while j < len(stripped) and depth:
-            if not mask[j]:
-                if stripped[j] == "[":
-                    depth += 1
-                elif stripped[j] == "]":
-                    depth -= 1
-            j += 1
-        if depth:
+        j = close_of(stripped, open_at)
+        if j == -1:
             continue
         yield _Subscript(m.start(), j, m.group(1), stripped[open_at + 1 : j - 1])
 
@@ -955,15 +825,8 @@ def _nested_query_spans(stripped: str, mask: list[bool]) -> list[tuple[int, int]
     for m in _NESTED_QUERY_OPEN_RE.finditer(stripped):
         if mask[m.start()]:
             continue
-        depth, j = 1, m.start() + 1
-        while j < len(stripped) and depth:
-            if not mask[j]:
-                if stripped[j] == "(":
-                    depth += 1
-                elif stripped[j] == ")":
-                    depth -= 1
-            j += 1
-        spans.append((m.start(), j))
+        j = close_of(stripped, m.start())
+        spans.append((m.start(), len(stripped) if j == -1 else j))
     return spans
 
 
@@ -995,8 +858,9 @@ def rewrite_float_floordiv(
         return sql
     ident = re.compile(r"[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)?")
     out, last = [], 0
+    mask = literal_mask(stripped)
     for m in _FLOORDIV_RE.finditer(stripped):
-        if _in_literal(stripped, m.start()):
+        if mask[m.start()]:
             continue
         lm = re.search(rf"({ident.pattern})\s*$", stripped[: m.start()])
         k = m.end()
@@ -1062,9 +926,7 @@ def rewrite_bool_compare(
                          "float", "decimal"))
     }
     str_cols = {n.lower() for n, t in schema if t == "string"}
-    from .dialect import _literal_mask
-
-    mask = _literal_mask(stripped)
+    mask = literal_mask(stripped)
     nested = _nested_query_spans(stripped, mask)
     ident = re.compile(_IDENT_RE_TEXT)
 
@@ -1116,7 +978,7 @@ def rewrite_bool_compare(
     if out:
         out.append(stripped[last:])
         stripped = "".join(out)
-        mask = _literal_mask(stripped)
+        mask = literal_mask(stripped)
         nested = _nested_query_spans(stripped, mask)
         changed = True
     else:
@@ -1155,7 +1017,7 @@ def rewrite_bool_compare(
     if out:
         out.append(stripped[last:])
         stripped = "".join(out)
-        mask = _literal_mask(stripped)
+        mask = literal_mask(stripped)
         nested = _nested_query_spans(stripped, mask)
         changed = True
 
@@ -1169,7 +1031,7 @@ def rewrite_bool_compare(
             continue
         if _class(m.group(1)) != "bool":
             continue
-        close = _scan_list_close(stripped, m.end() - 1, mask)
+        close = close_of(stripped, m.end() - 1)
         if close == -1:
             continue
         items = stripped[m.end() : close - 1]
@@ -1187,18 +1049,6 @@ def rewrite_bool_compare(
         out.append(stripped[last:])
         stripped = "".join(out)
     return stripped
-
-
-def _scan_list_close(sql: str, open_at: int, mask: list[bool]) -> int:
-    depth, j = 1, open_at + 1
-    while j < len(sql) and depth:
-        if not mask[j]:
-            if sql[j] == "(":
-                depth += 1
-            elif sql[j] == ")":
-                depth -= 1
-        j += 1
-    return j if not depth else -1
 
 
 _FRAC_LITERAL_RE = re.compile(r"^-?\d+\.\d+$")
@@ -1416,7 +1266,7 @@ def _values_row_spans(text: str, mask: list[bool]) -> list[tuple[int, int]]:
             continue
         j = text.index("(", m.start())
         while True:
-            close = _scan_list_close(text, j, mask)
+            close = close_of(text, j)
             if close == -1:
                 break
             spans.append((j + 1, close - 1))
@@ -1451,16 +1301,14 @@ def _rewrite_casts_in(text: str, schema_classes: dict,
     the plain cast: Spark inline tables reject raise_error guards
     outright, and the sources there are literals whose failures DuckDB
     would surface at bind time anyway."""
-    from .dialect import _literal_mask
-
-    mask = _literal_mask(text)
+    mask = literal_mask(text)
     nested = _nested_query_spans(text, mask)
     values_rows = [] if plain else _values_row_spans(text, mask)
     spans = []
     for m in _CAST_OPEN_SCAN_RE.finditer(text):
         if mask[m.start()]:
             continue
-        close = _scan_list_close(text, m.end() - 1, mask)
+        close = close_of(text, m.end() - 1)
         if close == -1:
             continue
         in_nested = any(lo < m.start() < hi for lo, hi in nested)
@@ -1480,10 +1328,10 @@ def _rewrite_casts_in(text: str, schema_classes: dict,
     ):
         body = text[text.index("(", start) + 1 : close - 1]
         scope = {} if in_nested else schema_classes
-        as_at = _top_level_as(body)
+        as_at = _cast_as_at(body)
         if as_at is None:
             continue
-        inner, tgt_text = body[:as_at].strip(), body[as_at + 4 :].strip()
+        inner, tgt_text = body[:as_at].strip(), body[as_at:].lstrip()[2:].strip()
         tm = _TYPE_NORM_RE.match(tgt_text)
         if not tm:
             continue
@@ -1538,28 +1386,6 @@ def _rewrite_casts_in(text: str, schema_classes: dict,
             repl = f"{form}(({new_inner}) AS {norm_tgt})"
         text = text[:start] + repl + text[close:]
     return text
-
-
-def _top_level_as(body: str) -> "int | None":
-    """Position of the LAST top-level ' AS ' in a cast body."""
-    depth, in_str, pos = 0, False, None
-    i = 0
-    up = body.upper()
-    while i < len(body):
-        ch = body[i]
-        if in_str:
-            if ch == "'":
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch in "(<[":
-            depth += 1
-        elif ch in ")>]":
-            depth -= 1
-        elif depth == 0 and up[i : i + 4] == " AS " :
-            pos = i
-        i += 1
-    return pos
 
 
 def _cast_contract_repl(
@@ -1833,8 +1659,6 @@ def rewrite_numeric_date_lanes(
     date_cols = {n.lower() for n, t in schema if t == "date"}
     if not flt_cols and not date_cols:
         return sql
-    from .dialect import _literal_mask
-
     ident = re.compile(_IDENT_RE_TEXT)
 
     def _leaf(tok: str) -> str:
@@ -1845,7 +1669,7 @@ def rewrite_numeric_date_lanes(
         changed = True
         while changed:
             changed = False
-            mask = _literal_mask(stripped)
+            mask = literal_mask(stripped)
             nested = _nested_query_spans(stripped, mask)
             for m in re.finditer(
                 rf"({_IDENT_RE_TEXT})\s*-\s*({_IDENT_RE_TEXT})", stripped
@@ -1872,7 +1696,7 @@ def rewrite_numeric_date_lanes(
         changed = True
         while changed:
             changed = False
-            mask = _literal_mask(stripped)
+            mask = literal_mask(stripped)
             nested = _nested_query_spans(stripped, mask)
             for m in re.finditer(
                 rf"({_IDENT_RE_TEXT})(\s*[+\-]\s*INTERVAL\b)",
@@ -1899,7 +1723,7 @@ def rewrite_numeric_date_lanes(
         changed = True
         while changed:
             changed = False
-            mask = _literal_mask(stripped)
+            mask = literal_mask(stripped)
             nested = _nested_query_spans(stripped, mask)
             for m in _ARITH_OP_RE.finditer(stripped):
                 if mask[m.start()] or any(
@@ -2035,9 +1859,7 @@ def rewrite_list_concat_cols(
     if not arr_cols:
         return sql
     other_cols = {n.lower() for n, t in schema if not t.startswith("array<")}
-    from .dialect import _literal_mask
-
-    mask = _literal_mask(stripped)
+    mask = literal_mask(stripped)
     nested = _nested_query_spans(stripped, mask)
     ident = re.compile(_IDENT_RE_TEXT)
 
@@ -2099,7 +1921,7 @@ def rewrite_list_concat_cols(
             repl = f"CAST({tok} AS STRING)"
             stripped = stripped[:lo_at] + repl + stripped[hi_at:]
             i = max(j, lo_at) + (len(repl) - (hi_at - lo_at)) + 2
-        mask = _literal_mask(stripped)
+        mask = literal_mask(stripped)
         nested = _nested_query_spans(stripped, mask)
     return stripped
 
@@ -2118,20 +1940,10 @@ def _rewrite_map_literal_subscripts(text: str, mask: list[bool]) -> str:
     ):
         if mask[m.start()]:
             continue
-        close_ch = text[m.start()]
-        open_ch = "(" if close_ch == ")" else "{"
-        depth, p = 1, m.start() - 1
-        while p >= 0 and depth:
-            if not mask[p]:
-                if text[p] == close_ch:
-                    depth += 1
-                elif text[p] == open_ch:
-                    depth -= 1
-            if depth:
-                p -= 1
-        if depth:
+        p = open_of(text, m.start())
+        if p == -1:
             continue
-        if close_ch == ")":
+        if text[m.start()] == ")":
             if not re.match(
                 r"\(\s*MAP\s*\{", text[p : m.start() + 1], re.IGNORECASE
             ):
@@ -2162,18 +1974,9 @@ def _rewrite_map_literal_subscripts(text: str, mask: list[bool]) -> str:
             base = "(" + text[hm.start() : m.start() + 1] + ")"
             base_start = hm.start()
         open_br = text.index("[", m.start())
-        close_br = -1
-        bdepth, j = 1, open_br + 1
-        while j < len(text) and bdepth:
-            if not mask[j]:
-                if text[j] == "[":
-                    bdepth += 1
-                elif text[j] == "]":
-                    bdepth -= 1
-            j += 1
-        if bdepth:
+        close_br = close_of(text, open_br)
+        if close_br == -1:
             continue
-        close_br = j
         key = text[open_br + 1 : close_br - 1]
         if ":" in _code_only(key):
             continue  # slice syntax — keep the generic lowering
@@ -2182,14 +1985,8 @@ def _rewrite_map_literal_subscripts(text: str, mask: list[bool]) -> str:
             + f"map_extract({base}, {key})"
             + text[close_br:]
         )
-        mask = _literal_mask_routing(text)
+        mask = literal_mask(text)
     return text
-
-
-def _literal_mask_routing(text: str) -> list[bool]:
-    from .dialect import _literal_mask
-
-    return _literal_mask(text)
 
 
 def rewrite_map_subscripts(
@@ -2209,13 +2006,11 @@ def rewrite_map_subscripts(
     stripped = sql.strip().rstrip(";")
     if "[" not in _code_only(stripped):
         return sql
-    from .dialect import _literal_mask
-
-    mask = _literal_mask(stripped)
+    mask = literal_mask(stripped)
     stripped2 = _rewrite_map_literal_subscripts(stripped, mask)
     if stripped2 != stripped:
         stripped = stripped2
-        mask = _literal_mask(stripped)
+        mask = literal_mask(stripped)
     nested = _nested_query_spans(stripped, mask)
     hits = [
         s
@@ -2242,7 +2037,7 @@ def rewrite_map_subscripts(
             if m.start < prev_end:
                 continue
             base, key = m.base, m.key
-            kmask = _literal_mask(key)
+            kmask = literal_mask(key)
             key = _subst(key, list(_iter_subscripts(key, kmask)))
             leaf = base.split(".")[-1].lower()
             if leaf in map_cols and ":" not in _code_only(key):
@@ -2267,15 +2062,6 @@ def rewrite_map_subscripts(
         return "".join(out)
 
     return _subst(stripped, hits)
-
-
-def _in_literal(sql: str, pos: int) -> bool:
-    """True when ``pos`` falls inside a string literal, with doubled ''
-    quote escapes treated as part of ONE literal (a naive quote toggle
-    splits ``'a''b'`` into two and misjudges positions at the pair)."""
-    from .dialect import _STRING_RE
-
-    return any(m.start() < pos < m.end() - 1 for m in _STRING_RE.finditer(sql))
 
 
 def _pivot_literal(v) -> str:
@@ -2317,14 +2103,12 @@ def route_pivot_statement(
         raise UnsupportedDialect(f"cannot parse PIVOT statement: {sql[:80]}")
     df, from_sql = _resolve_pivot_rel(spark, m.group("rel"), resolve, translate)
 
-    from .dml import split_top_level
-
     # ON clause: one or more columns, each with an optional IN list. DuckDB
     # emits the CROSS PRODUCT of per-column value lists as output columns,
     # named value1_value2[_agg] — including combinations absent from the
     # data (they aggregate over zero rows).
     on_items: list[tuple[str, str | None]] = []
-    for item in split_top_level(m.group("onclause")):
+    for item in split_top(m.group("onclause")):
         im = _PIVOT_ON_ITEM_RE.match(item.strip())
         if im is None:
             raise UnsupportedDialect(f"cannot parse PIVOT ON item: {item[:60]}")
@@ -2348,7 +2132,7 @@ def route_pivot_statement(
     for col, inlist in on_items:
         if inlist is not None:
             values = []
-            for item in split_top_level(inlist):
+            for item in split_top(inlist):
                 item = item.strip()
                 values.append(
                     item[1:-1].replace("''", "'") if item.startswith("'") else item
@@ -2369,7 +2153,7 @@ def route_pivot_statement(
 
     using = m.group("using") or "count(*)"
     aggs = []
-    for item in split_top_level(using):
+    for item in split_top(using):
         am = _AGG_ITEM_RE.match(item.strip())
         aggs.append((am.group("expr").strip(), (am.group("alias") or "").strip()))
 
@@ -2537,35 +2321,7 @@ _INT_CLASS_UNITS = {"tinyint": 3, "smallint": 5, "integer": 10, "bigint": 19}
 _UNITS_INT_TYPE = {3: "TINYINT", 5: "SMALLINT", 10: "INTEGER", 19: "BIGINT"}
 
 
-def _strip_outer_parens(s: str) -> str:
-    """Peel parens that wrap the WHOLE expression (quote-aware), so
-    ``('7')`` classifies as the string literal DuckDB's binder sees —
-    parens are transparent to its branch-type accumulator (measured r13:
-    COALESCE(1, ('7')) is INTEGER 1). Scalar subqueries keep their
-    parens: ``(SELECT 4)`` must reach the LIMIT-0 probe intact."""
-    while s.startswith("(") and s.endswith(")") and not re.match(
-        r"^\(\s*(?:SELECT|WITH|FROM)\b", s, re.IGNORECASE
-    ):
-        depth, in_str = 0, False
-        closed_at = -1
-        for i, ch in enumerate(s):
-            if in_str:
-                if ch == "'":
-                    in_str = False
-                continue
-            if ch == "'":
-                in_str = True
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    closed_at = i
-                    break
-        if closed_at != len(s) - 1:
-            return s
-        s = s[1:-1].strip()
-    return s
+_QUERY_START_RE = re.compile(r"(?:SELECT|WITH|FROM)\b", re.IGNORECASE)
 
 
 def _branch_atom(
@@ -2580,7 +2336,12 @@ def _branch_atom(
     COALESCE(max(a), '9') / COALESCE(1+1, '7') / COALESCE(NULLIF(1,1),
     '7') all coerce the string literal into the composite's lane).
     None = unknowable."""
-    s = _strip_outer_parens(expr.strip())
+    # parens are transparent to DuckDB's branch-type accumulator (measured
+    # r13: COALESCE(1, ('7')) is INTEGER 1); a scalar subquery keeps them
+    # so ``(SELECT 4)`` reaches the LIMIT-0 probe intact
+    s = strip_outer_parens(expr)
+    if _QUERY_START_RE.match(s):
+        s = f"({s})"
     if re.match(r"^NULL$", s, re.IGNORECASE):
         return ("null", None, True, s)
     for rx, _cls in _SRC_LITERAL_RES:
@@ -2605,12 +2366,11 @@ def _make_lane_probe(spark, stripped: str, translate: Translate):
     later pass routes) return (None, None) so callers keep today's
     conservative fallback. Analysis-only — no job is launched — and
     memoized per statement."""
-    from_at = _top_level_kw(stripped, re.compile(r"^FROM\b", re.IGNORECASE))
+    fm = find_top(stripped, _FROM_KW_RE)
     from_clause = ""
-    if from_at is not None:
-        rest = stripped[from_at:]
-        clause_at = _top_level_kw(rest[4:], _CLAUSE_KW_RE)
-        from_clause = rest if clause_at is None else rest[: 4 + clause_at]
+    if fm is not None:
+        cm = find_top(stripped, _CLAUSE_KW_RE, fm.end())
+        from_clause = stripped[fm.start() : cm.start() if cm else None]
     cache: dict = {}
 
     def probe(expr: str) -> "tuple[str | None, str | None]":
@@ -2845,7 +2605,7 @@ def _apply_composite_branch(
         return None
     out = list(parts)
     for i in coerce:
-        lit = _strip_outer_parens(atoms[i][3].strip())
+        lit = strip_outer_parens(atoms[i][3])
         value = lit[1:-1].replace("''", "'")
         out[i] = _fold_string_to_tree("CAST", value, tree, lazy=True)
     return out
@@ -2919,30 +2679,17 @@ def _apply_branch_casts(
     ]
 
 
-def _case_result_spans(
-    body: str, mask: list[bool]
-) -> "tuple[list[tuple[int, int]], bool] | None":
+def _case_result_spans(body: str) -> "tuple[list[tuple[int, int]], bool] | None":
     """(spans, saw_else): spans (start, end) of the THEN/ELSE result
     expressions of the CASE whose body (text between its CASE and END
     keywords) is given — the last span is the ELSE result iff saw_else —
     and nested CASEs inside results stay opaque (their own spans are
     inside the returned result spans and classify as unknown)."""
     spans: list[tuple[int, int]] = []
-    depth = 0
     case_depth = 0
     saw_else = False
     collecting: "int | None" = None
-    i = 0
-    while i < len(body):
-        if mask[i] or body[i] in "()":
-            if not mask[i]:
-                depth += 1 if body[i] == "(" else -1
-            i += 1
-            continue
-        m = _CASE_TOKEN_RE.match(body, i)
-        if not m or depth != 0:
-            i += 1
-            continue
+    for m in iter_top(body, _CASE_TOKEN_RE):
         kw = m.group(1).upper()
         if kw == "CASE":
             case_depth += 1
@@ -2952,13 +2699,12 @@ def _case_result_spans(
             case_depth -= 1
         elif case_depth == 0:
             if kw in ("WHEN", "ELSE") and collecting is not None:
-                spans.append((collecting, i))
+                spans.append((collecting, m.start()))
                 collecting = None
             if kw == "THEN" or kw == "ELSE":
                 collecting = m.end()
             if kw == "ELSE":
                 saw_else = True
-        i = m.end()
     if collecting is not None:
         spans.append((collecting, len(body)))
     return spans, saw_else
@@ -2978,19 +2724,17 @@ def rewrite_branch_expr_types(
     stripped = sql.strip().rstrip(";")
     if not _BRANCH_GATE_RE.search(_code_only(stripped)):
         return sql
-    from .dialect import _literal_mask
-
     classes = _schema_class_map(spark, stripped, translate)
     probe = _make_lane_probe(spark, stripped, translate)
     text = stripped
     # 1. function-arg forms, outermost right-to-left (args are spliced in
     # place; nested composite args resolve through the LIMIT-0 probe)
-    mask = _literal_mask(text)
+    mask = literal_mask(text)
     nested: list[tuple[int, int, str]] = []
     for m in _BRANCH_FN_RE.finditer(text):
         if mask[m.start()]:
             continue
-        close = _scan_list_close(text, m.end() - 1, mask)
+        close = close_of(text, m.end() - 1)
         if close != -1:
             nested.append((m.start(), close, m.group(1).upper()))
     outer = [
@@ -2999,7 +2743,7 @@ def rewrite_branch_expr_types(
     ]
     for start, close, fn in sorted(outer, reverse=True):
         body = text[text.index("(", start) + 1 : close - 1]
-        args = _split_args(body)
+        args = split_top(body)
         if fn in ("GREATEST", "LEAST"):
             # Measured r12: string LITERALS coerce into the single
             # non-string lane (GREATEST(1,'2') -> BIGINT 2;
@@ -3085,34 +2829,17 @@ def rewrite_branch_expr_types(
     # 2. CASE expressions: rewrite THEN/ELSE results, innermost-last via
     # right-to-left span processing on the refreshed text
     if re.search(r"\bCASE\b", _code_only(text), re.IGNORECASE):
-        mask = _literal_mask(text)
+        mask = literal_mask(text)
         cases: list[tuple[int, int]] = []
-        i = 0
-        while i < len(text):
-            if not mask[i] and _CASE_TOKEN_RE.match(text, i) and (
-                text[i : i + 4].upper() == "CASE"
-            ) and (i == 0 or not (text[i - 1].isalnum() or text[i - 1] == "_")):
-                # find matching END
-                depth_case, j = 1, i + 4
-                while j < len(text) and depth_case:
-                    if not mask[j]:
-                        m = _CASE_TOKEN_RE.match(text, j)
-                        if m and not (
-                            j > 0 and (text[j - 1].isalnum() or text[j - 1] == "_")
-                        ):
-                            kw = m.group(1).upper()
-                            if kw == "CASE":
-                                depth_case += 1
-                            elif kw == "END":
-                                depth_case -= 1
-                            j = m.end()
-                            continue
-                    j += 1
-                if not depth_case:
-                    cases.append((i, j))
-                i += 4
+        opens: list[int] = []
+        for m in _CASE_TOKEN_RE.finditer(text):
+            if mask[m.start()]:
                 continue
-            i += 1
+            kw = m.group(1).upper()
+            if kw == "CASE":
+                opens.append(m.start())
+            elif kw == "END" and opens:
+                cases.append((opens.pop(), m.end()))
         outer_cases = [
             s for s in cases
             if not any(o[0] < s[0] and s[1] <= o[1] for o in cases if o is not s)
@@ -3121,8 +2848,7 @@ def rewrite_branch_expr_types(
             body_start = start + 4
             body_end = end - 3  # before END
             body = text[body_start:body_end]
-            bmask = _literal_mask(body)
-            got = _case_result_spans(body, bmask)
+            got = _case_result_spans(body)
             if not got or not got[0] or len(got[0]) < 2:
                 continue
             spans, saw_else = got
@@ -3145,51 +2871,17 @@ def _top_select_items(sql: str) -> "list[tuple[str, str | None]]":
     bare alias / bare column identifier, None when underivable. Used by
     the executor's logical-type tagger — intentionally conservative:
     statements whose select list can't be isolated return []."""
-    from .dialect import _literal_mask
-
     s = sql.strip().rstrip(";")
-    mask = _literal_mask(s)
-    depth = 0
-    sel_at = None
-    i = 0
-    while i < len(s):
-        if not mask[i]:
-            ch = s[i]
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0:
-                m = re.match(r"SELECT\b", s[i:], re.IGNORECASE)
-                if m and (i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_")):
-                    sel_at = i + m.end()
-                    break
-        i += 1
-    if sel_at is None:
+    sm = find_top(s, _SELECT_RE)
+    if sm is None:
         return []
     # top-level FROM (or end of statement for FROM-less selects)
-    j = sel_at
-    depth = 0
-    end = len(s)
-    while j < len(s):
-        if not mask[j]:
-            ch = s[j]
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0:
-                if re.match(r"FROM\b", s[j:], re.IGNORECASE) and not (
-                    s[j - 1].isalnum() or s[j - 1] == "_"
-                ):
-                    end = j
-                    break
-        j += 1
-    body = s[sel_at:end]
+    fm = find_top(s, _FROM_KW_RE, sm.end())
+    body = s[sm.end() : None if fm is None else fm.start()]
     if re.match(r"\s*(?:ALL|DISTINCT)\b", body, re.IGNORECASE):
         body = re.sub(r"^\s*(?:ALL|DISTINCT)\b", "", body, flags=re.IGNORECASE)
     out: "list[tuple[str, str | None]]" = []
-    for item in _split_args(body):
+    for item in split_top(body):
         it = item.strip()
         if not it or it == "*":
             continue
@@ -3234,16 +2926,14 @@ def rewrite_in_list_types(
     stripped = sql.strip().rstrip(";")
     if not _IN_LIST_RE.search(_code_only(stripped)):
         return sql
-    from .dialect import _literal_mask
-
     classes = _schema_class_map(spark, stripped, translate)
     probe = _make_lane_probe(spark, stripped, translate)
     text = stripped
-    mask = _literal_mask(text)
+    mask = literal_mask(text)
     for m in sorted(_IN_LIST_RE.finditer(text), key=lambda x: -x.start()):
         if mask[m.start()]:
             continue
-        close = _scan_list_close(text, m.end() - 1, mask)
+        close = close_of(text, m.end() - 1)
         if close == -1:
             continue
         body = text[m.end(): close - 1]
@@ -3262,16 +2952,7 @@ def rewrite_in_list_types(
             while j >= 0 and text[j].isspace():
                 j -= 1
             if j >= 0 and text[j] == ")" and not mask[j]:
-                depth, k = 0, j
-                while k >= 0:
-                    if not mask[k]:
-                        if text[k] == ")":
-                            depth += 1
-                        elif text[k] == "(":
-                            depth -= 1
-                            if depth == 0:
-                                break
-                    k -= 1
+                k = open_of(text, j)
                 if k >= 0:
                     i2 = k - 1
                     while i2 >= 0 and (text[i2].isalnum() or text[i2] in "_."):
@@ -3283,7 +2964,7 @@ def rewrite_in_list_types(
         if lk in (None, "string", "boolean"):
             continue
         lt = lt or lk
-        items = _split_args(body)
+        items = split_top(body)
         atoms = [_branch_atom(i, classes, probe) for i in items]
         if any(a is None for a in atoms):
             continue
@@ -3443,7 +3124,7 @@ def _parse_duck_type(text: str):
         if not sm:
             return None
         fields = []
-        for f in _split_args(sm.group(1)):
+        for f in split_top(sm.group(1)):
             f = f.strip()
             nm = re.match(r'^"((?:[^"]|"")*)"\s+(.+)$', f, re.DOTALL) or re.match(
                 r"^([A-Za-z_]\w*)\s+(.+)$", f, re.DOTALL
@@ -3459,7 +3140,7 @@ def _parse_duck_type(text: str):
         mm = re.match(r"^map\s*\((.*)\)$", t, re.IGNORECASE | re.DOTALL)
         if not mm:
             return None
-        kv = _split_args(mm.group(1))
+        kv = split_top(mm.group(1))
         if len(kv) != 2:
             return None
         kt, vt = _parse_duck_type(kv[0]), _parse_duck_type(kv[1])
@@ -3806,17 +3487,7 @@ def _fact_operand_start(text: str, mask: list, bang: int) -> "int | None":
             start = j + 1
             i = j
         elif ch in ")]}":
-            op, cl = {")": ("(", ")"), "]": ("[", "]"), "}": ("{", "}")}[ch]
-            depth, j = 0, i
-            while j >= 0:
-                if not mask[j]:
-                    if text[j] == cl:
-                        depth += 1
-                    elif text[j] == op:
-                        depth -= 1
-                        if depth == 0:
-                            break
-                j -= 1
+            j = open_of(text, i)
             if j < 0:
                 return None
             start = j
@@ -3904,11 +3575,9 @@ def rewrite_postfix_factorial_terms(
     code = _code_only(sql.strip())
     if not re.search(r"!(?![=~!])", code):
         return sql
-    from .dialect import _literal_mask
-
     stripped = sql.strip().rstrip(";")
     text = stripped
-    mask = _literal_mask(text)
+    mask = literal_mask(text)
     classes = None
     probe = None
     edits: list[tuple[int, int, str]] = []
@@ -4034,19 +3703,8 @@ def _scan_cmp_term_back(text: str, mask: list, at: int) -> "int | None":
     if i < 0:
         return None
     ch = text[i]
-    pairs = {")": "(", "]": "[", "}": "{"}
-    if ch in pairs:
-        op, cl = pairs[ch], ch
-        depth, j = 0, i
-        while j >= 0:
-            if not mask[j]:
-                if text[j] == cl:
-                    depth += 1
-                elif text[j] == op:
-                    depth -= 1
-                    if depth == 0:
-                        break
-            j -= 1
+    if ch in ")]}":
+        j = open_of(text, i)
         if j < 0:
             return None
         start = j
@@ -4081,36 +3739,12 @@ def _scan_cmp_term_fwd(text: str, mask: list, at: int) -> "int | None":
     i = skipws(at)
     if i >= len(text):
         return None
-    pairs = {"(": ")", "[": "]", "{": "}"}
-
-    def balanced_fwd(j: int) -> int:
-        op = text[j]
-        cl = pairs[op]
-        depth = 0
-        while j < len(text):
-            if not mask[j]:
-                if text[j] == op:
-                    depth += 1
-                elif text[j] == cl:
-                    depth -= 1
-                    if depth == 0:
-                        return j + 1
-            j += 1
-        return -1
-
     ch = text[i]
     if ch == "'":
-        j = i + 1
-        while j < len(text):
-            if text[j] == "'":
-                if j + 1 < len(text) and text[j + 1] == "'":
-                    j += 2
-                    continue
-                return j + 1
-            j += 1
-        return None
-    if ch in pairs:
-        e = balanced_fwd(i)
+        lm = MASKED_RE.match(text, i)
+        return lm.end() if lm else None
+    if ch in "([{":
+        e = close_of(text, i)
         return None if e == -1 else e
     if ch.isalnum() or ch in "_$":
         j = i
@@ -4121,7 +3755,7 @@ def _scan_cmp_term_fwd(text: str, mask: list, at: int) -> "int | None":
             return None
         k = skipws(j)
         if k < len(text) and text[k] in "({" and not mask[k]:
-            e = balanced_fwd(k)
+            e = close_of(text, k)
             return None if e == -1 else e
         return j
     return None
@@ -4164,11 +3798,9 @@ def rewrite_map_comparisons(
     code = _code_only(sql.strip())
     if not re.search(r"\bmap\b", code, re.IGNORECASE):
         return sql
-    from .dialect import _literal_mask
-
     stripped = sql.strip().rstrip(";")
     text = stripped
-    mask = _literal_mask(text)
+    mask = literal_mask(text)
     probe = None
     edits: list[tuple[int, int, str]] = []
     for m in _MAP_CMP_OP_RE.finditer(text):
@@ -4424,34 +4056,6 @@ def _runtime_string_composite_cast(form: str, expr: str, tree) -> "str | None":
     return None
 
 
-def _cast_as_split(inner: str) -> "tuple[str, str] | None":
-    """(source expr, type text) of a CAST body — split at the LAST
-    top-level AS keyword (quote/paren/bracket aware)."""
-    depth, in_q = 0, False
-    last = None
-    for i, ch in enumerate(inner):
-        if in_q:
-            if ch == "'":
-                in_q = False
-            continue
-        if ch == "'":
-            in_q = True
-        elif ch in "([{":
-            depth += 1
-        elif ch in ")]}":
-            depth -= 1
-        elif depth == 0 and ch in "Aa" and inner[i : i + 2].upper() == "AS":
-            before = inner[i - 1] if i else " "
-            after = inner[i + 2] if i + 2 < len(inner) else " "
-            if not (before.isalnum() or before == "_") and not (
-                after.isalnum() or after == "_"
-            ):
-                last = i
-    if last is None:
-        return None
-    return inner[:last], inner[last + 2 :]
-
-
 def rewrite_string_list_casts(
     spark: SparkSession, sql: str, translate: Translate, _depth: int = 0
 ) -> str:
@@ -4470,11 +4074,9 @@ def rewrite_string_list_casts(
         re.IGNORECASE,
     ):
         return sql
-    from .dialect import _literal_mask
-
     stripped = sql.strip().rstrip(";")
     text = stripped
-    mask = _literal_mask(text)
+    mask = literal_mask(text)
     edits: list[tuple[int, int, str]] = []
     # string literal -> STRUCT/MAP (and composite-element list) targets
     for m in _STR_COMPOSITE_CAST_RE.finditer(text):
@@ -4490,7 +4092,7 @@ def rewrite_string_list_casts(
         # type text: balanced parens from the STRUCT/MAP head, plus any
         # [] suffixes
         topen = text.index("(", m.end())
-        tclose = _scan_list_close(text, topen, mask)
+        tclose = close_of(text, topen)
         if tclose == -1:
             continue
         j = tclose
@@ -4561,7 +4163,7 @@ def rewrite_string_list_casts(
     for m in _STR_COL_LIST_CAST_RE.finditer(text):
         if mask[m.start()] or any(a <= m.start() < b for a, b in taken):
             continue
-        close = _scan_list_close(text, m.end() - 1, mask)
+        close = close_of(text, m.end() - 1)
         if close == -1:
             continue
         # skip when the FULL span (m.start(), close) overlaps ANY prior
@@ -4571,10 +4173,12 @@ def rewrite_string_list_casts(
         # is picked up by the fixpoint re-run below instead
         if any(not (b <= m.start() or close <= a) for a, b in taken):
             continue
-        got = _cast_as_split(text[m.end() : close - 1])
-        if got is None:
+        cast_body = text[m.end() : close - 1]
+        as_at = _cast_as_at(cast_body)
+        if as_at is None:
             continue
-        expr, type_text = got[0].strip(), got[1].strip()
+        expr = cast_body[:as_at].strip()
+        type_text = cast_body[as_at:].lstrip()[2:].strip()
         tm = _LIST_TGT_RE.match(type_text)
         str_tgt = (
             type_text.lower().split("(")[0].strip() in _STRING_BASES
@@ -4672,20 +4276,18 @@ def rewrite_ordered_stat_decimals(
     through untouched."""
     if not _ORDERED_STAT_RE.search(_code_only(sql.strip())):
         return sql
-    from .dialect import _literal_mask
-
     stripped = sql.strip().rstrip(";")
     classes = _schema_class_map(spark, stripped, translate)
     if not classes:
         return sql
     text = stripped
-    mask = _literal_mask(text)
+    mask = literal_mask(text)
     for m in sorted(
         _ORDERED_STAT_RE.finditer(text), key=lambda x: -x.start()
     ):
         if mask[m.start()]:
             continue
-        close = _scan_list_close(text, m.end() - 1, mask)
+        close = close_of(text, m.end() - 1)
         if close == -1:
             continue
         after = text[close:].lstrip()
@@ -4693,11 +4295,7 @@ def rewrite_ordered_stat_decimals(
             continue
         fn = m.group(1).lower()
         body = text[m.end(): close - 1]
-        args = _split_args(body)
-        if len(args) > 2 and args[1].lstrip().startswith("["):
-            # _split_args doesn't track square brackets: rejoin the
-            # quantile-list argument
-            args = [args[0], ", ".join(a.strip() for a in args[1:])]
+        args = split_top(body)
         if not args or len(args) > 2:
             continue
         k, t = _src_class(args[0].strip(), classes)
@@ -4880,13 +4478,11 @@ def rewrite_list_literal_types(
     stripped = sql.strip().rstrip(";")
     if "[" not in _code_only(stripped):
         return sql
-    from .dialect import _literal_mask
-
     classes = _schema_class_map(spark, stripped, translate)
     probe = _make_lane_probe(spark, stripped, translate)
 
     text = stripped
-    mask = _literal_mask(text)
+    mask = literal_mask(text)
     spans: list[tuple[int, int]] = []
     for m in _LIST_OPEN_RE.finditer(text):
         i = m.start()
@@ -4903,15 +4499,8 @@ def rewrite_list_literal_types(
                 and (i == 5 or not (text[i - 6].isalnum() or text[i - 6] == "_"))
             ):
                 continue
-        depth, j = 1, i + 1
-        while j < len(text) and depth:
-            if not mask[j]:
-                if text[j] == "[":
-                    depth += 1
-                elif text[j] == "]":
-                    depth -= 1
-            j += 1
-        if depth:
+        j = close_of(text, i)
+        if j == -1:
             continue
         spans.append((i, j))
     # outermost only; nested lists have non-literal cells and pass through
@@ -4923,7 +4512,7 @@ def rewrite_list_literal_types(
         body = text[start + 1 : end - 1]
         if not body.strip():
             continue
-        cells = [c.strip() for c in _split_args(body)]
+        cells = split_top(body)
         atoms = []
         ok = True
         for cell in cells:
@@ -4972,8 +4561,6 @@ def rewrite_values_typing(
     stripped = sql.strip().rstrip(";")
     if not _VALUES_KW_RE.search(_code_only(stripped)):
         return sql
-    from .dialect import _literal_mask
-
     # BARE probe (no FROM): VALUES cells are constant expressions, and
     # the statement's own FROM may BE the not-yet-coerced inline table —
     # attaching it would make every probe fail on exactly the statements
@@ -4981,7 +4568,7 @@ def rewrite_values_typing(
     probe = _make_lane_probe(spark, "", translate)
 
     text = stripped
-    mask = _literal_mask(text)
+    mask = literal_mask(text)
     for m in sorted(
         _VALUES_KW_RE.finditer(text), key=lambda x: -x.start()
     ):
@@ -4991,7 +4578,7 @@ def rewrite_values_typing(
         rows: list[tuple[int, int]] = []
         j = text.index("(", m.start())
         while True:
-            close = _scan_list_close(text, j, mask)
+            close = close_of(text, j)
             if close == -1:
                 rows = []
                 break
@@ -5010,7 +4597,7 @@ def rewrite_values_typing(
             break
         if len(rows) < 2:
             continue
-        cells = [_split_args(text[a:b]) for a, b in rows]
+        cells = [split_top(text[a:b]) for a, b in rows]
         ncols = len(cells[0])
         if any(len(r) != ncols for r in cells):
             continue
@@ -5047,7 +4634,7 @@ def rewrite_values_typing(
             continue
         for (a, b), row in sorted(zip(rows, new_cells), reverse=True):
             text = text[:a] + ", ".join(c.strip() for c in row) + text[b:]
-        mask = _literal_mask(text)
+        mask = literal_mask(text)
     return text
 
 
@@ -5056,11 +4643,12 @@ def rewrite_values_typing(
 # ---------------------------------------------------------------------------
 
 _SETOP_KW_RE = re.compile(
-    r"^(UNION|INTERSECT|EXCEPT)(\s+(?:ALL|DISTINCT))?(\s+BY\s+NAME)?\b",
+    r"\b(UNION|INTERSECT|EXCEPT)(\s+(?:ALL|DISTINCT))?(\s+BY\s+NAME)?\b",
     re.IGNORECASE,
 )
 _SETOP_GATE_RE = re.compile(r"\b(UNION|INTERSECT|EXCEPT)\b", re.IGNORECASE)
-_TRAIL_CLAUSE_RE = re.compile(r"^(ORDER\s+BY|LIMIT|OFFSET)\b", re.IGNORECASE)
+_MAIN_QUERY_RE = re.compile(r"\b(?:SELECT|VALUES|FROM)\b", re.IGNORECASE)
+_TRAIL_CLAUSE_RE = re.compile(r"\b(ORDER\s+BY|LIMIT|OFFSET)\b", re.IGNORECASE)
 
 # DuckDB's numeric-unification ladder for set-operation branches
 # (measured, tools/sweep_branch_types.py): BOOLEAN coerces INTO the other
@@ -5079,32 +4667,11 @@ def _split_setop_branches(body: str) -> "tuple[list[str], list[str]] | None":
     top-level set operation."""
     parts: list[str] = []
     ops: list[str] = []
-    depth, in_str, i, last = 0, False, 0, 0
-    while i < len(body):
-        ch = body[i]
-        if in_str:
-            if ch == "'":
-                if i + 1 < len(body) and body[i + 1] == "'":
-                    i += 2
-                    continue
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and (
-            i == 0 or not (body[i - 1].isalnum() or body[i - 1] == "_")
-        ):
-            m = _SETOP_KW_RE.match(body[i:])
-            if m:
-                parts.append(body[last:i])
-                ops.append(m.group(0))
-                i += m.end()
-                last = i
-                continue
-        i += 1
+    last = 0
+    for m in iter_top(body, _SETOP_KW_RE):
+        parts.append(body[last : m.start()])
+        ops.append(m.group(0))
+        last = m.end()
     if not ops:
         return None
     parts.append(body[last:])
@@ -5145,12 +4712,10 @@ def rewrite_setop_branch_types(
         return sql
     prologue, body = "", stripped
     if re.match(r"^\s*WITH\b", stripped, re.IGNORECASE):
-        main_at = _top_level_kw(
-            stripped[4:], re.compile(r"^(SELECT|VALUES|FROM)\b", re.IGNORECASE)
-        )
-        if main_at is None:
+        mm = find_top(stripped, _MAIN_QUERY_RE, 4)
+        if mm is None:
             return sql
-        prologue, body = stripped[: 4 + main_at], stripped[4 + main_at:]
+        prologue, body = stripped[: mm.start()], stripped[mm.start() :]
     split = _split_setop_branches(body)
     if split is None:
         return sql
@@ -5158,10 +4723,10 @@ def rewrite_setop_branch_types(
     # trailing ORDER BY / LIMIT / OFFSET binds to the WHOLE set operation —
     # keep it outside the last branch
     tail = ""
-    tail_at = _top_level_kw(branches[-1], _TRAIL_CLAUSE_RE)
-    if tail_at is not None:
-        tail = branches[-1][tail_at:]
-        branches[-1] = branches[-1][:tail_at]
+    tm = find_top(branches[-1], _TRAIL_CLAUSE_RE)
+    if tm is not None:
+        tail = branches[-1][tm.start() :]
+        branches[-1] = branches[-1][: tm.start()]
     if any(_SETOP_GATE_RE.match(op.upper()) and "BY" in op.upper() for op in ops):
         return sql  # UNION BY NAME is routed by _union_by_name upstream
     schemas = []

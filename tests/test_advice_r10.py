@@ -26,7 +26,8 @@ import tempfile
 import duckdb
 import pytest
 
-from duckdb_service_spark.service.dialect import _split_args, translate
+from duckdb_service_spark.service.dialect import translate
+from duckdb_service_spark.service.sqltext import split_top as _split_args
 
 
 @pytest.fixture(scope="module")

@@ -210,7 +210,7 @@ def test_top_level_as_survives_doubled_quotes(content):
     """_top_level_as splits a cast body at the LAST top-level ' AS ' —
     doubled '' escapes, stray parens/angles, and ' AS ' INSIDE the
     literal must not shift the split (VERDICT r10 task 6)."""
-    from duckdb_service_spark.service.sql_routing import _top_level_as
+    from duckdb_service_spark.service.dialect import _cast_as_at as _top_level_as
 
     lit = "'" + content.replace("'", "''") + "'"
     body = lit + " AS INTEGER"

@@ -73,3 +73,34 @@ def read_mode(request, spark, eng):
 def test_distinct_on_order_and_limit_match_duckdb(read_mode, eng, con, sql):
     got = [tuple(r) for r in eng.query_df(sql).collect()]
     assert got == con.execute(sql).fetchall()
+
+
+# ORDER BY items that name a select-list alias, a qualified column or a
+# select-list position, with each key's first row set by the second key.
+# The expected rows are DuckDB 1.0's answers on table ``d``.
+NAMED_CASES = [
+    ("SELECT DISTINCT ON (v) v AS w, k FROM d ORDER BY w, k",
+     [("a", 2), ("b", 1), ("c", 6), (None, 0)]),
+    ("SELECT DISTINCT ON (d.v) d.v, d.k FROM d ORDER BY d.v, d.k",
+     [("a", 2), ("b", 1), ("c", 6), (None, 0)]),
+    ("SELECT DISTINCT ON (v) v, k FROM d ORDER BY 1, 2",
+     [("a", 2), ("b", 1), ("c", 6), (None, 0)]),
+    ("SELECT DISTINCT ON (v) v, k FROM d ORDER BY 1, 2 DESC",
+     [("a", 5), ("b", 3), ("c", 6), (None, 4)]),
+]
+
+
+@pytest.fixture(scope="module")
+def d_table(eng, con):
+    for target in (eng.execute, con.execute):
+        target("CREATE TABLE d (k INTEGER, v VARCHAR)")
+        target(
+            "INSERT INTO d VALUES (3, 'b'), (1, 'b'), (2, 'a'), (5, 'a'), "
+            "(4, NULL), (0, NULL), (6, 'c')"
+        )
+
+
+@pytest.mark.parametrize("sql,want", NAMED_CASES)
+def test_distinct_on_order_names_match_duckdb(d_table, eng, con, sql, want):
+    assert con.execute(sql).fetchall() == want
+    assert [tuple(r) for r in eng.query_df(sql).collect()] == want

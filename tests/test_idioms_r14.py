@@ -47,7 +47,8 @@ differentially verified against live DuckDB:
    Arrow UDF — Spark rejects Python UDFs inside lambdas), NULL
    containers render as SQL NULL.
 
-All shapes measured against DuckDB 2026-08 (tools/probe_r14*.py);
+All shapes measured against DuckDB 2026-08 (the tools/probe_r14*.py
+scripts, in git history at commit 72f160f);
 reference reach: db/db.go:70 passthrough.
 """
 

@@ -27,7 +27,7 @@ LIVE_COLS = "o_orderkey, o_custkey, o_totalprice, o_orderpriority"
 def _reads(k: int) -> list[str]:
     """The interactive read shapes: key lookups, joins with GROUP BY, ``::``
     casts, QUALIFY, DISTINCT ON, list literals, date arithmetic, a wide
-    range scan and two reads of the mutable table."""
+    range scan, two reads of the mutable table and a macro call."""
     return [
         "SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate, "
         f"o_orderpriority FROM orders WHERE o_orderkey = {k}",
@@ -61,6 +61,7 @@ def _reads(k: int) -> list[str]:
         "SELECT count(*) AS n, round(sum(o_totalprice), 2) AS total, "
         f"max(o_orderkey) AS max_key FROM {LIVE} WHERE o_custkey % 10 = {k % 10}",
         f"SELECT {LIVE_COLS} FROM {LIVE} WHERE o_orderkey = {k}",
+        f"SELECT first_of([o_custkey, {k}], 0) AS f FROM {LIVE} WHERE o_orderkey = {k}",
     ]
 
 
@@ -70,6 +71,11 @@ def _writes(k: int) -> list[str]:
         f"({20_000 + k}, {k + 1}, 12.25, '5-LOW')",
         f"UPDATE {LIVE} SET o_totalprice = o_totalprice + {k} WHERE o_orderkey = {2 * k}",
         f"DELETE FROM {LIVE} WHERE o_orderkey = {2 * k + 1}",
+        # a list in the SET list, and a list in the RETURNING list
+        f"UPDATE {LIVE} SET o_totalprice = list_sum([o_totalprice, {k}]), "
+        f"o_orderpriority = '{k % 5 + 1}-URGENT' WHERE o_orderkey = {2 * k}",
+        f"INSERT INTO {LIVE} VALUES ({30_000 + k}, {k}, 1.5, '2-HIGH') "
+        "RETURNING [o_orderkey, o_custkey] AS l, o_orderpriority",
     ]
 
 
@@ -104,6 +110,7 @@ def engine(spark, sf_dir):
         "o_totalprice DOUBLE, o_orderpriority VARCHAR)"
     )
     eng.execute(f"INSERT INTO {LIVE} SELECT {LIVE_COLS} FROM orders WHERE o_orderkey < 200")
+    eng.execute("CREATE MACRO first_of(l, d) AS coalesce(l[1], d)")
     for sch in ("s1", "s2"):
         eng.execute(f"CREATE SCHEMA {sch}")
         eng.execute(
