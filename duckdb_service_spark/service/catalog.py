@@ -18,6 +18,7 @@ import os
 import re
 import shutil
 import time
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -138,12 +139,16 @@ class TableMeta:
 class Catalog:
     """Warehouse of parquet tables + sidecar metadata + temp views."""
 
-    def __init__(self, spark: SparkSession, warehouse_dir: str):
+    def __init__(
+        self, spark: SparkSession, warehouse_dir: str, query_df: Callable[[str], DataFrame]
+    ):
         self.spark = spark
         self.dir = warehouse_dir
+        # binds view bodies: Engine.query_df, the one SQL front end
+        self._query_df = query_df
         os.makedirs(warehouse_dir, exist_ok=True)
         self.tables: dict[str, TableMeta] = {}
-        self.views: dict[str, str] = {}
+        self.views: dict[str, str] = {}  # name -> DuckDB query text
         self.sequences: dict[str, int] = {}
         self.macros: dict = {}  # name -> macros.MacroDef
         self.attached: dict[str, str] = {}  # alias -> warehouse path
@@ -204,11 +209,24 @@ class Catalog:
                     unique_sets=d.get("unique_sets", []),
                 )
                 self.tables[meta.name] = meta
-                if os.path.exists(meta.path):
-                    self._register(meta)
+        self._register(*[m for m in self.tables.values() if os.path.exists(m.path)])
 
-    def _register(self, meta: TableMeta) -> None:
-        self.read(meta.name).createOrReplaceTempView(meta.name)
+    def _register(self, *metas: TableMeta) -> None:
+        for meta in metas:
+            self.read(meta.name).createOrReplaceTempView(meta.name)
+        self._register_views()
+
+    def _register_views(self) -> None:
+        """Register every view from its stored DuckDB text, in creation
+        order. A temp view holds its plan, file listing included, so each
+        table write rebuilds the views to see the new files. A body that no
+        longer binds leaves its view unregistered: reading the view raises,
+        the write that broke it does not."""
+        for name, body in self.views.items():
+            try:
+                self._query_df(body).createOrReplaceTempView(name)
+            except Exception:  # noqa: BLE001 — see the docstring
+                self.spark.catalog.dropTempView(name)
 
     def refresh(self) -> None:
         """Re-read the warehouse sidecars written by ANOTHER engine
@@ -351,9 +369,10 @@ class Catalog:
         self._save_meta(meta)
         self._register(meta)
 
-    def create_view(self, name: str, select_sql: str) -> None:
-        self.spark.sql(select_sql).createOrReplaceTempView(name)
-        self.views[name] = select_sql
+    def create_view(self, name: str, body: str) -> None:
+        self._query_df(body)  # a body that does not bind fails the CREATE
+        self.views[name] = body
+        self._register_views()
 
     def _seq_path(self) -> str:
         return os.path.join(self.dir, "_sequences.json")
@@ -884,10 +903,7 @@ class Catalog:
         self.comments = state["comments"]
         self.types = state.get("types", {})
         self.schemas = state.get("schemas", set())
-        for meta in self.tables.values():
-            self._register(meta)
-        for name, select_sql in self.views.items():
-            self.spark.sql(select_sql).createOrReplaceTempView(name)
+        self._register(*self.tables.values())
         self._txn_state = None
         shutil.rmtree(snap, ignore_errors=True)
 

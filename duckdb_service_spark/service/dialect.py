@@ -35,74 +35,6 @@ class UnsupportedDialect(Exception):
     pass
 
 
-_SERIES_TVF_RE = re.compile(
-    r"\b(FROM|JOIN)(\s+)(generate_series|range)\s*\(", re.IGNORECASE
-)
-
-
-def rewrite_series_tvf(sql: str) -> str:
-    """FROM-position series table functions (measured DuckDB 1.x shapes):
-
-    - ``FROM generate_series([start,] stop [, step])`` — INCLUSIVE bounds,
-      output column named ``generate_series``; 1-arg form starts at 0;
-      mismatched direction without a matching step is an error (Spark's
-      ``sequence`` errors identically at runtime).
-    - ``FROM range([start,] stop [, step])`` — EXCLUSIVE stop, column
-      ``range``; emitted as the inclusive sequence with the stop value
-      filtered back out (works uniformly for integers AND
-      timestamp+interval series, positive and negative steps).
-
-    Scalar-position ``generate_series(...)`` (DuckDB's LIST-returning
-    form) is untouched — only occurrences directly after FROM/JOIN
-    rewrite, so trailing aliases (``AS g(x)``) keep working against the
-    emitted subquery. At scale explode(sequence(...)) is a single-task
-    generator per series — the same shape Spark's own ``range()`` TVF
-    uses; series meant to parallelize should go through
-    ``spark.range``-backed relations (plans/relational.py) instead."""
-    out = []
-    i = 0
-    while True:
-        m = _SERIES_TVF_RE.search(sql, i)
-        if not m:
-            out.append(sql[i:])
-            break
-        fn = m.group(3).lower()
-        open_at = m.end()
-        j = close_of(sql, open_at - 1)
-        if j == -1:
-            raise UnsupportedDialect(f"{fn}: unbalanced parentheses")
-        inner = rewrite_series_tvf(sql[open_at : j - 1])
-        args = split_top(inner)
-        if all(re.match(r"^-?\d+$", a) for a in args):
-            # DuckDB's integer series are BIGINT columns; Spark's
-            # sequence over int literals yields INT (measured r12)
-            args = [f"CAST({a} AS BIGINT)" for a in args]
-        if fn == "generate_series":
-            a, b, s = (
-                ("0", args[0], "1")
-                if len(args) == 1
-                else (args[0], args[1], args[2] if len(args) > 2 else "1")
-            )
-            sub = (
-                f"(SELECT explode(sequence({a}, {b}, {s}))"
-                f" AS generate_series)"
-            )
-        else:
-            a, b, s = (
-                ("0", args[0], "1")
-                if len(args) == 1
-                else (args[0], args[1], args[2] if len(args) > 2 else "1")
-            )
-            sub = (
-                f"(SELECT * FROM (SELECT explode(sequence({a}, {b}, {s}))"
-                f" AS range) WHERE range != ({b}))"
-            )
-        out.append(sql[i : m.start()])
-        out.append(f"{m.group(1)}{m.group(2)}{sub}")
-        i = j
-    return "".join(out)
-
-
 def _rewrite_code(sql: str, fn) -> str:
     return "".join(chunk if is_lit else fn(chunk) for is_lit, chunk in split_literals(sql))
 
@@ -4589,13 +4521,6 @@ def translate(sql: str) -> str:
     # string equals the DuckDB one. (DuckDB's E'...' escape strings, which
     # DO interpret backslashes, keep Spark's default parsing — E stripped.)
     sql = _escape_literal_backslashes(sql)
-    # FROM-position series TVFs must rewrite BEFORE the scalar
-    # generate_series/range emitters see them; idempotent, so callers that
-    # already applied it (executor.query_df) are unaffected. This makes
-    # translate() itself safe for the DML paths that run sub-SELECTs
-    # directly (INSERT ... SELECT ... FROM range(n) — regression caught by
-    # test_concurrent_writes).
-    sql = rewrite_series_tvf(sql)
     code_only = "".join(chunk for is_lit, chunk in split_literals(sql) if not is_lit)
     for rx, name in _UNSUPPORTED:
         if rx.search(code_only):

@@ -21,7 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dialect import _FROM_KW_RE, translate
-from .sqltext import close_of, find_top, iter_top, split_top
+from .serializer import duckdb_type_name
+from .sqltext import close_of, find_top, iter_top, split_top, strip_outer_parens
 
 if TYPE_CHECKING:
     from .executor import Engine
@@ -197,14 +198,12 @@ def _check_constraints(engine: "Engine", table: str, incoming: DataFrame) -> Non
             )
 
 
-_INSERT_VALUES_RE = re.compile(
-    r"^INSERT\s+INTO\s+(\w+)\s*(?:\(([^)]*)\))?\s*(VALUES\s*.+)$",
+_INSERT_RE = re.compile(
+    r"^INSERT\s+INTO\s+(\w+)\s*(?:\(\s*(\w+(?:\s*,\s*\w+)*)\s*\))?\s*(BY\s+NAME\s+)?(.+)$",
     re.IGNORECASE | re.DOTALL,
 )
-_INSERT_SELECT_RE = re.compile(
-    r"^INSERT\s+INTO\s+(\w+)\s*(?:\(([^)]*)\))?\s*(SELECT\s+.+|WITH\s+.+)$",
-    re.IGNORECASE | re.DOTALL,
-)
+_VALUES_HEAD_RE = re.compile(r"^VALUES\b\s*", re.IGNORECASE)
+_DEFAULT_VALUES_RE = re.compile(r"^DEFAULT\s+VALUES$", re.IGNORECASE)
 
 
 def _aligned(engine: "Engine", table: str, cols_spec: str | None, src: DataFrame) -> DataFrame:
@@ -248,47 +247,40 @@ def _default_expr(meta, name: str):
 _OPEN_PAREN_RE = re.compile(r"\(")
 
 
-def _replace_default_tokens(values_clause: str, src_cols: list[str], meta) -> str:
-    """Rewrite bare DEFAULT items inside VALUES rows to the column's
-    declared default (or NULL) by position — Spark has no DEFAULT keyword
-    in inline tables."""
-    if not re.search(r"\bDEFAULT\b", values_clause, re.IGNORECASE):
-        return values_clause
-    body = values_clause.strip()
-    head = re.match(r"^VALUES\s*", body, re.IGNORECASE)
-    rows_text = body[head.end():]
-    # the top-level parenthesized rows
-    rows = []
+def _typed_values(values: str, targets: list[str], meta) -> str:
+    """A bare ``VALUES`` list with every cell cast to the type its target
+    column stores, and a ``DEFAULT`` cell replaced by the column's declared
+    default (NULL when none). DuckDB casts each cell to its column and
+    never unifies the rows first: ``('3.5')`` into an INTEGER column stores
+    4, and ``(1), ('2.5')`` into a DOUBLE column stores both. The cast names
+    the stored type as DuckDB names it, so an unsigned or BIT column casts
+    to the wider or plain type it is stored as, which the front end can
+    cast to inside VALUES. Text that is not a plain list of rows, or a row
+    whose width does not match ``targets``, is left as written, for the
+    query and the alignment to report."""
+    rows_text = values[_VALUES_HEAD_RE.match(values).end() :]
+    rows, at = [], 0
     for m in iter_top(rows_text, _OPEN_PAREN_RE):
         close = close_of(rows_text, m.start())
-        if close == -1:
-            break
-        rows.append(rows_text[m.end() : close - 1])
+        if close == -1 or rows_text[at : m.start()].strip() not in ("", ","):
+            return values
+        rows.append(split_top(rows_text[m.end() : close - 1]))
+        at = close
+    if rows_text[at:].strip():
+        return values
+    schema = meta.spark_schema()
+    if any(len(row) != len(targets) for row in rows) or any(t not in schema.names for t in targets):
+        return values
+    defaults = {c["name"]: c.get("default") or "NULL" for c in meta.columns}
     out_rows = []
     for row in rows:
-        items = split_top(row)
-        new_items = []
-        for j, item in enumerate(items):
+        cells = []
+        for item, name in zip(row, targets):
             if item.strip().upper() == "DEFAULT":
-                if j >= len(src_cols):
-                    raise ValueError("DEFAULT in VALUES beyond the column list")
-                d = None
-                for c in meta.columns:
-                    if c["name"] == src_cols[j]:
-                        d = c.get("default")
-                new_items.append(f"CAST({d} AS {_col_type(meta, src_cols[j])})" if d else "NULL")
-            else:
-                new_items.append(item)
-        out_rows.append("(" + ", ".join(new_items) + ")")
+                item = defaults[name]
+            cells.append(f"CAST({item} AS {duckdb_type_name(schema[name].dataType)})")
+        out_rows.append(f"({', '.join(cells)})")
     return "VALUES " + ", ".join(out_rows)
-
-
-def _col_type(meta, name: str) -> str:
-    for c in meta.columns:
-        if c["name"] == name:
-            t = c["type"].upper()
-            return {"INTEGER": "INT", "VARCHAR": "STRING"}.get(t, t)
-    return "STRING"
 
 
 _ON_CONFLICT_NOTHING_RE = re.compile(
@@ -325,61 +317,6 @@ def _drop_conflicts(engine: "Engine", table: str, aligned: DataFrame) -> DataFra
     )
     existing = engine.catalog.read(table).select(*pk)
     return uniq.join(existing, pk, "left_anti")
-
-
-def insert_values(engine: "Engine", sql: str, returning: str | None = None):
-    conflict_target: list[str | None] = [None]
-
-    def _capture(m: "re.Match[str]") -> str:
-        conflict_target[0] = m.group("target") or ""
-        return ""
-
-    stripped, n_sub = _ON_CONFLICT_NOTHING_RE.subn(_capture, sql.strip())
-    on_conflict_nothing = bool(n_sub)
-    dv = re.match(
-        r"^INSERT\s+INTO\s+(\w+)\s+DEFAULT\s+VALUES$", stripped, re.IGNORECASE
-    )
-    if dv:
-        # one row of declared defaults (NULL where none)
-        meta0 = engine.catalog.tables[dv.group(1)]
-        items = []
-        # generated columns are computed downstream, never inserted —
-        # emitting a value for them would break _aligned's count check
-        for c in meta0.columns:
-            if c.get("generated"):
-                continue
-            d = c.get("default")
-            items.append(f"CAST({d} AS {_col_type(meta0, c['name'])})" if d else "NULL")
-        stripped = f"INSERT INTO {dv.group(1)} VALUES ({', '.join(items)})"
-    m = _INSERT_VALUES_RE.match(stripped)
-    if not m:
-        raise ValueError(f"cannot parse INSERT: {sql[:80]}")
-    table, cols_spec, values_clause = m.groups()
-    meta = engine.catalog.tables[table]
-    # positional VALUES map to insertable (non-generated) columns only —
-    # the same list _aligned uses, so a bare DEFAULT token after a
-    # generated column resolves against the right column's default
-    src_cols_for_defaults = (
-        [c.strip() for c in cols_spec.split(",")]
-        if cols_spec
-        else [c["name"] for c in meta.columns if not c.get("generated")]
-    )
-    values_clause = _replace_default_tokens(values_clause, src_cols_for_defaults, meta)
-    src = engine.spark.sql(f"SELECT * FROM ({translate(values_clause)})")
-    aligned = _aligned(engine, table, cols_spec, src)
-    if on_conflict_nothing:
-        _check_conflict_target(engine, table, conflict_target[0])
-        aligned = _drop_conflicts(engine, table, aligned).localCheckpoint(eager=True)
-        _check_constraints(engine, table, aligned)
-    else:
-        _check_constraints(engine, table, aligned)
-    if returning is not None:
-        aligned = aligned.localCheckpoint(eager=True)
-    n = aligned.count()
-    engine.catalog.append(table, aligned)
-    if returning is not None:
-        return n, _apply_returning(aligned, returning)
-    return n
 
 
 _NEXTVAL_RE = re.compile(r"\bnextval\s*\(\s*'(\w+)'\s*\)", re.IGNORECASE)
@@ -425,7 +362,7 @@ def _select_with_sequences(engine: "Engine", select_sql: str) -> DataFrame:
                 )
             inner_items.append(item)
     inner_sql = f"SELECT {', '.join(inner_items)} {rest}"
-    src = engine.spark.sql(translate(inner_sql))
+    src = engine.query_df(inner_sql)
     pos = _with_global_pos(src, [F.monotonically_increasing_id()])
     n = pos.count()
     for idx, (seq, colname) in seq_items.items():
@@ -434,30 +371,49 @@ def _select_with_sequences(engine: "Engine", select_sql: str) -> DataFrame:
     return pos.select(*[c for c in src.columns])
 
 
-def insert_select(engine: "Engine", sql: str, returning: str | None = None):
-    stripped, n_sub = _ON_CONFLICT_NOTHING_RE.subn("", sql.strip())
-    # DuckDB `INSERT INTO t BY NAME SELECT ...`: the SELECT's output names
-    # (not positions) pick the target columns; unnamed target columns fill
-    # NULL. Equivalent to an explicit column list taken from the source.
-    by_name = re.match(
-        r"^(INSERT\s+INTO\s+\w+)\s+BY\s+NAME\s+(.+)$",
-        stripped,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if by_name:
-        stripped = f"{by_name.group(1)} {by_name.group(2)}"
-    m = _INSERT_SELECT_RE.match(stripped)
+def _incoming(engine: "Engine", head: str) -> tuple[str, DataFrame]:
+    """``INSERT INTO name [(cols)] [BY NAME] <body>`` → (table, the rows to
+    insert aligned to the table's columns). The body is a bare VALUES list
+    (each cell typed to its column), DEFAULT VALUES, or any query."""
+    m = _INSERT_RE.match(head.strip())
     if not m:
-        raise ValueError(f"cannot parse INSERT ... SELECT: {sql[:80]}")
-    table, cols_spec, select_sql = m.groups()
-    if _NEXTVAL_RE.search(select_sql):
-        src = _select_with_sequences(engine, select_sql)
+        raise ValueError(f"cannot parse INSERT: {head.strip()[:80]}")
+    table, cols_spec, by_name, body = m.groups()
+    meta = engine.catalog.tables[table]
+    # positional VALUES map to insertable (non-generated) columns only —
+    # the same list _aligned uses
+    targets = (
+        [c.strip() for c in cols_spec.split(",")]
+        if cols_spec
+        else [c["name"] for c in meta.columns if not c.get("generated")]
+    )
+    body = body.strip()
+    if _DEFAULT_VALUES_RE.match(body):
+        body = "VALUES (" + ", ".join("DEFAULT" for _ in targets) + ")"
+    if _VALUES_HEAD_RE.match(body):
+        # one value per textual nextval occurrence: each row literal calls
+        # nextval itself
+        src = engine.query_df(engine._substitute_sequences(_typed_values(body, targets, meta)))
+    elif _NEXTVAL_RE.search(body):
+        # nextval must increment PER ROW: a reserved contiguous block
+        src = _select_with_sequences(engine, body)
     else:
-        src = engine.spark.sql(translate(select_sql))
+        src = engine.query_df(body)
     if by_name:
+        # DuckDB `INSERT INTO t BY NAME <query>`: the source's output names
+        # (not positions) pick the target columns; the rest fill defaults
         cols_spec = ", ".join(src.columns)
-    aligned = _aligned(engine, table, cols_spec, src)
-    if n_sub:
+    return table, _aligned(engine, table, cols_spec, src)
+
+
+def insert_rows(engine: "Engine", sql: str, returning: str | None = None):
+    """INSERT INTO ... [ON CONFLICT [(target)] DO NOTHING] [RETURNING ...]
+    (RETURNING already split off into ``returning``)."""
+    stmt = sql.strip()
+    conflict = _ON_CONFLICT_NOTHING_RE.search(stmt)
+    table, aligned = _incoming(engine, stmt[: conflict.start()] if conflict else stmt)
+    if conflict:
+        _check_conflict_target(engine, table, conflict.group("target"))
         aligned = _drop_conflicts(engine, table, aligned).localCheckpoint(eager=True)
     _check_constraints(engine, table, aligned)
     if returning is not None:
@@ -664,19 +620,12 @@ def upsert_values(engine: "Engine", sql: str) -> int | None:
     m = _ON_CONFLICT_UPDATE_RE.search(sql)
     if m is None:
         return None
-    head = sql[: m.start()]
-    im = _INSERT_VALUES_RE.match(head.strip()) or _INSERT_SELECT_RE.match(head.strip())
-    if not im:
-        raise ValueError(f"cannot parse INSERT before ON CONFLICT: {sql[:80]}")
-    table, cols_spec, body = im.groups()
+    table, aligned = _incoming(engine, sql[: m.start()])
     meta = engine.catalog.tables[table]
     pk = meta.pk_cols
     if not pk:
         raise ValueError(f"ON CONFLICT DO UPDATE requires a primary key on {table}")
     _check_conflict_target(engine, table, m.group("target"))
-
-    src = engine.spark.sql(f"SELECT * FROM ({translate(body)})")
-    aligned = _aligned(engine, table, cols_spec, src)
     if aligned.groupBy(*pk).count().filter(F.col("count") > 1).limit(1).count():
         raise ValueError(
             "ON CONFLICT DO UPDATE can not update the same row twice: "
@@ -1022,7 +971,7 @@ def merge_into(engine: "Engine", sql: str, returning: str | None = None):
     tcols = [c["name"] for c in meta.columns]
 
     if src_subq is not None:
-        src_raw = engine.spark.sql(translate(f"SELECT * FROM {src_subq}"))
+        src_raw = engine.query_df(strip_outer_parens(src_subq))
         u_names = {ua} if ua else set()
     else:
         src_raw = _resolve_relation(engine, src_name)

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from .catalog import Catalog
 from .dialect import translate
-from .dml import delete_rows, insert_select, insert_values, update_rows
+from .dml import delete_rows, insert_rows, update_rows
 from .sqltext import close_of, find_top, literal_mask, split_top, strip_outer_parens
 
 
@@ -190,9 +190,9 @@ class Engine:
 
     def __init__(self, spark: SparkSession, warehouse_dir: str):
         self.spark = spark
-        self.catalog = Catalog(spark, warehouse_dir)
         self._pragmas: dict[str, str] = {}
         self._prepared: dict[str, str] = {}
+        self.catalog = Catalog(spark, warehouse_dir, self.query_df)
 
     def refresh(self) -> None:
         """Read-replica catch-up: re-read warehouse sidecars committed by
@@ -364,14 +364,13 @@ class Engine:
             rewrite_from_first,
             rewrite_map_subscripts,
             rewrite_read_files,
+            rewrite_series_tvf,
             route_asof_join,
             route_pivot_statement,
             route_star_replace,
             route_unpivot_statement,
             route_with_recursive,
         )
-
-        from .sql_routing import rewrite_series_tvf
 
         stripped = rewrite_read_files(self.spark, sql.strip().rstrip(";"))
         stripped = rewrite_series_tvf(stripped)
@@ -1006,7 +1005,7 @@ class Engine:
             re.IGNORECASE | re.DOTALL,
         )
         if m:
-            self.catalog.create_view(m.group(1), translate(m.group(2)))
+            self.catalog.create_view(m.group(1), m.group(2))
             return ExecuteOutcome(0)
 
         m = re.match(r"^CREATE\s+SEQUENCE\s+(\w+)(?:\s+START\s+(\d+))?$", stripped, re.IGNORECASE)
@@ -1089,17 +1088,7 @@ class Engine:
                         "RETURNING is not supported with ON CONFLICT DO UPDATE"
                     )
                 return ExecuteOutcome(n_up)
-            if re.search(r"\bVALUES\b", stripped, re.IGNORECASE):
-                # VALUES rows: one value per textual occurrence (each row
-                # literal calls nextval itself) — driver-side substitution
-                res = insert_values(
-                    self, self._substitute_sequences(stripped), returning=returning
-                )
-            else:
-                # SELECT form: nextval must increment PER ROW — handled by
-                # insert_select via a reserved contiguous block
-                res = insert_select(self, stripped, returning=returning)
-            return _outcome(res)
+            return _outcome(insert_rows(self, stripped, returning=returning))
 
         if upper.startswith("UPDATE"):
             from .dml import update_from
@@ -1432,13 +1421,17 @@ class Engine:
             return self.spark.createDataFrame(
                 rows, "column_name string, column_type string, `null` string, key string"
             )
+        # DESCRIBE <view> describes the view's stored query
+        query = self.catalog.views.get(m.group(1)) if m else None
         m = re.match(r"^(?:DESCRIBE|DESC)\s+(SELECT\s+.+|WITH\s+.+|\(.+\))$",
                      stripped, re.IGNORECASE | re.DOTALL)
         if m:
+            query = strip_outer_parens(m.group(1))
+        if query is not None:
             # DESCRIBE <query>: analysis only, nothing executes
             from .serializer import duckdb_type_name
 
-            df = self.query_df(strip_outer_parens(m.group(1)))
+            df = self.query_df(query)
             rows = [
                 (f.name, duckdb_type_name(f.dataType), "YES" if f.nullable else "NO", "")
                 for f in df.schema.fields

@@ -7,8 +7,9 @@ recompiles all of them, tens of milliseconds per ``translate`` call. This
 test fails as soon as that cliff comes back. It counts calls to
 ``re._compiler.compile`` on the calling thread while an engine that has
 already run the same statement shapes once runs them again with fresh
-parameters: interactive reads, DML on a PRIMARY KEY table, two TPC-H
-oracle strings and schema-qualified names.
+parameters: interactive reads, DML on a PRIMARY KEY table (an INSERT ...
+SELECT among it), a read of a view over that table after the writes, two
+TPC-H oracle strings and schema-qualified names.
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ import pytest
 TABLES = ["region", "nation", "customer", "part", "orders", "lineitem"]
 LIVE = "orders_live"
 LIVE_COLS = "o_orderkey, o_custkey, o_totalprice, o_orderpriority"
+LIVE_VIEW = "orders_live_view"
 
 
 def _reads(k: int) -> list[str]:
@@ -76,6 +78,16 @@ def _writes(k: int) -> list[str]:
         f"o_orderpriority = '{k % 5 + 1}-URGENT' WHERE o_orderkey = {2 * k}",
         f"INSERT INTO {LIVE} VALUES ({30_000 + k}, {k}, 1.5, '2-HIGH') "
         "RETURNING [o_orderkey, o_custkey] AS l, o_orderpriority",
+        f"INSERT INTO {LIVE} SELECT o_orderkey + {100_000 + 1000 * k}, o_custkey, "
+        "o_totalprice, o_orderpriority FROM orders WHERE o_orderkey < 10",
+    ]
+
+
+def _view_reads(k: int) -> list[str]:
+    # the view is rebuilt after each write to its table
+    return [
+        f"SELECT count(*) AS n, max(o_totalprice) AS top FROM {LIVE_VIEW} "
+        f"WHERE o_custkey > {k}",
     ]
 
 
@@ -95,7 +107,7 @@ def _oracles() -> list[str]:
 
 
 def _statements(k: int) -> list[str]:
-    return _reads(k) + _writes(k) + _schema_reads(k) + _oracles()
+    return _reads(k) + _writes(k) + _view_reads(k) + _schema_reads(k) + _oracles()
 
 
 @pytest.fixture(scope="module")
@@ -110,6 +122,7 @@ def engine(spark, sf_dir):
         "o_totalprice DOUBLE, o_orderpriority VARCHAR)"
     )
     eng.execute(f"INSERT INTO {LIVE} SELECT {LIVE_COLS} FROM orders WHERE o_orderkey < 200")
+    eng.execute(f"CREATE VIEW {LIVE_VIEW} AS SELECT o_custkey, o_totalprice FROM {LIVE}")
     eng.execute("CREATE MACRO first_of(l, d) AS coalesce(l[1], d)")
     for sch in ("s1", "s2"):
         eng.execute(f"CREATE SCHEMA {sch}")
