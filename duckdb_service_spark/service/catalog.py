@@ -24,6 +24,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+_WORD_RE = re.compile(r"\w+")
+
 _DUCK_TO_SPARK = {
     "BOOLEAN": T.BooleanType(),
     "BOOL": T.BooleanType(),
@@ -155,6 +157,7 @@ class Catalog:
         self.indexes: dict[str, dict] = {}  # name -> {table, columns, unique}
         self.types: dict[str, list[str]] = {}  # ENUM name -> allowed values
         self.schemas: set[str] = set()  # user schemas (tables keyed schema__name)
+        self._frames: dict[str, DataFrame] = {}  # table -> its registered scan
         self._load_existing()
 
     # -- persistence -------------------------------------------------------
@@ -211,22 +214,75 @@ class Catalog:
                 self.tables[meta.name] = meta
         self._register(*[m for m in self.tables.values() if os.path.exists(m.path)])
 
-    def _register(self, *metas: TableMeta) -> None:
+    def _register(self, *metas: TableMeta, every_view: bool = False) -> None:
+        """Scan each table once and make that frame the one ``read``
+        returns and its temp view holds. A table within one scan split is
+        cached here, built before this returns: under AQE a cache not yet
+        built runs as a job of its own inside the first read. Every write
+        ends here, so the cache lives exactly as long as the file listing
+        it was read from. Then the views that name these tables are
+        rebuilt (every view with ``every_view``)."""
         for meta in metas:
-            self.read(meta.name).createOrReplaceTempView(meta.name)
-        self._register_views()
+            self._uncache(meta.name)
+            frame, single_split = self._scan(meta)
+            if single_split:
+                # Spark's cache is shared by every session in the JVM and
+                # matched by plan (path and schema), so another engine's
+                # entry for this table, or our own from before the write,
+                # would answer instead of the files: drop it first
+                frame.unpersist()
+                # one job fills the cache; a DataFrame count() would run
+                # the fill and the count as two
+                frame.cache()._jdf.queryExecution().toRdd().count()
+            self._frames[meta.name] = frame
+            frame.createOrReplaceTempView(meta.name)
+        self._register_views(None if every_view else {m.name for m in metas})
 
-    def _register_views(self) -> None:
-        """Register every view from its stored DuckDB text, in creation
-        order. A temp view holds its plan, file listing included, so each
-        table write rebuilds the views to see the new files. A body that no
-        longer binds leaves its view unregistered: reading the view raises,
-        the write that broke it does not."""
+    def _uncache(self, name: str) -> None:
+        """Forget a table's registered frame and free its cached blocks."""
+        frame = self._frames.pop(name, None)
+        if frame is not None and frame.is_cached:
+            frame.unpersist()
+
+    def _release(self, name: str) -> None:
+        """Drop a table's temp view and its cached frame."""
+        self._uncache(name)
+        self.spark.catalog.dropTempView(name)
+
+    def _register_views(self, changed: set[str] | None = None) -> None:
+        """Register, in creation order, every view whose body names a table
+        or view in ``changed`` (every view when None), and every view that
+        names one rebuilt in this pass. A temp view holds its plan, file
+        listing included, so a table write rebuilds the views over it to
+        see the new files. Names are matched loosely, bare or
+        schema-qualified, after macro expansion and outside string
+        literals: a false match costs one rebuild, a missed one a stale
+        view. A body that no longer binds leaves its view unregistered:
+        reading the view raises, the write that broke it does not."""
+        stale = None
+        if changed is not None:
+            stale = {n.lower() for n in changed} | {n.lower().rsplit("__", 1)[-1] for n in changed}
         for name, body in self.views.items():
+            if stale is not None:
+                if stale.isdisjoint(self._names_in(body)):
+                    continue
+                stale.add(name.lower())
             try:
                 self._query_df(body).createOrReplaceTempView(name)
             except Exception:  # noqa: BLE001 — see the docstring
                 self.spark.catalog.dropTempView(name)
+
+    def _names_in(self, body: str) -> set[str]:
+        """Lower-cased words of a view body, macros expanded, outside
+        string literals."""
+        from .macros import expand_macros
+        from .sqltext import STRING_RE
+
+        try:
+            body = expand_macros(body, self.macros)
+        except Exception:  # noqa: BLE001 — match the unexpanded text
+            pass
+        return {w.lower() for w in _WORD_RE.findall(STRING_RE.sub(" ", body))}
 
     def refresh(self) -> None:
         """Re-read the warehouse sidecars written by ANOTHER engine
@@ -239,6 +295,8 @@ class Catalog:
         read, so each table path is invalidated first; fresh relations
         then see files committed by the writer after this replica
         opened."""
+        for name in list(self._frames):
+            self._uncache(name)
         for meta in self.tables.values():
             try:
                 self.spark.catalog.refreshByPath(meta.path)
@@ -297,8 +355,9 @@ class Catalog:
     def drop_table(self, name: str, if_exists: bool = False) -> None:
         if name not in self.tables:
             if if_exists or name in self.views:
-                self.views.pop(name, None)
                 self.spark.catalog.dropTempView(name)
+                if self.views.pop(name, None) is not None:
+                    self._register_views({name})
                 return
             raise ValueError(f"table {name} does not exist")
         meta = self.tables.pop(name)
@@ -313,7 +372,7 @@ class Catalog:
             os.remove(self._meta_path(name))
         except FileNotFoundError:
             pass
-        self.spark.catalog.dropTempView(name)
+        self._release(name)
 
     def alter_table(self, name: str, action: str, **kw) -> None:
         """Schema evolution. ADD/RENAME are metadata-only: parquet is
@@ -346,6 +405,8 @@ class Catalog:
                     F.expr(translate(kw["default"])).cast(parse_type(kw["type"])),
                 )
                 self.overwrite(name, df)
+            else:
+                self._register(meta)
         elif action == "drop":
             if all(c["name"] != kw["column"] for c in meta.columns):
                 raise ValueError(f"column {kw['column']} does not exist")
@@ -367,12 +428,12 @@ class Catalog:
         else:
             raise ValueError(f"unsupported ALTER TABLE action: {action}")
         self._save_meta(meta)
-        self._register(meta)
 
     def create_view(self, name: str, body: str) -> None:
-        self._query_df(body)  # a body that does not bind fails the CREATE
+        # a body that does not bind fails the CREATE
+        self._query_df(body).createOrReplaceTempView(name)
         self.views[name] = body
-        self._register_views()
+        self._register_views({name})
 
     def _seq_path(self) -> str:
         return os.path.join(self.dir, "_sequences.json")
@@ -608,7 +669,14 @@ class Catalog:
             )
 
     def read(self, name: str) -> DataFrame:
-        meta = self.tables[name]
+        """The table's registered frame: the cached single-split scan, or
+        the scan a larger or partitioned table plans."""
+        frame = self._frames.get(name)
+        return frame if frame is not None else self._scan(self.tables[name])[0]
+
+    def _scan(self, meta: TableMeta) -> tuple[DataFrame, bool]:
+        """(a fresh read of the table's files, whether it fits one scan
+        split)."""
         from pyspark.sql import functions as F
 
         if not meta.partition_cols:
@@ -621,15 +689,16 @@ class Catalog:
             # needs no exchange. Larger tables keep the split-parallel scan.
             conf = self.spark._jsparkSession.sessionState().conf()  # noqa: SLF001
             if self._data_bytes(meta.path) <= conf.filesMaxPartitionBytes():
-                df = df.coalesce(1)
-            return df
+                return df.coalesce(1), True
+            return df, False
         schema = meta.spark_schema()
         if not self._has_data_files(meta.path):
-            return self.spark.createDataFrame([], schema)
+            return self.spark.createDataFrame([], schema), False
         # hive-partition discovery infers partition-column types from the
         # directory names; re-select in declared order with declared types
         df = self.spark.read.parquet(meta.path)
-        return df.select(*[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields])
+        cols = [F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
+        return df.select(*cols), False
 
     def _apply_generated(self, meta: "TableMeta", df: DataFrame) -> DataFrame:
         """Recompute GENERATED ALWAYS AS columns — the ONE chokepoint every
@@ -879,7 +948,7 @@ class Catalog:
             except FileNotFoundError:
                 pass
             if name not in state["tables"]:
-                self.spark.catalog.dropTempView(name)
+                self._release(name)
 
         data = os.path.join(snap, "data")
         for name, meta in state["tables"].items():
@@ -903,7 +972,7 @@ class Catalog:
         self.comments = state["comments"]
         self.types = state.get("types", {})
         self.schemas = state.get("schemas", set())
-        self._register(*self.tables.values())
+        self._register(*self.tables.values(), every_view=True)
         self._txn_state = None
         shutil.rmtree(snap, ignore_errors=True)
 

@@ -206,25 +206,35 @@ _VALUES_HEAD_RE = re.compile(r"^VALUES\b\s*", re.IGNORECASE)
 _DEFAULT_VALUES_RE = re.compile(r"^DEFAULT\s+VALUES$", re.IGNORECASE)
 
 
-def _aligned(engine: "Engine", table: str, cols_spec: str | None, src: DataFrame) -> DataFrame:
+def _targets(meta, names: list[str] | None) -> list[str]:
+    """The table columns an INSERT writes, in the order its values come:
+    the listed ``names`` (matched case-insensitively, as DuckDB binds
+    them), or every insertable (non-generated) column."""
+    if names is None:
+        return [c["name"] for c in meta.columns if not c.get("generated")]
+    by_lower = {c["name"].lower(): c["name"] for c in meta.columns}
+    out: list[str] = []
+    for n in names:
+        col = by_lower.get(n.lower())
+        if col is None:
+            raise ValueError(f'Table "{meta.name}" does not have a column with name "{n}"')
+        if col in out:
+            raise ValueError(f'Duplicate column name "{n}" in INSERT')
+        out.append(col)
+    return out
+
+
+def _aligned(engine: "Engine", table: str, src_cols: list[str], src: DataFrame) -> DataFrame:
+    """``src`` (one value per ``src_cols`` entry) widened to the table's
+    columns, the unlisted ones filled with their defaults."""
     meta = engine.catalog.tables[table]
     schema = meta.spark_schema()
     target_cols = [c["name"] for c in meta.columns]
     generated = {c["name"] for c in meta.columns if c.get("generated")}
-    insertable = [n for n in target_cols if n not in generated]
-    src_cols = (
-        [c.strip() for c in cols_spec.split(",")] if cols_spec else insertable[: len(src.columns)]
-    )
     bad_gen = [c for c in src_cols if c in generated]
     if bad_gen:
         raise ValueError(f"cannot insert into generated column(s): {', '.join(bad_gen)}")
-    if len(src.columns) != len(src_cols):
-        raise ValueError(
-            f"table {table} has {len(insertable)} insertable columns but "
-            f"{len(src.columns)} values were supplied"
-        )
-    renamed = src.toDF(*src_cols)
-    out = renamed
+    out = src.toDF(*src_cols)
     for name in target_cols:
         field = schema[name]
         if name in src_cols:
@@ -380,13 +390,7 @@ def _incoming(engine: "Engine", head: str) -> tuple[str, DataFrame]:
         raise ValueError(f"cannot parse INSERT: {head.strip()[:80]}")
     table, cols_spec, by_name, body = m.groups()
     meta = engine.catalog.tables[table]
-    # positional VALUES map to insertable (non-generated) columns only —
-    # the same list _aligned uses
-    targets = (
-        [c.strip() for c in cols_spec.split(",")]
-        if cols_spec
-        else [c["name"] for c in meta.columns if not c.get("generated")]
-    )
+    targets = _targets(meta, [c.strip() for c in cols_spec.split(",")] if cols_spec else None)
     body = body.strip()
     if _DEFAULT_VALUES_RE.match(body):
         body = "VALUES (" + ", ".join("DEFAULT" for _ in targets) + ")"
@@ -402,8 +406,16 @@ def _incoming(engine: "Engine", head: str) -> tuple[str, DataFrame]:
     if by_name:
         # DuckDB `INSERT INTO t BY NAME <query>`: the source's output names
         # (not positions) pick the target columns; the rest fill defaults
-        cols_spec = ", ".join(src.columns)
-    return table, _aligned(engine, table, cols_spec, src)
+        targets = _targets(meta, src.columns)
+    if len(src.columns) != len(targets):
+        raise ValueError(
+            f"Column name/value mismatch for insert on {table}: expected "
+            f"{len(targets)} columns but {len(src.columns)} values were supplied"
+            if cols_spec
+            else f"table {table} has {len(targets)} columns but "
+            f"{len(src.columns)} values were supplied"
+        )
+    return table, _aligned(engine, table, targets, src)
 
 
 def insert_rows(engine: "Engine", sql: str, returning: str | None = None):

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from .catalog import Catalog
 from .dialect import translate
 from .dml import delete_rows, insert_rows, update_rows
+from .sql_routing import memoize_from_probes
 from .sqltext import close_of, find_top, literal_mask, split_top, strip_outer_parens
 
 
@@ -319,6 +320,7 @@ class Engine:
         r"\bLIMIT\s+(\d+(?:\.\d+)?)\s*(?:%|PERCENT)\s*$", re.IGNORECASE
     )
 
+    @memoize_from_probes
     def query_df(self, sql: str) -> DataFrame:
         sql = self._route_introspection(sql)
         sql = self._resolve_schemas(sql)

@@ -14,8 +14,10 @@ and None when the statement does not contain its construct.
 
 from __future__ import annotations
 
+import functools
 import re
 from collections.abc import Callable
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -763,9 +765,13 @@ def rewrite_columns_expr(
         raise UnsupportedDialect("COLUMNS() requires a FROM clause to resolve against")
     select_list, rest = body[: fm.start()], body[fm.start() :]
     # schema of the FROM relation alone (clauses after it don't change it)
-    cm = find_top(body, _CLAUSE_KW_RE, fm.end())
-    from_clause = body[fm.start() : cm.start() if cm else None]
-    cols = spark.sql(translate(f"SELECT * {from_clause} LIMIT 0")).columns
+    schema = _from_schema(spark, body, translate)
+    if schema is None:
+        # the probe does not analyze: send it again for its error
+        cm = find_top(body, _CLAUSE_KW_RE, fm.end())
+        from_clause = body[fm.start() : cm.start() if cm else None]
+        schema = spark.sql(translate(f"SELECT * {from_clause} LIMIT 0")).dtypes
+    cols = [name for name, _ in schema]
 
     out_items: list[str] = []
     for item in split_top(select_list):
@@ -839,6 +845,28 @@ _UNPIVOT_RE = re.compile(
 _AGG_ITEM_RE = re.compile(r"^(?P<expr>.+?)(?:\s+AS\s+(?P<alias>\w+))?$", re.IGNORECASE | re.DOTALL)
 
 
+# FROM-relation schemas probed while one statement compiles, keyed by the
+# FROM clause; None outside a memoized call
+_FROM_PROBES: ContextVar[dict | None] = ContextVar("_FROM_PROBES", default=None)
+
+
+def memoize_from_probes(fn):
+    """Run ``fn`` with a fresh memo of ``_from_schema`` probes, so the
+    passes of one statement that ask for the same FROM relation send one
+    probe. The memo ends with the call: temp views change between
+    statements, and a nested call gets a memo of its own."""
+
+    @functools.wraps(fn)
+    def memoized(*args, **kwargs):
+        token = _FROM_PROBES.set({})
+        try:
+            return fn(*args, **kwargs)
+        finally:
+            _FROM_PROBES.reset(token)
+
+    return memoized
+
+
 def _from_schema(spark, stripped: str, translate: Translate):
     """(name, dtype) pairs of the statement's FROM relation, resolved by
     running ``SELECT * FROM ... LIMIT 0`` (the route_star_replace /
@@ -849,10 +877,16 @@ def _from_schema(spark, stripped: str, translate: Translate):
         return None
     cm = find_top(stripped, _CLAUSE_KW_RE, fm.end())
     from_clause = stripped[fm.start() : cm.start() if cm else None]
+    memo = _FROM_PROBES.get()
+    if memo is not None and from_clause in memo:
+        return memo[from_clause]
     try:
-        return spark.sql(translate(f"SELECT * {from_clause} LIMIT 0")).dtypes
+        got = spark.sql(translate(f"SELECT * {from_clause} LIMIT 0")).dtypes
     except Exception:
-        return None
+        got = None
+    if memo is not None:
+        memo[from_clause] = got
+    return got
 
 
 _IDENT_BRACKET_RE = re.compile(r"\b([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)?)\s*\[")

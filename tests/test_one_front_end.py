@@ -115,6 +115,53 @@ def test_on_conflict_target_checked_for_query_bodies(pair):
     _same(pair, "SELECT * FROM k")
 
 
+@pytest.mark.parametrize("stmt, error", [
+    ("INSERT INTO base (a, zzz) VALUES (1, 2)",
+     'Table "base" does not have a column with name "zzz"'),
+    ("INSERT INTO base VALUES (7)", "table base has 2 columns but 1 values were supplied"),
+    ("INSERT INTO base SELECT 7", "table base has 2 columns but 1 values were supplied"),
+    ("INSERT INTO base (a, a) VALUES (1, 2)", 'Duplicate column name "a" in INSERT'),
+])
+def test_insert_column_binding_errors(pair, stmt, error):
+    """A listed column the table lacks, a repeated one, and a positional
+    row narrower than the table are binder errors in DuckDB, not a
+    dropped or default-filled column."""
+    eng, con = pair
+    _both(pair, *BASE)
+    with pytest.raises(duckdb.BinderException, match=error):
+        con.execute(stmt)
+    with pytest.raises(ValueError, match=error):
+        eng.execute(stmt)
+    _same(pair, "SELECT * FROM base")
+
+
+@pytest.mark.parametrize("stmt", ["INSERT INTO base (b) VALUES ('x')",
+                                  "INSERT INTO base (B, A) VALUES ('y', 5)"])
+def test_insert_column_list_fills_the_rest(pair, stmt):
+    _both(pair, *BASE, stmt)
+    _same(pair, "SELECT * FROM base")
+
+
+def test_one_from_probe_per_statement(pair, monkeypatch):
+    """Passes that ask for the same FROM relation share one ``LIMIT 0``
+    probe within a statement."""
+    eng, _ = pair
+    _both(pair, "CREATE TABLE part (p_partkey INTEGER, p_size INTEGER)",
+          "INSERT INTO part VALUES (1, 5), (2, 7)")
+    sql = ("SELECT p_partkey, [p_size, p_size * 2, 7] AS sizes, "
+           "list_contains([1, 5, 10, 7], p_size) AS listed FROM part "
+           "WHERE p_partkey BETWEEN 1 AND 6 ORDER BY p_partkey")
+    sent: list[str] = []
+    session_sql = type(eng.spark).sql
+    monkeypatch.setattr(type(eng.spark), "sql",
+                        lambda self, q, *a, **k: sent.append(q) or session_sql(self, q, *a, **k))
+    eng.query_df(sql)
+    monkeypatch.undo()
+    assert len(sent) == 3, sent
+    assert len(set(sent)) == 3, sent
+    _same(pair, sql)
+
+
 # ---- views ----------------------------------------------------------------
 
 
