@@ -5792,14 +5792,20 @@ def _emit_mad(args: list[str], suffix: str = "") -> str:
     (measured: mad(1,3,7,20) = 3.0). Two nested medians over the collected
     group (no nested-aggregate form exists); result rides DOUBLE — the
     documented stats-family trade (DuckDB returns the input's decimal
-    type)."""
+    type). Each sorted array is bound once as a lambda variable
+    (``transform(array(e), __mad_a -> ...)``): Spark evaluates an outer
+    expression inside a lambda once per element, so naming the sorted
+    group inside ``transform`` re-sorted it for every element (measured:
+    a 6,000-row mad ran 200 s on a 4-core box)."""
     x = args[0]
     arr = f"array_sort(collect_list(CAST({x} AS DOUBLE)){suffix})"
-    n = f"size({arr})"
-    med = _median_of(arr, n)
-    devs = f"array_sort(transform({arr}, __v -> abs(__v - {med})))"
+    devs = "array_sort(transform(__mad_a, __v -> abs(__v - "
+    devs += f"{_median_of('__mad_a', 'size(__mad_a)')})))"
+    med_devs = f"element_at(transform(array({devs}), __mad_d -> "
+    med_devs += f"{_median_of('__mad_d', 'size(__mad_d)')}), 1)"
     return (
-        f"(CASE WHEN {n} > 0 THEN {_median_of(devs, n)} ELSE NULL END)"
+        f"element_at(transform(array({arr}), __mad_a -> CASE WHEN "
+        f"size(__mad_a) > 0 THEN {med_devs} ELSE NULL END), 1)"
     )
 
 

@@ -22,6 +22,14 @@ ROWS = [
 ]
 
 
+def _local(sdf):
+    """The rows held in the JVM: a frame built from a Python list reads
+    them back through Python workers on every query, which made the
+    Python round trip, not the expression, the cost of each of the
+    hundreds of queries below."""
+    return sdf.localCheckpoint()
+
+
 @pytest.fixture(scope="module")
 def engines(spark):
     con = duckdb.connect()
@@ -34,7 +42,7 @@ def engines(spark):
         ") v(i, s, d, n, dt)"
     )
     sdf = spark.createDataFrame(ROWS, "i int, s string, d double, n int, dt date")
-    sdf.createOrReplaceTempView("t")
+    _local(sdf).createOrReplaceTempView("t")
     return spark, con
 
 
@@ -181,7 +189,8 @@ def agg_engines(spark):
     )
     rows = [(1, "a", 10, 2), (2, "a", -5, None), (3, "b", 7, 0), (4, "b", 7, 5),
             (5, "c", None, 1), (6, "c", 0, -3), (7, "a", 3, 2)]
-    spark.createDataFrame(rows, "id int, g string, x int, y int").createOrReplaceTempView("ta")
+    ta = spark.createDataFrame(rows, "id int, g string, x int, y int")
+    _local(ta).createOrReplaceTempView("ta")
     return spark, con
 
 
@@ -284,14 +293,14 @@ def join_engines(spark):
         "CREATE TABLE b AS SELECT * FROM (VALUES (1,'x',100),(3,'z',300),"
         "(5,'x',500),(6,NULL,600)) w(id,k,w)"
     )
-    spark.createDataFrame(
+    _local(spark.createDataFrame(
         [(1, "x", 10), (2, "y", None), (3, "x", 5), (4, None, 7)],
         "id int,k string,v int",
-    ).createOrReplaceTempView("a")
-    spark.createDataFrame(
+    )).createOrReplaceTempView("a")
+    _local(spark.createDataFrame(
         [(1, "x", 100), (3, "z", 300), (5, "x", 500), (6, None, 600)],
         "id int,k string,w int",
-    ).createOrReplaceTempView("b")
+    )).createOrReplaceTempView("b")
     return spark, con
 
 

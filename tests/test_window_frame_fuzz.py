@@ -48,7 +48,10 @@ def engines(spark):
     con = duckdb.connect()
     con.execute("CREATE TABLE wf (g INT, k INT, x INT)")
     con.executemany("INSERT INTO wf VALUES (?,?,?)", ROWS)
-    spark.createDataFrame(ROWS, "g int, k int, x int").createOrReplaceTempView("wf")
+    # held in the JVM: a frame built from a Python list reads its rows
+    # back through Python workers on every one of the queries below
+    wf = spark.createDataFrame(ROWS, "g int, k int, x int").localCheckpoint()
+    wf.createOrReplaceTempView("wf")
     return spark, con
 
 
