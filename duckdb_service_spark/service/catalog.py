@@ -158,6 +158,7 @@ class Catalog:
         self.types: dict[str, list[str]] = {}  # ENUM name -> allowed values
         self.schemas: set[str] = set()  # user schemas (tables keyed schema__name)
         self._frames: dict[str, DataFrame] = {}  # table -> its registered scan
+        self._rows: dict[str, int] = {}  # cached table -> rows its fill counted
         self._load_existing()
 
     # -- persistence -------------------------------------------------------
@@ -231,9 +232,19 @@ class Catalog:
                 # entry for this table, or our own from before the write,
                 # would answer instead of the files: drop it first
                 frame.unpersist()
-                # one job fills the cache; a DataFrame count() would run
-                # the fill and the count as two
-                frame.cache()._jdf.queryExecution().toRdd().count()
+                frame.cache()
+                if self._data_bytes(meta.path):
+                    # one job fills the cache and counts its rows; a
+                    # DataFrame count() would run the fill and the count
+                    # as two
+                    self._rows[meta.name] = frame._jdf.queryExecution().toRdd().count()
+                else:
+                    # no data files: a cache of no partitions counts as
+                    # built once its RDD exists, so no job runs
+                    manager = self.spark._jsparkSession.sharedState().cacheManager()  # noqa: SLF001
+                    entry = manager.lookupCachedData(frame._jdf).get()
+                    entry.cachedRepresentation().cacheBuilder().cachedColumnBuffers()
+                    self._rows[meta.name] = 0
             self._frames[meta.name] = frame
             frame.createOrReplaceTempView(meta.name)
         self._register_views(None if every_view else {m.name for m in metas})
@@ -241,6 +252,7 @@ class Catalog:
     def _uncache(self, name: str) -> None:
         """Forget a table's registered frame and free its cached blocks."""
         frame = self._frames.pop(name, None)
+        self._rows.pop(name, None)
         if frame is not None and frame.is_cached:
             frame.unpersist()
 
@@ -323,7 +335,12 @@ class Catalog:
         partition_cols: list[str] | None = None,
         table_checks: list[str] | None = None,
         unique_sets: list | None = None,
+        rows: DataFrame | None = None,
     ) -> None:
+        """Create a table, empty or holding ``rows`` (CREATE TABLE AS). The
+        rows are written before the table is recorded, so a failed write
+        leaves no directory and no sidecar behind, and the table is
+        registered once."""
         if name in self.tables:
             if if_not_exists:
                 return
@@ -341,13 +358,20 @@ class Catalog:
             table_checks=table_checks or [],
             unique_sets=unique_sets or [],
         )
-        os.makedirs(meta.path, exist_ok=True)
-        if not partition_cols:
-            # materialize an empty parquet so reads of a fresh table work
-            # (partitioned tables read empty via the no-files path instead)
-            self.spark.createDataFrame([], meta.spark_schema()).write.mode("overwrite").parquet(
-                meta.path
-            )
+        # a directory left by an earlier engine is not this table's data
+        shutil.rmtree(meta.path, ignore_errors=True)
+        # without rows no data file is written: the table reads its empty
+        # directory with the declared schema, so CREATE TABLE runs no job
+        os.makedirs(meta.path)
+        if rows is not None:
+            w = self._apply_generated(meta, rows).write.mode("overwrite")
+            if partition_cols:
+                w = w.partitionBy(*partition_cols)
+            try:
+                w.parquet(meta.path)
+            except Exception:
+                shutil.rmtree(meta.path, ignore_errors=True)
+                raise
         self.tables[name] = meta
         self._save_meta(meta)
         self._register(meta)
@@ -674,26 +698,40 @@ class Catalog:
         frame = self._frames.get(name)
         return frame if frame is not None else self._scan(self.tables[name])[0]
 
+    def is_empty(self, name: str) -> bool:
+        """Whether the table is cached and its cache holds no rows."""
+        return self._rows.get(name) == 0
+
+    def row_count(self, name: str) -> int:
+        """Rows in a table: the count its cache fill took, or a count of
+        its scan when it is not cached."""
+        n = self._rows.get(name)
+        return n if n is not None else self.read(name).count()
+
     def _scan(self, meta: TableMeta) -> tuple[DataFrame, bool]:
         """(a fresh read of the table's files, whether it fits one scan
-        split)."""
+        split). A table without data files reads its empty directory with
+        the declared schema: an empty parquet relation, which starts no
+        Python worker."""
         from pyspark.sql import functions as F
 
+        schema = meta.spark_schema()
         if not meta.partition_cols:
-            df = self.spark.read.schema(meta.spark_schema()).parquet(meta.path)
+            df = self.spark.read.schema(schema).parquet(meta.path)
             # A table within one scan split already plans at most one scan
             # task (several small files get one task each only through the
             # per-file open cost), so reading it as one partition costs no
             # parallelism. It also tells the planner the rows are
             # SinglePartition, so a sort, aggregate or window over them
             # needs no exchange. Larger tables keep the split-parallel scan.
+            # A table with no files keeps its scan of no partitions.
             conf = self.spark._jsparkSession.sessionState().conf()  # noqa: SLF001
-            if self._data_bytes(meta.path) <= conf.filesMaxPartitionBytes():
-                return df.coalesce(1), True
+            size = self._data_bytes(meta.path)
+            if size <= conf.filesMaxPartitionBytes():
+                return (df.coalesce(1) if size else df), True
             return df, False
-        schema = meta.spark_schema()
         if not self._has_data_files(meta.path):
-            return self.spark.createDataFrame([], schema), False
+            return self.spark.read.schema(schema).parquet(meta.path), False
         # hive-partition discovery infers partition-column types from the
         # directory names; re-select in declared order with declared types
         df = self.spark.read.parquet(meta.path)
@@ -796,11 +834,13 @@ class Catalog:
             name = d["name"]
             if name in self.tables:
                 self.drop_table(name)
-            self.create_table(name, d["columns"], partition_cols=d.get("partition_cols"))
-            df = self.spark.read.schema(self.tables[name].spark_schema()).parquet(
-                os.path.join(source_dir, name)
+            schema = TableMeta(name, d["columns"], "").spark_schema()
+            self.create_table(
+                name,
+                d["columns"],
+                partition_cols=d.get("partition_cols"),
+                rows=self.spark.read.schema(schema).parquet(os.path.join(source_dir, name)),
             )
-            self.overwrite(name, df)
             n += 1
         return n
 

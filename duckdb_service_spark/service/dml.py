@@ -33,6 +33,7 @@ class ConstraintViolation(Exception):
 
 
 _RETURNING_RE = re.compile(r"\bRETURNING\b", re.IGNORECASE)
+_WORD_RE = re.compile(r"\w+")
 
 
 def split_returning(sql: str) -> tuple[str, str | None]:
@@ -62,16 +63,24 @@ def _unique_col_sets(meta) -> list[list[str]]:
     return sets
 
 
-def _check_checks(engine: "Engine", table: str, df: DataFrame) -> None:
+def _checks(meta) -> list[tuple[str | None, str]]:
+    """(column or None for a table-level CHECK, expression) of every CHECK
+    constraint, in declaration order."""
+    checks = [(c["name"], c["check"]) for c in meta.columns if c.get("check")]
+    return checks + [(None, x) for x in getattr(meta, "table_checks", [])]
+
+
+def _check_failed(table: str, cname: str | None, expr: str) -> ConstraintViolation:
+    where = f"{table}.{cname}" if cname else table
+    return ConstraintViolation(f"CHECK constraint failed: {where} ({expr})")
+
+
+def _check_checks(table: str, df: DataFrame, checks: list) -> None:
     """CHECK constraints: a row violates when the expression is FALSE
     (NULL passes — SQL three-valued CHECK semantics, same as DuckDB)."""
-    meta = engine.catalog.tables[table]
-    checks = [(c["name"], c["check"]) for c in meta.columns if c.get("check")]
-    checks += [(None, x) for x in getattr(meta, "table_checks", [])]
     for cname, expr in checks:
         if df.filter(F.expr(translate(expr)) == F.lit(False)).limit(1).count():
-            where = f"{table}.{cname}" if cname else table
-            raise ConstraintViolation(f"CHECK constraint failed: {where} ({expr})")
+            raise _check_failed(table, cname, expr)
 
 
 def _check_fk_children(engine: "Engine", table: str, incoming: DataFrame) -> None:
@@ -111,9 +120,12 @@ def _check_fk_children(engine: "Engine", table: str, incoming: DataFrame) -> Non
             )
 
 
-def _check_fk_parents(engine: "Engine", table: str, new_state: DataFrame) -> None:
+def _check_fk_parents(
+    engine: "Engine", table: str, new_state: DataFrame, touched=lambda cols: True
+) -> None:
     """Parent-side FOREIGN KEY: after a DELETE/UPDATE of ``table``, every
-    child row referencing it must still resolve against the new state."""
+    child row referencing it must still resolve against the new state
+    (only references to a column ``touched`` accepts)."""
     for child_name, child_meta in engine.catalog.tables.items():
         for c in child_meta.columns:
             fk = c.get("fk")
@@ -121,7 +133,7 @@ def _check_fk_parents(engine: "Engine", table: str, new_state: DataFrame) -> Non
                 continue
             meta = engine.catalog.tables[table]
             ref_col = fk.get("column") or (meta.pk_cols[0] if meta.pk_cols else None)
-            if ref_col is None:
+            if ref_col is None or not touched([ref_col]):
                 continue
             parent = new_state.select(F.col(ref_col).alias("__pv"))
             bad = (
@@ -139,25 +151,6 @@ def _check_fk_parents(engine: "Engine", table: str, new_state: DataFrame) -> Non
                 )
 
 
-def _check_unique_insert(engine: "Engine", table: str, incoming: DataFrame) -> None:
-    meta = engine.catalog.tables[table]
-    for cols in _unique_col_sets(meta):
-        # NULLs are distinct for UNIQUE (DuckDB/SQL): only fully-non-null
-        # tuples participate
-        nn = incoming
-        for c in cols:
-            nn = nn.filter(F.col(c).isNotNull())
-        if nn.dropDuplicates(cols).count() != nn.count():
-            raise ConstraintViolation(
-                f"UNIQUE constraint failed in inserted rows: {table} ({', '.join(cols)})"
-            )
-        existing = engine.catalog.read(table).select(*cols)
-        if nn.select(*cols).join(existing, cols, "left_semi").limit(1).count():
-            raise ConstraintViolation(
-                f"UNIQUE constraint failed: {table} ({', '.join(cols)})"
-            )
-
-
 def _has_extra_constraints(meta) -> bool:
     return bool(
         getattr(meta, "table_checks", [])
@@ -166,36 +159,80 @@ def _has_extra_constraints(meta) -> bool:
     )
 
 
-def _check_constraints(engine: "Engine", table: str, incoming: DataFrame) -> None:
+def _within_one_split(engine: "Engine", df: DataFrame) -> bool:
+    """Whether the optimizer's size estimate of ``df`` is within one scan
+    split (``spark.sql.files.maxPartitionBytes``)."""
+    jss = engine.spark._jsparkSession  # noqa: SLF001
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return size <= jss.sessionState().conf().filesMaxPartitionBytes()
+
+
+def _check_constraints(engine: "Engine", table: str, incoming: DataFrame) -> int:
+    """Check the rows an INSERT adds against the table's constraints and
+    return how many there are. One aggregate query over the rows, left
+    joined to the stored PRIMARY KEY and UNIQUE tuples, counts every kind
+    of violation; the first one raises, in this order: NOT NULL, enum,
+    CHECK, FOREIGN KEY (its own query against the parent), then each
+    UNIQUE set and the PRIMARY KEY, a duplicate within the rows before a
+    clash with a stored row."""
     meta = engine.catalog.tables[table]
-    for col in meta.not_null_cols:
-        n_null = incoming.filter(F.col(col).isNull()).limit(1).count()
-        if n_null:
-            raise ConstraintViolation(f"NOT NULL constraint failed: {table}.{col}")
-    for c in meta.columns:
-        vals = c.get("enum_values")
-        if vals:
-            col = F.col(c["name"])
-            bad = incoming.filter(col.isNotNull() & ~col.isin(vals)).limit(1).collect()
-            if bad:
-                raise ConstraintViolation(
-                    f"could not convert string {bad[0][c['name']]!r} to enum "
-                    f"{c.get('enum_type')} (allowed: {', '.join(vals)})"
-                )
-    _check_checks(engine, table, incoming)
-    _check_fk_children(engine, table, incoming)
-    _check_unique_insert(engine, table, incoming)
     pk = meta.pk_cols
-    if pk:
-        n_in = incoming.count()
-        if incoming.dropDuplicates(pk).count() != n_in:
-            raise ConstraintViolation(f"duplicate key in inserted rows for PRIMARY KEY ({', '.join(pk)})")
-        existing = engine.catalog.read(table).select(*pk)
-        clash = incoming.select(*pk).join(existing, pk, "left_semi").limit(1).count()
-        if clash:
+    enums = [c for c in meta.columns if c.get("enum_values")]
+    checks = _checks(meta)
+    keysets = _unique_col_sets(meta) + ([pk] if pk else [])
+    empty = engine.catalog.is_empty(table)
+    # Rows within one scan split are checked as one partition, and so is a
+    # table within one split (Catalog.read): the joins and the aggregate
+    # then need no exchange and the check runs as one job. A merge join
+    # keeps a broadcast of the stored keys from running as a job of its own.
+    one = _within_one_split(engine, incoming)
+    rows = incoming.coalesce(1) if one else incoming
+    for i, cols in enumerate([] if empty else keysets):
+        # stored key tuples are unique, so the join adds no rows; a NULL
+        # key matches nothing, as NULLs are distinct for UNIQUE
+        stored = engine.catalog.read(table).select(*cols, F.lit(True).alias(f"__hit{i}"))
+        rows = rows.join(stored.hint("merge") if one else stored, cols, "left")
+    aggs = [F.count(F.lit(1))]
+    aggs += [F.count_if(F.col(c).isNull()) for c in meta.not_null_cols]
+    for c in enums:
+        col = F.col(c["name"])
+        aggs.append(F.first(F.when(~col.isin(c["enum_values"]), col), ignorenulls=True))
+    aggs += [F.count_if(F.expr(translate(expr)) == F.lit(False)) for _, expr in checks]
+    for i, cols in enumerate(keysets):
+        # only fully non-NULL tuples take part; count(DISTINCT a, b) skips
+        # a tuple with a NULL in it
+        aggs.append(F.count_if(functools_reduce(lambda a, b: a & b,
+                                                [F.col(c).isNotNull() for c in cols])))
+        aggs.append(F.count_distinct(*[F.col(c) for c in cols]))
+        aggs.append(F.lit(0) if empty else F.count_if(F.col(f"__hit{i}").isNotNull()))
+    counts = iter(rows.agg(*aggs).first())
+    n = next(counts)
+    for col in meta.not_null_cols:
+        if next(counts):
+            raise ConstraintViolation(f"NOT NULL constraint failed: {table}.{col}")
+    for c in enums:
+        bad = next(counts)
+        if bad is not None:
             raise ConstraintViolation(
-                f"PRIMARY KEY constraint failed: {table} ({', '.join(pk)})"
+                f"could not convert string {bad!r} to enum "
+                f"{c.get('enum_type')} (allowed: {', '.join(c['enum_values'])})"
             )
+    for cname, expr in checks:
+        if next(counts):
+            raise _check_failed(table, cname, expr)
+    _check_fk_children(engine, table, incoming)
+    for cols in keysets:
+        n_keyed, n_distinct, n_hit = next(counts), next(counts), next(counts)
+        names = ", ".join(cols)
+        if n_distinct != n_keyed:
+            raise ConstraintViolation(
+                f"duplicate key in inserted rows for PRIMARY KEY ({names})" if cols is pk
+                else f"UNIQUE constraint failed in inserted rows: {table} ({names})"
+            )
+        if n_hit:
+            kind = "PRIMARY KEY" if cols is pk else "UNIQUE"
+            raise ConstraintViolation(f"{kind} constraint failed: {table} ({names})")
+    return n
 
 
 _INSERT_RE = re.compile(
@@ -226,22 +263,33 @@ def _targets(meta, names: list[str] | None) -> list[str]:
 
 def _aligned(engine: "Engine", table: str, src_cols: list[str], src: DataFrame) -> DataFrame:
     """``src`` (one value per ``src_cols`` entry) widened to the table's
-    columns, the unlisted ones filled with their defaults."""
+    columns, the unlisted ones filled with their defaults. Each value is
+    cast to its column's type under DuckDB's cast error contract: a value
+    that does not fit raises DuckDB's conversion error where Spark's cast
+    would wrap it or make it NULL."""
+    from .sql_routing import cast_contract
+
     meta = engine.catalog.tables[table]
     schema = meta.spark_schema()
-    target_cols = [c["name"] for c in meta.columns]
     generated = {c["name"] for c in meta.columns if c.get("generated")}
     bad_gen = [c for c in src_cols if c in generated]
     if bad_gen:
         raise ValueError(f"cannot insert into generated column(s): {', '.join(bad_gen)}")
-    out = src.toDF(*src_cols)
-    for name in target_cols:
-        field = schema[name]
-        if name in src_cols:
-            out = out.withColumn(name, F.col(name).cast(field.dataType))
-        else:
-            out = out.withColumn(name, _default_expr(meta, name).cast(field.dataType))
-    return out.select(*target_cols)
+    given = {name: (f"__v{i}", f.dataType) for i, (name, f) in enumerate(zip(src_cols, src.schema))}
+    out = []
+    for field in schema.fields:
+        if field.name not in given:
+            out.append(_default_expr(meta, field.name).cast(field.dataType).alias(field.name))
+            continue
+        ref, src_type = given[field.name]
+        guarded = None
+        if src_type != field.dataType:
+            guarded = cast_contract(
+                ref, src_type.simpleString(), duckdb_type_name(field.dataType)
+            )
+        value = F.expr(translate(guarded)) if guarded else F.col(ref)
+        out.append(value.cast(field.dataType).alias(field.name))
+    return src.toDF(*[ref for ref, _ in given.values()]).select(*out)
 
 
 def _default_expr(meta, name: str):
@@ -427,12 +475,11 @@ def insert_rows(engine: "Engine", sql: str, returning: str | None = None):
     if conflict:
         _check_conflict_target(engine, table, conflict.group("target"))
         aligned = _drop_conflicts(engine, table, aligned).localCheckpoint(eager=True)
-    _check_constraints(engine, table, aligned)
+    n = _check_constraints(engine, table, aligned)
     if returning is not None:
         # pin the inserted rows BEFORE the append: `INSERT INTO t SELECT
         # ... FROM t` would otherwise re-read the appended files
         aligned = aligned.localCheckpoint(eager=True)
-    n = aligned.count()
     engine.catalog.append(table, aligned)
     if returning is not None:
         return n, _apply_returning(aligned, returning)
@@ -514,40 +561,50 @@ def update_rows(engine: "Engine", sql: str, returning: str | None = None):
             return (n, _apply_returning(ret_df, returning)) if ret_df is not None else n
         member = _partition_membership(engine, table, parts)
         scoped = apply_set(df.filter(member))
-        if meta.pk_cols:
-            # PK uniqueness is global: check against untouched partitions too
-            _check_constraints_update(
-                engine, table, scoped.unionByName(df.filter(~F.coalesce(member, F.lit(False))))
-            )
-        else:
-            if _has_extra_constraints(meta):
-                _check_constraints_update(
-                    engine,
-                    table,
-                    scoped.unionByName(df.filter(~F.coalesce(member, F.lit(False)))),
-                )
-            else:
-                _check_constraints_update(engine, table, scoped)
+        checked = scoped
+        if meta.pk_cols or _has_extra_constraints(meta):
+            # key and foreign-key checks are global: check against the
+            # untouched partitions too
+            checked = scoped.unionByName(df.filter(~F.coalesce(member, F.lit(False))))
+        _check_constraints_update(engine, table, checked, set(assignments))
         engine.catalog.overwrite_partitions(table, scoped)
         return (n, _apply_returning(ret_df, returning)) if ret_df is not None else n
     out = apply_set(df)
-    _check_constraints_update(engine, table, out)
+    _check_constraints_update(engine, table, out, set(assignments))
     engine.catalog.overwrite(table, out)
     return (n, _apply_returning(ret_df, returning)) if ret_df is not None else n
 
 
-def _check_constraints_update(engine: "Engine", table: str, updated: DataFrame) -> None:
+def _check_constraints_update(
+    engine: "Engine", table: str, updated: DataFrame, assigned: set[str] | None = None
+) -> None:
+    """Check the table's state after an UPDATE-like write. With
+    ``assigned`` (the columns the statement sets) only the constraints
+    that name one of them are checked, as DuckDB does: the other columns
+    keep values that were checked when they were written."""
     meta = engine.catalog.tables[table]
+    if assigned is not None:
+        assigned = {c.lower() for c in assigned}
+
+    def touched(cols) -> bool:
+        return assigned is None or any(c.lower() in assigned for c in cols)
+
     for col in meta.not_null_cols:
-        if updated.filter(F.col(col).isNull()).limit(1).count():
+        if touched([col]) and updated.filter(F.col(col).isNull()).limit(1).count():
             raise ConstraintViolation(f"NOT NULL constraint failed: {table}.{col}")
     pk = meta.pk_cols
-    if pk and updated.groupBy(*pk).count().filter(F.col("count") > 1).limit(1).count():
+    if pk and touched(pk) and updated.groupBy(*pk).count().filter(F.col("count") > 1).limit(1).count():
         raise ConstraintViolation(f"PRIMARY KEY constraint failed: {table} ({', '.join(pk)})")
-    _check_checks(engine, table, updated)
-    _check_fk_children(engine, table, updated)
-    _check_fk_parents(engine, table, updated)
+    _check_checks(table, updated, [
+        (cname, expr) for cname, expr in _checks(meta)
+        if touched([cname or "", *_WORD_RE.findall(expr)])
+    ])
+    if touched(c["name"] for c in meta.columns if c.get("fk")):
+        _check_fk_children(engine, table, updated)
+    _check_fk_parents(engine, table, updated, touched)
     for cols in _unique_col_sets(meta):
+        if not touched(cols):
+            continue
         nn = updated
         for c in cols:
             nn = nn.filter(F.col(c).isNotNull())
@@ -684,9 +741,8 @@ def upsert_values(engine: "Engine", sql: str) -> int | None:
     to_insert = aligned.join(existing.select(*pk), pk, "left_anti").localCheckpoint(
         eager=True
     )
-    n_insert = to_insert.count()
-    _check_constraints(engine, table, to_insert)
-    _check_constraints_update(engine, table, new_existing)
+    n_insert = _check_constraints(engine, table, to_insert)
+    _check_constraints_update(engine, table, new_existing, set(assignments))
 
     if meta.partition_cols:
         parts = [
@@ -824,7 +880,7 @@ def update_from(engine: "Engine", sql: str) -> int | None:
     n = joined.filter(upd).count()
     tcols = [c["name"] for c in meta.columns]
     new_df = out.select(*tcols, "__tid").dropDuplicates(["__tid"]).select(*tcols)
-    _check_constraints_update(engine, table, new_df)
+    _check_constraints_update(engine, table, new_df, set(assignments))
     if meta.partition_cols:
         parts = [
             tuple(r)
@@ -1191,8 +1247,7 @@ def merge_into(engine: "Engine", sql: str, returning: str | None = None):
             for p in pieces[1:]:
                 to_insert = to_insert.unionByName(p)
             to_insert = to_insert.localCheckpoint(eager=True)
-            n_ins = to_insert.count()
-            _check_constraints(engine, table, to_insert)
+            n_ins = _check_constraints(engine, table, to_insert)
             if returning is not None and n_ins:
                 ret_parts.append(
                     to_insert.withColumn("merge_action", F.lit("INSERT"))
@@ -1229,8 +1284,10 @@ def merge_into(engine: "Engine", sql: str, returning: str | None = None):
     n = n_upd + n_del + n_ins
     if returning is not None:
         if not ret_parts:
-            schema = meta.spark_schema().add("merge_action", "string")
-            ret_parts.append(engine.spark.createDataFrame([], schema))
+            ret_parts.append(
+                engine.catalog.read(table).limit(0)
+                .withColumn("merge_action", F.lit(None).cast("string"))
+            )
         affected = ret_parts[0]
         for p in ret_parts[1:]:
             affected = affected.unionByName(p)

@@ -892,7 +892,7 @@ class Engine:
         )
         if m:
             # CTAS: infer column defs from the query's Spark schema
-            # (serializer's reverse type map), create, then append
+            # (serializer's reverse type map), then create with the rows
             from .serializer import duckdb_type_name
 
             if_not_exists, name, select_sql = bool(m.group(1)), m.group(2), m.group(3)
@@ -925,12 +925,12 @@ class Engine:
                 columns.append(
                     {"name": f.name, "type": tname, "not_null": False, "primary_key": False}
                 )
-            self.catalog.create_table(name, columns)
             try:
-                self.catalog.append(name, df)
+                self.catalog.create_table(name, columns, rows=df)
                 # single execution: rows_affected comes from the written
-                # files, so a nondeterministic source can't disagree
-                n = self.catalog.read(name).count()
+                # files (the cache fill's count), so a nondeterministic
+                # source can't disagree
+                n = self.catalog.row_count(name)
             except Exception:
                 self.catalog.drop_table(name, if_exists=True)
                 raise
@@ -1309,8 +1309,7 @@ class Engine:
             src = self.spark.read.parquet(path).select(
                 *[F.col(f.name).cast(f.dataType) for f in schema.fields]
             )
-        _check_constraints(self, table, src)
-        n = src.count()
+        n = _check_constraints(self, table, src)
         self.catalog.append(table, src)
         return n
 

@@ -1244,6 +1244,11 @@ def _src_class(inner: str, schema_classes: dict) -> "tuple[str, str] | tuple[Non
     s = inner.strip()
     for rx, cls in _SRC_LITERAL_RES:
         if rx.match(s):
+            if cls == "integer" and abs(int(s)) > _INT_MAX["integer"] and (
+                abs(int(s)) <= _INT_MAX["bigint"]
+            ):
+                # DuckDB types an integer literal past INT32 as BIGINT
+                return "bigint", "bigint"
             if cls == "decimal":
                 # exact bounds from the literal's shape (DuckDB types
                 # 1.999999 as DECIMAL(7,6)) so the decimal->decimal
@@ -1346,15 +1351,39 @@ def rewrite_cast_contract(
         return sql
     schema = _from_schema(spark, stripped, translate)
     schema_classes: dict[str, tuple[str, str]] = {}
-    if schema:
-        for n, t in schema:
-            base = t.split("(")[0]
-            cls = _TYPE_CLASS.get(base)
-            if base.startswith("timestamp"):
-                cls = "timestamp"
-            if cls:
-                schema_classes[n.lower()] = (cls, t)
-    return _rewrite_casts_in(stripped, schema_classes)
+    for n, t in schema or ():
+        cls = _spark_type_class(t)
+        if cls:
+            schema_classes[n.lower()] = (cls, t)
+    guards: list[str] = []
+    out = _rewrite_casts_in(stripped, schema_classes, guards=guards)
+    if guards:
+        # a VALUES row keeps its plain cast (Spark's inline tables take no
+        # raise_error), so its guarded casts are planned once outside the
+        # rows: the optimizer folds away the guard of every cell that
+        # converts, and only a failing cell leaves a raise_error to run
+        probe = spark.sql(translate("SELECT " + ", ".join(guards)))
+        if "raise_error" in probe._jdf.queryExecution().optimizedPlan().toString():
+            probe.collect()
+    return out
+
+
+def _spark_type_class(t: str) -> "str | None":
+    """The cast contract's type class of a Spark type string."""
+    base = t.split("(")[0]
+    return "timestamp" if base.startswith("timestamp") else _TYPE_CLASS.get(base)
+
+
+def cast_contract(name: str, src_type: str, tgt_text: str) -> "str | None":
+    """``CAST(name AS tgt_text)`` under DuckDB's cast error contract, for a
+    column ``name`` of Spark type ``src_type``, as DuckDB SQL text; None
+    when Spark's plain cast already behaves like DuckDB's."""
+    cls = _spark_type_class(src_type)
+    if cls is None:
+        return None
+    plain = f"CAST({name} AS {tgt_text})"
+    out = _rewrite_casts_in(plain, {name.lower(): (cls, src_type)})
+    return None if out == plain else out
 
 
 def _values_row_spans(text: str, mask: list[bool]) -> list[tuple[int, int]]:
@@ -1387,7 +1416,7 @@ def _values_row_spans(text: str, mask: list[bool]) -> list[tuple[int, int]]:
 
 
 def _rewrite_casts_in(text: str, schema_classes: dict,
-                      plain: bool = False) -> str:
+                      plain: bool = False, guards: "list[str] | None" = None) -> str:
     """Apply the cast error contract to every CAST/TRY_CAST span in
     ``text``, recursing into cast bodies so an inner failable cast keeps
     the contract even when its outer cast needs no guard (DuckDB raises
@@ -1401,8 +1430,9 @@ def _rewrite_casts_in(text: str, schema_classes: dict,
 
     Spans inside VALUES rows (or a ``plain`` recursion below one) keep
     the plain cast: Spark inline tables reject raise_error guards
-    outright, and the sources there are literals whose failures DuckDB
-    would surface at bind time anyway."""
+    outright. The sources there are literals whose failures DuckDB
+    surfaces at bind time; the guarded form of each such cast that can
+    raise is appended to ``guards`` for the caller to evaluate."""
     mask = literal_mask(text)
     nested = _nested_query_spans(text, mask)
     values_rows = [] if plain else _values_row_spans(text, mask)
@@ -1476,12 +1506,20 @@ def _rewrite_casts_in(text: str, schema_classes: dict,
         repl = None
         # decimal -> decimal is the one same-class pair that can raise
         # (tightening); every other same-class cast is the identity
-        if not in_values and src is not None and tgt is not None and (
+        if src is not None and tgt is not None and (
             src != tgt or src == "decimal"
         ):
-            repl = _cast_contract_repl(
-                form, new_inner, src, tgt, norm_tgt, src_text
-            )
+            if not in_values:
+                repl = _cast_contract_repl(
+                    form, new_inner, src, tgt, norm_tgt, src_text
+                )
+            elif guards is not None:
+                guarded = _cast_contract_repl(
+                    form, _rewrite_casts_in(inner, scope), src, tgt, norm_tgt,
+                    src_text,
+                )
+                if guarded is not None and "raise_error" in guarded:
+                    guards.append(guarded)
         if repl is None:
             if new_inner == inner and norm_tgt == tgt_text:
                 continue

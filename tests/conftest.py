@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import contextlib
+import itertools
 import os
 import sys
 
@@ -39,3 +41,41 @@ def duck(sf_dir):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     yield con
     con.close()
+
+
+_job_groups = itertools.count()
+
+
+@contextlib.contextmanager
+def job_group(spark):
+    """Run the block in a Spark job group of its own; the yielded function
+    returns how many jobs the group has run (call it after the block)."""
+    sc = spark.sparkContext
+    group = f"counted-{next(_job_groups)}"
+    sc.setJobGroup(group, group)
+
+    def jobs() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def run_counted(spark, eng, sql):
+    """(result, Spark jobs, executed plan text) of one statement run in a
+    job group of its own. A query goes through ``Engine.query_df`` and is
+    collected: the result is its rows. Any other statement goes through
+    ``Engine.execute``: the result is its rows_affected and the plan is
+    None."""
+    df = None
+    with job_group(spark) as jobs:
+        if eng.is_query(sql):
+            df = eng.query_df(sql)
+            out = [tuple(r) for r in df.collect()]
+        else:
+            out = eng.execute(sql).rows_affected
+    plan = None if df is None else df._jdf.queryExecution().executedPlan().toString()
+    return out, jobs(), plan

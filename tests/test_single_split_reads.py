@@ -10,12 +10,12 @@ split, keep the split-parallel read and their exchanges.
 
 from __future__ import annotations
 
-import itertools
 import re
 import tempfile
 
 import duckdb
 import pytest
+from conftest import run_counted
 
 TABLES = ["orders", "customer", "nation"]
 
@@ -32,7 +32,6 @@ SHORT_READS = [
     "ORDER BY o_totalprice DESC, o_orderkey) = 1 ORDER BY o_custkey",
 ]
 
-_groups = itertools.count()
 # a shuffle or range exchange; BroadcastExchange is the broadcast-join side
 _SHUFFLE_RE = re.compile(r"(?<!Broadcast)Exchange\b")
 
@@ -60,29 +59,13 @@ def _split_bytes(spark) -> int:
     return spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
 
 
-def _run(spark, eng, sql):
-    """(rows, Spark jobs, executed plan text) of one statement, planned and
-    collected inside its own job group."""
-    sc = spark.sparkContext
-    group = f"single-split-{next(_groups)}"
-    sc.setJobGroup(group, sql)
-    try:
-        df = eng.query_df(sql)
-        rows = [tuple(r) for r in df.collect()]
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    return rows, jobs, df._jdf.queryExecution().executedPlan().toString()
-
-
 def _shuffles(plan: str) -> list[str]:
     return [ln.strip() for ln in plan.splitlines() if _SHUFFLE_RE.search(ln)]
 
 
 @pytest.mark.parametrize("sql", SHORT_READS)
 def test_short_read_runs_one_job_without_exchanges(spark, eng, con, sql):
-    rows, jobs, plan = _run(spark, eng, sql)
+    rows, jobs, plan = run_counted(spark, eng, sql)
     assert rows == con.execute(sql).fetchall()
     assert jobs == 1, plan
     assert _shuffles(plan) == [], plan
@@ -97,7 +80,7 @@ def test_read_above_the_split_keeps_exchanges(spark, eng, con):
         eng.catalog.refresh()
         assert eng.catalog.read("orders").rdd.getNumPartitions() > 1
         for sql in SHORT_READS:
-            rows, _jobs, plan = _run(spark, eng, sql)
+            rows, _jobs, plan = run_counted(spark, eng, sql)
             assert rows == con.execute(sql).fetchall()
             assert _shuffles(plan), plan
     finally:
@@ -122,7 +105,7 @@ def test_table_growing_past_the_split_reads_split_parallel(spark, eng, con):
         con.execute(sql)
 
     insert(0, 100)
-    rows, jobs, plan = _run(spark, eng, group_by)
+    rows, jobs, plan = run_counted(spark, eng, group_by)
     assert rows == con.execute(group_by).fetchall()
     assert jobs == 1 and _shuffles(plan) == [], plan
 
@@ -131,7 +114,7 @@ def test_table_growing_past_the_split_reads_split_parallel(spark, eng, con):
         insert(lo, lo + 40_000)
         lo += 40_000
     assert eng.catalog.read("grow").rdd.getNumPartitions() > 1
-    rows, _jobs, plan = _run(spark, eng, group_by)
+    rows, _jobs, plan = run_counted(spark, eng, group_by)
     assert rows == con.execute(group_by).fetchall()
     assert _shuffles(plan), plan
 

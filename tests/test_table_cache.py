@@ -15,11 +15,13 @@ caches.
 from __future__ import annotations
 
 import ast
-import itertools
+import gc
 import pathlib
+import time
 
 import duckdb
 import pytest
+from conftest import run_counted
 
 SERVICE = pathlib.Path(__file__).resolve().parent.parent / "duckdb_service_spark" / "service"
 
@@ -27,28 +29,29 @@ KV = "CREATE TABLE kv (id INTEGER PRIMARY KEY, v VARCHAR, n INTEGER)"
 FILL = "INSERT INTO kv VALUES (1, 'a', 10), (2, 'b', 20), (3, 'c', 30)"
 READ = "SELECT * FROM kv ORDER BY id"
 
-_groups = itertools.count()
-
 
 def _live(spark) -> int:
-    """Cached RDDs the JVM holds."""
-    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-
-
-def _read(spark, eng, sql):
-    """(rows, Spark jobs, executed plan text) of one read in its own job
-    group."""
-    sc = spark.sparkContext
-    group = f"table-cache-{next(_groups)}"
-    sc.setJobGroup(group, sql)
-    try:
-        df = eng.query_df(sql)
-        rows = [tuple(r) for r in df.collect()]
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    return rows, jobs, df._jdf.queryExecution().executedPlan().toString()
+    """Cached RDDs the JVM holds. An RDD nothing references any more (an
+    earlier test's localCheckpoint frame, say) leaves this count at a JVM
+    garbage collection, at a time of its own: PySpark hands the releases of
+    dead Python frames to a background thread, so the JVM may learn only
+    mid-test that such an RDD is garbage. Collect garbage on both sides,
+    wait for the releases to reach the JVM, and count once the number
+    settles, so no such cleanup falls between two counts of one test."""
+    sc = spark.sparkContext._jsc.sc()
+    releases = getattr(spark.sparkContext._gateway._gateway_client, "finalizer_deque", ())
+    count = sc.getPersistentRDDs().size()
+    for round_ in range(20):
+        gc.collect()
+        while releases:
+            time.sleep(0.1)
+        time.sleep(1.2)  # the release in flight when the queue emptied
+        spark._jvm.System.gc()
+        time.sleep(0.5)
+        count, last = sc.getPersistentRDDs().size(), count
+        if count == last and round_:
+            break
+    return count
 
 
 @pytest.fixture
@@ -102,7 +105,7 @@ WRITES = {
 @pytest.mark.parametrize("kind", list(WRITES))
 def test_read_after_write_matches_duckdb_from_the_cache(spark, pair, tmp_path, kind):
     eng, con = pair
-    assert _read(spark, eng, READ)[0] == con.execute(READ).fetchall()
+    assert run_counted(spark, eng, READ)[0] == con.execute(READ).fetchall()
     if kind == "merge":
         _merge_source(eng, con)
     parquet = _parquet(con, str(tmp_path / "rows.parquet")) if kind == "copy_from" else ""
@@ -111,7 +114,7 @@ def test_read_after_write_matches_duckdb_from_the_cache(spark, pair, tmp_path, k
         eng.execute(s.format(parquet=parquet))
     for s in theirs or ours:
         con.execute(s.format(parquet=parquet))
-    rows, jobs, plan = _read(spark, eng, READ)
+    rows, jobs, plan = run_counted(spark, eng, READ)
     assert rows == con.execute(READ).fetchall()
     # the cache is built, so the read is one job; an empty one needs none
     assert jobs == (1 if rows else 0), plan
@@ -170,7 +173,7 @@ def test_table_above_the_split_is_not_cached(spark, pair):
         assert not eng.catalog.read("big").is_cached
         assert eng.catalog.read("big").rdd.getNumPartitions() > 1
         assert _live(spark) == before
-        _, _, plan = _read(spark, eng, "SELECT count(*) FROM big")
+        _, _, plan = run_counted(spark, eng, "SELECT count(*) FROM big")
         assert "InMemoryTableScan" not in plan, plan
     finally:
         spark.conf.set(key, old)
