@@ -771,37 +771,34 @@ class Catalog:
         shutil.rmtree(old, ignore_errors=True)
         self._register(meta)
 
-    def overwrite_partitions(self, name: str, df: DataFrame) -> None:
-        """Partition-scoped copy-on-write: `df` holds the new FULL content of
-        the partitions it covers; only those partition directories are
-        swapped — every other partition's files are never read or written.
-        (Dir-level rename stands in for the object-store commit protocol.)"""
+    def overwrite_partitions(self, name: str, df: DataFrame, parts: list[tuple]) -> None:
+        """Partition-scoped copy-on-write. Each partition in ``parts``
+        (partition values as Spark's string casts name them, None for NULL)
+        gets exactly the rows ``df`` holds for it, and its directory goes
+        when ``df`` holds none; a partition outside ``parts`` keeps its files
+        and gains ``df``'s rows for it. Every other partition's files are
+        never read or written. (Dir-level rename stands in for the
+        object-store commit protocol.)"""
         meta = self.tables[name]
         df = self._apply_generated(meta, df)
         assert meta.partition_cols, "overwrite_partitions needs a partitioned table"
         tmp = meta.path + ".ptmp"
         shutil.rmtree(tmp, ignore_errors=True)
         df.write.partitionBy(*meta.partition_cols).mode("overwrite").parquet(tmp)
-        for root, _dirs, files in os.walk(tmp):
-            if not any(f.endswith(".parquet") for f in files):
-                continue
-            rel = os.path.relpath(root, tmp)
-            dest = os.path.join(meta.path, rel)
-            shutil.rmtree(dest, ignore_errors=True)
-            os.makedirs(os.path.dirname(dest), exist_ok=True)
-            os.rename(root, dest)
-        shutil.rmtree(tmp, ignore_errors=True)
-        self._register(meta)
-
-    def drop_partition_dirs(self, name: str, values: list[tuple]) -> None:
-        """Remove the directories of fully-emptied partitions (a DELETE that
-        drains a partition must not leave its old files resurrectable)."""
-        meta = self.tables[name]
-        for tup in values:
-            rel = os.path.join(
-                *[f"{c}={v}" for c, v in zip(meta.partition_cols, tup)]
-            )
+        jvm = self.spark._jvm  # noqa: SLF001
+        utils = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        for values in parts:
+            rel = os.path.join(*[utils.getPartitionPathString(c, v)
+                                 for c, v in zip(meta.partition_cols, values)])
             shutil.rmtree(os.path.join(meta.path, rel), ignore_errors=True)
+        for root, _dirs, files in os.walk(tmp):
+            data = [f for f in files if f.endswith(".parquet")]
+            if data:
+                dest = os.path.join(meta.path, os.path.relpath(root, tmp))
+                os.makedirs(dest, exist_ok=True)
+                for f in data:
+                    os.rename(os.path.join(root, f), os.path.join(dest, f))
+        shutil.rmtree(tmp, ignore_errors=True)
         self._register(meta)
 
     def append(self, name: str, df: DataFrame) -> None:

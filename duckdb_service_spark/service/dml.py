@@ -1,26 +1,30 @@
-"""DML layer: INSERT append, UPDATE/DELETE copy-on-write, constraint
-enforcement (SURVEY §7.5).
+"""DML layer: every row-changing statement (INSERT, UPDATE, DELETE,
+TRUNCATE, MERGE) compiled to one shape and applied by one copy-on-write
+writer, with constraint enforcement (SURVEY §7.5).
 
 rows_affected semantics match db/db.go:57-62 (count of rows the statement
 changed). Constraint violations surface as raised errors → the HTTP layer's
 {"error": ...} envelope, the same behavior the reference shows for DuckDB
 errors (http/service.go:236-237).
 
-Scale: INSERT appends parquet files (no read of existing data except the PK
-anti-join); UPDATE/DELETE rewrite only because parquet is immutable — the
-rewrite is a full-scan copy-on-write, the documented cost (SURVEY §7.4 item
-1). PK checks are an aggregate + broadcast-able anti-join, not a collect.
+Scale: a statement that only adds rows appends parquet files (no read of
+existing data except the key checks); one that updates or deletes rewrites
+the table, or its touched partitions, because parquet is immutable — a
+full-scan copy-on-write, the documented cost (SURVEY §7.4 item 1). Key
+checks are an aggregate + broadcast-able join, not a collect.
 """
 
 from __future__ import annotations
 
 import re
-from typing import TYPE_CHECKING
+from dataclasses import dataclass, field
+from functools import reduce
+from typing import TYPE_CHECKING, Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dialect import _FROM_KW_RE, translate
+from .dialect import _FROM_KW_RE, _rewrite_code, translate
 from .serializer import duckdb_type_name
 from .sqltext import close_of, find_top, iter_top, split_top, strip_outer_parens
 
@@ -28,7 +32,7 @@ if TYPE_CHECKING:
     from .executor import Engine
 
 
-class ConstraintViolation(Exception):
+class ConstraintViolation(ValueError):
     pass
 
 
@@ -46,15 +50,6 @@ def split_returning(sql: str) -> tuple[str, str | None]:
     if m is None:
         return sql, None
     return sql[: m.start()].rstrip(), sql[m.end() :].strip() or "*"
-
-
-def _apply_returning(affected: DataFrame, returning: str) -> DataFrame:
-    """Evaluate the RETURNING select list against the affected-row relation
-    (which carries exactly the table's columns). Eagerly checkpointed by the
-    caller BEFORE the table write, so serializing the result after the
-    overwrite/append cannot re-read mutated files."""
-    items = [translate(item) for item in split_top(returning)]
-    return affected.selectExpr(*items)
 
 
 def _unique_col_sets(meta) -> list[list[str]]:
@@ -120,9 +115,7 @@ def _check_fk_children(engine: "Engine", table: str, incoming: DataFrame) -> Non
             )
 
 
-def _check_fk_parents(
-    engine: "Engine", table: str, new_state: DataFrame, touched=lambda cols: True
-) -> None:
+def _check_fk_parents(engine: "Engine", table: str, new_state: DataFrame, touched) -> None:
     """Parent-side FOREIGN KEY: after a DELETE/UPDATE of ``table``, every
     child row referencing it must still resolve against the new state
     (only references to a column ``touched`` accepts)."""
@@ -151,20 +144,27 @@ def _check_fk_parents(
                 )
 
 
-def _has_extra_constraints(meta) -> bool:
-    return bool(
-        getattr(meta, "table_checks", [])
-        or getattr(meta, "unique_sets", [])
-        or any(c.get("check") or c.get("unique") or c.get("fk") for c in meta.columns)
-    )
-
-
 def _within_one_split(engine: "Engine", df: DataFrame) -> bool:
     """Whether the optimizer's size estimate of ``df`` is within one scan
     split (``spark.sql.files.maxPartitionBytes``)."""
     jss = engine.spark._jsparkSession  # noqa: SLF001
     size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     return size <= jss.sessionState().conf().filesMaxPartitionBytes()
+
+
+def _join(engine: "Engine", left: DataFrame, right: DataFrame, on, how: str) -> DataFrame:
+    """``left.join(right, on, how)``. When both sides are within one scan
+    split, each is read as one partition and an equi-join is merge-joined:
+    it then needs no exchange and no broadcast job of its own."""
+    if not (_within_one_split(engine, left) and _within_one_split(engine, right)):
+        return left.join(right, on, how)
+    left, right = left.coalesce(1), right.coalesce(1)
+    if how != "left_anti":
+        return left.join(right.hint("merge"), on, how)
+    # the optimizer pushes an anti join below the left side's coalesce;
+    # a left join that keeps the unmatched rows stays above it
+    hit = right.withColumn("__hit", F.lit(True)).hint("merge")
+    return left.join(hit, on, "left").filter(F.col("__hit").isNull()).select(*left.columns)
 
 
 def _check_constraints(engine: "Engine", table: str, incoming: DataFrame) -> int:
@@ -201,8 +201,7 @@ def _check_constraints(engine: "Engine", table: str, incoming: DataFrame) -> int
     for i, cols in enumerate(keysets):
         # only fully non-NULL tuples take part; count(DISTINCT a, b) skips
         # a tuple with a NULL in it
-        aggs.append(F.count_if(functools_reduce(lambda a, b: a & b,
-                                                [F.col(c).isNotNull() for c in cols])))
+        aggs.append(F.count_if(_not_null(cols)))
         aggs.append(F.count_distinct(*[F.col(c) for c in cols]))
         aggs.append(F.lit(0) if empty else F.count_if(F.col(f"__hit{i}").isNotNull()))
     counts = iter(rows.agg(*aggs).first())
@@ -233,6 +232,45 @@ def _check_constraints(engine: "Engine", table: str, incoming: DataFrame) -> int
             kind = "PRIMARY KEY" if cols is pk else "UNIQUE"
             raise ConstraintViolation(f"{kind} constraint failed: {table} ({names})")
     return n
+
+
+def _not_null(cols: list[str]):
+    return reduce(lambda a, b: a & b, [F.col(c).isNotNull() for c in cols])
+
+
+def _check_constraints_update(
+    engine: "Engine", table: str, state: DataFrame, assigned: set[str], deleted: bool = False
+) -> None:
+    """Check the table's state after an update or a delete. Only the
+    constraints that name a column in ``assigned`` are checked, as DuckDB
+    does: the other columns keep values that were checked when they were
+    written. After a delete (``deleted``) every FOREIGN KEY that references
+    the table is checked against the surviving rows."""
+    meta = engine.catalog.tables[table]
+    assigned = {c.lower() for c in assigned}
+
+    def touched(cols) -> bool:
+        return any(c.lower() in assigned for c in cols)
+
+    for col in meta.not_null_cols:
+        if touched([col]) and state.filter(F.col(col).isNull()).limit(1).count():
+            raise ConstraintViolation(f"NOT NULL constraint failed: {table}.{col}")
+    _check_checks(table, state, [
+        (cname, expr) for cname, expr in _checks(meta)
+        if touched([cname or "", *_WORD_RE.findall(expr)])
+    ])
+    if touched(c["name"] for c in meta.columns if c.get("fk")):
+        _check_fk_children(engine, table, state)
+    _check_fk_parents(engine, table, state, lambda cols: deleted or touched(cols))
+    pk = meta.pk_cols
+    for cols in _unique_col_sets(meta) + ([pk] if pk else []):
+        if not touched(cols):
+            continue
+        # NULLs are distinct for UNIQUE
+        keyed = state.filter(_not_null(cols))
+        if keyed.groupBy(*cols).count().filter(F.col("count") > 1).limit(1).count():
+            kind = "PRIMARY KEY" if cols is pk else "UNIQUE"
+            raise ConstraintViolation(f"{kind} constraint failed: {table} ({', '.join(cols)})")
 
 
 _INSERT_RE = re.compile(
@@ -341,11 +379,6 @@ def _typed_values(values: str, targets: list[str], meta) -> str:
     return "VALUES " + ", ".join(out_rows)
 
 
-_ON_CONFLICT_NOTHING_RE = re.compile(
-    r"\s+ON\s+CONFLICT(?:\s*\((?P<target>[^)]*)\))?\s+DO\s+NOTHING\s*$", re.IGNORECASE
-)
-
-
 def _check_conflict_target(engine: "Engine", table: str, target: str | None) -> None:
     """The dedup key is always the table PK; a named conflict target that is
     anything else would be silently honored on the wrong columns — raise."""
@@ -363,18 +396,20 @@ def _check_conflict_target(engine: "Engine", table: str, target: str | None) -> 
 def _drop_conflicts(engine: "Engine", table: str, aligned: DataFrame) -> DataFrame:
     """ON CONFLICT DO NOTHING: keep the first row per PK within the batch,
     anti-join away rows whose PK already exists. Both steps hash on the PK —
-    no collect, broadcastable incoming batch."""
+    no collect; a batch within one scan split is read as one partition, so
+    neither needs an exchange."""
     from pyspark.sql.window import Window
 
     pk = engine.catalog.tables[table].pk_cols
     if not pk:
         return aligned
+    if _within_one_split(engine, aligned):
+        aligned = aligned.coalesce(1)
     w = Window.partitionBy(*pk).orderBy(F.monotonically_increasing_id())
     uniq = aligned.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop(
         "__rn"
     )
-    existing = engine.catalog.read(table).select(*pk)
-    return uniq.join(existing, pk, "left_anti")
+    return _join(engine, uniq, engine.catalog.read(table).select(*pk), pk, "left_anti")
 
 
 _NEXTVAL_RE = re.compile(r"\bnextval\s*\(\s*'(\w+)'\s*\)", re.IGNORECASE)
@@ -466,317 +501,127 @@ def _incoming(engine: "Engine", head: str) -> tuple[str, DataFrame]:
     return table, _aligned(engine, table, targets, src)
 
 
-def insert_rows(engine: "Engine", sql: str, returning: str | None = None):
-    """INSERT INTO ... [ON CONFLICT [(target)] DO NOTHING] [RETURNING ...]
-    (RETURNING already split off into ``returning``)."""
-    stmt = sql.strip()
-    conflict = _ON_CONFLICT_NOTHING_RE.search(stmt)
-    table, aligned = _incoming(engine, stmt[: conflict.start()] if conflict else stmt)
-    if conflict:
-        _check_conflict_target(engine, table, conflict.group("target"))
-        aligned = _drop_conflicts(engine, table, aligned).localCheckpoint(eager=True)
-    n = _check_constraints(engine, table, aligned)
-    if returning is not None:
-        # pin the inserted rows BEFORE the append: `INSERT INTO t SELECT
-        # ... FROM t` would otherwise re-read the appended files
-        aligned = aligned.localCheckpoint(eager=True)
-    engine.catalog.append(table, aligned)
-    if returning is not None:
-        return n, _apply_returning(aligned, returning)
-    return n
-
-
-_UPDATE_RE = re.compile(
-    r"^UPDATE\s+(\w+)\s+SET\s+(.+?)(?:\s+WHERE\s+(.+))?$", re.IGNORECASE | re.DOTALL
-)
-
-
-def _affected_partitions(engine: "Engine", table: str, df: DataFrame, pred) -> list[tuple]:
-    """Distinct partition-column tuples containing rows the predicate hits.
-    When the WHERE constrains the partition column, the scan underneath is
-    partition-pruned by Spark — the pruning IS the point: an UPDATE touching
-    one day of a date-partitioned 100 TB table must read one day."""
-    pcols = engine.catalog.tables[table].partition_cols
-    return [tuple(r) for r in df.filter(pred).select(*pcols).distinct().collect()]
-
-
-def _partition_membership(engine: "Engine", table: str, parts: list[tuple]):
-    import functools
-
-    pcols = engine.catalog.tables[table].partition_cols
-    if not parts:
-        return F.lit(False)
-    conds = [
-        functools.reduce(
-            lambda a, b: a & b,
-            [F.col(c).eqNullSafe(F.lit(v)) for c, v in zip(pcols, tup)],
-        )
-        for tup in parts
-    ]
-    return functools.reduce(lambda a, b: a | b, conds)
-
-
-def update_rows(engine: "Engine", sql: str, returning: str | None = None):
-    m = _UPDATE_RE.match(sql.strip())
-    if not m:
-        raise ValueError(f"cannot parse UPDATE: {sql[:80]}")
-    table, set_clause, where = m.groups()
-    meta = engine.catalog.tables[table]
-    df = engine.catalog.read(table)
-    pred = F.expr(translate(where)) if where else F.lit(True)
-    n = df.filter(pred).count()
-    ret_df: DataFrame | None = None
-    assignments = {}
-    for part in split_top(set_clause):
-        if "=" not in part:
-            raise ValueError(f"cannot parse UPDATE assignment (missing '='): {part!r}")
-        col, expr = part.split("=", 1)
-        if any(c["name"] == col.strip() and c.get("generated") for c in meta.columns):
-            raise ValueError(f"cannot UPDATE generated column {col.strip()}")
-        if expr.strip().upper() == "DEFAULT":
-            assignments[col.strip()] = _default_expr(meta, col.strip())
-        else:
-            assignments[col.strip()] = F.expr(translate(expr.strip()))
-    if meta.partition_cols and any(c in meta.partition_cols for c in assignments):
-        raise ValueError("UPDATE of a partition column is not supported; DELETE+INSERT instead")
-
-    def apply_set(src: DataFrame) -> DataFrame:
-        out = src
-        for col, expr in assignments.items():
-            field = meta.spark_schema()[col]
-            out = out.withColumn(
-                col, F.when(pred, expr.cast(field.dataType)).otherwise(F.col(col))
-            )
-        return out
-
-    if returning is not None:
-        # post-update images of the hit rows, pinned before the rewrite
-        ret_df = (
-            apply_set(df.filter(F.coalesce(pred, F.lit(False))))
-            .localCheckpoint(eager=True)
-        )
-    if meta.partition_cols:
-        parts = _affected_partitions(engine, table, df, pred)
-        if not parts:
-            return (n, _apply_returning(ret_df, returning)) if ret_df is not None else n
-        member = _partition_membership(engine, table, parts)
-        scoped = apply_set(df.filter(member))
-        checked = scoped
-        if meta.pk_cols or _has_extra_constraints(meta):
-            # key and foreign-key checks are global: check against the
-            # untouched partitions too
-            checked = scoped.unionByName(df.filter(~F.coalesce(member, F.lit(False))))
-        _check_constraints_update(engine, table, checked, set(assignments))
-        engine.catalog.overwrite_partitions(table, scoped)
-        return (n, _apply_returning(ret_df, returning)) if ret_df is not None else n
-    out = apply_set(df)
-    _check_constraints_update(engine, table, out, set(assignments))
-    engine.catalog.overwrite(table, out)
-    return (n, _apply_returning(ret_df, returning)) if ret_df is not None else n
-
-
-def _check_constraints_update(
-    engine: "Engine", table: str, updated: DataFrame, assigned: set[str] | None = None
-) -> None:
-    """Check the table's state after an UPDATE-like write. With
-    ``assigned`` (the columns the statement sets) only the constraints
-    that name one of them are checked, as DuckDB does: the other columns
-    keep values that were checked when they were written."""
-    meta = engine.catalog.tables[table]
-    if assigned is not None:
-        assigned = {c.lower() for c in assigned}
-
-    def touched(cols) -> bool:
-        return assigned is None or any(c.lower() in assigned for c in cols)
-
-    for col in meta.not_null_cols:
-        if touched([col]) and updated.filter(F.col(col).isNull()).limit(1).count():
-            raise ConstraintViolation(f"NOT NULL constraint failed: {table}.{col}")
-    pk = meta.pk_cols
-    if pk and touched(pk) and updated.groupBy(*pk).count().filter(F.col("count") > 1).limit(1).count():
-        raise ConstraintViolation(f"PRIMARY KEY constraint failed: {table} ({', '.join(pk)})")
-    _check_checks(table, updated, [
-        (cname, expr) for cname, expr in _checks(meta)
-        if touched([cname or "", *_WORD_RE.findall(expr)])
-    ])
-    if touched(c["name"] for c in meta.columns if c.get("fk")):
-        _check_fk_children(engine, table, updated)
-    _check_fk_parents(engine, table, updated, touched)
-    for cols in _unique_col_sets(meta):
-        if not touched(cols):
-            continue
-        nn = updated
-        for c in cols:
-            nn = nn.filter(F.col(c).isNotNull())
-        if nn.groupBy(*cols).count().filter(F.col("count") > 1).limit(1).count():
-            raise ConstraintViolation(
-                f"UNIQUE constraint failed: {table} ({', '.join(cols)})"
-            )
-
-
-_DELETE_RE = re.compile(r"^DELETE\s+FROM\s+(\w+)(?:\s+WHERE\s+(.+))?$", re.IGNORECASE | re.DOTALL)
-
-
-def delete_rows(engine: "Engine", sql: str, returning: str | None = None):
-    m = _DELETE_RE.match(sql.strip())
-    if not m:
-        raise ValueError(f"cannot parse DELETE: {sql[:80]}")
-    table, where = m.groups()
-    meta = engine.catalog.tables[table]
-    df = engine.catalog.read(table)
-    pred = F.expr(translate(where)) if where else F.lit(True)
-    n = df.filter(pred).count()
-    ret_df: DataFrame | None = None
-    if returning is not None:
-        # the doomed rows, pinned before the rewrite removes their files
-        ret_df = df.filter(F.coalesce(pred, F.lit(False))).localCheckpoint(eager=True)
-    # SQL three-valued logic: DELETE removes only rows where the predicate is
-    # TRUE; rows where it evaluates NULL are retained (filter(~pred) would
-    # silently drop them).
-    keep = ~F.coalesce(pred, F.lit(False))
-    if n:
-        # parent-side FOREIGN KEY: refuse while child rows reference the
-        # doomed keys (DuckDB's delete-order contract)
-        _check_fk_parents(engine, table, df.filter(keep))
-    if meta.partition_cols:
-        parts = _affected_partitions(engine, table, df, pred)
-        if not parts:
-            return (n, _apply_returning(ret_df, returning)) if ret_df is not None else n
-        member = _partition_membership(engine, table, parts)
-        kept_scoped = df.filter(member).filter(keep)
-        surviving = {tuple(r) for r in kept_scoped.select(*meta.partition_cols).distinct().collect()}
-        engine.catalog.overwrite_partitions(table, kept_scoped)
-        # fully-drained partitions get no files from the dynamic overwrite —
-        # their old directories must go too
-        engine.catalog.drop_partition_dirs(table, [p for p in parts if p not in surviving])
-        return (n, _apply_returning(ret_df, returning)) if ret_df is not None else n
-    engine.catalog.overwrite(table, df.filter(keep))
-    return (n, _apply_returning(ret_df, returning)) if ret_df is not None else n
-
-
-# ---- upsert + join-powered DML (VERDICT r02 missing #2) --------------------
+# ---- one shape for every row-changing statement ----------------------------
 #
 # Reference reach: full Exec passthrough (db/db.go:52) accepts DuckDB's
-# `INSERT ... ON CONFLICT DO UPDATE`, `UPDATE ... FROM`, `DELETE ... USING`.
-# All three become JOIN-shaped copy-on-write: one shuffle on the join keys,
-# no driver-side row loops, broadcast-eligible small sides via AQE — the
-# shape that survives a 100 TB target table.
-
-_ON_CONFLICT_UPDATE_RE = re.compile(
-    r"\s+ON\s+CONFLICT(?:\s*\((?P<target>[^)]*)\))?\s+DO\s+UPDATE\s+SET\s+"
-    r"(?P<set>.+?)(?:\s+WHERE\s+(?P<where>.+))?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_EXCLUDED_RE = re.compile(r"\bexcluded\.(\w+)\b", re.IGNORECASE)
+# INSERT [ON CONFLICT …], UPDATE [FROM], DELETE [USING], TRUNCATE and
+# MERGE INTO. Each compiles to a _Change: the target table's rows, each
+# tagged with an action (keep, update or delete) and carrying its new
+# values, plus the rows to insert. Join-powered forms join the target to
+# their source once (broadcast-eligible small sides via AQE, no driver-side
+# row loops). One writer (_write) then counts, checks, takes the RETURNING
+# rows and makes the table write.
 
 
-def _resolve_relation(engine: "Engine", name: str) -> DataFrame:
-    if name in engine.catalog.tables:
-        return engine.catalog.read(name)
-    return engine.spark.table(name)
+@dataclass
+class _Change:
+    table: str
+    # the table's rows: its columns (new values on updated rows) and __act
+    # ('keep' | 'u' | 'd')
+    target: DataFrame | None = None
+    # rows to add, aligned to the table's columns
+    inserts: DataFrame | None = None
+    # columns an update assigns: the constraints naming them are checked
+    assigned: set[str] = field(default_factory=set)
+    # raised when a target row matches more than one source row (the
+    # target then carries __tid and __src_match)
+    twice: str | None = None
+    # RETURNING rows carry merge_action
+    merge: bool = False
 
 
-def upsert_values(engine: "Engine", sql: str) -> int | None:
-    """INSERT ... ON CONFLICT [(pk)] DO UPDATE SET ... [WHERE ...].
+def _tagged(frame: DataFrame, cases: list) -> DataFrame:
+    """``frame`` with ``__act``, the action of the first case whose
+    condition holds ('keep' when none does), and every column a case
+    assigns set to its value on that case's rows. ``cases`` are
+    (condition, 'u' | 'd' | 'keep', {column: value}). All values read the
+    row as it was, so ``SET a = b, b = a`` swaps."""
+    pick = F.lit(None)
+    for i, (cond, _, _) in reversed(list(enumerate(cases))):
+        pick = F.when(cond, F.lit(i)).otherwise(pick)
+    frame = frame.withColumn("__case", pick)
+    case = F.col("__case")
+    act, new = F.lit("keep"), {}
+    for i, (_, action, sets) in enumerate(cases):
+        act = F.when(case == i, F.lit(action)).otherwise(act)
+        for col, value in sets.items():
+            new[col] = F.when(case == i, value).otherwise(new.get(col, F.col(col)))
+    return frame.withColumns({**new, "__act": act})
 
-    DuckDB semantics: conflicting rows are updated in place (``excluded.c``
-    names the incoming value), non-conflicting rows are appended;
-    rows_affected counts both. Several incoming rows conflicting on the same
-    key is an error in DuckDB ("can not update the same row twice") — same
-    here. Returns None when the statement has no DO UPDATE clause."""
-    from .dialect import _rewrite_code
 
-    m = _ON_CONFLICT_UPDATE_RE.search(sql)
+def _bind_set(meta, text: str, value, keys=()) -> dict:
+    """A SET list bound as DuckDB binds it: each target names a column of
+    the table (case-insensitively) once, and may not be a generated
+    column, a partition column or one of ``keys``. ``DEFAULT`` stores the
+    column's declared default; any other value is the Column ``value``
+    makes of its text, cast to the column's type."""
+    by_lower = {c["name"].lower(): c for c in meta.columns}
+    schema = meta.spark_schema()
+    out: dict = {}
+    for item in split_top(text):
+        name, eq, expr = (s.strip() for s in item.partition("="))
+        if not eq or not name or not expr:
+            raise ValueError(f'Parser Error: syntax error at or near "{item.strip()}"')
+        col = by_lower.get(name.strip('"').lower())
+        if col is None:
+            raise ValueError(f"Referenced update column {name} not found in table!")
+        cname = col["name"]
+        if col.get("generated"):
+            raise ValueError(f'Cant update column "{cname}" because it is a generated column!')
+        if cname in keys:
+            raise ValueError(
+                f"Can not assign to column '{name}' because it has a UNIQUE/PRIMARY KEY constraint"
+            )
+        if cname in meta.partition_cols:
+            raise ValueError(
+                f"UPDATE of partition column {cname} is not supported; DELETE+INSERT instead"
+            )
+        if cname in out:
+            raise ValueError(f'Multiple assignments to same column "{cname}"')
+        v = _default_expr(meta, cname) if expr.upper() == "DEFAULT" else value(expr)
+        out[cname] = v.cast(schema[cname].dataType)
+    return out
+
+
+def _expr(text: str):
+    return F.expr(translate(text))
+
+
+def _meta(engine: "Engine", table: str):
+    meta = engine.catalog.tables.get(table)
+    if meta is None:
+        raise ValueError(f"Catalog Error: Table with name {table} does not exist!")
+    return meta
+
+
+def _split_at(text: str, keyword: "re.Pattern[str]") -> tuple[str, str | None]:
+    """(text before the first top-level ``keyword``, text after it or None)."""
+    m = find_top(text, keyword)
     if m is None:
-        return None
-    table, aligned = _incoming(engine, sql[: m.start()])
-    meta = engine.catalog.tables[table]
-    pk = meta.pk_cols
-    if not pk:
-        raise ValueError(f"ON CONFLICT DO UPDATE requires a primary key on {table}")
-    _check_conflict_target(engine, table, m.group("target"))
-    if aligned.groupBy(*pk).count().filter(F.col("count") > 1).limit(1).count():
-        raise ValueError(
-            "ON CONFLICT DO UPDATE can not update the same row twice: "
-            "incoming batch has duplicate keys"
-        )
-
-    # incoming side renamed __exc_<col>; `excluded.c` in SET/WHERE text maps
-    # there, bare names keep resolving to the existing row (DuckDB scoping)
-    exc = aligned.select(
-        *[F.col(c).alias(f"__exc_{c}") for c in aligned.columns],
-        F.lit(True).alias("__exc_match"),
-    )
-    existing = engine.catalog.read(table)
-    on = [F.col(c).eqNullSafe(F.col(f"__exc_{c}")) for c in pk]
-    joined = existing.join(exc, functools_reduce(lambda a, b: a & b, on), "left")
-
-    def _xlate(text: str) -> str:
-        return translate(_rewrite_code(text, lambda c: _EXCLUDED_RE.sub(r"__exc_\1", c)))
-
-    upd_pred = F.col("__exc_match").isNotNull()
-    if m.group("where"):
-        upd_pred = upd_pred & F.coalesce(F.expr(_xlate(m.group("where"))), F.lit(False))
-
-    assignments: dict[str, "F.Column"] = {}
-    for part in split_top(m.group("set")):
-        if "=" not in part:
-            raise ValueError(f"cannot parse DO UPDATE assignment: {part!r}")
-        col, expr = part.split("=", 1)
-        col = col.strip()
-        if col in pk or col in meta.partition_cols:
-            raise ValueError(f"DO UPDATE may not reassign key/partition column {col}")
-        assignments[col] = F.expr(_xlate(expr.strip()))
-
-    updated = joined
-    for col, expr in assignments.items():
-        field = meta.spark_schema()[col]
-        updated = updated.withColumn(
-            col, F.when(upd_pred, expr.cast(field.dataType)).otherwise(F.col(col))
-        )
-    n_updated = joined.filter(upd_pred).count()
-    tcols = [c["name"] for c in meta.columns]
-    new_existing = updated.select(*tcols)
-
-    to_insert = aligned.join(existing.select(*pk), pk, "left_anti").localCheckpoint(
-        eager=True
-    )
-    n_insert = _check_constraints(engine, table, to_insert)
-    _check_constraints_update(engine, table, new_existing, set(assignments))
-
-    if meta.partition_cols:
-        parts = [
-            tuple(r)
-            for r in joined.filter(upd_pred)
-            .select(*meta.partition_cols)
-            .distinct()
-            .collect()
-        ]
-        if parts:
-            member = _partition_membership(engine, table, parts)
-            engine.catalog.overwrite_partitions(table, new_existing.filter(member))
-    elif n_updated:
-        engine.catalog.overwrite(table, new_existing)
-    if n_insert:
-        engine.catalog.append(table, to_insert)
-    return n_updated + n_insert
+        return text.strip(), None
+    return text[: m.start()].strip(), text[m.end() :].strip()
 
 
-_UPDATE_FROM_RE = re.compile(
-    r"^UPDATE\s+(?P<t>\w+)(?:\s+(?:AS\s+)?(?P<ta>\w+))?\s+SET\s+(?P<set>.+?)\s+"
-    r"FROM\s+(?P<u>\w+)(?:\s+(?:AS\s+)?(?P<ua>\w+))?(?:\s+WHERE\s+(?P<where>.+))?$",
+# ---- sources of UPDATE…FROM, DELETE…USING and MERGE ------------------------
+
+_SOURCE_RE = re.compile(
+    r"^(?:(?P<name>\w+)|(?P<subq>\(.+\)))(?:\s+(?:AS\s+)?(?P<alias>\w+))?$",
     re.IGNORECASE | re.DOTALL,
 )
-_DELETE_USING_RE = re.compile(
-    r"^DELETE\s+FROM\s+(?P<t>\w+)(?:\s+(?:AS\s+)?(?P<ta>\w+))?\s+"
-    r"USING\s+(?P<u>\w+)(?:\s+(?:AS\s+)?(?P<ua>\w+))?(?:\s+WHERE\s+(?P<where>.+))?$",
-    re.IGNORECASE | re.DOTALL,
-)
+
+
+@dataclass
+class _Join:
+    target: DataFrame  # the table's rows with a row id, __tid
+    src: DataFrame  # the source's columns as __src_<c>, and __src_match
+    src_cols: list[str]
+    on: "F.Column"
+    value: Callable  # text over the target and the source → Column
+    src_value: Callable  # text over the source's own columns → Column
 
 
 def _qualified_rewrite(text: str, t_names: set[str], u_names: set[str]) -> str:
     """Rewrite `t.col` → `col` and `u.col` → `__src_col` (literal-aware)."""
-    from .dialect import _rewrite_code
 
     def _fix(code: str) -> str:
         for al in u_names:
@@ -788,198 +633,215 @@ def _qualified_rewrite(text: str, t_names: set[str], u_names: set[str]) -> str:
     return _rewrite_code(text, _fix)
 
 
-def _join_src(engine: "Engine", name: str) -> DataFrame:
-    src = _resolve_relation(engine, name)
-    return src.select(
-        *[F.col(c).alias(f"__src_{c}") for c in src.columns],
-        F.lit(True).alias("__src_match"),
+def _join_source(engine: "Engine", table: str, alias: str, src_text: str, on: str | None) -> _Join:
+    """Bind a statement's source (a table, a view or a parenthesized query,
+    with an optional alias) and its join condition ``on``. A qualified name
+    resolves by its alias; a bare name resolves to the target's column
+    first and then to a source-only column, as DuckDB scopes them."""
+    m = _SOURCE_RE.match(src_text.strip())
+    if not m:
+        raise ValueError(f"cannot parse DML source: {src_text.strip()[:60]}")
+    name, subq, ua = m.group("name", "subq", "alias")
+    if subq is not None:
+        raw = engine.query_df(strip_outer_parens(subq))
+        u_names = {ua} if ua else set()
+    else:
+        raw = engine._resolve_view(name)
+        u_names = {ua or name, name}
+    t_names = {alias, table}
+    tcols = {c["name"].lower() for c in engine.catalog.tables[table].columns}
+    src_only = [c for c in raw.columns if c.lower() not in tcols]
+
+    def value(text: str) -> "F.Column":
+        def _fix(chunk: str) -> str:
+            for c in src_only:
+                chunk = re.sub(rf"\b{c}\b(?!\s*\()", f"__src_{c}", chunk)
+            return chunk
+
+        return _expr(_rewrite_code(_qualified_rewrite(text, t_names, u_names), _fix))
+
+    def src_value(text: str) -> "F.Column":
+        return _expr(_qualified_rewrite(text, u_names, set()))
+
+    src = raw.select(
+        *[F.col(c).alias(f"__src_{c}") for c in raw.columns], F.lit(True).alias("__src_match")
     )
+    target = engine.catalog.read(table).withColumn("__tid", F.monotonically_increasing_id())
+    return _Join(target, src, raw.columns, value(on) if on else F.lit(True), value, src_value)
 
 
-_SUBQ_SRC_RE = re.compile(
-    r"^(?P<head>UPDATE\s+\w+(?:\s+(?:AS\s+)?\w+)?\s+SET\s+.+?\s+FROM\s+"
-    r"|DELETE\s+FROM\s+\w+(?:\s+(?:AS\s+)?\w+)?\s+USING\s+)\(",
+# ---- compilers --------------------------------------------------------------
+
+_ON_CONFLICT_RE = re.compile(
+    r"\s+ON\s+CONFLICT(?:\s*\((?P<target>[^)]*)\))?\s+DO\s+(?:(?P<nothing>NOTHING)"
+    r"|UPDATE\s+SET\s+(?P<set>.+?))\s*$",
     re.IGNORECASE | re.DOTALL,
 )
+_EXCLUDED_RE = re.compile(r"\bexcluded\.(\w+)\b", re.IGNORECASE)
+_OR_SHORTHAND_RE = re.compile(r"^INSERT\s+OR\s+(IGNORE|REPLACE)\s+INTO\s+(\w+)\b(.*)$",
+                              re.IGNORECASE | re.DOTALL)
 
 
-def _materialize_subquery_source(engine: "Engine", sql: str) -> str:
-    """``UPDATE ... FROM (SELECT ...) alias`` / ``DELETE ... USING (...)``:
-    run the subquery through the full query router and swap a temp view
-    name into the statement so the plain-identifier grammar below applies
-    (DuckDB accepts arbitrary derived sources here)."""
-    m = _SUBQ_SRC_RE.match(sql.strip())
-    if m is None:
+def _expand_or_shorthand(engine: "Engine", sql: str) -> str:
+    """DuckDB shorthands (verified): INSERT OR IGNORE ≡ ON CONFLICT DO
+    NOTHING; INSERT OR REPLACE ≡ ON CONFLICT DO UPDATE SET <every non-key
+    column> = excluded.<col>."""
+    m = _OR_SHORTHAND_RE.match(sql)
+    if not m:
         return sql
-    s = sql.strip()
-    open_at = m.end()
-    j = close_of(s, open_at - 1)
-    if j == -1:
-        raise ValueError("unbalanced parentheses in the DML source subquery")
-    inner = s[open_at : j - 1]
-    view = "__dml_subq_src"
-    engine.query_df(inner).createOrReplaceTempView(view)
-    return s[: m.end() - 1] + view + s[j:]
+    mode, table, rest = m.group(1).upper(), m.group(2), m.group(3)
+    meta = _meta(engine, table)
+    keys = set(meta.pk_cols) | set(meta.partition_cols)
+    sets = ", ".join(
+        f"{c['name']} = excluded.{c['name']}"
+        for c in meta.columns
+        if c["name"] not in keys and not c.get("generated")
+    )
+    action = f"DO UPDATE SET {sets}" if mode == "REPLACE" and sets else "DO NOTHING"
+    return f"INSERT INTO {table}{rest} ON CONFLICT {action}"
 
 
-def update_from(engine: "Engine", sql: str) -> int | None:
-    """UPDATE t SET ... FROM u WHERE <join cond> — join-powered copy-on-write.
-
-    Each target row with ≥1 matching source row gets the SET applied; more
-    than one match is ambiguous (which source row wins?) and raises rather
-    than picking one silently. Returns None when there is no FROM clause."""
-    sql = _materialize_subquery_source(engine, sql)
-    m = _UPDATE_FROM_RE.match(sql.strip())
+def _compile_insert(engine: "Engine", sql: str, returning: bool) -> _Change:
+    """INSERT INTO … [ON CONFLICT [(target)] DO NOTHING | DO UPDATE SET …
+    [WHERE …]]. DO UPDATE updates the stored row of each incoming key in
+    place (``excluded.c`` names the incoming value, a bare name the stored
+    one) and inserts the other rows."""
+    stmt = _expand_or_shorthand(engine, sql.strip())
+    m = _ON_CONFLICT_RE.search(stmt)
+    table, rows = _incoming(engine, stmt[: m.start()] if m else stmt)
     if m is None:
-        return None
-    table, ta = m.group("t"), m.group("ta") or m.group("t")
-    uname, ua = m.group("u"), m.group("ua") or m.group("u")
+        return _Change(table, inserts=rows)
+    _check_conflict_target(engine, table, m.group("target"))
+    if m.group("nothing"):
+        return _Change(table, inserts=_drop_conflicts(engine, table, rows))
+    if returning:
+        # DuckDB 1.0 returns the incoming tuple, not the stored row
+        raise ValueError("RETURNING is not supported with ON CONFLICT DO UPDATE")
     meta = engine.catalog.tables[table]
-    target = engine.catalog.read(table).withColumn(
-        "__tid", F.monotonically_increasing_id()
+    pk = meta.pk_cols
+    if not pk:
+        raise ValueError(f"ON CONFLICT DO UPDATE requires a primary key on {table}")
+    stored = engine.catalog.read(table)
+    exc = rows.select(*[F.col(c).alias(f"__exc_{c}") for c in rows.columns],
+                      F.lit(True).alias("__src_match"))
+    on = reduce(lambda a, b: a & b, [F.col(c).eqNullSafe(F.col(f"__exc_{c}")) for c in pk])
+    stored_ids = stored.withColumn("__tid", F.monotonically_increasing_id())
+    joined = _join(engine, stored_ids, exc, on, "left")
+
+    def value(text: str) -> "F.Column":
+        return _expr(_rewrite_code(text, lambda c: _EXCLUDED_RE.sub(r"__exc_\1", c)))
+
+    sets_text, where = _split_at(m.group("set"), _WHERE_RE)
+    cond = F.col("__src_match").isNotNull()
+    if where:
+        cond = cond & value(where)
+    sets = _bind_set(meta, sets_text, value, keys=pk)
+    return _Change(
+        table,
+        _tagged(joined, [(cond, "u", sets)]),
+        _join(engine, rows, stored.select(*pk), pk, "left_anti"),
+        set(sets),
+        twice="ON CONFLICT DO UPDATE can not update the same row twice in the same command: "
+              "the incoming rows repeat a key",
     )
-    src = _join_src(engine, uname)
-    t_names, u_names = {ta, table}, {ua, uname}
-    cond = (
-        F.expr(translate(_qualified_rewrite(m.group("where"), t_names, u_names)))
-        if m.group("where")
-        else F.lit(True)
+
+
+_UPDATE_RE = re.compile(
+    r"^UPDATE\s+(?P<t>\w+)(?:\s+(?:AS\s+)?(?!SET\b)(?P<ta>\w+))?\s+SET\s+(?P<rest>.+)$",
+    re.IGNORECASE | re.DOTALL,
+)
+_DELETE_RE = re.compile(
+    r"^DELETE\s+FROM\s+(?P<t>\w+)(?:\s+(?:AS\s+)?(?!USING\b|WHERE\b)(?P<ta>\w+))?"
+    r"(?P<rest>.*)$",
+    re.IGNORECASE | re.DOTALL,
+)
+_TRUNCATE_RE = re.compile(r"^TRUNCATE\s+(?:TABLE\s+)?(\w+)$", re.IGNORECASE)
+_WHERE_RE = re.compile(r"\bWHERE\b", re.IGNORECASE)
+_USING_RE = re.compile(r"\bUSING\b", re.IGNORECASE)
+
+
+def _compile_update(engine: "Engine", sql: str) -> _Change:
+    """UPDATE t [alias] SET … [FROM source] [WHERE …]. With FROM, each
+    target row the condition matches to a source row is updated; a row
+    matching several is an error rather than an arbitrary pick."""
+    m = _UPDATE_RE.match(sql.strip())
+    if not m:
+        raise ValueError(f"cannot parse UPDATE: {sql.strip()[:80]}")
+    table = m.group("t")
+    meta = _meta(engine, table)
+    rest, where = _split_at(m.group("rest"), _WHERE_RE)
+    sets_text, src = _split_at(rest, _FROM_KW_RE)
+    if src is None:
+        sets = _bind_set(meta, sets_text, _expr)
+        cond = _expr(where) if where else F.lit(True)
+        return _Change(table, _tagged(engine.catalog.read(table), [(cond, "u", sets)]),
+                       assigned=set(sets))
+    j = _join_source(engine, table, m.group("ta") or table, src, where)
+    sets = _bind_set(meta, sets_text, j.value)
+    return _Change(
+        table,
+        _tagged(_join(engine, j.target, j.src, j.on, "left"),
+                [(F.col("__src_match"), "u", sets)]),
+        assigned=set(sets),
+        twice="UPDATE ... FROM: a target row matches multiple source rows; "
+              "the result would depend on which one wins — deduplicate the source",
     )
-    joined = target.join(src, cond, "left")
-    dup = (
-        joined.filter(F.col("__src_match").isNotNull())
-        .groupBy("__tid")
-        .count()
-        .filter(F.col("count") > 1)
-        .limit(1)
-        .count()
-    )
-    if dup:
-        raise ValueError(
-            "UPDATE ... FROM: a target row matches multiple source rows; "
-            "the result would depend on which one wins — deduplicate the source"
-        )
-    assignments = {}
-    for part in split_top(m.group("set")):
-        if "=" not in part:
-            raise ValueError(f"cannot parse UPDATE assignment: {part!r}")
-        col, expr = part.split("=", 1)
-        col = col.strip()
-        if col in meta.partition_cols:
-            raise ValueError("UPDATE of a partition column is not supported")
-        assignments[col] = F.expr(
-            translate(_qualified_rewrite(expr.strip(), t_names, u_names))
-        )
-    upd = F.col("__src_match").isNotNull()
-    out = joined
-    for col, expr in assignments.items():
-        field = meta.spark_schema()[col]
-        out = out.withColumn(
-            col, F.when(upd, expr.cast(field.dataType)).otherwise(F.col(col))
-        )
-    n = joined.filter(upd).count()
-    tcols = [c["name"] for c in meta.columns]
-    new_df = out.select(*tcols, "__tid").dropDuplicates(["__tid"]).select(*tcols)
-    _check_constraints_update(engine, table, new_df, set(assignments))
-    if meta.partition_cols:
-        parts = [
-            tuple(r)
-            for r in joined.filter(upd).select(*meta.partition_cols).distinct().collect()
-        ]
-        if parts:
-            member = _partition_membership(engine, table, parts)
-            engine.catalog.overwrite_partitions(table, new_df.filter(member))
-        return n
-    if n:
-        engine.catalog.overwrite(table, new_df)
-    return n
 
 
-def delete_using(engine: "Engine", sql: str) -> int | None:
-    """DELETE FROM t USING u WHERE <cond> — anti-join copy-on-write.
-    Returns None when there is no USING clause."""
-    sql = _materialize_subquery_source(engine, sql)
-    m = _DELETE_USING_RE.match(sql.strip())
-    if m is None:
-        return None
-    table, ta = m.group("t"), m.group("ta") or m.group("t")
-    uname, ua = m.group("u"), m.group("ua") or m.group("u")
-    meta = engine.catalog.tables[table]
-    target = engine.catalog.read(table)
-    src = _join_src(engine, uname)
-    t_names, u_names = {ta, table}, {ua, uname}
-    cond = (
-        F.expr(translate(_qualified_rewrite(m.group("where"), t_names, u_names)))
-        if m.group("where")
-        else F.lit(True)
-    )
-    doomed = target.join(src, cond, "left_semi")
-    n = doomed.count()
-    kept = target.join(src, cond, "left_anti")
-    if meta.partition_cols:
-        parts = [
-            tuple(r)
-            for r in doomed.select(*meta.partition_cols).distinct().collect()
-        ]
-        if not parts:
-            return n
-        member = _partition_membership(engine, table, parts)
-        kept_scoped = kept.filter(member)
-        surviving = {
-            tuple(r)
-            for r in kept_scoped.select(*meta.partition_cols).distinct().collect()
-        }
-        engine.catalog.overwrite_partitions(table, kept_scoped)
-        engine.catalog.drop_partition_dirs(
-            table, [p for p in parts if p not in surviving]
-        )
-        return n
-    if n:
-        engine.catalog.overwrite(table, kept)
-    return n
+def _compile_delete(engine: "Engine", sql: str) -> _Change:
+    """DELETE FROM t [alias] [USING source] [WHERE …], and TRUNCATE. A row
+    whose condition is NULL stays (SQL three-valued logic)."""
+    stmt = sql.strip()
+    t = _TRUNCATE_RE.match(stmt)
+    m = _DELETE_RE.match(f"DELETE FROM {t.group(1)}" if t else stmt)
+    if not m:
+        raise ValueError(f"cannot parse DELETE: {stmt[:80]}")
+    table = m.group("t")
+    _meta(engine, table)
+    rest, where = _split_at(m.group("rest"), _WHERE_RE)
+    head, src = _split_at(rest, _USING_RE)
+    if head:
+        raise ValueError(f"cannot parse DELETE: {stmt[:80]}")
+    if src is None:
+        cond = _expr(where) if where else F.lit(True)
+        return _Change(table, _tagged(engine.catalog.read(table), [(cond, "d", {})]))
+    j = _join_source(engine, table, m.group("ta") or table, src, where)
+    # a row matching several source rows is deleted once
+    joined = _join(engine, j.target, j.src, j.on, "left").dropDuplicates(["__tid"])
+    return _Change(table, _tagged(joined, [(F.col("__src_match"), "d", {})]))
 
 
-def functools_reduce(fn, seq):
-    import functools
-
-    return functools.reduce(fn, seq)
-
-
-# ---- MERGE INTO (DuckDB 1.4 surface) ---------------------------------------
-#
-# Reference reach: full Exec passthrough (db/db.go:52) accepts DuckDB's
-# `MERGE INTO target USING source ON cond WHEN ...` (DuckDB >= 1.4). Spark
-# has no native MERGE outside Delta, so this compiles to the same join-
-# powered copy-on-write the other upsert forms use: ONE left join of the
-# target on the merge condition resolves every matched/not-matched-by-source
-# clause per target row (chained, first-match-wins), one anti join resolves
-# the insert side — two shuffles on the join keys total, broadcast-eligible
-# small sources via AQE, no driver-side row loops.
+# MERGE INTO (DuckDB 1.4 surface; Spark has no native MERGE outside Delta):
+# one left join of the target on the merge condition resolves every
+# matched / not-matched-by-source clause per target row (first match wins),
+# one anti join of the source resolves the insert side.
 
 _MERGE_CLAUSE_RE = re.compile(
     r"^(?:(?P<not>NOT)\s+)?MATCHED(?:\s+BY\s+(?P<by>SOURCE|TARGET))?"
     r"(?:\s+AND\s+(?P<cond>.+?))?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
-
-
+_MERGE_HEAD_RE = re.compile(
+    r"^MERGE\s+INTO\s+(?P<t>\w+)(?:\s+(?:AS\s+)?(?P<ta>\w+))?\s+USING\s+", re.IGNORECASE
+)
 _ON_RE = re.compile(r"\bON\b", re.IGNORECASE)
 _WHEN_RE = re.compile(r"\bWHEN\b", re.IGNORECASE)
 _THEN_RE = re.compile(r"\bTHEN\b", re.IGNORECASE)
+_DO_NOTHING_RE = re.compile(r"DO\s+NOTHING", re.IGNORECASE)
+_MERGE_UPDATE_RE = re.compile(r"^UPDATE(?:\s+SET\s+(?P<set>.+))?$", re.IGNORECASE | re.DOTALL)
+_MERGE_INSERT_RE = re.compile(
+    r"^INSERT\s*(?:\*|(?:\((?P<cols>[^)]*)\)\s*)?(?:VALUES\s*\((?P<vals>.+)\))?)?$",
+    re.IGNORECASE | re.DOTALL,
+)
 
 
 def _parse_merge(sql: str):
-    """Parse MERGE INTO into (target, t_alias, source_text, u_alias, on_cond,
-    clauses). clauses = list of (kind, cond_text, action_text) where kind is
+    """MERGE INTO → (target, alias, source text, ON condition, clauses);
+    a clause is (kind, condition text or None, action text), kind one of
     'matched' | 'not_by_target' | 'not_by_source'."""
-    m = re.match(
-        r"^MERGE\s+INTO\s+(?P<t>\w+)(?:\s+(?:AS\s+)?(?P<ta>\w+))?\s+USING\s+",
-        sql,
-        re.IGNORECASE,
-    )
+    m = _MERGE_HEAD_RE.match(sql)
     if not m:
         raise ValueError(f"cannot parse MERGE INTO statement: {sql[:80]}")
-    table, ta = m.group("t"), m.group("ta") or m.group("t")
     rest = sql[m.end() :]
     on_m = find_top(rest, _ON_RE)
     if on_m is None:
@@ -991,12 +853,7 @@ def _parse_merge(sql: str):
         raise ValueError("MERGE INTO requires at least one WHEN clause")
     on_cond = rest[: when_m.start()].strip()
     clauses = []
-    body = rest[when_m.start() :]
-    while body:
-        assert body[:4].upper() == "WHEN"
-        body = body[4:]
-        nxt = find_top(body, _WHEN_RE)
-        clause, body = (body[: nxt.start()], body[nxt.start() :]) if nxt else (body, "")
+    for clause in split_top(rest[when_m.end() :], _WHEN_RE):
         then_m = find_top(clause, _THEN_RE)
         if then_m is None:
             raise ValueError(f"MERGE WHEN clause without THEN: {clause[:60]}")
@@ -1012,286 +869,202 @@ def _parse_merge(sql: str):
                 raise ValueError("WHEN MATCHED takes no BY qualifier")
             kind = "matched"
         clauses.append((kind, hm.group("cond"), action))
-    # source: bare table/view name or parenthesized subquery, optional alias
-    sm = re.match(
-        r"^(?:(?P<name>\w+)|(?P<subq>\(.+\)))(?:\s+(?:AS\s+)?(?P<ua>\w+))?$",
-        src_text,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if not sm:
-        raise ValueError(f"cannot parse MERGE source: {src_text[:60]}")
-    return table, ta, sm.group("name"), sm.group("subq"), sm.group("ua"), on_cond, clauses
+    return m.group("t"), m.group("ta") or m.group("t"), src_text, on_cond, clauses
 
 
-def merge_into(engine: "Engine", sql: str, returning: str | None = None):
-    """MERGE INTO t USING s ON cond WHEN [NOT] MATCHED [BY SOURCE] [AND c]
-    THEN UPDATE SET ... | UPDATE | DELETE | DO NOTHING | INSERT [(cols)
-    VALUES (...)] | INSERT — first matching clause wins per row, DuckDB
-    semantics. rows_affected = updates + deletes + inserts. A target row
-    matching multiple source rows raises (the winner would be arbitrary).
-
-    RETURNING exposes the affected rows plus ``merge_action``
-    ('UPDATE' | 'DELETE' | 'INSERT'), mirroring DuckDB's merge_action()."""
-    table, ta, src_name, src_subq, ua, on_cond, clauses = _parse_merge(sql.strip())
-    if table not in engine.catalog.tables:
-        raise ValueError(f"table {table} does not exist")
-    meta = engine.catalog.tables[table]
-    tcols = [c["name"] for c in meta.columns]
-
-    if src_subq is not None:
-        src_raw = engine.query_df(strip_outer_parens(src_subq))
-        u_names = {ua} if ua else set()
-    else:
-        src_raw = _resolve_relation(engine, src_name)
-        u_names = {ua or src_name, src_name}
-    src_cols = src_raw.columns
-    t_names = {ta, table}
-    src = src_raw.select(
-        *[F.col(c).alias(f"__src_{c}") for c in src_cols],
-        F.lit(True).alias("__src_match"),
-    )
-
-    # bare identifiers naming a SOURCE-only column must resolve against the
-    # prefixed source side of the join (target-name collisions keep DuckDB's
-    # target-first scoping via the plain column)
-    src_only = [c for c in src_cols if c not in tcols]
-
-    def _cond_expr(text: str) -> "F.Column":
-        from .dialect import _rewrite_code
-
-        code = _qualified_rewrite(text, t_names, u_names)
-
-        def _fix(chunk: str) -> str:
-            for c in src_only:
-                chunk = re.sub(rf"\b{c}\b(?!\s*\()", f"__src_{c}", chunk)
-            return chunk
-
-        return F.expr(translate(_rewrite_code(code, _fix)))
-
-    target = engine.catalog.read(table).withColumn("__tid", F.monotonically_increasing_id())
-    cond = _cond_expr(on_cond)
-
-    target_clauses = [c for c in clauses if c[0] in ("matched", "not_by_source")]
-    insert_clauses = [c for c in clauses if c[0] == "not_by_target"]
-
-    n_upd = n_del = n_ins = 0
-    ret_parts: list[DataFrame] = []
-    new_existing = None
-    act = None
-    joined = None
-    if target_clauses:
-        joined = target.join(src, cond, "left")
-        matched = F.col("__src_match").isNotNull()
-        if any(k == "matched" for k, _, _ in target_clauses):
-            dup = (
-                joined.filter(matched)
-                .groupBy("__tid")
-                .count()
-                .filter(F.col("count") > 1)
-                .limit(1)
-                .count()
-            )
-            if dup:
-                raise ValueError(
-                    "MERGE can not update the same row twice: a target row "
-                    "matches multiple source rows — deduplicate the source"
-                )
+def _compile_merge(engine: "Engine", sql: str) -> _Change:
+    """MERGE INTO t USING s ON cond WHEN [NOT] MATCHED [BY SOURCE|TARGET]
+    [AND c] THEN UPDATE [SET …] | DELETE | DO NOTHING | INSERT [(cols)]
+    [VALUES (…)] — the first matching clause wins per row. A target row
+    matching several source rows is an error when a MATCHED clause could
+    act on it. RETURNING rows carry ``merge_action``."""
+    table, alias, src_text, on_cond, clauses = _parse_merge(sql.strip())
+    meta = _meta(engine, table)
+    j = _join_source(engine, table, alias, src_text, on_cond)
+    schema = meta.spark_schema()
+    change = _Change(table, merge=True)
+    matched = F.col("__src_match").isNotNull()
+    cases = []
+    for kind, ctext, action in clauses:
+        if kind == "not_by_target":
+            continue
+        cond = matched if kind == "matched" else ~matched
+        if ctext:
+            cond = cond & j.value(ctext)
+        um = _MERGE_UPDATE_RE.match(action)
+        if um and um.group("set"):
+            cases.append((cond, "u", _bind_set(meta, um.group("set"), j.value)))
+        elif um:
+            if kind == "not_by_source":
+                raise ValueError("WHEN NOT MATCHED BY SOURCE THEN UPDATE requires SET "
+                                 "(there is no source row to copy from)")
+            # shorthand: every common non-key column from the source
+            keys = set(meta.pk_cols) | set(meta.partition_cols)
+            cases.append((cond, "u", {
+                c["name"]: F.col(f"__src_{c['name']}").cast(schema[c["name"]].dataType)
+                for c in meta.columns
+                if c["name"] in j.src_cols and c["name"] not in keys and not c.get("generated")
+            }))
+        elif action.upper() == "DELETE":
+            cases.append((cond, "d", {}))
+        elif _DO_NOTHING_RE.fullmatch(action):
+            cases.append((cond, "keep", {}))
         else:
-            # No WHEN MATCHED clause: matched rows can only be tagged 'keep',
-            # but the left join still fans a target row out once per matching
-            # source row — collapse back to one row per target id so the
-            # rewrite doesn't duplicate untouched rows. Safe because the
-            # matched flag and every referenced column are identical across a
-            # target row's duplicates (NOT MATCHED BY SOURCE rows join to
-            # nothing, so their source columns are uniformly NULL).
+            raise ValueError(f"unsupported MERGE action for {kind} clause: {action[:60]}")
+        change.assigned |= set(cases[-1][2])
+    if cases:
+        joined = _join(engine, j.target, j.src, j.on, "left")
+        if any(kind == "matched" for kind, _, _ in clauses):
+            change.twice = ("MERGE can not update the same row twice: a target row "
+                            "matches multiple source rows — deduplicate the source")
+        else:
+            # only NOT MATCHED BY SOURCE acts: a matched row is kept once
             joined = joined.dropDuplicates(["__tid"])
-        # first-match-wins action tag per target row
-        act = F.lit("keep")
-        tags: list[tuple[str, dict | None]] = []  # (tag, assignments|None=delete)
-        chain = None
-        for i, (kind, ctext, action) in enumerate(target_clauses):
-            base = matched if kind == "matched" else ~matched
-            if ctext:
-                base = base & F.coalesce(_cond_expr(ctext), F.lit(False))
-            au = action.upper()
-            if au.startswith("UPDATE"):
-                tag = f"u{i}"
-                rest = action[len("UPDATE") :].strip()
-                if rest:
-                    sm = re.match(r"^SET\s+(.+)$", rest, re.IGNORECASE | re.DOTALL)
-                    if not sm:
-                        raise ValueError(f"cannot parse MERGE UPDATE action: {action[:60]}")
-                    assignments = {}
-                    for part in split_top(sm.group(1)):
-                        col, expr = part.split("=", 1)
-                        assignments[col.strip()] = _cond_expr(expr.strip())
-                else:
-                    if kind == "not_by_source":
-                        raise ValueError(
-                            "WHEN NOT MATCHED BY SOURCE THEN UPDATE requires SET "
-                            "(there is no source row to copy from)"
-                        )
-                    # shorthand: every common non-key column from the source
-                    keys = set(meta.pk_cols) | set(meta.partition_cols)
-                    assignments = {
-                        c: F.col(f"__src_{c}")
-                        for c in tcols
-                        if c in src_cols and c not in keys
-                    }
-                for col in assignments:
-                    if col in meta.partition_cols:
-                        raise ValueError(
-                            f"MERGE may not reassign partition column {col}"
-                        )
-            elif au == "DELETE":
-                tag, assignments = "d", None
-            elif re.fullmatch(r"DO\s+NOTHING", au):
-                tag, assignments = "keep", {}
-            else:
-                raise ValueError(
-                    f"unsupported MERGE action for {kind} clause: {action[:60]}"
-                )
-            tags.append((tag, assignments))
-            chain = chain.when(base, tag) if chain is not None else F.when(base, tag)
-        act = chain.otherwise(F.lit("keep")) if chain is not None else F.lit("keep")
-        out = joined.withColumn("__act", act)
-        for i, (tag, assignments) in enumerate(tags):
-            if not assignments:
-                continue
-            for col, expr in assignments.items():
-                field = meta.spark_schema()[col]
-                out = out.withColumn(
-                    col,
-                    F.when(F.col("__act") == tag, expr.cast(field.dataType)).otherwise(
-                        F.col(col)
-                    ),
-                )
-        # eager checkpoint BEFORE any table write: the RETURNING frames and
-        # the final overwrite both derive from this plan, and a lazy plan
-        # would re-read the mutated table files after overwrite/append
-        out = out.localCheckpoint(eager=True)
-        n_upd = out.filter(F.col("__act").startswith("u")).count()
-        n_del = out.filter(F.col("__act") == "d").count()
-        new_existing = out.filter(F.col("__act") != "d").select(*tcols, "__act")
-        if returning is not None:
-            ret_parts.append(
-                out.filter(F.col("__act").startswith("u"))
-                .select(*tcols)
-                .withColumn("merge_action", F.lit("UPDATE"))
-            )
-            ret_parts.append(
-                out.filter(F.col("__act") == "d")
-                .select(*tcols)
-                .withColumn("merge_action", F.lit("DELETE"))
-            )
+        change.target = _tagged(joined, cases)
 
-    to_insert = None
-    if insert_clauses:
-        # source rows with no target match, restored to their natural names
-        ins0 = src.join(target, cond, "left_anti").select(
-            *[F.col(f"__src_{c}").alias(c) for c in src_cols]
-        )
-
-        def _ins_expr(text: str) -> "F.Column":
-            # inside an insert clause bare/qualified names are SOURCE columns
-            return F.expr(translate(_qualified_rewrite(text, u_names, set())))
-
-        chain_pred = F.lit(False)
-        pieces = []
-        for kind, ctext, action in insert_clauses:
-            pred = F.coalesce(_ins_expr(ctext), F.lit(False)) if ctext else F.lit(True)
-            pred = pred & ~chain_pred
-            chain_pred = chain_pred | pred
-            au = action.upper()
-            if re.fullmatch(r"DO\s+NOTHING", au):
-                continue
-            im = re.match(
-                r"^INSERT\s*(?:\*|(?:\((?P<cols>[^)]*)\)\s*)?(?:VALUES\s*\((?P<vals>.+)\))?)?$",
-                action,
-                re.IGNORECASE | re.DOTALL,
-            )
-            if not im:
-                raise ValueError(f"unsupported MERGE INSERT action: {action[:60]}")
-            rows = ins0.filter(pred)
-            if im.group("vals"):
-                vals = [
-                    _ins_expr(v.strip()) for v in split_top(im.group("vals"))
-                ]
-                cols = (
-                    [c.strip() for c in im.group("cols").split(",")]
-                    if im.group("cols")
-                    else tcols
-                )
-                if len(vals) != len(cols):
-                    raise ValueError("MERGE INSERT column/value count mismatch")
-                named = dict(zip(cols, vals))
-                sel = [
-                    (
-                        named[c]
-                        if c in named
-                        else F.lit(None)
-                    ).cast(meta.spark_schema()[c].dataType).alias(c)
-                    for c in tcols
-                ]
-            else:
-                # INSERT / INSERT *: align by name, missing columns NULL
-                sel = [
-                    (
-                        F.col(c) if c in src_cols else F.lit(None)
-                    ).cast(meta.spark_schema()[c].dataType).alias(c)
-                    for c in tcols
-                ]
-            pieces.append(rows.select(*sel))
-        if pieces:
-            to_insert = pieces[0]
-            for p in pieces[1:]:
-                to_insert = to_insert.unionByName(p)
-            to_insert = to_insert.localCheckpoint(eager=True)
-            n_ins = _check_constraints(engine, table, to_insert)
-            if returning is not None and n_ins:
-                ret_parts.append(
-                    to_insert.withColumn("merge_action", F.lit("INSERT"))
-                )
-
-    if new_existing is not None and (n_upd or n_del):
-        final_rows = new_existing.select(*tcols)
-        _check_constraints_update(engine, table, final_rows)
-        if meta.partition_cols:
-            touched = (
-                out.filter(F.col("__act") != "keep")
-                .select(*meta.partition_cols)
-                .distinct()
-            )
-            parts = [tuple(r) for r in touched.collect()]
-            if parts:
-                member = _partition_membership(engine, table, parts)
-                kept_scoped = final_rows.filter(member)
-                surviving = {
-                    tuple(r)
-                    for r in kept_scoped.select(*meta.partition_cols)
-                    .distinct()
-                    .collect()
-                }
-                engine.catalog.overwrite_partitions(table, kept_scoped)
-                engine.catalog.drop_partition_dirs(
-                    table, [p for p in parts if p not in surviving]
-                )
+    # source rows with no target match, under their own names; inside an
+    # insert clause bare and qualified names are source columns
+    unmatched = _join(engine, j.src, j.target, j.on, "left_anti").select(
+        *[F.col(f"__src_{c}").alias(c) for c in j.src_cols]
+    )
+    taken = F.lit(False)
+    pieces = []
+    for kind, ctext, action in clauses:
+        if kind != "not_by_target":
+            continue
+        pred = (F.coalesce(j.src_value(ctext), F.lit(False)) if ctext else F.lit(True)) & ~taken
+        taken = taken | pred
+        if _DO_NOTHING_RE.fullmatch(action):
+            continue
+        im = _MERGE_INSERT_RE.match(action)
+        if not im:
+            raise ValueError(f"unsupported MERGE INSERT action: {action[:60]}")
+        if im.group("vals"):
+            vals = [j.src_value(v.strip()) for v in split_top(im.group("vals"))]
+            names = im.group("cols")
+            cols = _targets(meta, [c.strip() for c in names.split(",")] if names else None)
+            if len(vals) != len(cols):
+                raise ValueError("MERGE INSERT column/value count mismatch")
+            named = dict(zip(cols, vals))
         else:
-            engine.catalog.overwrite(table, final_rows)
-    if to_insert is not None and n_ins:
-        engine.catalog.append(table, to_insert)
+            # INSERT / INSERT *: by name
+            named = {c: F.col(c) for c in schema.names if c in j.src_cols}
+        # an unnamed column takes its declared default
+        pieces.append(unmatched.filter(pred).select(*[
+            named.get(f.name, _default_expr(meta, f.name)).cast(f.dataType).alias(f.name)
+            for f in schema.fields
+        ]))
+    if pieces:
+        change.inserts = reduce(DataFrame.unionByName, pieces)
+    return change
 
-    n = n_upd + n_del + n_ins
-    if returning is not None:
-        if not ret_parts:
-            ret_parts.append(
-                engine.catalog.read(table).limit(0)
-                .withColumn("merge_action", F.lit(None).cast("string"))
-            )
-        affected = ret_parts[0]
-        for p in ret_parts[1:]:
-            affected = affected.unionByName(p)
-        returning = re.sub(r"\bmerge_action\s*\(\s*\)", "merge_action", returning,
-                          flags=re.IGNORECASE)
-        return n, _apply_returning(affected, returning)
-    return n
+
+# ---- the one writer ----------------------------------------------------------
+
+
+def _pinned(engine: "Engine", df: DataFrame) -> DataFrame:
+    """``df``'s rows as a local relation: collected once, read later with
+    no job and unchanged by the write that follows."""
+    jdf = df._jdf
+    local = engine.spark._jsparkSession.createDataFrame(jdf.collectAsList(), jdf.schema())
+    return DataFrame(local, engine.spark)
+
+
+def _returning_rows(engine: "Engine", ch: _Change, tcols: list[str], returning: str) -> DataFrame:
+    """The RETURNING list over the rows the statement changes: updated
+    rows as they become, deleted rows as they were, inserted rows."""
+    action = F.when(F.col("__act") == "u", "UPDATE").otherwise("DELETE")
+    parts = []
+    if ch.target is not None:
+        parts.append(ch.target.filter(F.col("__act") != "keep")
+                     .select(*tcols, action.alias("merge_action")))
+    if ch.inserts is not None:
+        parts.append(ch.inserts.select(*tcols, F.lit("INSERT").alias("merge_action")))
+    if parts:
+        affected = reduce(DataFrame.union, parts)
+    else:
+        affected = engine.catalog.read(ch.table).select(
+            *tcols, F.lit(None).cast("string").alias("merge_action")).limit(0)
+    if not ch.merge:
+        affected = affected.drop("merge_action")
+    returning = _MERGE_ACTION_RE.sub("merge_action", returning)
+    return _pinned(engine, affected.selectExpr(*[translate(i) for i in split_top(returning)]))
+
+
+_MERGE_ACTION_RE = re.compile(r"\bmerge_action\s*\(\s*\)", re.IGNORECASE)
+
+
+def _write(engine: "Engine", ch: _Change, returning: str | None):
+    """Apply a compiled statement to its table: one aggregate counts the
+    updates and deletes (per partition of a partitioned table), the
+    inserted rows are checked with ``_check_constraints`` and the new state
+    with ``_check_constraints_update``, the RETURNING rows are taken, and
+    the catalog is called once: ``append`` when only rows are added,
+    otherwise a rewrite of the surviving and new rows, scoped to the
+    touched partitions of a partitioned table. Returns rows_affected and
+    the RETURNING rows (None without RETURNING)."""
+    meta = engine.catalog.tables[ch.table]
+    tcols = [c["name"] for c in meta.columns]
+    pcols = meta.partition_cols
+    n_upd = n_del = 0
+    touched: list[tuple] = []
+    if ch.target is not None:
+        act = F.col("__act")
+        aggs = [F.count_if(act == "u").alias("__u"), F.count_if(act == "d").alias("__d")]
+        if ch.twice:
+            hit = F.col("__src_match").isNotNull()
+            aggs += [F.count_if(hit), F.count_distinct(F.when(hit, F.col("__tid")))]
+        # only changed rows, so a WHERE on partition columns prunes the
+        # scan; partition values as Spark names their directories
+        scan = ch.target if ch.twice else ch.target.filter(act != "keep")
+        keys = [F.col(c).cast("string").alias(c) for c in pcols]
+        rows = scan.groupBy(*keys).agg(*aggs).collect()
+        if ch.twice and any(r[-2] != r[-1] for r in rows):
+            raise ValueError(ch.twice)
+        n_upd, n_del = sum(r["__u"] for r in rows), sum(r["__d"] for r in rows)
+        touched = [tuple(r[: len(pcols)]) for r in rows if r["__u"] or r["__d"]]
+    n_ins = 0 if ch.inserts is None else _check_constraints(engine, ch.table, ch.inserts)
+    added = ch.inserts if n_ins else None
+    if n_upd or n_del:
+        survivors = ch.target.filter(F.col("__act") != "d").select(*tcols)
+        state = survivors if added is None else survivors.unionByName(added)
+        _check_constraints_update(engine, ch.table, state, ch.assigned if n_upd else set(),
+                                  deleted=bool(n_del))
+    result = None if returning is None else _returning_rows(engine, ch, tcols, returning)
+    if (n_upd or n_del) and pcols:
+        scoped = survivors.filter(_membership(pcols, touched))
+        engine.catalog.overwrite_partitions(
+            ch.table, scoped if added is None else scoped.unionByName(added), touched
+        )
+    elif n_upd or n_del:
+        engine.catalog.overwrite(ch.table, state)
+    elif added is not None:
+        engine.catalog.append(ch.table, added)
+    return n_upd + n_del + n_ins, result
+
+
+def _membership(pcols: list[str], parts: list[tuple]):
+    """Whether a row lies in one of ``parts`` (partition values as
+    strings, None for NULL)."""
+    return reduce(lambda a, b: a | b, [
+        reduce(lambda a, b: a & b,
+               [F.col(c).cast("string").eqNullSafe(F.lit(v)) for c, v in zip(pcols, tup)])
+        for tup in parts
+    ], F.lit(False))
+
+
+def execute(engine: "Engine", sql: str):
+    """Run an INSERT, UPDATE, DELETE, TRUNCATE or MERGE statement, with an
+    optional trailing RETURNING list. Returns rows_affected and the
+    RETURNING rows (None without RETURNING)."""
+    body, returning = split_returning(sql.strip())
+    verb = body.split(None, 1)[0].upper()
+    if verb == "INSERT":
+        change = _compile_insert(engine, body, returning is not None)
+    elif verb == "UPDATE":
+        change = _compile_update(engine, body)
+    elif verb == "MERGE":
+        change = _compile_merge(engine, body)
+    else:
+        change = _compile_delete(engine, body)
+    return _write(engine, change, returning)

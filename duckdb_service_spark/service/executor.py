@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from .catalog import Catalog
 from .dialect import translate
-from .dml import delete_rows, insert_rows, update_rows
+from . import dml
 from .sql_routing import memoize_from_probes
 from .sqltext import close_of, find_top, literal_mask, split_top, strip_outer_parens
 
@@ -312,9 +312,9 @@ class Engine:
         return out if m.group(1) else out.distinct()
 
     def _resolve_view(self, name: str) -> DataFrame:
-        from .dml import _resolve_relation
-
-        return _resolve_relation(self, name)
+        if name in self.catalog.tables:
+            return self.catalog.read(name)
+        return self.spark.table(name)
 
     _LIMIT_PERCENT_RE = re.compile(
         r"\bLIMIT\s+(\d+(?:\.\d+)?)\s*(?:%|PERCENT)\s*$", re.IGNORECASE
@@ -872,10 +872,6 @@ class Engine:
             self.catalog.drop_table(m.group(1), if_exists=True)
             return self.execute(f"CREATE TABLE {m.group(1)} {m.group(2)}")
 
-        m = re.match(r"^TRUNCATE\s+(?:TABLE\s+)?(\w+)$", stripped, re.IGNORECASE)
-        if m:
-            return ExecuteOutcome(delete_rows(self, f"DELETE FROM {m.group(1)}"))
-
         m = re.match(r"^DROP\s+SEQUENCE\s+(IF\s+EXISTS\s+)?(\w+)$", stripped, re.IGNORECASE)
         if m:
             name = m.group(2)
@@ -1035,82 +1031,9 @@ class Engine:
             self.catalog.drop_index(m.group(2), if_exists=bool(m.group(1)))
             return ExecuteOutcome(0)
 
-        if upper.startswith(("INSERT", "UPDATE", "DELETE", "MERGE")):
-            from .dml import split_returning
-
-            body, returning = split_returning(stripped)
-            if returning is not None:
-                stripped, upper = body, body.upper()
-
-
-        # DuckDB shorthands (verified): INSERT OR IGNORE ≡ ON CONFLICT DO
-        # NOTHING; INSERT OR REPLACE ≡ ON CONFLICT DO UPDATE SET <every
-        # non-key column> = excluded.<col>
-        m = re.match(r"^INSERT\s+OR\s+(IGNORE|REPLACE)\s+INTO\s+(\w+)\b(.*)$",
-                     stripped, re.IGNORECASE | re.DOTALL)
-        if m:
-            mode, table, rest = m.group(1).upper(), m.group(2), m.group(3)
-            if table not in self.catalog.tables:
-                raise ValueError(f"table {table} does not exist")
-            if mode == "IGNORE":
-                stripped = f"INSERT INTO {table}{rest} ON CONFLICT DO NOTHING"
-            else:
-                meta = self.catalog.tables[table]
-                keys = set(meta.pk_cols) | set(meta.partition_cols)
-                sets = ", ".join(
-                    f"{c['name']} = excluded.{c['name']}"
-                    for c in meta.columns
-                    if c["name"] not in keys
-                )
-                if not sets:
-                    stripped = f"INSERT INTO {table}{rest} ON CONFLICT DO NOTHING"
-                else:
-                    stripped = (
-                        f"INSERT INTO {table}{rest} ON CONFLICT DO UPDATE SET {sets}"
-                    )
-            upper = stripped.upper()
-
-        def _outcome(res) -> ExecuteOutcome:
-            if isinstance(res, tuple):
-                return ExecuteOutcome(res[0], returning=res[1])
-            return ExecuteOutcome(res)
-
-        if upper.startswith("MERGE"):
-            from .dml import merge_into
-
-            return _outcome(merge_into(self, stripped, returning=returning))
-
-        if upper.startswith("INSERT"):
-            from .dml import upsert_values
-
-            n_up = upsert_values(self, stripped)
-            if n_up is not None:
-                if returning is not None:
-                    raise ValueError(
-                        "RETURNING is not supported with ON CONFLICT DO UPDATE"
-                    )
-                return ExecuteOutcome(n_up)
-            return _outcome(insert_rows(self, stripped, returning=returning))
-
-        if upper.startswith("UPDATE"):
-            from .dml import update_from
-
-            n_uf = update_from(self, stripped)
-            if n_uf is not None:
-                if returning is not None:
-                    raise ValueError("RETURNING is not supported with UPDATE ... FROM")
-                return ExecuteOutcome(n_uf)
-            return _outcome(update_rows(self, stripped, returning=returning))
-
-        if upper.startswith("DELETE"):
-            from .dml import delete_using
-
-            n_du = delete_using(self, stripped)
-            if n_du is not None:
-                if returning is not None:
-                    raise ValueError("RETURNING is not supported with DELETE ... USING")
-                return ExecuteOutcome(n_du)
-            return _outcome(delete_rows(self, stripped, returning=returning))
+        if upper.startswith(("INSERT", "UPDATE", "DELETE", "MERGE", "TRUNCATE")):
+            n, returning = dml.execute(self, stripped)
+            return ExecuteOutcome(n, returning=returning)
 
         m = re.match(
             r"^COPY\s+(?:(\w+)|\((.+)\))\s+TO\s+'([^']+)'\s*(?:\(\s*(.*)\))?$",

@@ -247,3 +247,82 @@ def test_random_constraint_sequences_match_duckdb(pair_fk, seed):
             failures += 1
     # the script must exercise BOTH paths meaningfully
     assert mutations >= 8 and failures >= 4, (mutations, failures)
+
+
+@pytest.fixture()
+def pair_join(spark):
+    """The PRIMARY KEY table ``t`` for ON CONFLICT DO UPDATE, and a
+    key-less ``n`` with a source ``s`` for UPDATE…FROM and DELETE…USING:
+    DuckDB 1.0.0 raises a spurious duplicate-key error for UPDATE…FROM on
+    a PRIMARY KEY table whose row was updated earlier in the session."""
+    from duckdb_service_spark.service.executor import Engine
+
+    eng = Engine(spark, tempfile.mkdtemp(prefix="wh_dmlfuzz_join_"))
+    con = duckdb.connect()
+    for ddl in (
+        "CREATE TABLE t (id INTEGER PRIMARY KEY, a INTEGER, "
+        "b TEXT DEFAULT 'x', c DOUBLE DEFAULT 1.5)",
+        "CREATE TABLE n (id INTEGER, a INTEGER, b TEXT DEFAULT 'x')",
+        "CREATE TABLE s (id INTEGER, a INTEGER)",
+        "INSERT INTO s SELECT i, i % 5 - 2 FROM range(1, 30, 2) r(i)",
+    ):
+        eng.execute(ddl)
+        con.execute(ddl)
+    return eng, con
+
+
+def _gen_join_statement(rng):
+    kind = rng.randint(0, 9)
+    if kind <= 3:  # ON CONFLICT DO UPDATE, sometimes a repeated key
+        ids = [rng.randint(1, 30) for _ in range(rng.randint(1, 3))]
+        vals = ", ".join(f"({i}, {rng.randint(-5, 5)}, 'u{rng.randint(0, 9)}', "
+                         f"{rng.randint(0, 8)}.5)" for i in ids)
+        sets = rng.choice([
+            "a = excluded.a",
+            "a = a + excluded.a, b = b || excluded.b",
+            "c = DEFAULT, b = excluded.b",
+            "b = 'w' WHERE a < 0",
+        ])
+        return f"INSERT INTO t VALUES {vals} ON CONFLICT (id) DO UPDATE SET {sets}"
+    if kind <= 5:  # rows for the key-less table
+        vals = ", ".join(f"({rng.randint(1, 30)}, {rng.randint(-5, 5)}, 'v{rng.randint(0, 9)}')"
+                         for _ in range(rng.randint(1, 4)))
+        return f"INSERT INTO n VALUES {vals}"
+    if kind <= 7:  # UPDATE…FROM
+        sets = rng.choice(["a = s.a", "a = n.a + s.a, b = b || 'f'", "b = DEFAULT"])
+        extra = rng.choice(["", f" AND s.a > {rng.randint(-3, 2)}",
+                            f" AND n.a < {rng.randint(-2, 4)}"])
+        return f"UPDATE n SET {sets} FROM s WHERE n.id = s.id{extra}"
+    extra = rng.choice(["", f" AND s.a >= {rng.randint(-2, 2)}",
+                        f" AND n.b = 'v{rng.randint(0, 9)}'"])
+    return f"DELETE FROM n USING s WHERE n.id = s.id{extra}"
+
+
+@pytest.mark.parametrize("seed", [3, 17, 40])
+def test_random_upsert_and_join_dml_match_duckdb(pair_join, seed):
+    eng, con = pair_join
+    rng = random.Random(seed)
+    mutations = 0
+    for step in range(24):
+        stmt = _gen_join_statement(rng)
+        ok_spark = ok_duck = True
+        err_s = err_d = None
+        try:
+            out_s = eng.execute(stmt).rows_affected
+        except Exception as e:  # noqa: BLE001 — outcome-compared below
+            ok_spark, err_s = False, e
+        try:
+            out_d = con.execute(stmt).fetchall()[0][0]
+        except Exception as e:  # noqa: BLE001
+            ok_duck, err_d = False, e
+        assert ok_spark == ok_duck, (
+            f"step {step}: outcome mismatch for {stmt!r}: spark={err_s!r} duck={err_d!r}"
+        )
+        if ok_spark:
+            mutations += 1
+            assert out_s == out_d, f"step {step}: rows affected of {stmt!r}"
+            for table in ("t", "n"):
+                sql = f"SELECT * FROM {table} ORDER BY ALL"
+                got = [tuple(r) for r in eng.query_df(sql).collect()]
+                assert got == con.execute(sql).fetchall(), f"step {step} after {stmt!r}"
+    assert mutations >= 12

@@ -219,14 +219,16 @@ def test_write_rebuilds_only_the_views_over_the_written_table(pair):
 
 # ---- lint: only the catalog caches ----------------------------------------
 
-_CACHE_CALLS = {"cache", "persist", "unpersist"}
+# a localCheckpoint pins its rows like a cache and nothing releases them
+_CACHE_CALLS = {"cache", "persist", "unpersist", "localCheckpoint"}
 # the catalog's registration and release helpers
 _OWNERS = {("catalog.py", "_register"), ("catalog.py", "_uncache")}
 
 
 def _cache_calls(node: ast.AST, fn: str = "<module>"):
     """Yield (line, enclosing function) of each ``.cache()``,
-    ``.persist(`` or ``.unpersist(`` call under ``node``."""
+    ``.persist(``, ``.unpersist(`` or ``.localCheckpoint(`` call under
+    ``node``."""
     for child in ast.iter_child_nodes(node):
         if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
             yield from _cache_calls(child, child.name)

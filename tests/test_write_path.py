@@ -84,6 +84,40 @@ def test_write_job_budgets(spark, pair, sf_dir):
     _same(pair, MUT_READ)
 
 
+K = "CREATE TABLE k (k INTEGER PRIMARY KEY, v VARCHAR, g INTEGER DEFAULT 7)"
+K_READ = "SELECT * FROM k ORDER BY k"
+SRC = ("CREATE TABLE u (k INTEGER, v VARCHAR)", "INSERT INTO u VALUES (2, 'x'), (5, 'y')")
+
+
+@pytest.mark.parametrize("sql, budget", [
+    ("INSERT INTO k VALUES (2, 'B', 0), (3, 'c', 0) ON CONFLICT DO UPDATE SET v = excluded.v", 4),
+    ("INSERT INTO k VALUES (2, 'B', 0), (3, 'c', 0) ON CONFLICT DO NOTHING", 3),
+    ("UPDATE k SET v = u.v FROM u WHERE k.k = u.k", 3),
+    ("DELETE FROM k USING u WHERE k.k = u.k", 3),
+])
+def test_join_and_upsert_job_budgets(spark, pair, sql, budget):
+    """ON CONFLICT DO UPDATE runs at most 4 jobs (the count, the check of
+    the inserted rows, the rewrite and the cache fill), DO NOTHING,
+    UPDATE…FROM and DELETE…USING at most 3."""
+    _both(pair, K, "INSERT INTO k VALUES (1, 'a', 1), (2, 'b', 2)", *SRC)
+    _budgeted(spark, pair, sql, budget)
+    _same(pair, K_READ)
+
+
+def test_merge_job_budget(spark, pair):
+    """A MERGE that updates one row and inserts one runs at most 4 jobs.
+    DuckDB 1.0 has no MERGE: it runs the same change as an upsert."""
+    eng, con = pair
+    _both(pair, K, "INSERT INTO k VALUES (1, 'a', 1), (2, 'b', 2)", *SRC)
+    n, jobs, _ = run_counted(spark, eng, "MERGE INTO k USING u ON k.k = u.k "
+                                         "WHEN MATCHED THEN UPDATE SET v = u.v "
+                                         "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (u.k, u.v)")
+    con.execute("INSERT INTO k (k, v) SELECT k, v FROM u ON CONFLICT DO UPDATE SET v = excluded.v")
+    assert n == 2
+    assert jobs <= 4, jobs
+    _same(pair, K_READ)
+
+
 def test_insert_violations_raise_after_one_check_query(spark, pair):
     """A rejected INSERT into a PRIMARY KEY table runs one Spark job (the
     check query) and leaves the table as it was."""
