@@ -1,5 +1,6 @@
-"""Engine catalog: one warehouse directory, one parquet directory per table,
-one JSON schema sidecar carrying declared constraints.
+"""Engine catalog: one warehouse directory; per table, a directory of
+parquet files and a manifest (``<name>.meta.json``) naming its schema,
+declared constraints and live files.
 
 Mirrors the reference's data model (§1.1): DuckDB file per node
 (db/db.go:17) → warehouse dir per engine; EXPORT/IMPORT DATABASE
@@ -9,22 +10,40 @@ trivial here because tables already ARE parquet.
 Constraint metadata (NOT NULL / PRIMARY KEY from CREATE TABLE, the exact DDL
 the reference smoke client uses, cmd/cli/client.go:101-103) is recorded here
 and enforced by dml.py — Spark/Parquet doesn't enforce either (SURVEY §7.5).
+
+Every change to a table, DDL included, is one commit (``Catalog._commit``):
+
+1. Spark writes the new rows as new files into ``<name>/_stage``;
+2. the commit moves them into the table's directory (file names are unique
+   per write, so nothing live is overwritten);
+3. one ``os.replace`` of the manifest makes the new file list the table;
+4. files the manifest no longer names are deleted, except those an open
+   transaction pins.
+
+A crash before step 3 leaves the old version and after it the new one; the
+sweep at startup deletes whatever files the crash left unreferenced. The
+reference gets the same atomicity from DuckDB's WAL (store/store.go:242-250).
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
 import shutil
 import time
-from collections.abc import Callable
-from dataclasses import dataclass, field
+from collections.abc import Callable, Iterable
+from dataclasses import asdict, dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 _WORD_RE = re.compile(r"\w+")
+_META = ".meta.json"
+_STAGE = "_stage"  # where Spark writes a commit's new files
+# the warehouse-wide JSON files beside the manifests: ``_<kind>.json``
+_SIDECARS = ("sequences", "schemas", "types", "macros", "indexes", "comments")
 
 _DUCK_TO_SPARK = {
     "BOOLEAN": T.BooleanType(),
@@ -106,6 +125,8 @@ class TableMeta:
     # in the column dicts
     table_checks: list[str] = field(default_factory=list)
     unique_sets: list = field(default_factory=list)
+    # the live data files, relative to ``path``
+    files: list[str] = field(default_factory=list)
 
     def spark_schema(self) -> T.StructType:
         return T.StructType(
@@ -138,8 +159,44 @@ class TableMeta:
         return [c["name"] for c in self.columns if c["not_null"] or c["primary_key"]]
 
 
+def _write_json(path: str, value) -> None:
+    """The one writer of the warehouse's JSON files (manifests, sidecars,
+    the transaction record): ``value`` goes to a file beside ``path``,
+    which one ``os.replace`` then puts in its place, so a write that dies
+    leaves the old content or the new, never a torn file. None removes
+    ``path``."""
+    if value is None:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(path)
+        return
+    part = path + ".part"
+    with open(part, "w") as f:
+        json.dump(value, f)
+    os.replace(part, path)
+
+
+def _read_json(path: str):
+    """A JSON file's content, None when there is no file."""
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return json.load(f)
+
+
+def _data_files(root: str) -> list[str]:
+    """The parquet data files under ``root``, relative to it: the files a
+    write staged, or the files of a table whose manifest has no file list
+    (a warehouse written before manifests named their files)."""
+    found = []
+    for r, dirs, files in os.walk(root):
+        dirs[:] = [d for d in dirs if d[0] not in "._"]
+        found += [os.path.relpath(os.path.join(r, f), root)
+                  for f in files if f.endswith(".parquet") and f[0] not in "._"]
+    return sorted(found)
+
+
 class Catalog:
-    """Warehouse of parquet tables + sidecar metadata + temp views."""
+    """Warehouse of parquet tables + manifests + sidecar metadata + temp views."""
 
     def __init__(
         self, spark: SparkSession, warehouse_dir: str, query_df: Callable[[str], DataFrame]
@@ -157,83 +214,157 @@ class Catalog:
         self.indexes: dict[str, dict] = {}  # name -> {table, columns, unique}
         self.types: dict[str, list[str]] = {}  # ENUM name -> allowed values
         self.schemas: set[str] = set()  # user schemas (tables keyed schema__name)
+        self.comments: dict[str, str] = {}  # "kind:target" -> COMMENT ON text
         self._frames: dict[str, DataFrame] = {}  # table -> its registered scan
         self._rows: dict[str, int] = {}  # cached table -> rows its fill counted
-        self._load_existing()
+        # open transaction: the views at BEGIN, and per table the files
+        # BEGIN's manifests name, which no commit may delete
+        self._txn_views: dict[str, str] | None = None
+        self._pins: dict[str, set[str]] = {}
+        self._open()
 
     # -- persistence -------------------------------------------------------
 
     def _meta_path(self, name: str) -> str:
-        return os.path.join(self.dir, f"{name}.meta.json")
+        return os.path.join(self.dir, name + _META)
 
-    def _save_meta(self, meta: TableMeta) -> None:
-        with open(self._meta_path(meta.name), "w") as f:
-            json.dump(
-                {
-                    "name": meta.name,
-                    "columns": meta.columns,
-                    "created_at": meta.created_at,
-                    "partition_cols": meta.partition_cols,
-                },
-                f,
-            )
+    def _sidecar_path(self, kind: str) -> str:
+        return os.path.join(self.dir, f"_{kind}.json")
 
-    def _load_existing(self) -> None:
-        self._recover_txn()
-        if os.path.exists(self._seq_path()):
-            with open(self._seq_path()) as f:
-                self.sequences.update(json.load(f))
-        if os.path.exists(self._indexes_path()):
-            with open(self._indexes_path()) as f:
-                self.indexes.update(json.load(f))
-        if os.path.exists(self._schemas_path()):
-            with open(self._schemas_path()) as f:
-                self.schemas.update(json.load(f))
-        if os.path.exists(self._types_path()):
-            with open(self._types_path()) as f:
-                self.types.update(json.load(f))
-        if os.path.exists(self._macros_path()):
-            from .macros import MacroDef
+    def _txn_path(self) -> str:
+        return os.path.join(self.dir, "_txn.json")
 
-            with open(self._macros_path()) as f:
-                for d in json.load(f).values():
-                    m = MacroDef.from_json(d)
-                    self.macros[m.name] = m
+    @staticmethod
+    def _manifest(meta: TableMeta) -> dict:
+        return {k: v for k, v in asdict(meta).items() if k != "path"}
+
+    def _sidecar(self, kind: str):
+        """One sidecar's content as JSON."""
+        if kind == "schemas":
+            return sorted(self.schemas)
+        if kind == "macros":
+            return {n: m.to_json() for n, m in self.macros.items()}
+        return getattr(self, kind)
+
+    def _save(self, kind: str) -> None:
+        _write_json(self._sidecar_path(kind), self._sidecar(kind))
+
+    def _load(self) -> None:
+        """Read every sidecar and every manifest."""
+        from .macros import MacroDef
+
+        saved = {kind: _read_json(self._sidecar_path(kind)) or {} for kind in _SIDECARS}
+        self.sequences = saved["sequences"]
+        self.schemas = set(saved["schemas"])
+        self.types = saved["types"]
+        self.macros = {m.name: m for m in map(MacroDef.from_json, saved["macros"].values())}
+        self.indexes = saved["indexes"]
+        self.comments = saved["comments"]
+        self.tables = {}
+        for fn in sorted(os.listdir(self.dir)):
+            if fn.endswith(_META):
+                d = _read_json(os.path.join(self.dir, fn))
+                path = os.path.join(self.dir, d["name"])
+                if "files" not in d:
+                    d["files"] = _data_files(path)
+                # the scan's basePath: it exists even with no file
+                os.makedirs(path, exist_ok=True)
+                self.tables[d["name"]] = TableMeta(path=path, **d)
+
+    def _open(self) -> None:
+        """Bring the warehouse to its last commit and register it: undo the
+        transaction a crash (or ROLLBACK) left open, read the sidecars and
+        manifests, sweep every table directory, register every table and
+        view."""
+        if os.path.exists(self._txn_path()):
+            self._restore()
+        self._load()
         for fn in os.listdir(self.dir):
-            if fn.endswith(".meta.json"):
-                with open(os.path.join(self.dir, fn)) as f:
-                    d = json.load(f)
-                meta = TableMeta(
-                    name=d["name"],
-                    columns=d["columns"],
-                    path=os.path.join(self.dir, d["name"]),
-                    created_at=d.get("created_at", 0),
-                    partition_cols=d.get("partition_cols", []),
-                    table_checks=d.get("table_checks", []),
-                    unique_sets=d.get("unique_sets", []),
-                )
-                self.tables[meta.name] = meta
-        self._register(*[m for m in self.tables.values() if os.path.exists(m.path)])
+            if _WORD_RE.fullmatch(fn) and os.path.isdir(os.path.join(self.dir, fn)):
+                self._sweep(fn)
+        self._register(*self.tables.values(), every_view=True)
+
+    def _stage(self, meta: TableMeta, rows: DataFrame) -> list[str]:
+        """Step 1 of a commit: Spark writes ``rows``, generated columns
+        computed, as new files into the table's staging directory. Returns
+        their paths relative to it, which are their paths in the table once
+        committed."""
+        stage = os.path.join(meta.path, _STAGE)
+        w = self._apply_generated(meta, rows).write.mode("overwrite")
+        if meta.partition_cols:
+            w = w.partitionBy(*meta.partition_cols)
+        try:
+            w.parquet(stage)
+        except Exception:
+            self._sweep(meta.name)
+            raise
+        return _data_files(stage)
+
+    def _commit(
+        self,
+        name: str,
+        meta: TableMeta | None,
+        rows: DataFrame | None = None,
+        keep: Iterable[str] = (),
+    ) -> None:
+        """The one way a table changes on disk. The new version is ``meta``
+        (None drops the table) holding the files in ``keep`` plus new files
+        of ``rows``: they are staged, moved into place, and named in the
+        manifest that one atomic replace commits. The version is registered
+        and the files it no longer names are swept."""
+        root = os.path.join(self.dir, name)
+        if meta is not None:
+            os.makedirs(root, exist_ok=True)
+        staged = [] if rows is None else self._stage(meta, rows)
+        for f in staged:
+            os.makedirs(os.path.dirname(os.path.join(root, f)), exist_ok=True)
+            os.rename(os.path.join(root, _STAGE, f), os.path.join(root, f))
+        if meta is not None:
+            meta = replace(meta, files=[*keep, *staged])
+        _write_json(self._meta_path(name), None if meta is None else self._manifest(meta))
+        if meta is None:
+            self.tables.pop(name, None)
+            self._release(name)
+        else:
+            self.tables[name] = meta
+            self._register(meta)
+        self._sweep(name)
+
+    def _sweep(self, name: str) -> None:
+        """Delete what under a table's directory neither its manifest nor an
+        open transaction names: the staging directory, superseded files,
+        and directories left empty. The directory of a table without a
+        manifest and without pinned files goes whole."""
+        root = os.path.join(self.dir, name)
+        meta = self.tables.get(name)
+        live = set(meta.files if meta else ()) | self._pins.get(name, set())
+        if meta is None and not live:
+            shutil.rmtree(root, ignore_errors=True)
+            return
+        shutil.rmtree(os.path.join(root, _STAGE), ignore_errors=True)
+        for r, _dirs, files in os.walk(root, topdown=False):
+            for f in files:
+                if os.path.relpath(os.path.join(r, f), root) not in live:
+                    os.remove(os.path.join(r, f))
+            if r != root and not os.listdir(r):
+                os.rmdir(r)
 
     def _register(self, *metas: TableMeta, every_view: bool = False) -> None:
         """Scan each table once and make that frame the one ``read``
         returns and its temp view holds. A table within one scan split is
         cached here, built before this returns: under AQE a cache not yet
-        built runs as a job of its own inside the first read. Every write
-        ends here, so the cache lives exactly as long as the file listing
-        it was read from. Then the views that name these tables are
-        rebuilt (every view with ``every_view``)."""
+        built runs as a job of its own inside the first read. Every commit
+        ends here, so the cache lives exactly as long as the file list it
+        was read from. Spark matches cache entries by plan, and the plan
+        names the files, so an entry another engine made for the same
+        files holds the same rows. Then the views that name these tables
+        are rebuilt (every view with ``every_view``)."""
         for meta in metas:
             self._uncache(meta.name)
             frame, single_split = self._scan(meta)
             if single_split:
-                # Spark's cache is shared by every session in the JVM and
-                # matched by plan (path and schema), so another engine's
-                # entry for this table, or our own from before the write,
-                # would answer instead of the files: drop it first
-                frame.unpersist()
                 frame.cache()
-                if self._data_bytes(meta.path):
+                if meta.files:
                     # one job fills the cache and counts its rows; a
                     # DataFrame count() would run the fill and the count
                     # as two
@@ -297,33 +428,19 @@ class Catalog:
         return {w.lower() for w in _WORD_RE.findall(STRING_RE.sub(" ", body))}
 
     def refresh(self) -> None:
-        """Re-read the warehouse sidecars written by ANOTHER engine
+        """Re-read the sidecars and manifests written by ANOTHER engine
         instance on the same directory and re-register this session's
         temp views — the reference's read-scaling surface (any node
         serves reads once the log applies, store/store.go:196-199;
         README.md:13-15 "scales the cluster to enhance read
-        performance"). Spark's JVM-wide shared file-status cache can
-        serve a stale parquet listing for a path this session already
-        read, so each table path is invalidated first; fresh relations
-        then see files committed by the writer after this replica
-        opened."""
+        performance"). Each manifest names its files, so the fresh
+        relations read exactly the writer's last commits. A replica
+        neither sweeps nor undoes the writer's open transaction."""
         for name in list(self._frames):
             self._uncache(name)
-        for meta in self.tables.values():
-            try:
-                self.spark.catalog.refreshByPath(meta.path)
-            except Exception:
-                pass
-        self.tables.clear()
         self.views.clear()
-        self.sequences.clear()
-        self.macros.clear()
-        self.indexes.clear()
-        self.types.clear()
-        self.schemas.clear()
-        # _load_existing re-registers every table with a freshly-listed
-        # relation (the paths above were just invalidated)
-        self._load_existing()
+        self._load()
+        self._register(*self.tables.values())
 
     # -- DDL ---------------------------------------------------------------
 
@@ -337,10 +454,10 @@ class Catalog:
         unique_sets: list | None = None,
         rows: DataFrame | None = None,
     ) -> None:
-        """Create a table, empty or holding ``rows`` (CREATE TABLE AS). The
-        rows are written before the table is recorded, so a failed write
-        leaves no directory and no sidecar behind, and the table is
-        registered once."""
+        """Create a table, empty or holding ``rows`` (CREATE TABLE AS), in
+        one commit: a failed write leaves no directory and no manifest
+        behind. Without rows no data file is written, so CREATE TABLE runs
+        no job."""
         if name in self.tables:
             if if_not_exists:
                 return
@@ -358,23 +475,7 @@ class Catalog:
             table_checks=table_checks or [],
             unique_sets=unique_sets or [],
         )
-        # a directory left by an earlier engine is not this table's data
-        shutil.rmtree(meta.path, ignore_errors=True)
-        # without rows no data file is written: the table reads its empty
-        # directory with the declared schema, so CREATE TABLE runs no job
-        os.makedirs(meta.path)
-        if rows is not None:
-            w = self._apply_generated(meta, rows).write.mode("overwrite")
-            if partition_cols:
-                w = w.partitionBy(*partition_cols)
-            try:
-                w.parquet(meta.path)
-            except Exception:
-                shutil.rmtree(meta.path, ignore_errors=True)
-                raise
-        self.tables[name] = meta
-        self._save_meta(meta)
-        self._register(meta)
+        self._commit(name, meta, rows)
 
     def drop_table(self, name: str, if_exists: bool = False) -> None:
         if name not in self.tables:
@@ -384,19 +485,13 @@ class Catalog:
                     self._register_views({name})
                 return
             raise ValueError(f"table {name} does not exist")
-        meta = self.tables.pop(name)
         # dependent indexes go with the table (DuckDB behavior)
         doomed_idx = [n for n, d in self.indexes.items() if d["table"] == name]
         for n in doomed_idx:
             del self.indexes[n]
         if doomed_idx:
-            self._save_indexes()
-        shutil.rmtree(meta.path, ignore_errors=True)
-        try:
-            os.remove(self._meta_path(name))
-        except FileNotFoundError:
-            pass
-        self._release(name)
+            self._save("indexes")
+        self._commit(name, None)
 
     def alter_table(self, name: str, action: str, **kw) -> None:
         """Schema evolution. ADD/RENAME are metadata-only: parquet is
@@ -407,15 +502,15 @@ class Catalog:
         if name not in self.tables:
             raise ValueError(f"table {name} does not exist")
         meta = self.tables[name]
+        columns = [dict(c) for c in meta.columns]
+        rows = None  # the rewritten table; None keeps its files
         if action == "add":
-            if any(c["name"] == kw["column"] for c in meta.columns):
+            if any(c["name"] == kw["column"] for c in columns):
                 raise ValueError(f"column {kw['column']} already exists")
             parse_type(kw["type"])  # validate
             col = {"name": kw["column"], "type": kw["type"], "not_null": False, "primary_key": False}
             if kw.get("default"):
                 col["default"] = kw["default"]
-            meta.columns.append(col)
-            if kw.get("default"):
                 # DuckDB fills EXISTING rows with the default too — a
                 # metadata-only add would null-fill them (divergence), so
                 # this one case materializes (one rewrite; plain ADD stays
@@ -424,34 +519,31 @@ class Catalog:
 
                 from .dialect import translate
 
-                df = self.read(name).withColumn(
+                rows = self.read(name).withColumn(
                     kw["column"],
                     F.expr(translate(kw["default"])).cast(parse_type(kw["type"])),
                 )
-                self.overwrite(name, df)
-            else:
-                self._register(meta)
+            columns.append(col)
         elif action == "drop":
-            if all(c["name"] != kw["column"] for c in meta.columns):
+            if all(c["name"] != kw["column"] for c in columns):
                 raise ValueError(f"column {kw['column']} does not exist")
             if kw["column"] in meta.pk_cols:
                 raise ValueError(f"cannot drop PRIMARY KEY column {kw['column']}")
             # materialize the narrowed schema so stale bytes don't resurface
-            df = self.read(name).drop(kw["column"])
-            meta.columns = [c for c in meta.columns if c["name"] != kw["column"]]
-            self.overwrite(name, df)
+            rows = self.read(name).drop(kw["column"])
+            columns = [c for c in columns if c["name"] != kw["column"]]
         elif action == "rename":
-            for c in meta.columns:
+            for c in columns:
                 if c["name"] == kw["column"]:
-                    df = self.read(name).withColumnRenamed(kw["column"], kw["to"])
+                    rows = self.read(name).withColumnRenamed(kw["column"], kw["to"])
                     c["name"] = kw["to"]
-                    self.overwrite(name, df)
                     break
             else:
                 raise ValueError(f"column {kw['column']} does not exist")
         else:
             raise ValueError(f"unsupported ALTER TABLE action: {action}")
-        self._save_meta(meta)
+        self._commit(name, replace(meta, columns=columns), rows,
+                     keep=meta.files if rows is None else ())
 
     def create_view(self, name: str, body: str) -> None:
         # a body that does not bind fails the CREATE
@@ -459,23 +551,9 @@ class Catalog:
         self.views[name] = body
         self._register_views({name})
 
-    def _seq_path(self) -> str:
-        return os.path.join(self.dir, "_sequences.json")
-
-    def _save_sequences(self) -> None:
-        with open(self._seq_path(), "w") as f:
-            json.dump(self.sequences, f)
-
     def create_sequence(self, name: str, start: int = 1) -> None:
         self.sequences[name] = start - 1
-        self._save_sequences()
-
-    def _schemas_path(self) -> str:
-        return os.path.join(self.dir, "_schemas.json")
-
-    def _save_schemas(self) -> None:
-        with open(self._schemas_path(), "w") as f:
-            json.dump(sorted(self.schemas), f)
+        self._save("sequences")
 
     def create_schema(self, name: str, if_not_exists: bool = False) -> None:
         if name in self.schemas:
@@ -483,7 +561,7 @@ class Catalog:
                 return
             raise ValueError(f"schema {name!r} already exists")
         self.schemas.add(name)
-        self._save_schemas()
+        self._save("schemas")
 
     def drop_schema(self, name: str, if_exists: bool = False, cascade: bool = False) -> None:
         if name not in self.schemas:
@@ -499,20 +577,13 @@ class Catalog:
         for t in contained:
             self.drop_table(t)
         self.schemas.discard(name)
-        self._save_schemas()
-
-    def _types_path(self) -> str:
-        return os.path.join(self.dir, "_types.json")
-
-    def _save_types(self) -> None:
-        with open(self._types_path(), "w") as f:
-            json.dump(self.types, f)
+        self._save("schemas")
 
     def create_type(self, name: str, values: list[str]) -> None:
         if name in self.types:
             raise ValueError(f"type {name!r} already exists")
         self.types[name] = values
-        self._save_types()
+        self._save("types")
 
     def drop_type(self, name: str, if_exists: bool = False) -> None:
         if name not in self.types:
@@ -529,14 +600,7 @@ class Catalog:
                 f"cannot drop type {name!r}: used by table(s) {', '.join(used_by)}"
             )
         del self.types[name]
-        self._save_types()
-
-    def _macros_path(self) -> str:
-        return os.path.join(self.dir, "_macros.json")
-
-    def _save_macros(self) -> None:
-        with open(self._macros_path(), "w") as f:
-            json.dump({n: m.to_json() for n, m in self.macros.items()}, f)
+        self._save("types")
 
     def create_macro(self, macro, or_replace: bool = False) -> None:
         """Persist a macro definition (DuckDB macros live in the database
@@ -544,7 +608,7 @@ class Catalog:
         if macro.name in self.macros and not or_replace:
             raise ValueError(f"macro {macro.name} already exists")
         self.macros[macro.name] = macro
-        self._save_macros()
+        self._save("macros")
 
     def drop_macro(self, name: str, if_exists: bool = False) -> None:
         if name not in self.macros:
@@ -552,7 +616,7 @@ class Catalog:
                 return
             raise ValueError(f"macro {name} does not exist")
         del self.macros[name]
-        self._save_macros()
+        self._save("macros")
 
     # -- indexes -----------------------------------------------------------
     #
@@ -563,13 +627,6 @@ class Catalog:
     # already drives through PARTITION BY. CREATE INDEX is therefore
     # accepted and recorded as catalog metadata (like CHECKPOINT's no-op)
     # so reference DDL scripts run end-to-end, and surfaced in /status.
-
-    def _indexes_path(self) -> str:
-        return os.path.join(self.dir, "_indexes.json")
-
-    def _save_indexes(self) -> None:
-        with open(self._indexes_path(), "w") as f:
-            json.dump(self.indexes, f)
 
     def create_index(
         self,
@@ -590,7 +647,7 @@ class Catalog:
         if missing:
             raise ValueError(f"index column(s) {missing} not in table {table}")
         self.indexes[name] = {"table": table, "columns": columns, "unique": unique}
-        self._save_indexes()
+        self._save("indexes")
 
     def drop_index(self, name: str, if_exists: bool = False) -> None:
         if name not in self.indexes:
@@ -598,8 +655,7 @@ class Catalog:
                 return
             raise ValueError(f"index {name} does not exist")
         del self.indexes[name]
-        self._save_indexes()
-
+        self._save("indexes")
     # -- ATTACH / DETACH ---------------------------------------------------
 
     def attach(self, path: str, alias: str | None = None) -> None:
@@ -620,12 +676,11 @@ class Catalog:
         self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {alias}")
         try:
             for fn in sorted(os.listdir(path)):
-                if not fn.endswith(".meta.json"):
+                if not fn.endswith(_META):
                     continue
-                with open(os.path.join(path, fn)) as f:
-                    d = json.load(f)
+                d = _read_json(os.path.join(path, fn))
                 name, tpath = d["name"], os.path.join(path, d["name"])
-                if self._has_data_files(tpath):
+                if _data_files(tpath):
                     self.spark.sql(
                         f"CREATE OR REPLACE VIEW {alias}.{name} AS "
                         f"SELECT * FROM parquet.`{tpath}`"
@@ -659,7 +714,7 @@ class Catalog:
         # persisted per call: sequences survive engine restarts (the
         # reference gets this from Raft-log replay; we get it from the
         # warehouse sidecar under single-writer discipline)
-        self._save_sequences()
+        self._save("sequences")
         return self.sequences[name]
 
     def reserve(self, name: str, n: int) -> int:
@@ -671,26 +726,15 @@ class Catalog:
             raise ValueError(f"sequence {name} does not exist")
         start = self.sequences[name] + 1
         self.sequences[name] += n
-        self._save_sequences()
+        self._save("sequences")
         return start
 
     # -- IO ----------------------------------------------------------------
 
-    def _has_data_files(self, path: str) -> bool:
-        for root, _dirs, files in os.walk(path):
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
-
-    @staticmethod
-    def _data_bytes(path: str) -> int:
-        """Total size of a non-partitioned table's parquet data files."""
-        with os.scandir(path) as it:
-            return sum(
-                e.stat().st_size
-                for e in it
-                if e.name.endswith(".parquet") and e.name[0] not in "._"
-            )
+    def _data_bytes(self, path: str) -> int:
+        """Total size of the live data files of the table stored at ``path``."""
+        meta = self.tables[os.path.basename(path)]
+        return sum(os.path.getsize(os.path.join(path, f)) for f in meta.files)
 
     def read(self, name: str) -> DataFrame:
         """The table's registered frame: the cached single-split scan, or
@@ -709,40 +753,41 @@ class Catalog:
         return n if n is not None else self.read(name).count()
 
     def _scan(self, meta: TableMeta) -> tuple[DataFrame, bool]:
-        """(a fresh read of the table's files, whether it fits one scan
-        split). A table without data files reads its empty directory with
-        the declared schema: an empty parquet relation, which starts no
-        Python worker."""
-        from pyspark.sql import functions as F
-
+        """(a fresh read of the files the table's manifest names, whether
+        they fit one scan split). Only those files are read, never the
+        directory, which may also hold files an open transaction pins; a
+        table without files reads no path at all, an empty relation that
+        starts no Python worker. ``basePath`` resolves partition columns
+        from the file paths and gives every table, empty ones included, a
+        plan, and so a cache entry, of its own."""
         schema = meta.spark_schema()
-        if not meta.partition_cols:
-            df = self.spark.read.schema(schema).parquet(meta.path)
-            # A table within one scan split already plans at most one scan
-            # task (several small files get one task each only through the
-            # per-file open cost), so reading it as one partition costs no
-            # parallelism. It also tells the planner the rows are
-            # SinglePartition, so a sort, aggregate or window over them
-            # needs no exchange. Larger tables keep the split-parallel scan.
-            # A table with no files keeps its scan of no partitions.
-            conf = self.spark._jsparkSession.sessionState().conf()  # noqa: SLF001
-            size = self._data_bytes(meta.path)
-            if size <= conf.filesMaxPartitionBytes():
-                return (df.coalesce(1) if size else df), True
-            return df, False
-        if not self._has_data_files(meta.path):
-            return self.spark.read.schema(schema).parquet(meta.path), False
-        # hive-partition discovery infers partition-column types from the
-        # directory names; re-select in declared order with declared types
-        df = self.spark.read.parquet(meta.path)
-        cols = [F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
-        return df.select(*cols), False
+        df = (
+            self.spark.read.schema(schema)
+            .option("basePath", meta.path)
+            .parquet(*[os.path.join(meta.path, f) for f in meta.files])
+        )
+        if meta.partition_cols:
+            # the scan puts partition columns last: declared order
+            return df.select(*schema.fieldNames()), False
+        # A table within one scan split already plans at most one scan
+        # task (several small files get one task each only through the
+        # per-file open cost), so reading it as one partition costs no
+        # parallelism. It also tells the planner the rows are
+        # SinglePartition, so a sort, aggregate or window over them
+        # needs no exchange. Larger tables keep the split-parallel scan.
+        # A table with no files keeps its scan of no partitions.
+        conf = self.spark._jsparkSession.sessionState().conf()  # noqa: SLF001
+        size = self._data_bytes(meta.path)
+        if size <= conf.filesMaxPartitionBytes():
+            return (df.coalesce(1) if size else df), True
+        return df, False
 
-    def _apply_generated(self, meta: "TableMeta", df: DataFrame) -> DataFrame:
+    def _apply_generated(self, meta: "TableMeta", df: DataFrame, *extra: str) -> DataFrame:
         """Recompute GENERATED ALWAYS AS columns — the ONE chokepoint every
         write path (insert, upsert, merge, update, restore) flows through,
         so a generated value can never go stale regardless of which DML
-        constructed the frame."""
+        constructed the frame. RETURNING takes its rows through here too,
+        keeping the ``extra`` columns after the table's."""
         gen = [(c["name"], c["generated"], c["type"]) for c in meta.columns if c.get("generated")]
         if not gen:
             return df
@@ -752,24 +797,11 @@ class Catalog:
 
         for name_, expr, typ in gen:
             df = df.withColumn(name_, F.expr(translate(expr)).cast(parse_type(typ)))
-        return df.select(*[c["name"] for c in meta.columns])
+        return df.select(*[c["name"] for c in meta.columns], *extra)
 
     def overwrite(self, name: str, df: DataFrame) -> None:
-        """Atomic-ish copy-on-write: write to temp dir, swap, re-register.
-        (On a real deployment this is a commit-log/rename on object storage;
-        single-writer discipline is assumed, SURVEY §1.4.)"""
-        meta = self.tables[name]
-        df = self._apply_generated(meta, df)
-        tmp = meta.path + ".tmp"
-        w = df.write.mode("overwrite")
-        if meta.partition_cols:
-            w = w.partitionBy(*meta.partition_cols)
-        w.parquet(tmp)
-        old = meta.path + ".old"
-        os.rename(meta.path, old)
-        os.rename(tmp, meta.path)
-        shutil.rmtree(old, ignore_errors=True)
-        self._register(meta)
+        """Copy-on-write: ``df`` becomes the table's rows in one commit."""
+        self._commit(name, self.tables[name], df)
 
     def overwrite_partitions(self, name: str, df: DataFrame, parts: list[tuple]) -> None:
         """Partition-scoped copy-on-write. Each partition in ``parts``
@@ -777,57 +809,43 @@ class Catalog:
         gets exactly the rows ``df`` holds for it, and its directory goes
         when ``df`` holds none; a partition outside ``parts`` keeps its files
         and gains ``df``'s rows for it. Every other partition's files are
-        never read or written. (Dir-level rename stands in for the
-        object-store commit protocol.)"""
+        never read or written."""
         meta = self.tables[name]
-        df = self._apply_generated(meta, df)
         assert meta.partition_cols, "overwrite_partitions needs a partitioned table"
-        tmp = meta.path + ".ptmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        df.write.partitionBy(*meta.partition_cols).mode("overwrite").parquet(tmp)
-        jvm = self.spark._jvm  # noqa: SLF001
-        utils = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        for values in parts:
-            rel = os.path.join(*[utils.getPartitionPathString(c, v)
-                                 for c, v in zip(meta.partition_cols, values)])
-            shutil.rmtree(os.path.join(meta.path, rel), ignore_errors=True)
-        for root, _dirs, files in os.walk(tmp):
-            data = [f for f in files if f.endswith(".parquet")]
-            if data:
-                dest = os.path.join(meta.path, os.path.relpath(root, tmp))
-                os.makedirs(dest, exist_ok=True)
-                for f in data:
-                    os.rename(os.path.join(root, f), os.path.join(dest, f))
-        shutil.rmtree(tmp, ignore_errors=True)
-        self._register(meta)
+        utils = self.spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils  # noqa: SLF001
+        doomed = {
+            os.path.join(*[utils.getPartitionPathString(c, v)
+                           for c, v in zip(meta.partition_cols, values)])
+            for values in parts
+        }
+        keep = [f for f in meta.files if os.path.dirname(f) not in doomed]
+        self._commit(name, meta, df, keep)
 
     def append(self, name: str, df: DataFrame) -> None:
         meta = self.tables[name]
-        df = self._apply_generated(meta, df)
-        w = df.write.mode("append")
-        if meta.partition_cols:
-            w = w.partitionBy(*meta.partition_cols)
-        w.parquet(meta.path)
-        self._register(meta)
+        self._commit(name, meta, df, meta.files)
 
     # -- snapshot / restore (EXPORT/IMPORT DATABASE) ----------------------
 
     def export_database(self, target_dir: str) -> int:
-        """EXPORT DATABASE '<dir>' (FORMAT PARQUET) ≅ store/store.go:263."""
+        """EXPORT DATABASE '<dir>' (FORMAT PARQUET) ≅ store/store.go:263.
+        The exported manifests carry no file list, so the directory also
+        opens as a warehouse of its own."""
         os.makedirs(target_dir, exist_ok=True)
-        for name in self.tables:
+        for name, meta in self.tables.items():
             self.read(name).write.mode("overwrite").parquet(os.path.join(target_dir, name))
-            shutil.copy(self._meta_path(name), os.path.join(target_dir, f"{name}.meta.json"))
+            manifest = self._manifest(meta)
+            del manifest["files"]
+            _write_json(os.path.join(target_dir, name + _META), manifest)
         return len(self.tables)
 
     def import_database(self, source_dir: str) -> int:
         """IMPORT DATABASE '<dir>' ≅ store/store.go:314."""
         n = 0
         for fn in os.listdir(source_dir):
-            if not fn.endswith(".meta.json"):
+            if not fn.endswith(_META):
                 continue
-            with open(os.path.join(source_dir, fn)) as f:
-                d = json.load(f)
+            d = _read_json(os.path.join(source_dir, fn))
             name = d["name"]
             if name in self.tables:
                 self.drop_table(name)
@@ -836,6 +854,8 @@ class Catalog:
                 name,
                 d["columns"],
                 partition_cols=d.get("partition_cols"),
+                table_checks=d.get("table_checks"),
+                unique_sets=d.get("unique_sets"),
                 rows=self.spark.read.schema(schema).parquet(os.path.join(source_dir, name)),
             )
             n += 1
@@ -863,182 +883,83 @@ class Catalog:
     # -- comments (COMMENT ON ... IS '...', DuckDB >= 0.10) ----------------
     #
     # Pure catalog metadata (DuckDB stores them in duckdb_comments());
-    # persisted beside the index metadata and surfaced through /status.
-
-    def _comments_path(self) -> str:
-        return os.path.join(self.dir, "_comments.json")
+    # persisted in their own sidecar and surfaced through /status.
 
     def set_comment(self, kind: str, target: str, comment: str | None) -> None:
-        if not hasattr(self, "comments"):
-            self.comments = {}
         key = f"{kind.lower()}:{target.lower()}"
         if comment is None:
             self.comments.pop(key, None)
         else:
             self.comments[key] = comment
-        with open(self._comments_path(), "w") as f:
-            import json as _json
-
-            _json.dump(self.comments, f)
+        self._save("comments")
 
     def load_comments(self) -> dict:
-        if not hasattr(self, "comments"):
-            self.comments = {}
-            if os.path.exists(self._comments_path()):
-                import json as _json
-
-                with open(self._comments_path()) as f:
-                    self.comments.update(_json.load(f))
         return self.comments
 
     # -- transactions (BEGIN / COMMIT / ROLLBACK) --------------------------
     #
-    # Single-writer snapshot transactions. BEGIN captures the warehouse
-    # state; ROLLBACK restores it; COMMIT discards the snapshot. Data dirs
-    # are captured as HARDLINK trees: parquet files are immutable here
-    # (copy-on-write DML writes new files and swaps directories), so a link
-    # tree pins the old inodes at file-count cost, not byte cost — the
-    # local-FS stand-in for snapshot isolation via manifest re-pointing
-    # (Iceberg/Delta style) that a 100 TB object-store deployment would use.
+    # Single-writer snapshot transactions. BEGIN records every manifest and
+    # sidecar in ``_txn.json`` and pins the files those manifests name:
+    # commits inside the transaction write new files and leave the pinned
+    # ones in place. COMMIT drops the record and sweeps what only it named;
+    # ROLLBACK puts the recorded manifests and sidecars back and sweeps
+    # what they do not name — the same code that undoes a transaction a
+    # crash left open at startup (DuckDB's WAL-replay equivalent).
     #
     # Scope/parity: the reference shares one DuckDB connection across HTTP
     # clients (db/db.go:32), so a BEGIN there is service-global too; like
     # DuckDB's own auto-commit connection, concurrent readers see writes as
     # they land (no cross-client isolation — single-writer discipline,
     # SURVEY §1.4). ATTACHed databases and PREPAREd statements are not
-    # transactional in DuckDB and are not snapshotted.
-
-    def _txn_dir(self) -> str:
-        return os.path.join(self.dir, "_txn_snapshot")
+    # transactional in DuckDB and are not recorded.
 
     @property
     def in_txn(self) -> bool:
-        return getattr(self, "_txn_state", None) is not None
-
-    @staticmethod
-    def _link_tree(src: str, dst: str) -> None:
-        """Copy a directory tree using hardlinks for regular files."""
-        os.makedirs(dst, exist_ok=True)
-        for root, dirs, files in os.walk(src):
-            rel = os.path.relpath(root, src)
-            troot = os.path.join(dst, rel) if rel != "." else dst
-            for d in dirs:
-                os.makedirs(os.path.join(troot, d), exist_ok=True)
-            for f in files:
-                s = os.path.join(root, f)
-                t = os.path.join(troot, f)
-                try:
-                    os.link(s, t)
-                except OSError:
-                    shutil.copy2(s, t)  # cross-device fallback
-
-    _SIDECARS = ("_sequences.json", "_macros.json", "_indexes.json", "_comments.json", "_types.json", "_schemas.json")
+        return self._txn_views is not None
 
     def begin_txn(self) -> None:
-        import copy
-
         if self.in_txn:
             raise ValueError("cannot start a transaction within a transaction")
-        snap = self._txn_dir()
-        shutil.rmtree(snap, ignore_errors=True)
-        data = os.path.join(snap, "data")
-        os.makedirs(data, exist_ok=True)
-        for name, meta in self.tables.items():
-            if os.path.exists(meta.path):
-                self._link_tree(meta.path, os.path.join(data, name))
-            shutil.copy2(self._meta_path(name), os.path.join(snap, f"{name}.meta.json"))
-        for fn in self._SIDECARS:
-            p = os.path.join(self.dir, fn)
-            if os.path.exists(p):
-                shutil.copy2(p, os.path.join(snap, fn))
-        self.load_comments()
-        self._txn_state = {
-            "tables": copy.deepcopy(self.tables),
-            "views": dict(self.views),
-            "sequences": dict(self.sequences),
-            "macros": dict(self.macros),
-            "indexes": copy.deepcopy(self.indexes),
-            "comments": dict(self.comments),
-            "types": copy.deepcopy(self.types),
-            "schemas": set(self.schemas),
-        }
+        _write_json(self._txn_path(), {
+            "tables": {n: self._manifest(m) for n, m in self.tables.items()},
+            "sidecars": {kind: self._sidecar(kind) for kind in _SIDECARS},
+        })
+        self._pins = {n: set(m.files) for n, m in self.tables.items()}
+        self._txn_views = dict(self.views)
 
     def commit_txn(self) -> None:
         if not self.in_txn:
             raise ValueError("cannot commit - no transaction is active")
-        self._txn_state = None
-        shutil.rmtree(self._txn_dir(), ignore_errors=True)
+        _write_json(self._txn_path(), None)
+        pinned, self._pins, self._txn_views = self._pins, {}, None
+        for name in pinned:
+            self._sweep(name)
 
     def rollback_txn(self) -> None:
         if not self.in_txn:
             raise ValueError("cannot rollback - no transaction is active")
-        snap, state = self._txn_dir(), self._txn_state
-
-        # drop everything the transaction created (views + tables), then
-        # clear live table data/meta so the snapshot restore is a clean swap
-        for name in set(self.views) - set(state["views"]):
+        for name in set(self.views) - set(self._txn_views):
             self.spark.catalog.dropTempView(name)
-        for name, meta in list(self.tables.items()):
-            shutil.rmtree(meta.path, ignore_errors=True)
-            try:
-                os.remove(self._meta_path(name))
-            except FileNotFoundError:
-                pass
-            if name not in state["tables"]:
-                self._release(name)
+        written, self.views = set(self.tables), self._txn_views
+        # the transaction stays open until the restore is done: ROLLBACK
+        # can be retried, and no write lands that a later restore undoes
+        self._open()
+        self._pins, self._txn_views = {}, None
+        for name in written - set(self.tables):
+            self._release(name)
 
-        data = os.path.join(snap, "data")
-        for name, meta in state["tables"].items():
-            src = os.path.join(data, name)
-            if os.path.exists(src):
-                os.rename(src, meta.path)
-            shutil.copy2(os.path.join(snap, f"{name}.meta.json"), self._meta_path(name))
-        for fn in self._SIDECARS:
-            live = os.path.join(self.dir, fn)
-            saved = os.path.join(snap, fn)
-            if os.path.exists(saved):
-                shutil.copy2(saved, live)
-            elif os.path.exists(live):
-                os.remove(live)
-
-        self.tables = state["tables"]
-        self.views = state["views"]
-        self.sequences = state["sequences"]
-        self.macros = state["macros"]
-        self.indexes = state["indexes"]
-        self.comments = state["comments"]
-        self.types = state.get("types", {})
-        self.schemas = state.get("schemas", set())
-        self._register(*self.tables.values(), every_view=True)
-        self._txn_state = None
-        shutil.rmtree(snap, ignore_errors=True)
-
-    def _recover_txn(self) -> None:
-        """Crash recovery: a leftover ``_txn_snapshot`` means the process
-        died mid-transaction — the live tree holds uncommitted writes. Roll
-        them back from the snapshot before loading (DuckDB's WAL-replay
-        equivalent for our dir-swap commit protocol)."""
-        snap = self._txn_dir()
-        if not os.path.isdir(snap):
-            return
-        data = os.path.join(snap, "data")
-        suffix = ".meta.json"
-        snap_tables = {fn[: -len(suffix)] for fn in os.listdir(snap) if fn.endswith(suffix)}
-        for fn in list(os.listdir(self.dir)):
-            if fn.endswith(suffix) and fn[: -len(suffix)] not in snap_tables:
-                shutil.rmtree(os.path.join(self.dir, fn[: -len(suffix)]), ignore_errors=True)
-                os.remove(os.path.join(self.dir, fn))
-        for nm in snap_tables:
-            live = os.path.join(self.dir, nm)
-            shutil.rmtree(live, ignore_errors=True)
-            src = os.path.join(data, nm)
-            if os.path.exists(src):
-                os.rename(src, live)
-            shutil.copy2(os.path.join(snap, nm + suffix), os.path.join(self.dir, nm + suffix))
-        for fn in self._SIDECARS:
-            saved, live = os.path.join(snap, fn), os.path.join(self.dir, fn)
-            if os.path.exists(saved):
-                shutil.copy2(saved, live)
-            elif os.path.exists(live):
-                os.remove(live)
-        shutil.rmtree(snap, ignore_errors=True)
+    def _restore(self) -> None:
+        """Put back what BEGIN recorded in ``_txn.json`` — every table's
+        manifest and every sidecar; a table created since loses its
+        manifest — then drop the record. A crash inside leaves the record,
+        and the next start runs this again."""
+        saved = _read_json(self._txn_path())
+        for fn in os.listdir(self.dir):
+            if fn.endswith(_META) and fn[: -len(_META)] not in saved["tables"]:
+                _write_json(os.path.join(self.dir, fn), None)
+        paths = {self._meta_path(n): m for n, m in saved["tables"].items()}
+        paths.update({self._sidecar_path(k): v for k, v in saved["sidecars"].items()})
+        for path, value in paths.items():
+            if _read_json(path) != value:
+                _write_json(path, value)
+        _write_json(self._txn_path(), None)

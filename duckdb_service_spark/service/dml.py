@@ -972,7 +972,8 @@ def _pinned(engine: "Engine", df: DataFrame) -> DataFrame:
 
 def _returning_rows(engine: "Engine", ch: _Change, tcols: list[str], returning: str) -> DataFrame:
     """The RETURNING list over the rows the statement changes: updated
-    rows as they become, deleted rows as they were, inserted rows."""
+    rows as they become, deleted rows as they were, inserted rows, each
+    with its generated columns as the write stores them."""
     action = F.when(F.col("__act") == "u", "UPDATE").otherwise("DELETE")
     parts = []
     if ch.target is not None:
@@ -981,7 +982,8 @@ def _returning_rows(engine: "Engine", ch: _Change, tcols: list[str], returning: 
     if ch.inserts is not None:
         parts.append(ch.inserts.select(*tcols, F.lit("INSERT").alias("merge_action")))
     if parts:
-        affected = reduce(DataFrame.union, parts)
+        affected = engine.catalog._apply_generated(
+            engine.catalog.tables[ch.table], reduce(DataFrame.union, parts), "merge_action")
     else:
         affected = engine.catalog.read(ch.table).select(
             *tcols, F.lit(None).cast("string").alias("merge_action")).limit(0)

@@ -529,7 +529,7 @@ class Engine:
                     return sch, nm
             return "main", key
 
-        comments = self.catalog.load_comments() or {}
+        comments = self.catalog.load_comments()
 
         def comment_of(kind: str, name: str):
             return comments.get(f"{kind}:{name}")
@@ -878,7 +878,7 @@ class Engine:
             if name not in self.catalog.sequences and not m.group(1):
                 raise ValueError(f"sequence {name} does not exist")
             self.catalog.sequences.pop(name, None)
-            self.catalog._save_sequences()
+            self.catalog._save("sequences")
             return ExecuteOutcome(0)
 
         m = re.match(
@@ -1122,7 +1122,6 @@ class Engine:
             # persisted and surfaced via /status
             kind, target = m.group(1), m.group(2)
             comment = None if m.group(4) else m.group(3).replace("''", "'")
-            self.catalog.load_comments()
             self.catalog.set_comment(kind, target, comment)
             return ExecuteOutcome(0)
 
@@ -1137,8 +1136,8 @@ class Engine:
             # a metadata no-op (AQE re-plans from RUNTIME sizes anyway)
             return ExecuteOutcome(0)
         if upper in ("BEGIN", "BEGIN TRANSACTION", "START TRANSACTION"):
-            # real snapshot transaction (catalog.begin_txn): captures the
-            # warehouse via hardlink trees; goes beyond the reference, whose
+            # real snapshot transaction (catalog.begin_txn): records every
+            # table's manifest; goes beyond the reference, whose
             # own transactions are an unshipped TODO (README.md:21) while
             # linked DuckDB supports them (db/db.go:52)
             self.catalog.begin_txn()

@@ -86,6 +86,11 @@ def tune(spark: SparkSession) -> SparkSession:
         "spark.sql.files.maxPartitionBytes",
         os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "2m"),
     )
+    # A catalog table is read as the explicit list of files its manifest
+    # names. Above this many paths Spark lists them in a job of its own
+    # (at the default, 32, a 40-file table cost 1 job and ~300 ms per
+    # registration); up to it the driver stats them in a few ms.
+    spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
     spark.conf.set("spark.duckdb_service_spark.tuned", "1")
     spark._ddbs_tuned = True  # noqa: SLF001
     return spark
