@@ -23,6 +23,25 @@ from .executor import Engine
 from .serializer import duck_error_text, execute_result, query_result
 
 
+# the error class of a scan whose files another engine's commit deleted
+_STALE_FILES = "FAILED_READ_FILE.FILE_NOT_EXIST"
+
+
+def _result(engine: Engine, sql: str, execute: bool) -> dict:
+    """The envelope's result for one statement. /db/execute runs a write
+    as a write; a query, and anything sent to /db/query, goes through
+    run_statement."""
+    if execute and not engine.is_query(sql):
+        out = engine.execute(sql)
+    else:
+        kind, out = engine.run_statement(sql)
+        if kind == "query":
+            return query_result(out)
+    if out.returning is not None:
+        return query_result(out.returning)
+    return execute_result(out.rows_affected)
+
+
 class EngineHTTPServer:
     def __init__(self, engine: Engine, host: str = "127.0.0.1", port: int = 0):
         self.engine = engine
@@ -76,20 +95,16 @@ class EngineHTTPServer:
                 t0 = time.time()
                 try:
                     with outer.lock:
-                        if execute and not outer.engine.is_query(sql):
-                            out = outer.engine.execute(sql)
-                            if out.returning is not None:
-                                result = query_result(out.returning)
-                            else:
-                                result = execute_result(out.rows_affected)
-                        else:
-                            kind, payload = outer.engine.run_statement(sql)
-                            if kind == "query":
-                                result = query_result(payload)
-                            elif payload.returning is not None:
-                                result = query_result(payload.returning)
-                            else:
-                                result = execute_result(payload.rows_affected)
+                        try:
+                            result = _result(outer.engine, sql, execute)
+                        except Exception as ex:  # noqa: BLE001 — re-raised unless stale
+                            if (execute or _STALE_FILES not in str(ex)
+                                    or not outer.engine.is_query(sql)):
+                                raise
+                            # a replica's scan names files the writer's
+                            # last commit swept: catch up and read again
+                            outer.engine.refresh()
+                            result = _result(outer.engine, sql, execute)
                     self._send(
                         200,
                         # milliseconds, matching http/service.go:241

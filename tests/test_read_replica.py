@@ -86,3 +86,41 @@ def test_replica_serves_db_query_over_http(spark, warehouse, writer):
         assert r["result"]["values"] == [[7, "served-by-replica"]]
     finally:
         srv.stop()
+
+
+def test_replica_read_after_the_writer_overwrites_an_uncached_table(spark, tmp_path):
+    """A table above the scan split is not cached, so the replica's frame
+    names the writer's files. The writer's UPDATE rewrites the table and
+    its commit deletes those files; the replica's next /db/query read
+    catches up once and answers with the written row."""
+    from duckdb_service_spark.service.executor import Engine
+    from duckdb_service_spark.service.http_server import EngineHTTPServer
+
+    key = "spark.sql.files.maxPartitionBytes"
+    wh = str(tmp_path / "warehouse")
+    replica_session = spark.newSession()
+    old = spark.conf.get(key)
+    for s in (spark, replica_session):
+        s.conf.set(key, "1k")
+    try:
+        writer = Engine(spark, wh)
+        writer.execute("CREATE TABLE big AS SELECT range AS id, md5(CAST(range AS VARCHAR)) AS h "
+                       "FROM range(0, 5000)")
+        replica = Engine(replica_session, wh)
+        assert not replica.catalog.read("big").is_cached
+        writer.execute("UPDATE big SET h = 'x' WHERE id = 1")
+        srv = EngineHTTPServer(replica).start()
+        try:
+            req = urllib.request.Request(
+                f"http://{srv.host}:{srv.port}/db/query",
+                data=json.dumps({"sql": "SELECT h FROM big WHERE id = 1"}).encode(),
+                headers={"Content-Type": "application/json"},
+            )
+            with urllib.request.urlopen(req) as resp:
+                r = json.loads(resp.read())
+        finally:
+            srv.stop()
+        assert r.get("result", {}).get("values") == [["x"]], r.get("error", r)[:300]
+    finally:
+        for s in (spark, replica_session):
+            s.conf.set(key, old)

@@ -26,6 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 from duckdb_service_spark.service.dialect import UnsupportedDialect
+from duckdb_service_spark.service.serializer import interpreted
 from duckdb_service_spark.session import get_spark
 
 # deterministic typed-values relation: every probe runs over this.
@@ -100,8 +101,7 @@ def _engine(spark):
     return _ENGINE
 
 
-def classify(spark, con, select_list: str, order: str = "") -> tuple[str, str]:
-    sql = f"SELECT {select_list} FROM {REL}{order}"
+def classify(spark, con, sql: str) -> tuple[str, str]:
     try:
         want = [tuple(norm(c) for c in r) for r in con.execute(sql).fetchall()]
     except Exception as ex:
@@ -113,7 +113,8 @@ def classify(spark, con, select_list: str, order: str = "") -> tuple[str, str]:
     except Exception as ex:
         return "XLATE-CRASH", f"{type(ex).__name__}: {ex}"[:120]
     try:
-        got = [tuple(norm(c) for c in r) for r in df.collect()]
+        with interpreted(df):  # collected as the service collects
+            got = [tuple(norm(c) for c in r) for r in df.collect()]
     except Exception as ex:
         return "SPARK-ERR", str(ex).splitlines()[0][:160]
     if got == want:
@@ -181,6 +182,23 @@ OPERATOR_PROBES = [
 ]
 
 
+def statements(con, what: str = "all") -> list[str]:
+    """Every probe's SQL text, in the order main runs them."""
+    out: list[str] = []
+    if what in ("all", "agg"):
+        out += [f"SELECT {p} AS v FROM {REL}" for p in agg_probes(con)]
+    if what in ("all", "win"):
+        # windowed form of every aggregate that exists; deterministic frame
+        out += [
+            f"SELECT u, {p} OVER (PARTITION BY g ORDER BY u "
+            f"ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v FROM {REL} ORDER BY u"
+            for p in agg_probes(con)
+        ]
+    if what in ("all", "op"):
+        out += [f"SELECT u, {p} AS v FROM {REL} ORDER BY u" for p in OPERATOR_PROBES]
+    return out
+
+
 def main() -> None:
     spark = get_spark("sweep-r09")
     spark.sparkContext.setLogLevel("ERROR")
@@ -188,29 +206,13 @@ def main() -> None:
     what = sys.argv[1] if len(sys.argv) > 1 else "all"
 
     buckets: dict[str, list[tuple[str, str]]] = {}
-
-    def run(tag, select_list, order=""):
-        verdict, detail = classify(spark, con, select_list, order)
-        buckets.setdefault(verdict, []).append((tag, detail))
+    for sql in statements(con, what):
+        verdict, detail = classify(spark, con, sql)
+        buckets.setdefault(verdict, []).append((sql, detail))
         flag = "" if verdict in ("MATCH", "DUCK-ERR") else "  <<<"
-        print(f"{verdict:11s} {tag}{flag}")
+        print(f"{verdict:11s} {sql[:150]}{flag}")
         if detail and verdict in ("DIVERGE", "SPARK-ERR", "XLATE-CRASH"):
             print(f"            {detail}")
-
-    if what in ("all", "agg"):
-        for p in agg_probes(con):
-            run(f"agg: {p}", f"{p} AS v")
-    if what in ("all", "win"):
-        # windowed form of every aggregate that exists; deterministic frame
-        for p in agg_probes(con):
-            expr = (
-                f"{p} OVER (PARTITION BY g ORDER BY u "
-                f"ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) "
-            )
-            run(f"win: {p}", f"u, {expr} AS v", " ORDER BY u")
-    if what in ("all", "op"):
-        for p in OPERATOR_PROBES:
-            run(f"op: {p}", f"u, {p} AS v", " ORDER BY u")
 
     print("\n== summary ==")
     for k in sorted(buckets):

@@ -29,7 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 from duckdb_service_spark.service.dialect import UnsupportedDialect
-from duckdb_service_spark.service.serializer import duckdb_type_name
+from duckdb_service_spark.service.serializer import duckdb_type_name, interpreted
 from duckdb_service_spark.session import get_spark
 from tools.sweep_coercion import REL, norm
 
@@ -75,7 +75,8 @@ def classify(engine, con, sql: str) -> tuple[str, str]:
     try:
         df = engine.query_df(sql)
         got_types = [duckdb_type_name(f.dataType) for f in df.schema.fields]
-        got = sorted(tuple(_canon(c) for c in r) for r in df.collect())
+        with interpreted(df):  # collected as the service collects
+            got = sorted(tuple(_canon(c) for c in r) for r in df.collect())
     except UnsupportedDialect as ex:
         return "RAISE", str(ex)[:120]
     except Exception as ex:  # noqa: BLE001
@@ -89,7 +90,8 @@ def classify(engine, con, sql: str) -> tuple[str, str]:
     return "MATCH", ""
 
 
-def probes(what: str) -> list[str]:
+def statements(what: str = "all") -> list[str]:
+    """Every probe's SQL text, in the order main runs them."""
     out: list[str] = []
     pairs = [
         (a, b)
@@ -317,7 +319,7 @@ def main() -> None:
     what = sys.argv[1] if len(sys.argv) > 1 else "all"
 
     buckets: dict[str, list[tuple[str, str]]] = {}
-    for p in probes(what):
+    for p in statements(what):
         verdict, detail = classify(engine, con, p)
         buckets.setdefault(verdict, []).append((p, detail))
         flag = "" if verdict in ("MATCH", "DUCK-ERR") else "  <<<"

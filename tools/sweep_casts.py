@@ -27,6 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 from duckdb_service_spark.service.dialect import UnsupportedDialect, translate
+from duckdb_service_spark.service.serializer import interpreted
 from duckdb_service_spark.session import get_spark
 
 # source values per source type: valid, boundary, invalid-for-most-
@@ -101,10 +102,6 @@ def norm(v):
     return v
 
 
-def classify(engine, con, expr: str) -> tuple[str, str]:
-    return classify_sql(engine, con, f"SELECT {expr} AS v")
-
-
 def classify_sql(engine, con, sql: str) -> tuple[str, str]:
     duck_err = None
     try:
@@ -115,9 +112,9 @@ def classify_sql(engine, con, sql: str) -> tuple[str, str]:
             return "DUCK-ERR", msg[:100]
         duck_err = msg  # runtime conversion error — check Spark parity
     try:
-        got = [
-            tuple(norm(c) for c in r) for r in engine.query_df(sql).collect()
-        ]
+        df = engine.query_df(sql)
+        with interpreted(df):  # collected as the service collects
+            got = [tuple(norm(c) for c in r) for r in df.collect()]
         spark_err = None
     except UnsupportedDialect as ex:
         return "RAISE", str(ex)[:100]
@@ -132,6 +129,23 @@ def classify_sql(engine, con, sql: str) -> tuple[str, str]:
     if got == want:
         return "MATCH", ""
     return "DIVERGE", f"duck={want!r} spark={got!r}"[:240]
+
+
+def statements(forms=("CAST", "TRY_CAST")) -> list[str]:
+    """Every probe's SQL text, in the order main runs them."""
+    out = []
+    for form in forms:
+        for src_t, values in SOURCES.items():
+            for val in values:
+                for tgt in TARGETS:
+                    # skip exact-identity pairs and string->string only;
+                    # decimal<->decimal precision changes ARE probed (r11)
+                    if tgt == src_t or (
+                        tgt == "VARCHAR" and src_t.startswith("VARCHAR")
+                    ):
+                        continue
+                    out.append(f"SELECT {form}({val} AS {tgt}) AS v")
+    return out + STRUCTURAL
 
 
 def main() -> None:
@@ -150,24 +164,7 @@ def main() -> None:
     )
 
     buckets: dict[str, int] = {}
-    for form in forms:
-        for src_t, values in SOURCES.items():
-            for val in values:
-                for tgt in TARGETS:
-                    # skip exact-identity pairs and string->string only;
-                    # decimal<->decimal precision changes ARE probed (r11)
-                    if tgt == src_t or (
-                        tgt == "VARCHAR" and src_t.startswith("VARCHAR")
-                    ):
-                        continue
-                    expr = f"{form}({val} AS {tgt})"
-                    verdict, detail = classify(engine, con, expr)
-                    buckets[verdict] = buckets.get(verdict, 0) + 1
-                    if verdict not in ("MATCH", "DUCK-ERR", "BOTH-ERR"):
-                        print(f"{verdict:11s} {expr}")
-                        if detail:
-                            print(f"            {detail}")
-    for sql in STRUCTURAL:
+    for sql in statements(forms):
         verdict, detail = classify_sql(engine, con, sql)
         buckets[verdict] = buckets.get(verdict, 0) + 1
         if verdict not in ("MATCH", "DUCK-ERR", "BOTH-ERR"):

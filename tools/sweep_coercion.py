@@ -26,6 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 from duckdb_service_spark.service.dialect import UnsupportedDialect, translate
+from duckdb_service_spark.service.serializer import interpreted
 from duckdb_service_spark.session import get_spark
 
 # typed relation: every integer width, two decimal shapes, double/float,
@@ -95,18 +96,19 @@ def norm(v):
     return v
 
 
-def classify(engine, con, select_list: str) -> tuple[str, str]:
+def classify(engine, con, sql: str) -> tuple[str, str]:
     """Probe through the FULL service path (engine.query_df = dialect
     translate + schema-driven routing passes), not bare translate(): the
     float-// rewrite, map subscripts, etc. resolve operand types against
     the FROM relation's schema and only exist at the service layer."""
-    sql = f"SELECT u, {select_list} FROM {REL} ORDER BY u"
     try:
         want = [tuple(norm(c) for c in r) for r in con.execute(sql).fetchall()]
     except Exception as ex:
         return "DUCK-ERR", str(ex).splitlines()[0][:120]
     try:
-        got = [tuple(norm(c) for c in r) for r in engine.query_df(sql).collect()]
+        df = engine.query_df(sql)
+        with interpreted(df):  # collected as the service collects
+            got = [tuple(norm(c) for c in r) for r in df.collect()]
     except UnsupportedDialect as ex:
         return "RAISE", str(ex)[:120]
     except Exception as ex:
@@ -183,6 +185,11 @@ def probes(what: str) -> list[str]:
     return out
 
 
+def statements(what: str = "all") -> list[str]:
+    """Every probe's SQL text, in the order main runs them."""
+    return [f"SELECT u, {p} AS v FROM {REL} ORDER BY u" for p in probes(what)]
+
+
 def main() -> None:
     import tempfile
 
@@ -195,8 +202,8 @@ def main() -> None:
     what = sys.argv[1] if len(sys.argv) > 1 else "all"
 
     buckets: dict[str, list[tuple[str, str]]] = {}
-    for p in probes(what):
-        verdict, detail = classify(engine, con, f"{p} AS v")
+    for p in statements(what):
+        verdict, detail = classify(engine, con, p)
         buckets.setdefault(verdict, []).append((p, detail))
         flag = "" if verdict in ("MATCH", "DUCK-ERR") else "  <<<"
         print(f"{verdict:11s} {p}{flag}", flush=True)
